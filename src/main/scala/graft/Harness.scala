@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Measurement harness — the engine-side analog of the reference's
   * benchmark core (reference: benchmark/Benchmark.scala:129-192 runQuery/
@@ -88,7 +89,7 @@ object Harness {
         }
         QueryResult(name, timed.map(_._1), timed.map(_._2), None)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           Scratch.sweep(spark)
           QueryResult(name, Seq.empty, Seq.empty, Some(e.getMessage))
       }
@@ -111,7 +112,7 @@ object Harness {
   def warmTables(spark: SparkSession, sfDir: String): Unit =
     graft.Tables.names.foreach { n =>
       try graft.Tables.load(spark, sfDir, n).count()
-      catch { case _: Throwable => () } // missing fixture → queries fail loudly later
+      catch { case NonFatal(_) => () } // missing fixture → queries fail loudly later
     }
 
   /** Query-text rewriting (reference IncrementalTPCDSBenchmark.scala:

@@ -482,9 +482,7 @@ object BenchExtras {
         "irp_compact" -> sec(cSec), "irp_query_post" -> sec(qPost))
     } finally {
       // hand the staged store_sales view back to whatever runs next
-      // (force: ensure's per-session fast path would otherwise consider
-      // the views already registered and skip the restore)
-      graft.sources.Tpcds.ensure(spark, sfDir, force = true)
+      graft.sources.Tpcds.ensure(spark, sfDir)
     }
   }
 
