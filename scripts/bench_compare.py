@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Compare two graft bench full-report JSONs (bench_reports/bench_report.json
 shape: {"queries": {name: {"median_sec": s, ...}, ...}} or the driver's
-BENCH_r{N}.json compact shape) and print per-query ratios, worst first.
+BENCH_r{N}.json compact shape) and print per-query ratios, worst first,
+then the extras of both reports, including those present in only one and
+the sweeps a report lists as failed.
 
 Usage: bench_compare.py OLD.json NEW.json [threshold]
 """
@@ -21,14 +23,14 @@ def load(path):
             s = v
         if isinstance(s, (int, float)) and s > 0:
             out[name] = float(s)
-    return out, d.get("extras", {})
+    return out, d.get("extras", {}), d
 
 
 def main():
     old_path, new_path = sys.argv[1], sys.argv[2]
     thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
-    old, old_ex = load(old_path)
-    new, new_ex = load(new_path)
+    old, old_ex, old_d = load(old_path)
+    new, new_ex, new_d = load(new_path)
     common = sorted(set(old) & set(new))
     if common:
         tot_old = sum(old[n] for n in common)
@@ -57,6 +59,17 @@ def main():
         print("\nextras (old -> new):")
         for k in both_ex:
             print(f"  {k:28s} {old_ex[k]:8.4f} -> {new_ex[k]:8.4f}")
+    # a deleted or failed sweep shows up here instead of vanishing
+    for label, only, src in (("old", set(old_ex) - set(new_ex), old_ex),
+                             ("new", set(new_ex) - set(old_ex), new_ex)):
+        if only:
+            print(f"\nextras only in {label}: {len(only)}")
+            for k in sorted(only):
+                print(f"  {k:28s} {src[k]:8.4f}")
+    for label, d in (("old", old_d), ("new", new_d)):
+        if d.get("extras_failed"):
+            print(f"\nextras sweeps failed in {label}: "
+                  f"{', '.join(d['extras_failed'])}")
 
 
 if __name__ == "__main__":

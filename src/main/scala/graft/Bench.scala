@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main — prints ONE JSON line with per-query seconds.
   *
@@ -18,27 +18,7 @@ object Bench {
     // (TPCDSBenchmark.scala:94-108; README.md:23) — the upper median of
     // three reports warm steady-state, not the cold first run.
     val iterations = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Long single-JVM run over 130 queries × N iterations: let the
-      // ContextCleaner reclaim shuffle files continuously instead of
-      // waiting for the default 30-minute periodic GC.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-    // Dev-loop conf overrides: SPARK_GRAFT_CONF="k=v;k=v" (A/B
-    // experiments without recompiling; unset in driver runs).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val spark = Harness.localSession(cpus)
     // dev-loop profiling hook: INFO exposes per-job wall times
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
@@ -72,10 +52,12 @@ object Bench {
     results.filterNot(_.ok).foreach(r =>
       System.err.println(s"[bench] ${r.name} failed: ${r.errorOpt.get}"))
     // protocol sweeps (merge-micro CoW/MoR crossover, file-count planning
-    // tiers) run once after the query loop; a failing sweep must not kill
-    // the round's report
-    // SPARK_GRAFT_EXTRAS may name a subset (mm,fc,dm,ir,irp,rpf,inc,skip,
-    // q72) for the dev loop; unset with a full run, or set empty, means all.
+    // tiers) run once after the query loop, each in its own try: a
+    // failing sweep loses only its own numbers, is named on stderr and
+    // listed under "extras_failed" in the full report.
+    // SPARK_GRAFT_EXTRAS may name a subset (ow,mm,fc,dm,dvm,ir,irp,rpf,
+    // inc,skip) for the dev loop; unset with a full run, or set empty,
+    // means all.
     val extrasSel = sys.env.get("SPARK_GRAFT_EXTRAS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val runExtras = only.isEmpty || extrasSel.isDefined
@@ -85,92 +67,32 @@ object Bench {
     // debt (isolated irp queries are flat ~2 s; at the tail of a full
     // run the same rounds drifted to 5-27 s).
     if (runExtras) { System.gc(); Harness.warmup(spark) }
-    val extras =
+    val sweeps: Seq[(String, () => Seq[(String, Double)])] =
       if (!runExtras) Seq.empty // dev-loop subset: skip the sweeps
-      else try {
-        Seq(
-          "ow" -> (() => operators.BenchExtras.writeShapeBins(spark)),
-          "mm" -> (() => operators.BenchExtras.mergeMicroSweep(spark)),
-          "fc" -> (() => operators.BenchExtras.fileCountTiers(spark)),
-          "dm" -> (() => operators.BenchExtras.deleteMicroSweep(spark)),
-          "dvm" -> (() => operators.BenchExtras.dvMergeSweep(spark)),
-          "ir" -> (() => operators.BenchExtras.incrementalRounds(spark)),
-          "irp" -> (() => operators.BenchExtras.refreshProtocol(spark, sfDir)),
-          "rpf" -> (() => operators.BenchExtras.refreshFullIsolated(spark, sfDir)),
-          "inc" -> (() => operators.BenchExtras.incrementalDedupRounds(spark, sfDir)),
-          "skip" -> (() => operators.BenchExtras.skipRatios(spark, sfDir)),
-          "q72" -> (() => operators.BenchExtras.q72RewriteVariant(spark, sfDir))
-        ).flatMap { case (tag, sweep) =>
-          if (!want(tag)) Seq.empty
-          else { val r = sweep(); Scratch.sweep(spark); r }
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] extras failed: ${e.getMessage}")
+      else Seq(
+        "ow" -> (() => operators.BenchExtras.writeShapeBins(spark)),
+        "mm" -> (() => operators.BenchExtras.mergeMicroSweep(spark)),
+        "fc" -> (() => operators.BenchExtras.fileCountTiers(spark)),
+        "dm" -> (() => operators.BenchExtras.deleteMicroSweep(spark)),
+        "dvm" -> (() => operators.BenchExtras.dvMergeSweep(spark)),
+        "ir" -> (() => operators.BenchExtras.incrementalRounds(spark)),
+        "irp" -> (() => operators.BenchExtras.refreshProtocol(spark, sfDir)),
+        "rpf" -> (() => operators.BenchExtras.refreshFullIsolated(spark, sfDir)),
+        "inc" -> (() => operators.BenchExtras.incrementalDedupRounds(spark, sfDir)),
+        "skip" -> (() => operators.BenchExtras.skipRatios(spark, sfDir))
+      ).filter { case (tag, _) => want(tag) }
+    val extrasFailed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val extras = sweeps.flatMap { case (tag, sweep) =>
+      try sweep()
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] extras $tag failed: ${e.getMessage}")
+          extrasFailed += tag
           Seq.empty
-      }
-    // Compact-line priority order (trimming drops from the END): this
-    // round's deliverables lead — the incremental-dedup flatness curve,
-    // the 200k-file tier (with the 1k tier right behind it for the
-    // ≲2x comparison), the skip ratios — then the established protocol
-    // sweeps: delete crossover, incremental merges, corpus-fidelity
-    // refresh, merge micro (largest sizes first within each).
-    val extrasOrdered = {
-      // rpf leads: the isolated refresh_pipeline_full pin is the number
-      // the drift check reads against the in-loop headline; the write-
-      // shape pin (ow_*) rides right behind it — ow_hot_files = 1 IS the
-      // r14 regression class resurfacing
-      val (ow, restOw) = extras.partition(_._1.startsWith("ow_"))
-      val (rpf, restR) = restOw.partition(_._1.startsWith("rpf_"))
-      val (inc, rest0) = restR.partition(_._1.startsWith("inc_"))
-      val (skip, rest1) = rest0.partition(_._1.startsWith("skip_"))
-      val (ir, rest2) = rest1.partition(_._1.startsWith("ir_"))
-      val (irp, rest3) = rest2.partition(_._1.startsWith("irp_"))
-      val (fc, rest4) = rest3.partition(_._1.startsWith("fc_"))
-      // the positional-merge pin rides ahead of the delete sweep — the
-      // dvm require() already gates the shape, but the numbers should
-      // survive the compact-line trim too
-      // (tight predicate: only the delete-sweep-prefixed merge pins — a
-      // future metric merely containing "mrg_" must not reroute here)
-      val (dvm, rest4b) = rest4.partition(k =>
-        k._1.startsWith("dm_") && k._1.contains("mrg_"))
-      val (dm, rest5) = rest4b.partition(_._1.startsWith("dm_"))
-      val (mm, other) = rest5.partition(_._1.startsWith("mm_"))
-      // fc: the headline 200k tier first, then the 1k baseline it is
-      // compared against, then the middle tiers
-      val fcRank = Map(200000L -> 0L, 1000L -> 1L, 100000L -> 2L,
-        10000L -> 3L, 100L -> 4L)
-      val fcOrdered = fc.sortBy { case (k, _) =>
-        fcRank.getOrElse(k.split('_').last.toLongOption.getOrElse(0L), 9L)
-      }
-      val mmBySize = mm.sortBy { case (k, _) =>
-        val suffix = k.split('_').last
-        -(suffix match {
-          case "20"   => 20L
-          case "200"  => 200L
-          case "2k"   => 2000L
-          case "20k"  => 20000L
-          case _      => 0L
-        })
-      }
-      // each refresh protocol's HEADLINE stats (the query probes, the
-      // compaction, the first and last merge round) go ahead of either
-      // protocol's flat middle rounds, so both curves' endpoints survive
-      // trimming even when the full round detail does not
-      def headThenRest(xs: Seq[(String, Double)], top: Seq[String])
-          : (Seq[(String, Double)], Seq[(String, Double)]) = {
-        val (h, r) = xs.partition(e => top.contains(e._1))
-        (h.sortBy(e => top.indexOf(e._1)), r)
-      }
-      val (irTop, irRest) = headThenRest(ir, Seq("ir_query_pre",
-        "ir_query_mid", "ir_query_post", "ir_compact", "ir_merge_1",
-        "ir_merge_10"))
-      val (irpTop, irpRest) = headThenRest(irp, Seq("irp_query_0",
-        "irp_query_post", "irp_compact", "irp_merge_1", "irp_merge_10"))
-      rpf ++ ow ++ dvm ++ inc ++ fcOrdered ++ skip ++ dm ++ irTop ++
-        irpTop ++ irRest ++ irpRest ++ mmBySize ++ other
+      } finally Scratch.sweep(spark)
     }
-    val json = Harness.reportJson(results, sfDir, Harness.envInfo(spark), extras)
+    val json = Harness.reportJson(results, sfDir, Harness.envInfo(spark),
+      extras, extrasFailed.toSeq)
     // Full CSV + JSON reports go to files (reference A3 shape); stdout gets
     // a compact line that fits the driver's 2000-char tail capture.
     val reportDir = sys.env.getOrElse("SPARK_GRAFT_REPORT_DIR", "bench_reports")
@@ -181,7 +103,63 @@ object Bench {
       Harness.reportCsv(results))
     java.nio.file.Files.writeString(jsonPath, json)
     println(Harness.compactJson(results, sfDir, jsonPath.toString,
-      extras = extrasOrdered))
+      extras = orderExtras(extras)))
     spark.stop()
   }
+
+  /** One class of extras keys for the compact line: None when a key is
+    * outside the class, else the key's rank within it. */
+  private type KeyClass = String => Option[Int]
+
+  /** Keys under `prefix`, ranked by their last `_` field's position in
+    * `suffixes`; unlisted suffixes rank after every listed one. */
+  private def prefixed(prefix: String, suffixes: String*): KeyClass = k =>
+    Option.when(k.startsWith(prefix)) {
+      val i = suffixes.indexOf(k.split('_').last)
+      if (i < 0) suffixes.size else i
+    }
+
+  /** Exactly these keys, in this order. */
+  private def named(keys: String*): KeyClass = k =>
+    Some(keys.indexOf(k)).filter(_ >= 0)
+
+  /** Compact-line priority, highest first (trimming drops from the END).
+    * A key ranks by the first class it matches, then by its rank inside
+    * the class; equal ranks keep emission order. */
+  private val extrasPriority: Seq[KeyClass] = Seq(
+    // the isolated refresh_pipeline_full pin: the number the drift check
+    // reads against the in-loop headline
+    prefixed("rpf_"),
+    // the write-shape pin: ow_hot_files = 1 IS the r14 regression class
+    prefixed("ow_"),
+    // the positional-merge pins of the delete sweep (the dvm require()
+    // gates the shape; the numbers should survive the trim too)
+    k => Option.when(k.startsWith("dm_") && k.contains("mrg_"))(0),
+    // the incremental-dedup flatness curve
+    prefixed("inc_"),
+    // file-count tiers: the headline 200k tier, then the 1k baseline it
+    // is compared against, then the middle tiers
+    prefixed("fc_", "200000", "1000", "100000", "10000", "100"),
+    prefixed("skip_"),
+    prefixed("dm_"),
+    // each refresh protocol's headline stats (query probes, compaction,
+    // first and last merge round) ahead of either protocol's middle
+    // rounds, so both curves' endpoints survive the trim
+    named("ir_query_pre", "ir_query_mid", "ir_query_post", "ir_compact",
+      "ir_merge_1", "ir_merge_10"),
+    named("irp_query_0", "irp_query_post", "irp_compact", "irp_merge_1",
+      "irp_merge_10"),
+    prefixed("ir_"),
+    prefixed("irp_"),
+    // merge micro, largest sizes first
+    prefixed("mm_", "20k", "2k", "200", "20"),
+    _ => Some(0))
+
+  /** The extras in compact-line priority order (stable sort). */
+  def orderExtras(extras: Seq[(String, Double)]): Seq[(String, Double)] =
+    extras.sortBy { case (k, _) =>
+      extrasPriority.iterator.zipWithIndex.flatMap { case (c, i) =>
+        c(k).map(r => (i, r))
+      }.next()
+    }
 }

@@ -13,6 +13,33 @@ import scala.util.control.NonFatal
   */
 object Harness {
 
+  /** The one session set-up every entry point shares: `local[cpus]`
+    * with a shuffle width of `cpus`, so plan dumps, correctness dumps,
+    * tests and the bench run the same engine configuration.
+    * Dev-loop conf overrides: SPARK_GRAFT_CONF="k=v;k=v" (A/B
+    * experiments without recompiling; unset in measured runs). */
+  def localSession(cpus: String): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      // Long single-JVM runs over 130 queries × N iterations: let the
+      // ContextCleaner reclaim shuffle files continuously instead of
+      // waiting for the default 30-minute periodic GC.
+      .config("spark.cleaner.periodicGC.interval", "30s")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.ui.enabled", "false")
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
+      .foreach { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        builder.config(k, v)
+      })
+    builder.getOrCreate()
+  }
+
   final case class QueryResult(
       name: String,
       iterationSecs: Seq[Double],
@@ -146,11 +173,13 @@ object Harness {
                                                  // (the driver's capture
                                                  // truncates long lines)
 
-  /** Full JSON report (every query + planning split + env) — written to
-    * the report file; too long for the driver's 2000-char stdout capture. */
+  /** Full JSON report (every query + planning split + extras, the tags
+    * of failed extras sweeps, env) — written to the report file; too
+    * long for the 2000-char stdout capture [[compactJson]] targets. */
   def reportJson(results: Seq[QueryResult], sfDir: String,
       env: Map[String, String] = Map.empty,
-      extras: Seq[(String, Double)] = Seq.empty): String = {
+      extras: Seq[(String, Double)] = Seq.empty,
+      extrasFailed: Seq[String] = Seq.empty): String = {
     val qs = results.map(r => jstr(r.name) + ":" +
       (if (r.ok) num(r.medianSec) else "-1")).mkString("{", ",", "}")
     val planning = results.filter(_.ok).map(r =>
@@ -159,11 +188,13 @@ object Harness {
       .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val extraJson = extras.map { case (k, v) => jstr(k) + ":" + num(v) }
       .mkString("{", ",", "}")
+    val failedJson = extrasFailed.map(jstr).mkString("[", ",", "]")
     val total = results.filter(_.ok).map(_.medianSec).sum
     s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
       s""""tpcds_result_seconds":${num(tpcdsResultSeconds(results))},""" +
       s""""queries":$qs,""" +
-      s""""planning":$planning,"extras":$extraJson,"env":$envJson,"sf":"$sfDir"}"""
+      s""""planning":$planning,"extras":$extraJson,""" +
+      s""""extras_failed":$failedJson,"env":$envJson,"sf":"$sfDir"}"""
   }
 
   /** The reference's exact `tpcds-result-seconds` headline

@@ -413,15 +413,11 @@ object Analytics {
   // column (parquet column pruning per branch) and Spark plans the
   // single countDistinct as partial-agg-by-value → merge, so the
   // shuffle carries each column's DISTINCT VALUES after map-side
-  // dedup, never rows. The pre-r19 shape folded all 6 distincts into
-  // ONE aggregate, which Catalyst plans through an Expand — every
-  // scanned row REPLICATED ×7 into the shuffle (at 100 TB: a 7× row
-  // blow-up through the exchange vs. per-column distinct-value
-  // streams); it is kept as the A/B arm
-  // (spark.graft.profile.shape=expand) for measurement. Total read
-  // volume is unchanged between shapes (6 one-column scans = one
-  // 6-column scan, columnar), and the 6 branches are independent jobs
-  // Spark schedules concurrently.
+  // dedup, never rows. Folding all 6 distincts into ONE aggregate would
+  // plan through an Expand that replicates every scanned row ×7 into
+  // the shuffle. Total read volume is the same either way (6 one-column
+  // scans = one 6-column scan, columnar), and the 6 branches are
+  // independent jobs Spark schedules concurrently.
   // At 100 TB the exact countDistinct trades to approx_count_distinct
   // (HLL partial-aggregates) — exact kept here so the DuckDB
   // oracle can pin values bit-for-bit. Timestamps render through an
@@ -477,43 +473,21 @@ object Analytics {
       val o = t(s, d, "orders")
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice", "o_orderdate", "o_orderpriority")
-      def render(c: String, m: Column): Column = c match {
-        case "o_totalprice" => m.cast("string")
-        case "o_orderdate"  => date_format(m, "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        case _              => m.cast("string")
-      }
+      def render(c: String, m: Column): Column =
+        if (c == "o_orderdate") date_format(m, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        else m.cast("string")
       def measured(c: String): Column =
         if (c == "o_totalprice") dec(col(c)) else col(c)
-      if (s.conf.getOption("spark.graft.profile.shape").contains("expand")) {
-        // pre-r19 A/B arm: one aggregate, 6 distinct sets → Expand ×7
-        val aggs = cols.flatMap { c =>
-          Seq(
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-            countDistinct(col(c)).as(s"${c}__distinct"),
-            render(c, min(measured(c))).as(s"${c}__min"),
-            render(c, max(measured(c))).as(s"${c}__max"))
-        }
-        val row = o.agg(aggs.head, aggs.tail: _*)
-        val structs = array(cols.map(c => struct(
-          lit(c).as("col_name"),
-          col(s"${c}__nulls").as("n_nulls"),
-          col(s"${c}__distinct").as("n_distinct"),
-          col(s"${c}__min").as("min_s"),
-          col(s"${c}__max").as("max_s"))): _*)
-        row.select(explode(structs).as("p")).select("p.*").orderBy("col_name")
-      } else {
-        // default: per-column two-level agg (no Expand) — see header
-        cols.map { c =>
-          o.select(col(c))
-            .agg(
-              sum(when(col(c).isNull, 1L).otherwise(0L)).as("n_nulls"),
-              countDistinct(col(c)).as("n_distinct"),
-              render(c, min(measured(c))).as("min_s"),
-              render(c, max(measured(c))).as("max_s"))
-            .select(lit(c).as("col_name"), col("n_nulls"),
-              col("n_distinct"), col("min_s"), col("max_s"))
-        }.reduce(_.unionByName(_)).orderBy("col_name")
-      }
+      cols.map { c =>
+        o.select(col(c))
+          .agg(
+            sum(when(col(c).isNull, 1L).otherwise(0L)).as("n_nulls"),
+            countDistinct(col(c)).as("n_distinct"),
+            render(c, min(measured(c))).as("min_s"),
+            render(c, max(measured(c))).as("max_s"))
+          .select(lit(c).as("col_name"), col("n_nulls"),
+            col("n_distinct"), col("min_s"), col("max_s"))
+      }.reduce(_.unionByName(_)).orderBy("col_name")
     })
 
   val defs: Seq[OpQuery] = Seq(

@@ -517,26 +517,4 @@ object BenchExtras {
     // compact-line trimming drops the raw iterations before it
     ("rpf_iso_med" -> iters.map(_._2).sorted.apply(1)) +: iters
   }
-
-  /** The r18 week-equality q72 REWRITE, re-measured every round beside
-    * the spec-text corpus entry (ADVICE r18: keep both variants
-    * comparable). The measured `tpcds_q72` runs the spec FROM-order
-    * text (the reference's common workload); this sweep keeps the
-    * rewrite's number on record (`q72_rewrite_med`/`q72_rewrite_min`) —
-    * it is the documented 100 TB shape (fact-fact join keyed on
-    * (item, week), no reliance on broadcastable dims) even though the
-    * spec text is faster locally once the staged inventory scans
-    * parallel. */
-  def q72RewriteVariant(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    graft.sources.Tpcds.ensure(spark, sfDir)
-    val iters = (1 to 3).map { _ =>
-      val (_, t) = time {
-        spark.sql(TpcdsQueries.q72RewriteBody)
-          .write.format("noop").mode("overwrite").save()
-      }
-      sec(t)
-    }
-    Seq("q72_rewrite_med" -> iters.sorted.apply(1),
-      "q72_rewrite_min" -> iters.min)
-  }
 }

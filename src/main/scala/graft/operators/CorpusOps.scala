@@ -488,16 +488,10 @@ object CorpusOps {
       // shuffles, each of the ~5 jobs per batch ran 32 near-empty tasks
       // and the two index appends sprayed up to 32 files per batch,
       // growing the standing index's file count (and every later
-      // batch's probe listing) ~20× faster than the data. Conf captured
-      // at query start, restored in the finally.
-      // A/B arm: spark.graft.sdl.clamp=false restores the session-wide
-      // shuffle width inside the micro-batches
-      val clamp = s.conf.getOption("spark.graft.sdl.clamp").forall(_.toBoolean)
-      val widthKey = "spark.sql.shuffle.partitions"
-      val priorWidth = s.conf.get(widthKey)
-      if (clamp) s.conf.set(widthKey, "4")
-      try {
-      val q = s.readStream.schema(docsDf.schema)
+      // batch's probe listing) ~20× faster than the data. The width
+      // holds for the stream's own session only; the caller's keeps its
+      // own.
+      val writer = s.readStream.schema(docsDf.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
         .writeStream
@@ -553,11 +547,9 @@ object CorpusOps {
             // ingest-batch-sized; at corpus scale a size-targeted
             // coalesce — the standing index must grow by bounded files,
             // not by a file per shuffle task)
-            def onefile(df: DataFrame): DataFrame =
-              if (clamp) df.coalesce(1) else df
-            onefile(bBands.join(accepted, "doc_id"))
+            bBands.join(accepted, "doc_id").coalesce(1)
               .write.mode("append").parquet(s"$idx/bands")
-            onefile(bTh.join(accepted, "doc_id"))
+            bTh.join(accepted, "doc_id").coalesce(1)
               .write.mode("append").parquet(s"$idx/th")
             out += ((m, nEx, nNear, nAll - nEx - nNear))
           } finally {
@@ -570,9 +562,8 @@ object CorpusOps {
         }
         .option("checkpointLocation", graft.Scratch.dir("sdl_ckpt"))
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      } finally s.conf.set(widthKey, priorWidth)
+      graft.streaming.Streams.startWithWidth(s, 4)(writer.start())
+        .awaitTermination()
       import s.implicits._
       out.toSeq.sortBy(_._1)
         .toDF("batch", "n_exact", "n_near", "n_unique")

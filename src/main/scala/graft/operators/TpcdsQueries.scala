@@ -295,16 +295,15 @@ FROM reason WHERE r_reason_sk = 1"""
 
   private val q9 = tq("tpcds_q9", Seq("store_sales", "reason"), q9Body)
 
-  /** q14's repeated CTEs, shared by a/b. The default measured shape
-    * MATERIALIZES them once per run (guide §5 caching): `cross_items`
-    * feeds three channel semi-joins and `avg_sales` three HAVING scalar
-    * subqueries; inlined (Spark's default for deterministic CTEs) the
-    * whole 3-fact intersect pipeline re-evaluates per branch. The
-    * materialized arm registers both as run-scoped cached temp views
-    * (Scratch.cache — released at the post-iteration sweep, never
-    * carried across iterations/runs) and runs the IDENTICAL body
-    * against them; the DuckDB oracle keeps the one-statement WITH text.
-    * A/B arm: spark.graft.q14.cte=inline re-measures the inlined shape. */
+  /** q14's repeated CTEs, shared by a/b, MATERIALIZED once per run
+    * (guide §5 caching): `cross_items` feeds three channel semi-joins
+    * and `avg_sales` three HAVING scalar subqueries; inlined (Spark's
+    * default for deterministic CTEs) the whole 3-fact intersect
+    * pipeline would re-evaluate per branch. Both register as run-scoped
+    * cached temp views (Scratch.cache — released at the post-iteration
+    * sweep, never carried across iterations/runs) and the IDENTICAL
+    * body runs against them; the DuckDB oracle keeps the one-statement
+    * WITH text. */
   private val q14CrossItemsSql = """SELECT i_item_sk ss_item_sk
  FROM item,
       (SELECT iss.i_brand_id brand_id, iss.i_class_id class_id,
@@ -349,17 +348,13 @@ FROM reason WHERE r_reason_sk = 1"""
     OpQuery(name, Some(Tpcds.oracle(q14Tables, q14With + body)),
       (s, d) => {
         Tpcds.ensure(s, d)
-        if (s.conf.getOption("spark.graft.q14.cte").contains("inline"))
-          s.sql(q14With + body)
-        else {
-          graft.Scratch.cache(s.sql(q14CrossItemsSql))
-            .createOrReplaceTempView("cross_items")
-          graft.Scratch.view("cross_items")
-          graft.Scratch.cache(s.sql(q14AvgSalesSql))
-            .createOrReplaceTempView("avg_sales")
-          graft.Scratch.view("avg_sales")
-          s.sql(body)
-        }
+        graft.Scratch.cache(s.sql(q14CrossItemsSql))
+          .createOrReplaceTempView("cross_items")
+        graft.Scratch.view("cross_items")
+        graft.Scratch.cache(s.sql(q14AvgSalesSql))
+          .createOrReplaceTempView("avg_sales")
+        graft.Scratch.view("avg_sales")
+        s.sql(body)
       })
 
   private val q14a = q14Query("tpcds_q14a",
@@ -855,31 +850,18 @@ ORDER BY i_category ASC NULLS FIRST, i_class ASC NULLS FIRST,
          rk ASC NULLS FIRST
 LIMIT 100""")
 
-  // Join-order rewrite of the spec text (identical relational result —
-  // inner-join re-association only): the spec's FROM order joins
-  // catalog_sales to inventory on cs_item_sk ALONE, exploding each sale
-  // into every (warehouse × week) inventory row of the item before the
-  // d1/d2 week equality prunes it. Here inventory pre-joins its date
-  // (an atomic subquery — ReorderJoin flattens left-deep chains only,
-  // so Catalyst keeps it together), turning the fact-fact join into an
-  // equi-join on (item, week): the intermediate shrinks by the number
-  // of weeks (~260× at 100 TB), and the selective cd/hd/d1 dims apply
-  // BEFORE the fact-fact join instead of after. Measured 2.7 s → see
-  // OPTIMIZATION_r18.md.
-  /** q72, both shapes. The MEASURED default is the spec FROM-order text
-    * (ADVICE r18: the reference framework runs the spec text, so the
-    * engine's number on the common workload must be the comparable
-    * one). The r18 week-equality rewrite — inventory pre-joined to its
-    * date_dim so the fact-fact join keys on (item, week), ~260× smaller
-    * intermediate when no dim side broadcasts — is kept verbatim as the
-    * A/B arm (`spark.graft.q72.shape=rewrite`) and re-measured every
-    * round by the bench extras (`q72_rewrite_med`/`_min`). With r19's
-    * write-parallel staging the spec text also became the FASTER local
-    * shape (the explosion runs inside one parallel broadcast pipeline);
-    * the rewrite remains the documented 100 TB fallback when the dims
-    * outgrow broadcast. Both texts are relationally equivalent and
-    * oracle-verified. */
-  private[operators] val q72SpecBody = """SELECT i_item_desc, w_warehouse_name, d1.d_week_seq,
+  /** q72 runs the spec FROM-order text, the shape the reference
+    * framework measures (ADVICE r18). With r19's write-parallel staging
+    * it is also the faster local shape: the catalog_sales × inventory
+    * explosion runs inside one parallel broadcast pipeline. Should the
+    * dims outgrow broadcast at scale, pre-joining inventory to its
+    * date_dim so the fact-fact join keys on (item, week) is the known
+    * fallback (the r18 rewrite, in git history). */
+  private val q72 = tq("tpcds_q72",
+    Seq("catalog_sales", "inventory", "warehouse", "item",
+      "customer_demographics", "household_demographics", "date_dim",
+      "promotion", "catalog_returns"),
+    """SELECT i_item_desc, w_warehouse_name, d1.d_week_seq,
        CAST(SUM(CASE WHEN p_promo_sk IS NULL THEN 1 ELSE 0 END) AS BIGINT) no_promo,
        CAST(SUM(CASE WHEN p_promo_sk IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) promo,
        COUNT(*) total_cnt
@@ -902,45 +884,7 @@ GROUP BY i_item_desc, w_warehouse_name, d1.d_week_seq
 ORDER BY total_cnt DESC NULLS LAST, i_item_desc ASC NULLS FIRST,
          w_warehouse_name ASC NULLS FIRST, d1.d_week_seq ASC NULLS FIRST,
          no_promo ASC NULLS FIRST, promo ASC NULLS FIRST
-LIMIT 100"""
-
-  private[operators] val q72RewriteBody = """SELECT i_item_desc, w_warehouse_name, d1.d_week_seq,
-       CAST(SUM(CASE WHEN p_promo_sk IS NULL THEN 1 ELSE 0 END) AS BIGINT) no_promo,
-       CAST(SUM(CASE WHEN p_promo_sk IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) promo,
-       COUNT(*) total_cnt
-FROM catalog_sales
-JOIN date_dim d1 ON (cs_sold_date_sk = d1.d_date_sk)
-JOIN date_dim d3 ON (cs_ship_date_sk = d3.d_date_sk)
-JOIN customer_demographics ON (cs_bill_cdemo_sk = cd_demo_sk)
-JOIN household_demographics ON (cs_bill_hdemo_sk = hd_demo_sk)
-JOIN item ON (i_item_sk = cs_item_sk)
-JOIN (SELECT inv_item_sk, inv_warehouse_sk, inv_quantity_on_hand,
-             d_week_seq AS inv_week_seq
-      FROM inventory JOIN date_dim d2 ON (inv_date_sk = d_date_sk)) inv2
-  ON (cs_item_sk = inv_item_sk AND d1.d_week_seq = inv_week_seq)
-JOIN warehouse ON (w_warehouse_sk = inv_warehouse_sk)
-LEFT OUTER JOIN promotion ON (cs_promo_sk = p_promo_sk)
-LEFT OUTER JOIN catalog_returns ON (cr_item_sk = cs_item_sk
-                                    AND cr_order_number = cs_order_number)
-WHERE inv_quantity_on_hand < cs_quantity
-  AND d3.d_date > d1.d_date + 5 AND hd_buy_potential = '>10000'
-  AND d1.d_year = 2000 AND cd_marital_status = 'D'
-GROUP BY i_item_desc, w_warehouse_name, d1.d_week_seq
-ORDER BY total_cnt DESC NULLS LAST, i_item_desc ASC NULLS FIRST,
-         w_warehouse_name ASC NULLS FIRST, d1.d_week_seq ASC NULLS FIRST,
-         no_promo ASC NULLS FIRST, promo ASC NULLS FIRST
-LIMIT 100"""
-
-  private val q72 = OpQuery("tpcds_q72",
-    Some(Tpcds.oracle(
-      Seq("catalog_sales", "inventory", "warehouse", "item",
-        "customer_demographics", "household_demographics", "date_dim",
-        "promotion", "catalog_returns"), q72SpecBody)),
-    (s, d) => {
-      Tpcds.ensure(s, d)
-      s.sql(if (s.conf.getOption("spark.graft.q72.shape")
-          .contains("rewrite")) q72RewriteBody else q72SpecBody)
-    })
+LIMIT 100""")
 
   private val q75 = tq("tpcds_q75",
     Seq("catalog_sales", "catalog_returns", "store_sales", "store_returns", "web_sales", "web_returns", "item", "date_dim"),

@@ -3570,14 +3570,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // plain hash repartition when AQE is off. Callers that
         // pre-arranged their own distribution (ZORDER's curve ranges,
         // OPTIMIZE's byte bins) opt out via cluster = false.
-        // A/B toggle (spark.graft.write.cluster = rebalance | repartition)
-        // so the bench can attribute the hint's local cost — the
-        // repartition arm is the pre-r15 one-file-per-partition shape,
-        // kept ONLY for measurement, never the scale default.
         if (!cluster) withPv
-        else if (spark.conf.getOption("spark.graft.write.cluster")
-            .contains("repartition"))
-          withPv.repartition(col(PartCol))
         else withPv.hint("rebalance", col(PartCol))
       case None => df
     }
@@ -3593,11 +3586,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // directory listings — the footer-probe pass was a second full
     // metadata read of every file just written. Falls back to the probe
     // for schemas whose footer stats the tracker can't reproduce
-    // (nested types) and under the A/B conf (spark.graft.stats.intask
-    // = false re-measures the old shape; default on).
-    val inTask = spark.conf.getOption("spark.graft.stats.intask")
-      .forall(_.toBoolean) &&
-      org.apache.spark.sql.GraftParquetWrite.supportsSchema(df.schema)
+    // (nested types).
+    val inTask = org.apache.spark.sql.GraftParquetWrite.supportsSchema(df.schema)
     val probed =
       if (inTask)
         org.apache.spark.sql.GraftParquetWrite.writeWithStats(
@@ -3634,9 +3624,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // change files need per-file row counts only — the in-task tracker
     // delivers them with the write itself (zero post-write opens);
     // fallback mirrors [[writeData]]
-    val inTask = spark.conf.getOption("spark.graft.stats.intask")
-      .forall(_.toBoolean) &&
-      org.apache.spark.sql.GraftParquetWrite.supportsSchema(df.schema)
+    val inTask = org.apache.spark.sql.GraftParquetWrite.supportsSchema(df.schema)
     val probed =
       if (inTask)
         org.apache.spark.sql.GraftParquetWrite.writeWithStats(
@@ -4481,7 +4469,7 @@ object SnapshotTable {
     * (≤ 2 files — the single-row DML / small-append shape) skip
     * job-launch overhead and probe inline: the driver work is BOUNDED
     * by the constant, never O(commit size). */
-  private[sources] def probeFooters(
+  private[graft] def probeFooters(
       spark: SparkSession, listed: Seq[(String, String, Long)])
     : Seq[(String, String, Long, Long, Map[String, (Double, Double)])] = {
     if (listed.isEmpty) return Seq.empty
@@ -4582,7 +4570,7 @@ object SnapshotTable {
     } finally reader.close()
   }
 
-  private def listDataFiles(fs: FileSystem, dir: Path,
+  private[graft] def listDataFiles(fs: FileSystem, dir: Path,
       col: String = PartCol): Seq[(String, String, Long)] = {
     if (!fs.exists(dir)) return Seq.empty
     if (fs.getScheme == "file") listDataFilesNio(dir, col)

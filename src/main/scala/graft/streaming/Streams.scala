@@ -4,7 +4,8 @@ import graft.{Cols, OpQuery, Tables}
 import graft.Cols.{dec, money, moneyOut}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
 import java.time.Instant
@@ -84,6 +85,18 @@ object Streams {
     dir
   }
 
+  /** Start a streaming query whose micro-batches shuffle `width` wide.
+    * The engine clones the session inside `start()` and the stream runs
+    * on that clone, so `s` carries the width only for the duration of
+    * the call; its own setting is restored before this returns. */
+  private[graft] def startWithWidth(s: SparkSession, width: Int)(
+      start: => StreamingQuery): StreamingQuery = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = s.conf.get(key)
+    s.conf.set(key, width.toString)
+    try start finally s.conf.set(key, prior)
+  }
+
   /** Run a streaming DataFrame to completion through the memory sink and
     * return the materialized result.
     *
@@ -91,30 +104,27 @@ object Streams {
     * partitions (one store + checkpoint dir per shuffle partition per
     * micro-batch), so the stream runs with a bounded state fan-out
     * instead of the session's scan-sized shuffle width. A streaming
-    * query pins its shuffle width at first start from the session conf;
+    * query pins its shuffle width at first start from its session conf;
     * production would size this to keyspace ÷ target-state-per-task, not
-    * to scan parallelism. The conf is restored after the run. */
+    * to scan parallelism. */
   private def runToMemory(df: DataFrame, prefix: String,
       mode: OutputMode = OutputMode.Append): DataFrame = {
     val spark = df.sparkSession
     val qn = s"graft_${prefix}_${runId.incrementAndGet()}"
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, StatePartitions.toString)
-    try {
-      val q = df.writeStream
+    val q = startWithWidth(spark, StatePartitions) {
+      df.writeStream
         .format("memory")
         .queryName(qn)
         .outputMode(mode)
         .option("checkpointLocation", scratch(s"${prefix}_ckpt"))
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[trace] stream $prefix batch ${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
-    } finally spark.conf.set(key, prior)
+    }
+    q.awaitTermination()
+    if (sys.env.contains("SPARK_GRAFT_TRACE"))
+      q.recentProgress.foreach(p => System.err.println(
+        s"[trace] stream $prefix batch ${p.batchId} rows=${p.numInputRows} " +
+          s"durationMs=${p.durationMs}"))
     graft.Scratch.view(qn) // memory sink dies after materialization
     spark.table(qn)
   }
@@ -683,15 +693,12 @@ object Streams {
       // its own query to read recentProgress): a streaming agg pins one
       // state store + checkpoint dir per shuffle partition per batch,
       // so it must not inherit the session's scan-sized width
-      val key = "spark.sql.shuffle.partitions"
-      val prior = s.conf.get(key)
-      s.conf.set(key, StatePartitions.toString)
-      val q =
-        try feed.writeStream.format("memory").queryName(qn)
+      val q = startWithWidth(s, StatePartitions) {
+        feed.writeStream.format("memory").queryName(qn)
           .outputMode(OutputMode.Complete)
           .option("checkpointLocation", scratch("ratelim_ckpt"))
           .trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set(key, prior)
+      }
       q.awaitTermination()
       val batches = q.recentProgress.count(_.numInputRows > 0)
       require(batches == 3,

@@ -8,20 +8,21 @@ import java.nio.file.Files
 
 /** Per-commit statistics collection.
   *
-  * Default shape (r18): rows + min/max are collected INSIDE the write
-  * tasks (GraftParquetWrite, Delta's stats-tracker shape) — a commit
-  * costs zero post-write file opens, zero extra Spark jobs, zero
-  * directory listings. The footer-probe pass ([[SnapshotTable
-  * .probeFooters]], r17's distributed job) remains the fallback for
-  * nested schemas and the A/B arm (spark.graft.stats.intask=false); its
-  * stats must stay byte-identical to the in-task tracker's. */
+  * Flat schemas collect rows + min/max INSIDE the write tasks
+  * (GraftParquetWrite, Delta's stats-tracker shape) — a commit costs
+  * zero post-write file opens, zero extra Spark jobs, zero directory
+  * listings. The footer-probe pass ([[SnapshotTable.probeFooters]], a
+  * distributed job) remains the fallback for nested schemas, and it is
+  * the reference the in-task stats are checked against: run over the
+  * same committed files, it must report the same rows and stats. */
 class CommitFooterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmp(p: String) = Files.createTempDirectory(s"graft_$p").toString
 
-  /** (rows, stats-map) per manifest file entry of version 0. */
-  private def entryStats(root: String): Seq[(Long, Map[String, (Double, Double)])] = {
+  /** (path, rows, stats-map) per manifest file entry of version 0. */
+  private def entryStats(root: String)
+      : Seq[(String, Long, Map[String, (Double, Double)])] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val json = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(root, "_graft_log", "00000.json")),
@@ -35,8 +36,18 @@ class CommitFooterSpec extends AnyFunSuite {
           e.getKey -> (e.getValue.get(0).asDouble(), e.getValue.get(1).asDouble())
         }.toMap
       }.getOrElse(Map.empty[String, (Double, Double)])
-      (f.get("rows").asLong(), stats)
+      (f.get("path").asText(), f.get("rows").asLong(), stats)
     }
+  }
+
+  /** The same projection from the footer probe over the files the
+    * commits under `root` wrote. */
+  private def footerStats(s: org.apache.spark.sql.SparkSession, root: String)
+      : Seq[(String, Long, Map[String, (Double, Double)])] = {
+    val data = new org.apache.hadoop.fs.Path(root, "data")
+    val fs = data.getFileSystem(s.sessionState.newHadoopConf())
+    SnapshotTable.probeFooters(s, SnapshotTable.listDataFiles(fs, data))
+      .map { case (p, _, _, rows, stats) => (p, rows, stats) }
   }
 
   private def mixedDf(s: org.apache.spark.sql.SparkSession) = {
@@ -59,20 +70,15 @@ class CommitFooterSpec extends AnyFunSuite {
 
   test("in-task stats equal the footer probe's, column for column") {
     val s = spark.newSession()
-    val df = mixedDf(s).coalesce(1)
-    val rootA = tmp("stats_intask")
-    val rootB = tmp("stats_footer")
-    new SnapshotTable(s, rootA).create(df)
-    s.conf.set("spark.graft.stats.intask", "false")
-    try new SnapshotTable(s, rootB).create(df)
-    finally s.conf.unset("spark.graft.stats.intask")
-    val a = entryStats(rootA)
-    val b = entryStats(rootB)
+    val root = tmp("stats_intask")
+    new SnapshotTable(s, root).create(mixedDf(s).coalesce(1))
+    val a = entryStats(root).sortBy(_._1)
+    val b = footerStats(s, root).sortBy(_._1)
     assert(a.nonEmpty && a == b,
       s"in-task stats diverge from footer stats:\n  in-task: $a\n  footer: $b")
     // sanity on content: NaN and all-null columns dropped, the rest kept
-    val stats = a.head._2
-    assert(a.head._1 == 100L)
+    val stats = a.head._3
+    assert(a.head._2 == 100L)
     assert(!stats.contains("d"), "NaN column must drop its stats")
     assert(!stats.contains("nul"), "all-null column must drop its stats")
     assert(!stats.contains("s"), "string column carries no numeric stats")
@@ -136,7 +142,7 @@ class CommitFooterSpec extends AnyFunSuite {
     assert(t.detail.head.getLong(3) == 400L, "manifest row count from tasks")
   }
 
-  test("footer fallback still probes in a distributed job (A/B arm)") {
+  test("footer fallback still probes in a distributed job (nested schema)") {
     val s = spark.newSession()
     import s.implicits._
     val dir = tmp("footer_job")
@@ -153,20 +159,18 @@ class CommitFooterSpec extends AnyFunSuite {
         if (probeStages.contains(e.stageId)) { tasks.incrementAndGet(); () }
     }
     s.sparkContext.addSparkListener(listener)
-    s.conf.set("spark.graft.stats.intask", "false")
     val t =
       try {
+        // the struct column is outside what the in-task tracker models,
+        // so this commit takes the footer fallback
         val t0 = new SnapshotTable(s, dir).create(
-          (1L to 400L).map(k => (k, k * 1.0)).toDF("k", "v").repartition(4))
+          (1L to 400L).map(k => (k, (k, k * 1.0))).toDF("k", "v").repartition(4))
         // listener events post asynchronously — give the bus a beat
         val deadline = System.currentTimeMillis() + 10000
         while (tasks.get() < 2 && System.currentTimeMillis() < deadline)
           Thread.sleep(50)
         t0
-      } finally {
-        s.conf.unset("spark.graft.stats.intask")
-        s.sparkContext.removeSparkListener(listener)
-      }
+      } finally s.sparkContext.removeSparkListener(listener)
     assert(tasks.get() > 1,
       s"expected a distributed footer job, saw ${tasks.get()} tasks")
     assert(t.read().count() == 400L)

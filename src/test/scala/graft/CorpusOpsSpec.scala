@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -105,5 +106,50 @@ class CorpusOpsSpec extends AnyFunSuite {
     val totalChars = Tables.load(spark, sf, "documents")
       .agg(sum("n_chars")).collect()(0).getLong(0)
     assert(keptChars < totalChars)
+  }
+
+  test("stream_dedup_lsh shuffles 4 wide inside a 16-wide session and leaves its width alone") {
+    val s = spark.newSession()
+    import s.implicits._
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    // widest shuffle-reading stage of any job the stream ran (its jobs
+    // carry the streaming query id); a marker job submitted afterwards
+    // shows every earlier job-start event has been delivered
+    val widest = new java.util.concurrent.atomic.AtomicInteger(0)
+    val streamJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("sql.streaming.queryId") != null)) {
+          streamJobs.incrementAndGet()
+          e.stageInfos.filter(_.parentIds.nonEmpty)
+            .foreach(st => widest.accumulateAndGet(st.numTasks, math.max))
+        } else if (props.exists(p =>
+            p.getProperty("spark.job.description") == "sdl-width-marker"))
+          marker.set(true)
+      }
+    }
+    s.sparkContext.addSparkListener(listener)
+    val rows =
+      try {
+        val got = SparkEntry.queries("stream_dedup_lsh")(s, sf)
+          .as[(Int, Long, Long, Long)].collect().toSeq
+        s.sparkContext.setJobDescription("sdl-width-marker")
+        try s.range(1).count() finally s.sparkContext.setJobDescription(null)
+        val deadline = System.currentTimeMillis() + 10000
+        while (!marker.get() && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        got
+      } finally s.sparkContext.removeSparkListener(listener)
+    // (batch, n_exact, n_near, n_unique) as the entry returned them at
+    // sf0.001 before the width moved into the stream's own session
+    assert(rows == Seq((7, 0L, 5L, 45L), (8, 0L, 2L, 48L), (9, 0L, 8L, 42L)))
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "16")
+    assert(marker.get(), "listener bus did not drain")
+    assert(streamJobs.get() > 0 && widest.get() > 0,
+      s"no shuffle stage seen from the stream (${streamJobs.get()} jobs)")
+    assert(widest.get() <= 4,
+      s"a stream shuffle stage ran ${widest.get()} tasks on a 4-wide stream")
   }
 }

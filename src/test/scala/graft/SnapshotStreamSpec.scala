@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.SnapshotTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mode, all without a single data-directory listing. */
 class SnapshotStreamSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   private def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(p).toString

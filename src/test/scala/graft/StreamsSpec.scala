@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming vs batch equivalence on sf0.001: every streaming query's
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamsSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   private def run(name: String) =
     SparkEntry.queries(name)(spark, dir).collect()

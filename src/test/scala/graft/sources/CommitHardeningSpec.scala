@@ -9,8 +9,8 @@ import java.nio.file.Files
 /** Hardening pins for the r18 commit machinery (VERDICT/ADVICE items):
   *   - commit caches are scoped per commit (thread): two concurrent
   *     commits on ONE instance cannot cross-drain;
-  *   - in-task stats parity with the footer probe holds for ESCAPED
-  *     partition values (space, %, =);
+  *   - in-task stats and partition values match the footer probe's
+  *     over the same files for ESCAPED partition values (space, %, =);
   *   - the documented multi-row-group divergence (footer drops a column
   *     with an all-null chunk, the tracker keeps the still-sound
   *     file-level range) is pinned so it can never drift silently.
@@ -52,8 +52,9 @@ class CommitHardeningSpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
-  /** (partValue, rows, stats) per v0 manifest file entry — the
-    * path-independent projection both stat arms must agree on. */
+  private def statKey(c: String, lo: Double, hi: Double) = s"$c=[$lo,$hi]"
+
+  /** (partValue, rows, stats) per v0 manifest file entry. */
   private def entryKeys(root: String): Set[(String, Long, String)] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val json = new String(Files.readAllBytes(
@@ -64,11 +65,26 @@ class CommitHardeningSpec extends AnyFunSuite {
       val f = files.get(i)
       val stats = Option(f.get("stats")).map { st =>
         import scala.jdk.CollectionConverters._
-        st.fields().asScala.map(e => s"${e.getKey}=${e.getValue}")
+        st.fields().asScala.map(e => statKey(e.getKey,
+          e.getValue.get(0).asDouble(), e.getValue.get(1).asDouble()))
           .toSeq.sorted.mkString(",")
       }.getOrElse("")
-      (Option(f.get("partValue")).map(_.asText()).orNull,
+      (Option(f.get("part")).map(_.asText()).orNull,
         f.get("rows").asLong(), stats)
+    }.toSet
+  }
+
+  /** The same projection from the footer probe over the files the
+    * commits under `root` wrote, partition values parsed from their
+    * directory names. */
+  private def footerKeys(s: org.apache.spark.sql.SparkSession, root: String)
+      : Set[(String, Long, String)] = {
+    val data = new org.apache.hadoop.fs.Path(root, "data")
+    val fs = data.getFileSystem(s.sessionState.newHadoopConf())
+    SnapshotTable.probeFooters(s, SnapshotTable.listDataFiles(fs, data)).map {
+      case (_, pv, _, rows, stats) =>
+        (pv, rows, stats.toSeq.map { case (c, (lo, hi)) => statKey(c, lo, hi) }
+          .sorted.mkString(","))
     }.toSet
   }
 
@@ -78,25 +94,17 @@ class CommitHardeningSpec extends AnyFunSuite {
     // space, percent, equals, slash — the Hive-escaping edge set
     val df = Seq(("a b", 1L), ("p%q", 2L), ("e=f", 3L), ("x/y", 4L),
       ("plain", 5L)).toDF("p", "v").coalesce(1)
-    val rootA = tmp("esc_intask")
-    val rootB = tmp("esc_footer")
-    val tA = new SnapshotTable(s, rootA)
-    tA.create(df, partitionBy = Some("p"))
-    s.conf.set("spark.graft.stats.intask", "false")
-    val tB = new SnapshotTable(s, rootB)
-    try tB.create(df, partitionBy = Some("p"))
-    finally s.conf.unset("spark.graft.stats.intask")
-    val a = entryKeys(rootA)
-    val b = entryKeys(rootB)
+    val root = tmp("esc_intask")
+    val t = new SnapshotTable(s, root)
+    t.create(df, partitionBy = Some("p"))
+    val a = entryKeys(root)
+    val b = footerKeys(s, root)
     assert(a.nonEmpty && a == b,
       s"escaped-partition manifests diverge:\n  in-task: $a\n  footer: $b")
-    // both arms round-trip the raw values through the read path
-    val read = (t: SnapshotTable) =>
-      t.read().select("p", "v").as[(String, Long)].collect().toSet
-    val expect = Set(("a b", 1L), ("p%q", 2L), ("e=f", 3L), ("x/y", 4L),
-      ("plain", 5L))
-    assert(read(tA) == expect)
-    assert(read(tB) == expect)
+    // the raw values round-trip through the read path
+    val read = t.read().select("p", "v").as[(String, Long)].collect().toSet
+    assert(read == Set(("a b", 1L), ("p%q", 2L), ("e=f", 3L), ("x/y", 4L),
+      ("plain", 5L)))
   }
 
   test("multi-row-group all-null chunk: tracker keeps the sound range, footer drops (documented divergence)") {
