@@ -432,7 +432,8 @@ object BenchExtras {
     * the CoW rewrite is partition-pruned to 1/16 of the table), then
     * re-points the `store_sales` view at the table and runs the
     * protocol's own query set {q3, q9, q34, q42, q59}; a final
-    * compaction folds the 10 versions back to a clean layout.
+    * compaction rewrites the buckets that are not at their share of
+    * files and carries the rest by reference.
     *
     * irp_merge_N vs N shows merge cost as versions accumulate;
     * irp_query_N vs irp_query_0 shows read-path stability (CoW reads

@@ -508,6 +508,13 @@ class SnapshotTable(spark: SparkSession, root: String) {
       else None
     }
 
+  /** Whether `e` was written under layout `s`: the manifest records
+    * identity layouts in partCol and transform layouts in
+    * xformCol/xformTag (FileEntry doc); anything else is foreign. */
+  private def underLayout(s: PartitionTransform.Spec, e: FileEntry): Boolean =
+    if (s.tag == null) e.partCol == s.col
+    else e.xformCol == s.col && e.xformTag == s.tag
+
   /** Deletion-vector file list at the latest version (empty unless
     * positional deletes are pending) — `rows` sums to the count of
     * deleted (file, position) marks, the DV observability number. */
@@ -2624,15 +2631,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // sentinel, so that is the file-level match key
     val diskVals = if (hasNull) vals + HiveNullPart else vals
     val entries = fileEntries(v)
-    // a file is same-layout when it was written under THIS spec — the
-    // manifest records identity layouts in partCol and transform layouts
-    // in xformCol/xformTag (FileEntry doc); anything else is foreign
-    def sameLayout(e: FileEntry): Boolean =
-      if (spec.tag == null) e.partCol == spec.col
-      else e.xformCol == spec.col && e.xformTag == spec.tag
-    val foreign = entries.filter(e => e.partValue == null || !sameLayout(e))
-    val replaced = entries.filter(e =>
-      e.partValue != null && sameLayout(e) && diskVals.contains(e.partValue))
+    val foreign =
+      entries.filter(e => e.partValue == null || !underLayout(spec, e))
+    val replaced = entries.filter(e => e.partValue != null &&
+      underLayout(spec, e) && diskVals.contains(e.partValue))
     val carry = entries.filterNot(e => foreign.contains(e) || replaced.contains(e))
     val written = writeData(df, v + 1, Some(partitionBy))
     // rows of mixed-layout files that do NOT belong to a replaced
@@ -2684,9 +2686,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // back to unpartitioned bins (there is no single spec to keep).
     val spec = layoutSpec
     val specParsed = spec.map(PartitionTransform.parse)
-    def sameLayout(e: FileEntry): Boolean = specParsed.exists(s =>
-      if (s.tag == null) e.partCol == s.col
-      else e.xformCol == s.col && e.xformTag == s.tag)
+    def sameLayout(e: FileEntry): Boolean = specParsed.exists(underLayout(_, e))
     // Partition-scoped OPTIMIZE (`OPTIMIZE t WHERE pc = v`): only
     // same-layout files of the named partitions rewrite; every other
     // file — other partitions AND layout-foreign files (which are not
@@ -2717,48 +2717,56 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * partition" collapses a 10 GiB backlog into a single
     * unsplittable-write task. Bin assignment is driver-side manifest
     * arithmetic: each file maps to a globally-unique bin id (round-robin
-    * by descending size within its partition ≈ balanced bins), and the
-    * scan range-partitions on that id via its `_metadata.file_path` —
-    * no extra scan, no rand(), and bin ids are disjoint across
-    * partitions so no task ever straddles two partition directories. */
+    * by descending size within its partition ≈ balanced bins), looked up
+    * by the scan's `_metadata.file_path` — no extra scan, no rand(), and
+    * bin ids are disjoint across partitions (see [[writeAddressedBins]]). */
   private def writeBinned(rewrite: Seq[FileEntry], dvs: Seq[FileEntry],
       nextVersion: Int, spec: Option[String], minBytes: Long,
-      targetFiles: Int): Seq[FileEntry] = {
-    val df = spec match {
-      case Some(_) =>
-        val binOf: Map[String, Int] = {
-          var next = 0
-          rewrite.groupBy(_.partValue).values.flatMap { es =>
-            // overflow-safe ceil-div (callers pass Long.MaxValue as an
-            // "everything is small" threshold)
-            val bins = math.max(1L,
-              (es.map(_.bytes).sum - 1) / minBytes + 1).toInt
-            val assigned = es.sortBy(-_.bytes).zipWithIndex
-              .map { case (e, i) => e.path -> (next + i % bins) }
-            next += bins
-            assigned
-          }.toMap
-        }
-        val nBins = binOf.values.max + 1
-        val addressed0 =
-          if (dvs.isEmpty) readEntriesAddressed(rewrite,
-            keepRid = rowTrackingEnabled)
-          else addressedMinusDvs(rewrite, dvs,
-            keepRid = rowTrackingEnabled)
-        // row tracking: stamp ids while the address columns are live
-        val addressed =
-          if (rowTrackingEnabled) withRidColumn(addressed0, rewrite)
-          else addressed0
-        addressed
-          .repartitionByRange(nBins,
-            element_at(typedLit(binOf), col(DvFileCol)))
-          .drop(DvFileCol, DvPosCol)
-      case None => rewriteSource(rewrite, dvs).repartition(targetFiles)
-    }
-    // cluster = false: the pre-arranged per-partition bins ARE the
-    // distribution; writeData's default re-clustering by partition
-    // value would collapse them back to one file per partition
-    writeData(df, nextVersion, spec, cluster = false)
+      targetFiles: Int): Seq[FileEntry] = spec match {
+    case Some(p) =>
+      var next = 0
+      val binOf: Map[String, Int] =
+        rewrite.groupBy(_.partValue).values.flatMap { es =>
+          // overflow-safe ceil-div (callers pass Long.MaxValue as an
+          // "everything is small" threshold); files are never split, so
+          // more bins than files would only be empty tasks
+          val bins = math.min(es.size.toLong, math.max(1L,
+            (es.map(_.bytes).sum - 1) / minBytes + 1)).toInt
+          val assigned = es.sortBy(-_.bytes).zipWithIndex
+            .map { case (e, i) => e.path -> (next + i % bins) }
+          next += bins
+          assigned
+        }.toMap
+      writeAddressedBins(rewrite, dvs, nextVersion, p, next,
+        element_at(typedLit(binOf), col(DvFileCol)))
+    case None =>
+      writeData(rewriteSource(rewrite, dvs).repartition(targetFiles),
+        nextVersion, None)
+  }
+
+  /** Rewrite `rewrite` under partition `spec` with every row sent to the
+    * output bin that `bin` (an expression over the scan's address
+    * columns) names: DV marks applied, row ids materialized under row
+    * tracking. `repartitionById` hands bin i to write task i, with no
+    * range-bound sampling job and no approximate split points, so when
+    * every bin lies inside one partition each non-empty bin is exactly
+    * one output file. */
+  private def writeAddressedBins(rewrite: Seq[FileEntry],
+      dvs: Seq[FileEntry], nextVersion: Int, spec: String, nBins: Int,
+      bin: org.apache.spark.sql.Column): Seq[FileEntry] = {
+    val keepRid = rowTrackingEnabled
+    val addressed0 =
+      if (dvs.isEmpty) readEntriesAddressed(rewrite, keepRid = keepRid)
+      else addressedMinusDvs(rewrite, dvs, keepRid = keepRid)
+    // row tracking: stamp ids while the address columns are live
+    val addressed =
+      if (keepRid) withRidColumn(addressed0, rewrite) else addressed0
+    val df = addressed.repartitionById(nBins, bin.cast("int"))
+      .drop(DvFileCol, DvPosCol)
+    // cluster = false: the bins ARE the distribution; writeData's default
+    // re-clustering by partition value would collapse them back to one
+    // file per partition
+    writeData(df, nextVersion, Some(spec), cluster = false)
   }
 
   /** `REORG TABLE … APPLY (PURGE)` (Delta's deletion-vector purge verb):
@@ -2810,9 +2818,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
       // transform, so matching it against the scope literals would be
       // meaningless (same rule as scoped OPTIMIZE)
       val specParsed = layoutSpec.map(PartitionTransform.parse)
-      def sameLayout(e: FileEntry): Boolean = specParsed.exists(s =>
-        if (s.tag == null) e.partCol == s.col
-        else e.xformCol == s.col && e.xformTag == s.tag)
+      def sameLayout(e: FileEntry): Boolean =
+        specParsed.exists(underLayout(_, e))
       def inScope(e: FileEntry): Boolean = onlyPartitions.forall(vals =>
         sameLayout(e) && vals.contains(e.partValue))
       val (marked, clean) = fileEntries(v)
@@ -2834,34 +2841,97 @@ class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** Bin-pack compaction: rewrite the current snapshot into ~`numFiles`
-    * files (split across partitions when partitioned). Pending MoR
-    * deltas are folded into the compacted base (Hudi-style compaction). */
+  /** Bin-pack compaction into about `numFiles` files; one `COMPACT`
+    * commit per call.
+    *
+    * When `partitionBy` is the table's own layout, every file is under it
+    * and no merge-on-read (MoR) deltas are pending, compaction works per
+    * partition and only where needed. Partition `pv` gets
+    * `share(pv) = max(1, round(numFiles × bytes(pv) / table bytes))`
+    * files, capped at its live row count. It is *settled* when it holds
+    * exactly `share(pv)` files and no deletion-vector (DV) mark points at
+    * any of them; settled files carry into the new manifest by reference
+    * (path, stats, origin and row-id base unchanged). Every other
+    * partition rewrites to exactly `share(pv)` files, its DV marks
+    * applied and dropped (a bin can only come out empty when the marks
+    * removed all of its rows). The plan is manifest arithmetic on the
+    * driver, so the cost is the bytes of the unsettled partitions, and
+    * compacting a compacted table rewrites nothing: the commit is then
+    * metadata only.
+    *
+    * Otherwise (unpartitioned, another layout, or pending MoR deltas) the
+    * whole table rewrites into about `numFiles` files, folding the deltas
+    * into the base (Hudi-style compaction). */
   def compact(numFiles: Int, partitionBy: Option[String] = None): SnapshotTable = {
     val v = currentVersion
-    // row tracking: a compaction of RESOLVED state carries the
-    // materialized ids through; folding pending MoR deltas refreshes
-    // them (the deferred rows never had base-file addresses)
-    def compactSource(): DataFrame =
-      if (deltaEntries(v).isEmpty) rewriteSource(fileEntries(v), dvEntries(v))
-      else read(v)
-    val df = partitionBy match {
-      case Some(p) =>
-        // ONE arranged shuffle: range-partition on (partition value,
-        // deterministic row hash) so `numFiles` tasks SPLIT large
-        // partitions into multiple files instead of collapsing each
-        // partition to a single unbounded one (which is what letting
-        // writeData re-cluster by partition value did — and the
-        // pre-repartition it discarded was a wasted second shuffle).
-        val src = compactSource()
-        src.repartitionByRange(numFiles,
-          PartitionTransform.writeColumn(PartitionTransform.parse(p)),
-          xxhash64(src.columns.map(col): _*))
-      case None => compactSource().repartition(numFiles)
+    val spec = partitionBy.map(PartitionTransform.parse)
+    val perPartition = spec.exists(s => deltaEntries(v).isEmpty &&
+      layoutSpec.map(PartitionTransform.parse).contains(s) &&
+      fileEntries(v).forall(e => e.partValue != null && underLayout(s, e)))
+    if (perPartition) compactPartitions(v, numFiles, partitionBy.get)
+    else {
+      // row tracking: a compaction of RESOLVED state carries the
+      // materialized ids through; folding pending MoR deltas refreshes
+      // them (the deferred rows never had base-file addresses)
+      val src =
+        if (deltaEntries(v).isEmpty) rewriteSource(fileEntries(v), dvEntries(v))
+        else read(v)
+      val df = spec match {
+        // range-partition on (partition value, row hash) so `numFiles`
+        // tasks split large partitions instead of collapsing each into
+        // one unbounded file
+        case Some(s) => src.repartitionByRange(numFiles,
+          PartitionTransform.writeColumn(s), xxhash64(src.columns.map(col): _*))
+        case None => src.repartition(numFiles)
+      }
+      val written = writeData(df, v + 1, partitionBy, cluster = false)
+      writeManifest(Manifest(v + 1, "COMPACT", Seq.empty, written, Seq.empty))
     }
-    val written = writeData(df, v + 1, partitionBy, cluster = false)
-    writeManifest(Manifest(v + 1, "COMPACT", Seq.empty, written, Seq.empty))
     this
+  }
+
+  /** [[compact]]'s per-partition plan: carry the settled partitions,
+    * rewrite the rest to exactly their share of files. */
+  private def compactPartitions(v: Int, numFiles: Int, spec: String): Unit = {
+    val entries = fileEntries(v)
+    val dvs = dvEntries(v)
+    // DV marks per addressed file: one aggregate over the marks, run only
+    // while marks are pending (O(deleted rows), never a data scan)
+    val marks: Map[String, Long] =
+      if (dvs.isEmpty) Map.empty
+      else readEntries(dvs).groupBy(DvFileCol).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val total = entries.map(_.bytes).sum.toDouble
+    val parts = entries.groupBy(_.partValue).toSeq.sortBy(_._1).map { case (_, es) =>
+      val live = es.map(e => e.rows - marks.getOrElse(e.path, 0L)).sum
+      val byBytes = math.round(numFiles * es.map(_.bytes).sum / total)
+      (es.sortBy(_.path), math.max(1L, math.min(live, byBytes)).toInt)
+    }
+    val (carried, rewrite) = parts.partition { case (es, share) =>
+      es.size == share && !es.exists(e => marks.contains(e.path))
+    }
+    val written =
+      if (rewrite.isEmpty) Seq.empty[FileEntry]
+      else {
+        // partition i owns bins [base_i, base_i + share_i); its rows deal
+        // round-robin over them by dense position in the partition (the
+        // file's row offset in the partition plus the row index), so
+        // every bin gets rows whenever the partition has `share` rows
+        val bases = rewrite.map(_._2).scanLeft(0)(_ + _)
+        val slots: Map[String, (Int, Int, Long)] =
+          rewrite.zip(bases).flatMap { case ((es, share), base) =>
+            es.zip(es.scanLeft(0L)(_ + _.rows)).map { case (e, offset) =>
+              e.path -> (base, share, offset)
+            }
+          }.toMap
+        val slot = element_at(typedLit(slots), col(DvFileCol))
+        writeAddressedBins(rewrite.flatMap(_._1), dvs, v + 1, spec,
+          bases.last, slot("_1") + pmod(slot("_3") + col(DvPosCol), slot("_2")))
+      }
+    // no DV mark survives: a partition with a mark is never settled, so
+    // every marked file was rewritten with its marks applied
+    writeManifest(Manifest(v + 1, "COMPACT", Seq.empty,
+      written ++ carried.flatMap(_._1), Seq.empty))
   }
 
   /** OPTIMIZE ZORDER BY analog: rewrite the current snapshot clustered
@@ -3014,9 +3084,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val specParsed = spec.map(PartitionTransform.parse)
     require(onlyPartitions.isEmpty || spec.isDefined,
       s"partition-scoped ZORDER on $root requires a partitioned table")
-    def sameLayout(e: FileEntry): Boolean = specParsed.exists(s =>
-      if (s.tag == null) e.partCol == s.col
-      else e.xformCol == s.col && e.xformTag == s.tag)
+    def sameLayout(e: FileEntry): Boolean = specParsed.exists(underLayout(_, e))
     val (scoped, carried) = onlyPartitions match {
       case None => (fileEntries(v), Seq.empty[FileEntry])
       case Some(vals) => fileEntries(v).partition(e =>
@@ -3760,9 +3828,22 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * that failed mid-flight releases its caches in its own failure
     * handler (and, belt-and-braces, at the next stale drain). */
   private final class CommitCacheState {
+    /** The thread whose commits own these caches, held weakly so a dead
+      * thread can be collected while its state waits to be reaped. */
+    val owner = new java.lang.ref.WeakReference(Thread.currentThread())
     val pending = new java.util.ArrayDeque[() => Unit]()
     var inFlight = false
+    def ownerDead: Boolean = { val t = owner.get(); t == null || !t.isAlive }
   }
+
+  /** Every thread's state, so a stale drain can reap the caches of a
+    * thread that died without draining (a hard-stopped micro-batch
+    * thread): its releases would otherwise stay pinned in the block
+    * manager for the life of the session. States are held strongly —
+    * their release thunks must outlive the thread — and their owners
+    * weakly. */
+  private val commitCacheStates =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[CommitCacheState]()
 
   /** Commit-cache state is PER-THREAD (the commit token): a commit is a
     * straight-line call sequence on one thread (registerCommitCache →
@@ -3776,13 +3857,18 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * its stored marks). */
   private val commitCaches =
     new ThreadLocal[CommitCacheState] {
-      override def initialValue(): CommitCacheState = new CommitCacheState
+      override def initialValue(): CommitCacheState = {
+        val st = new CommitCacheState
+        commitCacheStates.add(st)
+        st
+      }
     }
 
   /** Persist `df` for the duration of the in-flight commit and register
     * its release; leftovers from a previous FAILED commit on THIS thread
     * release now (only when no commit is currently consuming its
-    * caches). */
+    * caches). The cache belongs to this thread's state: the commit must
+    * drain on this thread. */
   private[sources] def registerCommitCache(df: DataFrame): DataFrame = {
     val st = commitCaches.get()
     if (!st.inFlight) drainCommitCaches()
@@ -3793,13 +3879,26 @@ class SnapshotTable(spark: SparkSession, root: String) {
     cached
   }
 
-  /** Release stale commit caches unless a commit is mid-flight on this
-    * thread — the guard nested steps ([[fillIdentity]]) go through. */
-  private[sources] def drainStaleCommitCaches(): Unit =
+  /** Release stale commit caches: every state whose owning thread is
+    * dead, then this thread's unless a commit is mid-flight on it — the
+    * guard nested steps ([[fillIdentity]]) go through. */
+  private[sources] def drainStaleCommitCaches(): Unit = {
+    commitCacheStates.forEach { st =>
+      if (st.ownerDead && commitCacheStates.remove(st)) releaseCaches(st)
+    }
     if (!commitCaches.get().inFlight) drainCommitCaches()
+  }
 
-  private[sources] def drainCommitCaches(): Unit = {
-    val st = commitCaches.get()
+  private[sources] def drainCommitCaches(): Unit =
+    releaseCaches(commitCaches.get())
+
+  /** Run `st`'s releases. Only its owning thread may drain a live
+    * state: a commit that hopped threads would otherwise release
+    * (or strand) another commit's caches, so it fails here instead. */
+  private def releaseCaches(st: CommitCacheState): Unit = {
+    require(st.ownerDead || (st.owner.get() eq Thread.currentThread()),
+      s"commit caches of a live thread drained from thread " +
+        s"${Thread.currentThread().getName}: a commit must stay on one thread")
     st.inFlight = false
     var release = st.pending.poll()
     while (release != null) { release(); release = st.pending.poll() }

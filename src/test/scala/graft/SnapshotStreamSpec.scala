@@ -221,6 +221,28 @@ class SnapshotStreamSpec extends AnyFunSuite {
     assert(batches === 4L, "4 row-adding commits; 2 reorg commits skipped")
   }
 
+  test("data mode skips partitioned compactions, metadata-only ones too") {
+    val root = tmp("snapstream_pcompact")
+    val t = new SnapshotTable(spark, root).create(slice(0, 100), Some("k"))
+    val created = t.files.map(_.path).toSet
+    t.compact(5, Some("k"))          // v1: every partition settled
+    assert(t.files.map(_.path).toSet == created, "v1 carries every file")
+    t.append(slice(100, 150), Some("k"))
+    t.compact(5, Some("k"))          // v3: rewrites the two-file partitions
+    assert(t.files.map(_.path).toSet.intersect(created).isEmpty)
+    t.compact(5, Some("k"))          // v4: metadata only again
+    t.append(slice(150, 160), Some("k"))
+    assert(t.history.collect().map(_.getString(1)).toSeq == Seq(
+      "CREATE", "COMPACT", "APPEND", "COMPACT", "COMPACT", "APPEND"))
+    val (rows, batches) = drain(root,
+      Map("startingVersion" -> "0", "maxVersionsPerTrigger" -> "1"),
+      _.agg(count(lit(1)).as("n"), sum("v").as("sv")))
+    assert(rows.head.getLong(0) === 160L,
+      "compaction commits contribute no rows, carried files included")
+    assert(rows.head.getDouble(1) === (0 until 160).map(_ * 10.0).sum)
+    assert(batches === 3L, "3 row-adding commits; 3 compactions skipped")
+  }
+
   test("REORG (DV purge) commits are skipped as data reorganization") {
     val root = tmp("snapstream_reorgdv")
     val t = new SnapshotTable(spark, root).create(slice(0, 100))   // v0

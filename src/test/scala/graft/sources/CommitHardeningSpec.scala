@@ -8,7 +8,8 @@ import java.nio.file.Files
 
 /** Hardening pins for the r18 commit machinery (VERDICT/ADVICE items):
   *   - commit caches are scoped per commit (thread): two concurrent
-  *     commits on ONE instance cannot cross-drain;
+  *     commits on ONE instance cannot cross-drain, and a stale drain
+  *     reaps the caches of a thread that died without draining;
   *   - in-task stats and partition values match the footer probe's
   *     over the same files for ESCAPED partition values (space, %, =);
   *   - the documented multi-row-group divergence (footer drops a column
@@ -50,6 +51,47 @@ class CommitHardeningSpec extends AnyFunSuite {
         .get()
       assert(dfA.storageLevel == StorageLevel.NONE)
     } finally pool.shutdown()
+  }
+
+  test("a stale drain reaps the caches of a thread that died without draining") {
+    val s = spark.newSession()
+    import s.implicits._
+    val t = new SnapshotTable(s, tmp("cache_reap"))
+    t.create(Seq((1L, 1.0)).toDF("k", "v"))
+    def persisted = s.sparkContext.getPersistentRDDs.keySet
+    val idsBefore = persisted
+    var cached: org.apache.spark.sql.DataFrame = null
+    // a commit opens on a thread that then exits: no drain ever runs there
+    val owner = new Thread(() => {
+      cached = t.registerCommitCache(Seq((2L, 2.0)).toDF("k", "v"))
+      cached.count(); ()
+    })
+    owner.start()
+    owner.join()
+    val pinned = persisted -- idsBefore
+    assert(pinned.nonEmpty && cached.storageLevel != StorageLevel.NONE,
+      "the dead thread's cache is materialized and pinned")
+    t.drainStaleCommitCaches()
+    assert(cached.storageLevel == StorageLevel.NONE, "cache still registered")
+    assert(persisted.intersect(pinned).isEmpty,
+      s"getPersistentRDDs still lists ${persisted.intersect(pinned)}")
+    // a live thread's in-flight caches are never reaped from here
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val registered = new java.util.concurrent.CountDownLatch(1)
+    var live: org.apache.spark.sql.DataFrame = null
+    val busy = new Thread(() => {
+      live = t.registerCommitCache(Seq((3L, 3.0)).toDF("k", "v"))
+      registered.countDown()
+      gate.await()
+      t.drainCommitCaches()
+    })
+    busy.start()
+    try {
+      registered.await()
+      t.drainStaleCommitCaches()
+      assert(live.storageLevel != StorageLevel.NONE)
+    } finally { gate.countDown(); busy.join() }
+    assert(live.storageLevel == StorageLevel.NONE)
   }
 
   private def statKey(c: String, lo: Double, hi: Double) = s"$c=[$lo,$hi]"
