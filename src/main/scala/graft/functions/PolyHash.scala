@@ -384,14 +384,18 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point: injects the engine's SQL
   * functions, the maintenance-verb parser (`OPTIMIZE` / `VACUUM` /
-  * `DESCRIBE HISTORY` — graft.plans.GraftSqlParser), and the strategy
-  * that executes those commands, into every session derived from the
-  * config — the SparkSessionExtensions route from SURVEY.md §5. */
+  * `DESCRIBE HISTORY` — graft.plans.GraftSqlParser), the strategy
+  * that executes those commands, and the optimizer rule that lets
+  * filtered scalar subqueries share one scan
+  * (graft.plans.MergeFilteredSubqueries), into every session derived
+  * from the config — the SparkSessionExtensions route from SURVEY.md §5. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) =>
       new graft.plans.GraftSqlParser(delegate))
     ext.injectPlannerStrategy(_ => graft.plans.GraftMaintenanceStrategy)
+    // filtered scalar subqueries over one relation share one scan
+    ext.injectPreCBORule(_ => graft.plans.MergeFilteredSubqueries)
     // `SELECT … FROM graft.`/path`` — path-addressed batch reads
     ext.injectResolutionRule(spark =>
       new graft.plans.GraftPathTableResolution(spark))

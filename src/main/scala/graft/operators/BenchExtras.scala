@@ -438,6 +438,11 @@ object BenchExtras {
     * irp_merge_N vs N shows merge cost as versions accumulate;
     * irp_query_N vs irp_query_0 shows read-path stability (CoW reads
     * stay manifest-planned and clean regardless of version count).
+    *
+    * A MERGE now evaluates its source once and q9's fifteen scalar
+    * subqueries share one `store_sales` scan (README "Plan sharing"), so
+    * the `irp_merge_*` and `irp_query_*` extras and the `tpcds_q9` entry
+    * are not comparable with reports taken before that change.
     */
   def refreshProtocol(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     graft.sources.Tpcds.ensure(spark, sfDir)

@@ -1843,54 +1843,58 @@ class SnapshotTable(spark: SparkSession, root: String) {
     if (txn.exists { case (app, ver) =>
         manifestOf(v).txns.get(app).exists(_ >= ver) })
       return this
-    val (base, carryOver) = prunedBase(source, keys, partitionBy,
-      source.schema, withRids = true)
-    // carried (anti-joined) rows keep their materialized row ids under
-    // row tracking; source rows (updates + inserts) refresh — the
-    // key-join cannot tell an update from an insert without another
-    // join, so the scoped contract stands for them (SQL MERGE preserves
-    // updated rows' ids via the delta path instead)
-    val hasRid = base.columns.contains(SnapshotTable.RidCol)
-    val srcAligned =
-      if (hasRid)
-        source.withColumn(SnapshotTable.RidCol, lit(null).cast("long"))
-      else source
-    val rewritten =
-      if (evolveSchema)
-        base.join(source, keys, "left_anti")
-          .unionByName(srcAligned, allowMissingColumns = true)
-      else base.join(source, keys, "left_anti").unionByName(srcAligned)
-    val written = writeData(rewritten, v + 1, partitionBy)
-    // Change-data-feed capture (Delta CDF analog, cdc files written with
-    // the commit): classify source rows against the touched base — keyed
-    // matches are updates (pre- AND post-image, Delta CDF parity: the
-    // preimage is what lets a downstream consumer decrement an aggregate
-    // it maintains), the rest inserts. Cost is O(source + touched
-    // partitions), never the whole table.
-    val cdc =
-      if (!trackChanges) Seq.empty
-      else {
-        val baseKeys = base.select(keys.map(col): _*)
-        val srcKeys = source.select(keys.map(col): _*)
-        writeChanges(
-          source.join(baseKeys, keys, "left_semi")
-            .withColumn(ChangeCol, lit("update_postimage"))
-            .unionByName(source.join(baseKeys, keys, "left_anti")
-              .withColumn(ChangeCol, lit("insert")))
-            // preimages come from the (possibly narrower) base schema —
-            // under evolveSchema the new columns null-fill
-            .unionByName(base.drop(SnapshotTable.RidCol)
-              .join(srcKeys, keys, "left_semi")
-              .withColumn(ChangeCol, lit("update_preimage")),
-              allowMissingColumns = true),
-          v + 1)
-      }
-    val keptPaths = carryOver.map(_.path).toSet
-    writeManifest(Manifest(v + 1, "MERGE", Seq.empty, written ++ carryOver,
-      Seq.empty, cdc,
-      remainingDvs(v, fileEntries(v).map(_.path).filterNot(keptPaths).toSet,
-        v + 1),
-      txns = txn.map { case (app, ver) => Map(app -> ver) }.getOrElse(Map.empty)))
+    withSourceOnce(source) { src =>
+      val source = src.df
+      val (base, carryOver) = prunedBase(source, keys, partitionBy,
+        source.schema, touchedOverride = src.touched(keys, partitionBy),
+        withRids = true)
+      // carried (anti-joined) rows keep their materialized row ids under
+      // row tracking; source rows (updates + inserts) refresh — the
+      // key-join cannot tell an update from an insert without another
+      // join, so the scoped contract stands for them (SQL MERGE preserves
+      // updated rows' ids via the delta path instead)
+      val hasRid = base.columns.contains(SnapshotTable.RidCol)
+      val srcAligned =
+        if (hasRid)
+          source.withColumn(SnapshotTable.RidCol, lit(null).cast("long"))
+        else source
+      val rewritten =
+        if (evolveSchema)
+          base.join(source, keys, "left_anti")
+            .unionByName(srcAligned, allowMissingColumns = true)
+        else base.join(source, keys, "left_anti").unionByName(srcAligned)
+      val written = writeData(rewritten, v + 1, partitionBy)
+      // Change-data-feed capture (Delta CDF analog, cdc files written with
+      // the commit): classify source rows against the touched base — keyed
+      // matches are updates (pre- AND post-image, Delta CDF parity: the
+      // preimage is what lets a downstream consumer decrement an aggregate
+      // it maintains), the rest inserts. Cost is O(source + touched
+      // partitions), never the whole table.
+      val cdc =
+        if (!trackChanges) Seq.empty
+        else {
+          val baseKeys = base.select(keys.map(col): _*)
+          val srcKeys = source.select(keys.map(col): _*)
+          writeChanges(
+            source.join(baseKeys, keys, "left_semi")
+              .withColumn(ChangeCol, lit("update_postimage"))
+              .unionByName(source.join(baseKeys, keys, "left_anti")
+                .withColumn(ChangeCol, lit("insert")))
+              // preimages come from the (possibly narrower) base schema —
+              // under evolveSchema the new columns null-fill
+              .unionByName(base.drop(SnapshotTable.RidCol)
+                .join(srcKeys, keys, "left_semi")
+                .withColumn(ChangeCol, lit("update_preimage")),
+                allowMissingColumns = true),
+            v + 1)
+        }
+      val keptPaths = carryOver.map(_.path).toSet
+      writeManifest(Manifest(v + 1, "MERGE", Seq.empty, written ++ carryOver,
+        Seq.empty, cdc,
+        remainingDvs(v, fileEntries(v).map(_.path).filterNot(keptPaths).toSet,
+          v + 1),
+        txns = txn.map { case (app, ver) => Map(app -> ver) }.getOrElse(Map.empty)))
+    }
     this
   }
 
@@ -1924,92 +1928,94 @@ class SnapshotTable(spark: SparkSession, root: String) {
       beforeCommit: () => Unit = () => ()): SnapshotTable = {
     require(keys.contains(partitionBy),
       s"mergeConcurrent keys $keys must include partition column $partitionBy")
-    val v0 = currentVersion
-    val vals = source.select(col(partitionBy).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    require(vals.nonEmpty, s"mergeConcurrent on $root with an empty source")
-    def foreign(e: FileEntry) = e.partValue == null || e.partCol != partitionBy
-    def mine(e: FileEntry) = foreign(e) || vals.contains(e.partValue)
-    // the slice this writer folds into its rewrite at a given version:
-    // (base files, pending deltas). A partition-spanning delta widens the
-    // slice to the whole table — its rows may update ANY partition, so
-    // partial carry-over would duplicate or shadow them.
-    def slice(v: Int): (Seq[FileEntry], Seq[FileEntry]) =
-      if (deltaEntries(v).exists(foreign)) (fileEntries(v), deltaEntries(v))
-      else (fileEntries(v).filter(mine),
-        deltaEntries(v).filter(e => vals.contains(e.partValue)))
-    val (baseEntries, foldDeltas) = slice(v0)
-    val base =
-      if (baseEntries.isEmpty && foldDeltas.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema)
-      else if (foldDeltas.isEmpty) baseScan(baseEntries, dvEntries(v0))
-      else resolveMerged(baseEntries, foldDeltas, mergeKeysOf(v0), dvEntries(v0))
-    val rewritten = base.join(source, keys, "left_anti").unionByName(source)
-    val basePaths = baseEntries.map(_.path).toSet
-    val foldDeltaPaths = foldDeltas.map(_.path).toSet
-    // Deletion vectors are not partition-attributed, so a concurrent DV
-    // change needs CONTENT-level validation on retry (conflictingNewDvMarks
-    // below): a mark ADDED since v0 that addresses a file in this writer's
-    // rewrite slice is a true conflict — the rewrite already copied that
-    // row forward, so committing would resurrect the deleted row. Marks
-    // added against carried-over files stay valid (they ride along), and
-    // marks that merely got REWRITTEN into new DV files by another CoW
-    // winner existed at v0 — this writer's DV-resolved base scan already
-    // applied them.
-    val dvPaths0 = dvEntries(v0).map(_.path).toSet
-    var v = v0
-    var attempt = 0
-    var committed = false
-    var attemptFiles: Seq[FileEntry] = Seq.empty
-    var attemptDvs: Seq[FileEntry] = Seq.empty
-    while (!committed) {
-      attempt += 1
-      // written on the first pass only — the rewrite stays valid across
-      // retries once the slice validation passes, so a retry is
-      // metadata-only
-      if (attempt == 1) {
-        attemptFiles = writeData(rewritten, v + 1, Some(partitionBy))
-        attemptDvs = remainingDvs(v0, basePaths, v + 1)
-      }
-      beforeCommit()
-      val carryOver = fileEntries(v).filterNot(e => basePaths(e.path))
-      val carryDeltas = deltaEntries(v).filterNot(e => foldDeltaPaths(e.path))
-      try {
-        // origin tracks the committing version (a retry re-targets it);
-        // carried deltas keep their original origins so last-writer-wins
-        // ordering against future deltas is unchanged
-        writeManifest(Manifest(v + 1, "MERGE",
-          if (carryDeltas.isEmpty) Seq.empty else mergeKeysOf(v),
-          attemptFiles.map(_.copy(origin = (v + 1).toLong)) ++ carryOver,
-          carryDeltas, dvs = attemptDvs))
-        committed = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException
-            | _: java.nio.file.FileAlreadyExistsException =>
-          val newV = currentVersion
-          val (nowBase, nowDeltas) = slice(newV)
-          if (nowBase.map(_.path).toSet != basePaths ||
-              nowDeltas.map(_.path).toSet != foldDeltaPaths)
-            throw new java.util.ConcurrentModificationException(
-              s"concurrent commit to $root touched partitions $vals " +
-                "(this writer's slice of files or deltas changed) — " +
-                "rewrite base is stale")
-          if (dvEntries(newV).map(_.path).toSet != dvPaths0) {
-            // DV set changed since the rewrite base. Disjoint DV commits
-            // (marks only on carried-over files) resolve metadata-style:
-            // re-derive the carried DV set from the CURRENT version —
-            // O(dv rows), like Delta's winning-commit action check.
-            if (conflictingNewDvMarks(v0, newV, basePaths))
+    withSourceOnce(source) { src =>
+      val source = src.df
+      val v0 = currentVersion
+      val vals = src.partValues(partitionBy)
+      require(vals.nonEmpty, s"mergeConcurrent on $root with an empty source")
+      def foreign(e: FileEntry) = e.partValue == null || e.partCol != partitionBy
+      def mine(e: FileEntry) = foreign(e) || vals.contains(e.partValue)
+      // the slice this writer folds into its rewrite at a given version:
+      // (base files, pending deltas). A partition-spanning delta widens the
+      // slice to the whole table — its rows may update ANY partition, so
+      // partial carry-over would duplicate or shadow them.
+      def slice(v: Int): (Seq[FileEntry], Seq[FileEntry]) =
+        if (deltaEntries(v).exists(foreign)) (fileEntries(v), deltaEntries(v))
+        else (fileEntries(v).filter(mine),
+          deltaEntries(v).filter(e => vals.contains(e.partValue)))
+      val (baseEntries, foldDeltas) = slice(v0)
+      val base =
+        if (baseEntries.isEmpty && foldDeltas.isEmpty) spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema)
+        else if (foldDeltas.isEmpty) baseScan(baseEntries, dvEntries(v0))
+        else resolveMerged(baseEntries, foldDeltas, mergeKeysOf(v0), dvEntries(v0))
+      val rewritten = base.join(source, keys, "left_anti").unionByName(source)
+      val basePaths = baseEntries.map(_.path).toSet
+      val foldDeltaPaths = foldDeltas.map(_.path).toSet
+      // Deletion vectors are not partition-attributed, so a concurrent DV
+      // change needs CONTENT-level validation on retry (conflictingNewDvMarks
+      // below): a mark ADDED since v0 that addresses a file in this writer's
+      // rewrite slice is a true conflict — the rewrite already copied that
+      // row forward, so committing would resurrect the deleted row. Marks
+      // added against carried-over files stay valid (they ride along), and
+      // marks that merely got REWRITTEN into new DV files by another CoW
+      // winner existed at v0 — this writer's DV-resolved base scan already
+      // applied them.
+      val dvPaths0 = dvEntries(v0).map(_.path).toSet
+      var v = v0
+      var attempt = 0
+      var committed = false
+      var attemptFiles: Seq[FileEntry] = Seq.empty
+      var attemptDvs: Seq[FileEntry] = Seq.empty
+      while (!committed) {
+        attempt += 1
+        // written on the first pass only — the rewrite stays valid across
+        // retries once the slice validation passes, so a retry is
+        // metadata-only
+        if (attempt == 1) {
+          attemptFiles = writeData(rewritten, v + 1, Some(partitionBy))
+          attemptDvs = remainingDvs(v0, basePaths, v + 1)
+        }
+        beforeCommit()
+        val carryOver = fileEntries(v).filterNot(e => basePaths(e.path))
+        val carryDeltas = deltaEntries(v).filterNot(e => foldDeltaPaths(e.path))
+        try {
+          // origin tracks the committing version (a retry re-targets it);
+          // carried deltas keep their original origins so last-writer-wins
+          // ordering against future deltas is unchanged
+          writeManifest(Manifest(v + 1, "MERGE",
+            if (carryDeltas.isEmpty) Seq.empty else mergeKeysOf(v),
+            attemptFiles.map(_.copy(origin = (v + 1).toLong)) ++ carryOver,
+            carryDeltas, dvs = attemptDvs))
+          committed = true
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException
+              | _: java.nio.file.FileAlreadyExistsException =>
+            val newV = currentVersion
+            val (nowBase, nowDeltas) = slice(newV)
+            if (nowBase.map(_.path).toSet != basePaths ||
+                nowDeltas.map(_.path).toSet != foldDeltaPaths)
               throw new java.util.ConcurrentModificationException(
-                s"concurrent deletion-vector commit to $root addressed " +
-                  s"files in this writer's rewrite slice (partitions $vals) " +
-                  "— the rewrite would resurrect deleted rows")
-            attemptDvs = remainingDvs(newV, basePaths, newV + 1)
-          }
-          if (attempt >= maxAttempts)
-            throw new java.util.ConcurrentModificationException(
-              s"gave up committing to $root after $maxAttempts attempts")
-          v = newV
+                s"concurrent commit to $root touched partitions $vals " +
+                  "(this writer's slice of files or deltas changed) — " +
+                  "rewrite base is stale")
+            if (dvEntries(newV).map(_.path).toSet != dvPaths0) {
+              // DV set changed since the rewrite base. Disjoint DV commits
+              // (marks only on carried-over files) resolve metadata-style:
+              // re-derive the carried DV set from the CURRENT version —
+              // O(dv rows), like Delta's winning-commit action check.
+              if (conflictingNewDvMarks(v0, newV, basePaths))
+                throw new java.util.ConcurrentModificationException(
+                  s"concurrent deletion-vector commit to $root addressed " +
+                    s"files in this writer's rewrite slice (partitions $vals) " +
+                    "— the rewrite would resurrect deleted rows")
+              attemptDvs = remainingDvs(newV, basePaths, newV + 1)
+            }
+            if (attempt >= maxAttempts)
+              throw new java.util.ConcurrentModificationException(
+                s"gave up committing to $root after $maxAttempts attempts")
+            v = newV
+        }
       }
     }
     this
@@ -2022,26 +2028,29 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * partition value is one of the source's partition values). */
   def mergeDelete(source: DataFrame, keys: Seq[String], partitionBy: Option[String] = None,
       trackChanges: Boolean = false): SnapshotTable = {
-    val v = currentVersion
-    val (base, carryOver) = prunedBase(source, keys, partitionBy,
-      read(v).schema, withRids = true)
-    val srcKeys = source.select(keys.map(col): _*)
-    // survivors keep their row ids under row tracking (a delete must
-    // not renumber rows it does not remove)
-    val rewritten = base.join(srcKeys, keys, "left_anti")
-    val written = writeData(rewritten, v + 1, partitionBy)
-    val cdc =
-      if (!trackChanges) Seq.empty
-      else writeChanges(
-        base.drop(SnapshotTable.RidCol)
-          .join(srcKeys, keys, "left_semi")
-          .withColumn(ChangeCol, lit("delete")),
-        v + 1)
-    val keptPaths = carryOver.map(_.path).toSet
-    writeManifest(Manifest(v + 1, "MERGE_DELETE", Seq.empty,
-      written ++ carryOver, Seq.empty, cdc,
-      remainingDvs(v, fileEntries(v).map(_.path).filterNot(keptPaths).toSet,
-        v + 1)))
+    withSourceOnce(source.select(keys.map(col): _*)) { src =>
+      val v = currentVersion
+      val srcKeys = src.df
+      val (base, carryOver) = prunedBase(srcKeys, keys, partitionBy,
+        read(v).schema, touchedOverride = src.touched(keys, partitionBy),
+        withRids = true)
+      // survivors keep their row ids under row tracking (a delete must
+      // not renumber rows it does not remove)
+      val rewritten = base.join(srcKeys, keys, "left_anti")
+      val written = writeData(rewritten, v + 1, partitionBy)
+      val cdc =
+        if (!trackChanges) Seq.empty
+        else writeChanges(
+          base.drop(SnapshotTable.RidCol)
+            .join(srcKeys, keys, "left_semi")
+            .withColumn(ChangeCol, lit("delete")),
+          v + 1)
+      val keptPaths = carryOver.map(_.path).toSet
+      writeManifest(Manifest(v + 1, "MERGE_DELETE", Seq.empty,
+        written ++ carryOver, Seq.empty, cdc,
+        remainingDvs(v, fileEntries(v).map(_.path).filterNot(keptPaths).toSet,
+          v + 1)))
+    }
     this
   }
 
@@ -2409,6 +2418,42 @@ class SnapshotTable(spark: SparkSession, root: String) {
     writeManifest(Manifest(v + 1, "DELETE_MOR", keys, fileEntries(v),
       deltaEntries(v) ++ written, cdc, dvEntries(v)))
     this
+  }
+
+  /** A DML source evaluated once (see [[withSourceOnce]]). */
+  private final class OnceSource(val df: DataFrame, local: Boolean) {
+    /** The distinct values of `p` in the manifest's directory-string
+      * form; local rows answer without a job. */
+    def partValues(p: String): Set[String] = {
+      val vals = df.select(col(p).cast("string"))
+      (if (local) vals else vals.distinct()).collect().map(_.getString(0)).toSet
+    }
+
+    /** [[prunedBase]]'s touched partitions, when it prunes by `partitionBy`. */
+    def touched(keys: Seq[String], partitionBy: Option[String]): Option[Set[String]] =
+      partitionBy.filter(keys.contains).map(partValues)
+  }
+
+  /** Runs `body` over `source` evaluated once. A DML reads its source
+    * several times (touched partitions, the anti-join, the union, change
+    * capture); re-executing the source plan costs a job per read and, for
+    * a nondeterministic source, would commit rows of different
+    * evaluations. A source whose optimized plan is estimated within
+    * `spark.sql.autoBroadcastJoinThreshold` is collected once into a local
+    * relation, so later reads scan no input and the touched partitions
+    * cost no job. A larger one is persisted and released when `body`
+    * returns (a source the caller already cached is used as it is). */
+  private def withSourceOnce[T](source: DataFrame)(body: OnceSource => T): T = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit >= 0 && source.queryExecution.optimizedPlan.stats.sizeInBytes <= limit)
+      body(new OnceSource(spark.createDataFrame(
+        java.util.Arrays.asList(source.collect(): _*), source.schema), local = true))
+    else if (source.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      body(new OnceSource(source, local = false))
+    else {
+      val cached = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try body(new OnceSource(cached, local = false)) finally cached.unpersist(false)
+    }
   }
 
   /** Shared CoW prologue: split the current file set into partitions the

@@ -1,12 +1,10 @@
 package graft
 
 import graft.sources.SnapshotTable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicBoolean
 
 /** The file layout partitioned compaction leaves behind. Partition `pv`
   * gets `share(pv) = max(1, round(numFiles × bytes(pv) / table bytes))`
@@ -59,46 +57,13 @@ class CompactLayoutSpec extends AnyFunSuite {
     t.read().select("k", "p", "s").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
 
-  /** Final-stage names of the Spark jobs `body` launches on this thread,
-    * in job order (tagged by a job group; jobs the query engine submits
-    * from its own pool inherit the tag). */
-  private def jobsOf[A](s: SparkSession)(body: => A): (A, Seq[String]) = {
-    val group = s"counted_${System.nanoTime()}"
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String)]()
-    val marker = new AtomicBoolean(false)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` =>
-            jobs.add(e.jobId -> e.stageInfos.maxBy(_.stageId).name); ()
-          case g if g == s"${group}_marker" => marker.set(true)
-          case _ =>
-        }
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      s.sparkContext.setJobGroup(group, "counted")
-      val out = try body finally s.sparkContext.clearJobGroup()
-      // listener events arrive in order: once the marker job is seen,
-      // every job `body` launched has been delivered
-      s.sparkContext.setJobGroup(s"${group}_marker", "marker")
-      try s.range(1).count() finally s.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 10000
-      while (!marker.get() && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(marker.get(), "listener bus did not drain")
-      import scala.jdk.CollectionConverters._
-      (out, jobs.asScala.toSeq.sortBy(_._1).map(_._2))
-    } finally s.sparkContext.removeSparkListener(listener)
-  }
-
   test("(a) compacting settled partitions writes no data and launches no job") {
     val s = spark.newSession()
     val t = table(s, "cl_settled")
     val paths = t.files.map(_.path).toSet
     val before = content(t)
     val histBefore = t.history.collect().toSeq
-    val (_, jobs) = jobsOf(s)(t.compact(16, Some("p")))
+    val (_, jobs) = JobCount.of(s)(t.compact(16, Some("p")))
     assert(jobs.isEmpty, s"a metadata-only compaction launched jobs: $jobs")
     assert(t.files.map(_.path).toSet == paths, "every path carries")
     assert(t.currentVersion == 1)
@@ -194,7 +159,7 @@ class CompactLayoutSpec extends AnyFunSuite {
     val t = table(s, "cl_optimize")
     (0 until 4).foreach(p => t.append(rows(s, p, 10L, from = 50000L), Some("p")))
     val before = content(t)
-    val (_, jobs) = jobsOf(s)(t.compactSmallFiles(minBytes = Long.MaxValue))
+    val (_, jobs) = JobCount.of(s)(t.compactSmallFiles(minBytes = Long.MaxValue))
     // one job materializes the bin shuffle and one writes the files; the
     // range repartition this replaced ran a third, sampling the bin ids
     // for split points
