@@ -138,13 +138,14 @@ object BenchExtras {
       }
     } ++ {
       // predicate-delete pair on one 10% key span (20k of 200k rows):
-      // CoW deleteWhere rewrites every stat-intersecting file (the
+      // CoW `delete` rewrites every stat-intersecting file (the
       // partition layout spreads the span across ALL files — the DV
-      // motivating case), deleteWherePositional writes 20k (file, pos)
+      // motivating case), positional `delete` writes 20k (file, pos)
       // marks and no base file. Read-side: marked scan pays the
       // anti-join, rewritten scan reads clean files.
-      Seq("cowp" -> ((t: SnapshotTable) => t.deleteWhere("key", 0, 19999)),
-        "dv" -> ((t: SnapshotTable) => t.deleteWherePositional("key", 0, 19999)))
+      val span = col("key").between(0, 19999)
+      Seq("cowp" -> ((t: SnapshotTable) => t.delete(span)),
+        "dv" -> ((t: SnapshotTable) => t.delete(span, positional = true)))
         .flatMap { case (mode, del) =>
           val clone = staged.shallowCloneTo(graft.Scratch.dir(s"dm_${mode}_20k"))
           val (_, wSec) = time { del(clone) }

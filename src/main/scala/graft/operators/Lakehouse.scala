@@ -61,8 +61,8 @@ object Lakehouse {
       .create(Tables.load(s, d, "lineitem"), partitionBy = Some("l_returnflag")))
 
   /** lineitem range-clustered on l_orderkey (8 files with disjoint key
-    * spans) — the predicate-DML target: deleteWhere/updateWhere rewrite
-    * only the files whose footer [min,max] intersects the predicate. */
+    * spans) — the predicate-DML target: `delete`/`update` rewrite only
+    * the files whose footer [min,max] intersects the predicate. */
   private def stagedLineitemRange(s: SparkSession, d: String): SnapshotTable =
     staged(s, d, "lineitem_range")(r => new SnapshotTable(s, r)
       .create(Tables.load(s, d, "lineitem")
@@ -1406,13 +1406,13 @@ object Lakehouse {
         val before = ids()
         t.compact(2)
         require(ids() == before, "row ids changed across OPTIMIZE")
-        t.deleteExprPositional(col("o_orderkey") % 5 === 0)
+        t.delete(col("o_orderkey") % 5 === 0, positional = true)
         require(ids() == before.filterNot(_._1 % 5 == 0),
           "DV-delete survivors changed row ids")
         // CoW DML preserves too (r17): a stat-pruned partial UPDATE
         // rewrites touched files — carried AND updated rows keep ids
         val preUpdate = ids()
-        t.updateWhere("o_totalprice", 0.0, Double.MaxValue,
+        t.update(col("o_totalprice").between(0.0, Double.MaxValue),
           Map("o_totalprice" -> (col("o_totalprice") + lit(1.0))))
         require(ids() == preUpdate,
           "CoW UPDATE renumbered rows under row tracking")
@@ -2171,7 +2171,7 @@ object Lakehouse {
     """),
     (s, d) => {
       val t = stagedLineitemRange(s, d).shallowCloneTo(tmp("deldv"))
-        .deleteWherePositional("l_orderkey", 200, 900)
+        .delete(col("l_orderkey").between(200, 900), positional = true)
       t.read().groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("l_quantity")))).as("sum_qty"))
@@ -2198,7 +2198,7 @@ object Lakehouse {
     (s, d) => {
       val root = tmp("reorgp")
       val t = stagedLineitemRange(s, d).shallowCloneTo(root)
-        .deleteWherePositional("l_orderkey", 300, 800)
+        .delete(col("l_orderkey").between(300, 800), positional = true)
       require(t.dvFiles.nonEmpty, "fixture must leave DV marks")
       val untouched = t.files
         .filter(e => e.stats.get("l_orderkey").exists(_._1 > 800))
@@ -2226,7 +2226,7 @@ object Lakehouse {
     """),
     (s, d) => {
       val t = stagedLineitemRange(s, d).shallowCloneTo(tmp("delw"))
-        .deleteWhere("l_orderkey", 100, 700)
+        .delete(col("l_orderkey").between(100, 700))
       t.read().groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("l_quantity")))).as("sum_qty"))
@@ -2247,7 +2247,7 @@ object Lakehouse {
     """),
     (s, d) => {
       val t = stagedLineitemRange(s, d).shallowCloneTo(tmp("updw"))
-        .updateWhere("l_orderkey", 100, 700,
+        .update(col("l_orderkey").between(100, 700),
           Map("l_quantity" -> (col("l_quantity") + 0.5)))
       t.read().groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),

@@ -37,8 +37,9 @@ import graft.sources.{GraftV2Table, SnapshotTable}
   *
   * Metadata-only DELETE is unaffected: Spark's
   * `OptimizeMetadataOnlyDeleteFromTable` still converts a ReplaceData
-  * whose condition passes `canDeleteWhere` back to the stat-pruned
-  * `deleteWhere` path before this strategy ever sees it.
+  * whose condition passes `canDeleteWhere` back to the catalog's
+  * `SupportsDelete.deleteWhere`, the stat-pruned copy-on-write
+  * [[SnapshotTable.delete]], before this strategy ever sees it.
   */
 object GraftRowLevelOps extends SparkStrategy {
 
@@ -308,9 +309,9 @@ final case class GraftDvUpdateExec(
     val updated =
       GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid)(df)
     val cdf = snapshot.property(GraftV2Table.CdcProp).contains("true")
-    snapshot.updateExprPositional(
+    snapshot.markPositional(
       org.apache.spark.sql.GraftStreamShim.columnOf(rebound),
-      updated, trackChanges = cdf, partitionBy = partSpec): Unit
+      Some(updated), partSpec, trackChanges = cdf)
   }
 
   override def executeCollect(): Array[InternalRow] = { done; Array.empty }
@@ -324,9 +325,10 @@ final case class GraftDvUpdateExec(
 /** Physical node for a deletion-vector SQL DELETE: the resolved DELETE
   * condition re-binds by NAME onto the snapshot's logical frame (the
   * attribute ids of the row-level scan are irrelevant — the predicate
-  * re-plans against a fresh addressed scan) and
-  * [[SnapshotTable.deleteExprPositional]] writes O(matched rows) of
-  * (file, position) marks. No base file is rewritten. */
+  * re-plans against a fresh addressed scan) and the positional
+  * [[SnapshotTable.delete]] writes O(matched rows) of (file, position)
+  * marks, reading only the files whose footer stats an interval
+  * condition intersects. No base file is rewritten. */
 final case class GraftDvDeleteExec(
     snapshot: SnapshotTable,
     condition: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -339,9 +341,9 @@ final case class GraftDvDeleteExec(
     // graft.enableChangeDataFeed: the SQL DELETE's pre-images land in
     // the change feed (table_changes / CDC readers), Delta CDF parity
     val cdf = snapshot.property(GraftV2Table.CdcProp).contains("true")
-    snapshot.deleteExprPositional(
+    snapshot.delete(
       org.apache.spark.sql.GraftStreamShim.columnOf(rebound),
-      trackChanges = cdf): Unit
+      positional = true, trackChanges = cdf): Unit
   }
 
   override def executeCollect(): Array[InternalRow] = { done; Array.empty }

@@ -946,15 +946,32 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
                            // even with deletion vectors on (marking
                            // every row would be the anti-scale shape)
         (!dvDeletesEnabled &&
-          GraftV2Table.numericInterval(filters).isDefined))
+          SnapshotTable.numericInterval(filters).isDefined))
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     if (allTrue(filters)) { truncateTable(); return }
-    val (c, lo, hi) = GraftV2Table.numericInterval(filters).getOrElse(
+    if (SnapshotTable.numericInterval(filters).isEmpty)
       throw new UnsupportedOperationException(
-        s"unsupported DELETE predicate: ${filters.mkString(", ")}"))
-    table.deleteWhere(c, lo, hi, partSpec)
+        s"unsupported DELETE predicate: ${filters.mkString(", ")}")
+    table.delete(filters.map(conditionOf).reduce(_ && _),
+      partitionBy = partSpec)
     ()
+  }
+
+  /** Column form of a filter [[SnapshotTable.numericInterval]] folds,
+    * each bound keeping its literal type (a bigint column compares with
+    * a bigint literal — no widening cast to hide it from the stats
+    * skip). */
+  private def conditionOf(f: Filter): Column = {
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(a, v) => col(a) === v
+      case GreaterThan(a, v) => col(a) > v
+      case GreaterThanOrEqual(a, v) => col(a) >= v
+      case LessThan(a, v) => col(a) < v
+      case LessThanOrEqual(a, v) => col(a) <= v
+      case And(l, r) => conditionOf(l) && conditionOf(r)
+    }
   }
 
   /** SQL write surface: INSERT INTO appends; INSERT OVERWRITE truncates
@@ -1254,33 +1271,6 @@ object GraftV2Table {
           vs.forall(x => x != null && canonPartValue(x).isDefined) =>
         (vs.map(canonPartValue(_).get).toSeq, vs.toSeq)
     }
-  }
-
-  /** Folds an ANDed v1 filter array into one inclusive numeric interval
-    * on a single column — the shape [[SnapshotTable.deleteWhere]]
-    * executes with stat pruning. Strict bounds tighten by one ULP
-    * (exact for the integral values column stats hold). None = decline. */
-  def numericInterval(filters: Array[Filter]): Option[(String, Double, Double)] = {
-    import org.apache.spark.sql.sources._
-    def one(f: Filter): Option[(String, Double, Double)] = f match {
-      case EqualTo(a, v: Number) => Some((a, v.doubleValue, v.doubleValue))
-      case GreaterThan(a, v: Number) =>
-        Some((a, Math.nextUp(v.doubleValue), Double.PositiveInfinity))
-      case GreaterThanOrEqual(a, v: Number) =>
-        Some((a, v.doubleValue, Double.PositiveInfinity))
-      case LessThan(a, v: Number) =>
-        Some((a, Double.NegativeInfinity, Math.nextDown(v.doubleValue)))
-      case LessThanOrEqual(a, v: Number) =>
-        Some((a, Double.NegativeInfinity, v.doubleValue))
-      case And(l, r) => merge(one(l), one(r))
-      case _ => None
-    }
-    def merge(a: Option[(String, Double, Double)],
-        b: Option[(String, Double, Double)]): Option[(String, Double, Double)] =
-      for ((c1, lo1, hi1) <- a; (c2, lo2, hi2) <- b; if c1 == c2)
-        yield (c1, math.max(lo1, lo2), math.min(hi1, hi2))
-    filters.map(one).reduceOption(merge).flatten
-      .filter { case (_, lo, hi) => lo <= hi }
   }
 }
 

@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -949,7 +949,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   // it through the UPDATE/MERGE/DELETE rewrite untouched for
   // carried/updated rows (NULL on merge-inserts), and the replacement
   // write re-materializes it — row LINEAGE, Delta's contract. The
-  // engine-API stat-pruned deleteWhere/updateWhere use [[rewriteSource]]
+  // engine-API copy-on-write `delete`/`update` use [[rewriteSource]]
   // for the same guarantee; only the engine-API key-join `merge` still
   // refreshes rewritten rows' ids (documented in SURVEY §2).
 
@@ -1452,15 +1452,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
   def readWhereCol(colName: String, value: String): DataFrame = {
     require(deltaEntries(currentVersion).isEmpty,
       s"readWhereCol on $root requires compacted state (pending MoR deltas)")
-    val (pruned, residual) = planFiles(colName, value)
-    val dvs = dvEntries(currentVersion)
-    val parts = Seq(
-      if (pruned.nonEmpty) Some(baseScan(pruned, dvs)) else None,
-      if (residual.nonEmpty)
-        Some(baseScan(residual, dvs).filter(col(colName) === value))
-      else None).flatten
-    require(parts.nonEmpty, s"no files for $colName = $value")
-    parts.reduce(_ unionByName _)
+    val df = whereColUnion(colName, value)
+    require(df.isDefined, s"no files for $colName = $value")
+    df.get
   }
 
   /** [[readWhereCol]] when its preconditions hold — compacted state and
@@ -1471,6 +1465,13 @@ class SnapshotTable(spark: SparkSession, root: String) {
   def prunedWhereCol(colName: String, value: String): Option[DataFrame] = {
     if (deltaEntries(currentVersion).nonEmpty) return None
     if (!fileEntries(currentVersion).exists(_.partCol == colName)) return None
+    whereColUnion(colName, value)
+  }
+
+  /** The shared body of [[readWhereCol]] and [[prunedWhereCol]]: the
+    * metadata-pruned scan unioned with the residual-filtered one, None
+    * when [[planFiles]] keeps no file. */
+  private def whereColUnion(colName: String, value: String): Option[DataFrame] = {
     val (pruned, residual) = planFiles(colName, value)
     val dvs = dvEntries(currentVersion)
     val parts = Seq(
@@ -1478,7 +1479,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       if (residual.nonEmpty)
         Some(baseScan(residual, dvs).filter(col(colName) === value))
       else None).flatten
-    if (parts.isEmpty) None else Some(parts.reduce(_ unionByName _))
+    parts.reduceOption(_ unionByName _)
   }
 
   /** Manifest file planning for `colName IN (canon values)` across ALL
@@ -1627,13 +1628,20 @@ class SnapshotTable(spark: SparkSession, root: String) {
   /** Data-skipping file selection: files whose [min,max] for `colName`
     * intersects [lo,hi]. Files WITHOUT stats for the column are kept
     * (soundness over pruning); the caller still applies the row filter. */
-  def filesInRange(colName: String, lo: Double, hi: Double): Seq[FileEntry] = {
-    val pc = physColName(colName)
-    fileEntries(currentVersion).filter(e => e.stats.get(pc) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true
-    })
-  }
+  def filesInRange(colName: String, lo: Double, hi: Double): Seq[FileEntry] =
+    fileEntries(currentVersion).filter(mayIntersect(Some((colName, lo, hi))))
+
+  /** The footer-stats file skip: may a file hold a value of the
+    * interval's column inside the interval? A file without stats for
+    * the column may; with no interval, every file may. */
+  private def mayIntersect(
+      interval: Option[(String, Double, Double)]): FileEntry => Boolean =
+    interval match {
+      case None => _ => true
+      case Some((c, lo, hi)) =>
+        val pc = physColName(c)
+        _.stats.get(pc).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    }
 
   /** Stats-pruned range read: plan only the files [[filesInRange]] keeps
     * — the Delta-style file-level skipping that the reference's
@@ -2054,255 +2062,191 @@ class SnapshotTable(spark: SparkSession, root: String) {
     this
   }
 
-  /** Copy-on-write DELETE WHERE `colName BETWEEN lo AND hi` (Delta
-    * `DELETE FROM … WHERE` with data-skipping): only files whose footer
-    * [min,max] for `colName` intersects the range are rewritten —
-    * everything else carries over by reference, so on a range-clustered
-    * layout the rewrite touches O(matching files), not the table. Rows
-    * with NULL in `colName` never match and are kept (SQL semantics). */
-  def deleteWhere(colName: String, lo: Double, hi: Double,
+  /** Predicate DELETE (Delta `DELETE FROM … WHERE`): removes the rows
+    * where `cond` is TRUE — a row whose predicate is NULL stays (SQL
+    * three-valued logic). Only the candidate files
+    * ([[splitCandidates]]) are read: on a range-clustered layout an
+    * interval predicate touches O(matching files), not the table.
+    *
+    * Copy-on-write (the default): candidate files rewrite without the
+    * matched rows under `partitionBy`, everything else carries by
+    * reference, and under row tracking the survivors keep their ids.
+    * Commits `DELETE`, also when nothing matched; requires compacted
+    * state.
+    *
+    * `positional = true` (Iceberg position-delete / Delta
+    * deletion-vector analog): the matched rows' (file, position)
+    * addresses commit as deletion-vector marks — no base rewrite, no key
+    * columns needed; [[compact]] and REORG PURGE fold the marks away.
+    * See [[markPositional]] for its rules on pending MoR deltas and on
+    * a delete that matches nothing. `partitionBy` does not apply (marks
+    * are not partitioned). */
+  def delete(cond: Column, positional: Boolean = false,
       partitionBy: Option[String] = None,
       trackChanges: Boolean = false): SnapshotTable = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"deleteWhere on $root requires compacted state (pending MoR deltas)")
-    val pc = physColName(colName)
-    val (touched, carryOver) =
-      fileEntries(v).partition(e => e.stats.get(pc) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // no stats: must assume matches (soundness)
-      })
-    val matches = (col(colName) >= lo && col(colName) <= hi) <=> true
-    val written =
-      if (touched.isEmpty) Seq.empty
-      // rewriteSource: under row tracking the surviving rows carry
-      // their ids into the rewritten files (a delete must not renumber
-      // rows it does not remove)
-      else writeData(rewriteSource(touched, dvEntries(v)).filter(!matches),
-        v + 1, partitionBy)
-    val cdc =
-      if (!trackChanges || touched.isEmpty) Seq.empty
-      else writeChanges(baseScan(touched, dvEntries(v)).filter(matches)
-        .withColumn(ChangeCol, lit("delete")), v + 1)
-    writeManifest(Manifest(v + 1, "DELETE", Seq.empty,
-      written ++ carryOver, Seq.empty, cdc,
-      remainingDvs(v, touched.map(_.path).toSet, v + 1)))
+    if (positional) markPositional(cond, None, None, trackChanges)
+    else rewriteWhere(cond, None, partitionBy, trackChanges)
     this
   }
 
-  /** Positional DELETE WHERE `colName BETWEEN lo AND hi` (Iceberg
-    * position-delete / Delta deletion-vector analog): instead of
-    * rewriting matching files (CoW [[deleteWhere]]) or appending
-    * key-equality tombstones ([[mergeDeleteDeferred]]), the commit
-    * records each matching row's (file, position) address as a deletion
-    * vector — commit cost is O(candidate-file scan + matching rows)
-    * with NO base rewrite and NO key columns required (works on keyless
-    * tables). Reads resolve DVs with one (file, pos) anti-join whose
-    * build side is O(deleted rows); [[compact]] folds the marks away.
-    *
-    * File skipping mirrors [[deleteWhere]]: only files whose footer
-    * [min,max] intersects [lo,hi] are scanned for marks. The predicate
-    * is evaluated on the DV-RESOLVED scan, so overlapping re-deletes
-    * never duplicate marks (row accounting stays exact). DVs address
-    * BASE data files (exactly Iceberg position-delete semantics, which
-    * name data files); on a table with pending MoR deltas, delta rows
-    * are a later layer — a key whose newest version lives in a delta
-    * survives a positional delete of its stale base copy, and key-level
-    * deletes belong to [[mergeDeleteDeferred]]. */
-  def deleteWherePositional(colName: String, lo: Double, hi: Double,
-      trackChanges: Boolean = false): SnapshotTable = {
-    val v = currentVersion
-    val dvs = dvEntries(v)
-    val pc = physColName(colName)
-    val candidates = fileEntries(v).filter(e => e.stats.get(pc) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true // no stats: must scan for marks (soundness)
-    })
-    val matches = (col(colName) >= lo && col(colName) <= hi) <=> true
-    val written =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        val addressed =
-          if (dvs.isEmpty) readEntriesAddressed(candidates)
-          else addressedMinusDvs(candidates, dvs)
-        writeData(addressed.filter(matches).select(col(DvFileCol), col(DvPosCol)),
-          v + 1, None).filter(_.rows > 0)
-      }
-    val cdc =
-      if (!trackChanges || candidates.isEmpty) Seq.empty
-      else {
-        // CDC is a LOGICAL feed: a base copy whose key carries a pending
-        // MoR delta row is not what the table resolves to — positionally
-        // deleting the stale copy reorganizes the base layer without
-        // changing the relation (an upsert delta still wins; a tombstone
-        // already deleted the key). Anti-join the captured pre-images
-        // against pending delta keys so the feed reports only logical
-        // deletes. Both sides are change-feed-sized, never a table scan.
-        val del = baseScan(candidates, dvs).filter(matches)
-        val deltas = deltaEntries(v)
-        val keys = mergeKeysOf(v)
-        val logical =
-          if (deltas.isEmpty || keys.isEmpty) del
-          else del.join(
-            readEntries(deltas).select(keys.map(col): _*).distinct(),
-            keys, "left_anti")
-        writeChanges(logical.withColumn(ChangeCol, lit("delete")), v + 1)
-      }
-    writeManifest(Manifest(v + 1, "DELETE_DV", mergeKeysOf(v), fileEntries(v),
-      deltaEntries(v), cdc, dvs ++ written))
-    this
-  }
-
-  /** Positional (deletion-vector) DELETE on an ARBITRARY predicate —
-    * the scale path for predicate deletes Delta enables with
-    * deletionVectors: one addressed scan of the base files filters the
-    * predicate and writes O(matched rows) of (file, position) marks;
-    * NO base file is rewritten at any table size (a GDPR delete on a
-    * 100 TB table costs the scan plus marks, not a rewrite). Readers
-    * anti-join the marks out ([[baseScan]]); REORG APPLY (PURGE)
-    * materializes them physically later. Stats cannot pre-prune an
-    * opaque predicate, so every base file is scanned once — still
-    * strictly cheaper than the CoW rewrite, which scans AND rewrites.
-    * Requires compacted state (marks address base copies only; a
-    * pending MoR delta row matching the predicate would silently
-    * survive). Returns the number of rows marked. */
-  def deleteExprPositional(cond: org.apache.spark.sql.Column,
-      trackChanges: Boolean = false): Long = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"positional DELETE on $root requires compacted state (pending MoR " +
-        "deltas — OPTIMIZE folds them first)")
-    val dvs = dvEntries(v)
-    val entries = fileEntries(v)
-    if (entries.isEmpty) return 0L
-    val addressed =
-      if (dvs.isEmpty) readEntriesAddressed(entries)
-      else addressedMinusDvs(entries, dvs)
-    val written = writeData(
-      addressed.filter(cond <=> true).select(col(DvFileCol), col(DvPosCol)),
-      v + 1, None).filter(_.rows > 0)
-    if (written.isEmpty) return 0L // no matches: nothing to commit
-    // change-data feed: the marked rows ARE the delete pre-images — the
-    // same addressed scan re-executes filtered, never a version diff
-    val cdc =
-      if (!trackChanges) Seq.empty
-      else writeChanges(addressed.filter(cond <=> true)
-        .drop(DvFileCol, DvPosCol)
-        .withColumn(ChangeCol, lit("delete")), v + 1)
-    writeManifest(Manifest(v + 1, "DELETE_DV", mergeKeysOf(v), entries,
-      Seq.empty, cdc, dvs ++ written))
-    written.map(_.rows).sum
-  }
-
-  /** Positional UPDATE (Delta 3.1 DV-update parity): matched base rows
-    * are MARKED with (file, pos) deletion-vector entries and their
-    * post-assignment images APPEND as new files in the same commit —
-    * ZERO base files rewritten, O(matched rows) total cost. The update
-    * analog of [[deleteExprPositional]]: at 100 TB a predicate UPDATE
-    * touching 0.1% of rows must not rewrite every touched file.
-    *
-    * `updated` must be the post-assignment images of EXACTLY the rows
-    * matching `cond` over the current snapshot (the SQL strategy builds
-    * it by pushing the UPDATE condition under the rewrite's assignment
-    * projection). Change-data capture emits update_preimage rows from
-    * the marked positions and update_postimage rows from `updated` —
-    * O(changed rows), never a version diff. */
-  def updateExprPositional(cond: org.apache.spark.sql.Column,
-      updated: DataFrame, trackChanges: Boolean = false,
-      partitionBy: Option[String] = None): Long = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"positional UPDATE on $root requires compacted state (pending MoR " +
-        "deltas — OPTIMIZE folds them first)")
-    val dvs = dvEntries(v)
-    val entries = fileEntries(v)
-    if (entries.isEmpty) return 0L
-    val addressed =
-      if (dvs.isEmpty) readEntriesAddressed(entries)
-      else addressedMinusDvs(entries, dvs)
-    val marks = writeData(
-      addressed.filter(cond <=> true).select(col(DvFileCol), col(DvPosCol)),
-      v + 1, None).filter(_.rows > 0)
-    if (marks.isEmpty) return 0L // no matches: nothing to commit
-    // the images frame feeds the data write AND the CDF post-image
-    // capture — cache it so a non-deterministic SET expression cannot
-    // store one value and feed the change feed another
-    val cachedImages = registerCommitCache(updated)
-    try {
-    val newFiles =
-      writeData(cachedImages, v + 1, partitionBy).filter(_.rows > 0)
-    val cdc =
-      if (!trackChanges) Seq.empty
-      else {
-        val pre = addressed.filter(cond <=> true)
-          .drop(DvFileCol, DvPosCol)
-          .withColumn(ChangeCol, lit("update_preimage"))
-        // the change feed carries LOGICAL rows only — the materialized
-        // row-id column (present under row tracking) stays out
-        val post = cachedImages.drop(SnapshotTable.RidCol)
-          .withColumn(ChangeCol, lit("update_postimage"))
-        writeChanges(pre.unionByName(post), v + 1)
-      }
-    writeManifest(Manifest(v + 1, "UPDATE_DV", mergeKeysOf(v),
-      entries ++ newFiles, Seq.empty, cdc, dvs ++ marks))
-    marks.map(_.rows).sum
-    // a failed commit releases its own caches (success path drains in
-    // writeManifest)
-    } catch { case e: Throwable => drainCommitCaches(); throw e }
-  }
-
-  /** Copy-on-write UPDATE … SET `set` WHERE `colName BETWEEN lo AND hi`
-    * (Delta `UPDATE` with data-skipping): file pruning as in
-    * [[deleteWhere]]. All SET expressions evaluate against the OLD row
-    * (single projection, standard UPDATE semantics — `SET a = b, b = a`
-    * swaps). The partition column cannot be assigned (rows never move
-    * between partitions, which keeps the carry-over sound). */
-  def updateWhere(colName: String, lo: Double, hi: Double,
-      set: Map[String, org.apache.spark.sql.Column],
+  /** Copy-on-write UPDATE … SET `set` WHERE `cond` (Delta `UPDATE` with
+    * data skipping): candidate files as in [[delete]] rewrite with the
+    * matched rows assigned; everything else carries by reference. All
+    * SET expressions evaluate against the OLD row (single projection,
+    * standard UPDATE semantics — `SET a = b, b = a` swaps). The
+    * partition column cannot be assigned (rows never move between
+    * partitions, which keeps the carry-over sound). Under row tracking
+    * carried and updated rows keep their ids. Commits `UPDATE`; requires
+    * compacted state. The positional UPDATE is the SQL path's
+    * [[markPositional]] with analyzer-built images. */
+  def update(cond: Column, set: Map[String, Column],
       partitionBy: Option[String] = None,
       trackChanges: Boolean = false): SnapshotTable = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"updateWhere on $root requires compacted state (pending MoR deltas)")
     require(!partitionBy.exists(set.contains),
       s"UPDATE on $root must not assign the partition column")
-    val pc = physColName(colName)
-    val (touched, carryOver) =
-      fileEntries(v).partition(e => e.stats.get(pc) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      })
-    val matches = (col(colName) >= lo && col(colName) <= hi) <=> true
-    def applied(df: DataFrame): DataFrame = df.select(df.columns.map { c =>
-      set.get(c) match {
-        case Some(e) => when(matches, e).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
+    rewriteWhere(cond, Some(set), partitionBy, trackChanges)
+    this
+  }
+
+  /** The candidate-file planner of [[delete]] and [[update]]: splits the
+    * files of version `v` into (may hold a row where `cond` is TRUE,
+    * provably hold none). A `cond` whose conjuncts fold into one numeric
+    * interval on one column ([[SnapshotTable.numericInterval]] over its
+    * v1 filter form, resolved against the table) skips by footer stats;
+    * any other condition keeps every file a candidate. */
+  private def splitCandidates(cond: Column,
+      v: Int): (Seq[FileEntry], Seq[FileEntry]) = {
+    val entries = fileEntries(v)
+    if (entries.isEmpty) (entries, entries)
+    else entries.partition(mayIntersect(SnapshotTable.numericInterval(
+      org.apache.spark.sql.GraftStreamShim.sourceFilterOf(read(v), cond)
+        .toArray)))
+  }
+
+  /** The copy-on-write core of [[delete]] (`set` None) and [[update]]:
+    * candidate files rewrite with the matched rows dropped or assigned,
+    * the rest carry by reference, and marks on rewritten files drop (the
+    * rewrite's DV-resolved scan applied them). */
+  private def rewriteWhere(cond: Column, set: Option[Map[String, Column]],
+      partitionBy: Option[String], trackChanges: Boolean): Unit = {
+    val v = currentVersion
+    val op = if (set.isEmpty) "DELETE" else "UPDATE"
+    require(deltaEntries(v).isEmpty,
+      s"$op on $root requires compacted state (pending MoR deltas)")
+    val (touched, carryOver) = splitCandidates(cond, v)
+    val dvs = dvEntries(v)
+    val matches = cond <=> true
+    def assigned(df: DataFrame, s: Map[String, Column]): DataFrame =
+      df.select(df.columns.map { c =>
+        s.get(c).fold(col(c))(e => when(matches, e).otherwise(col(c)).as(c))
+      }: _*)
     val written =
       if (touched.isEmpty) Seq.empty
-      // rewriteSource: carried AND updated rows keep their ids under
-      // row tracking (the extra rid column rides through `applied`
-      // untouched — no SET can name an engine column)
-      else writeData(applied(rewriteSource(touched, dvEntries(v))),
-        v + 1, partitionBy)
+      else {
+        // rewriteSource: under row tracking carried AND updated rows keep
+        // their ids (the rid column rides through the SET projection
+        // untouched — no SET can name an engine column)
+        val src = rewriteSource(touched, dvs)
+        writeData(set.fold(src.filter(!matches))(assigned(src, _)),
+          v + 1, partitionBy)
+      }
     val cdc =
       if (!trackChanges || touched.isEmpty) Seq.empty
       else {
-        // both images derive from the SAME pre-update row set: filtering
-        // post-update rows would unpair the feed when a SET assigns the
-        // predicate column (a row updated out of [lo,hi] must still emit
-        // its postimage)
-        val old = baseScan(touched, dvEntries(v)).filter(matches)
-        writeChanges(
-          applied(old).withColumn(ChangeCol, lit("update_postimage"))
-            .unionByName(old.withColumn(ChangeCol, lit("update_preimage"))),
-          v + 1)
+        // both update images derive from the SAME pre-update row set:
+        // filtering post-update rows would unpair the feed when a SET
+        // assigns the predicate column
+        val old = baseScan(touched, dvs).filter(matches)
+        writeChanges(set.fold(old.withColumn(ChangeCol, lit("delete"))) { s =>
+          assigned(old, s).withColumn(ChangeCol, lit("update_postimage"))
+            .unionByName(old.withColumn(ChangeCol, lit("update_preimage")))
+        }, v + 1)
       }
-    writeManifest(Manifest(v + 1, "UPDATE", Seq.empty,
+    writeManifest(Manifest(v + 1, op, Seq.empty,
       written ++ carryOver, Seq.empty, cdc,
       remainingDvs(v, touched.map(_.path).toSet, v + 1)))
-    this
+  }
+
+  /** The deletion-vector writer behind [[delete]]`(positional = true)`
+    * and the SQL positional UPDATE: one addressed scan of the candidate
+    * files ([[splitCandidates]]) minus pending marks finds the rows
+    * where `cond` is TRUE, and their (file, position) addresses commit
+    * as marks — no base file rewritten, cost O(candidate scan + matched
+    * rows). Readers anti-join the marks out ([[baseScan]]). The
+    * predicate evaluates on the DV-resolved scan, so overlapping
+    * re-deletes never duplicate marks (row accounting stays exact).
+    * When no row matched, nothing commits.
+    *
+    * `images` None commits `DELETE_DV`. Marks address BASE data files
+    * (Iceberg position-delete semantics), so pending MoR deltas are a
+    * later layer: a key whose newest version lives in a delta survives
+    * a positional delete of its stale base copy (key-level deletes
+    * belong to [[mergeDeleteDeferred]]).
+    *
+    * `images` Some (Delta 3.1 DV-update parity) must be the
+    * post-assignment images of EXACTLY the rows matching `cond` (the
+    * SQL strategy builds them under the analyzer's assignment
+    * projection); they append under `partitionBy` in the same
+    * `UPDATE_DV` commit. That requires compacted state: an image must
+    * replace the row's only copy.
+    *
+    * The change feed takes its pre-images from the marked rows and its
+    * post-images from `images` — O(changed rows), never a version
+    * diff. */
+  private[graft] def markPositional(cond: Column, images: Option[DataFrame],
+      partitionBy: Option[String], trackChanges: Boolean): Unit = {
+    val v = currentVersion
+    val deltas = deltaEntries(v)
+    require(images.isEmpty || deltas.isEmpty,
+      s"positional UPDATE on $root requires compacted state (pending MoR " +
+        "deltas — OPTIMIZE folds them first)")
+    val (candidates, _) = splitCandidates(cond, v)
+    if (candidates.isEmpty) return
+    val dvs = dvEntries(v)
+    val matched = (if (dvs.isEmpty) readEntriesAddressed(candidates)
+      else addressedMinusDvs(candidates, dvs)).filter(cond <=> true)
+    val marks = writeData(matched.select(col(DvFileCol), col(DvPosCol)),
+      v + 1, None).filter(_.rows > 0)
+    if (marks.isEmpty) return
+    // the images feed the data write AND the change feed — cache them so
+    // a non-deterministic SET expression cannot store one value and feed
+    // the change feed another
+    val cachedImages = images.map(registerCommitCache)
+    try {
+      val added = cachedImages.fold(Seq.empty[FileEntry])(
+        writeData(_, v + 1, partitionBy).filter(_.rows > 0))
+      val cdc =
+        if (!trackChanges) Seq.empty
+        else {
+          // the change feed is LOGICAL: a base copy whose key carries a
+          // pending MoR delta row is not what the table resolves to (an
+          // upsert delta still wins; a tombstone already deleted the
+          // key), so pre-images anti-join the pending delta keys. Both
+          // sides are change-feed-sized, never a table scan.
+          val pre = matched.drop(DvFileCol, DvPosCol)
+          val keys = mergeKeysOf(v)
+          val logical =
+            if (deltas.isEmpty || keys.isEmpty) pre
+            else pre.join(readEntries(deltas).select(keys.map(col): _*)
+              .distinct(), keys, "left_anti")
+          // post-images carry LOGICAL rows only — the materialized row-id
+          // column (present under row tracking) stays out
+          val post = cachedImages.map(_.drop(SnapshotTable.RidCol)
+            .withColumn(ChangeCol, lit("update_postimage")))
+          writeChanges(post.foldLeft(logical.withColumn(ChangeCol,
+            lit(if (images.isEmpty) "delete" else "update_preimage")))(
+            _ unionByName _), v + 1)
+        }
+      writeManifest(Manifest(v + 1,
+        if (images.isEmpty) "DELETE_DV" else "UPDATE_DV", mergeKeysOf(v),
+        fileEntries(v) ++ added, deltas, cdc, dvs ++ marks))
+    // a failed commit releases the caches it registered (success path
+    // drains in writeManifest)
+    } catch {
+      case e: Throwable =>
+        if (cachedImages.isDefined) drainCommitCaches()
+        throw e
+    }
   }
 
   /** Merge-on-read upsert: append `source` as delta files without
@@ -3860,7 +3804,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Cache-release thunks owned by the IN-FLIGHT commit
     * ([[fillIdentity]]'s sized insert batch, [[writeDeltaPositional]]'s
-    * delta frame, [[updateExprPositional]]'s images): registered when
+    * delta frame, [[markPositional]]'s images): registered when
     * the cache is created, run by [[writeManifest]] once the commit
     * that consumed them lands. The drain is COMMIT-SCOPED: while a
     * multi-job commit is consuming its registered caches
@@ -4025,6 +3969,42 @@ object SnapshotTable {
     * (Delta's dataSkippingNumIndexedCols default idea: bound manifest
     * growth at wide schemas). */
   private val MaxStatCols = 8
+
+  /** Folds an ANDed v1 filter array into one inclusive numeric interval
+    * on a single column — the footer-stats file skip of
+    * [[SnapshotTable.delete]] / [[SnapshotTable.update]] and the SQL
+    * catalog's metadata-only DELETE. Strict bounds tighten by one ULP
+    * (exact for the integral values column stats hold). Decimal bounds
+    * decline: a decimal column's footer stats are its UNSCALED parquet
+    * integers, which no decimal bound compares with. None = decline. */
+  def numericInterval(filters: Array[org.apache.spark.sql.sources.Filter])
+      : Option[(String, Double, Double)] = {
+    import org.apache.spark.sql.sources._
+    def num(v: Any): Option[Double] = v match {
+      case _: java.math.BigDecimal | _: scala.math.BigDecimal => None
+      case n: Number => Some(n.doubleValue)
+      case _ => None
+    }
+    def one(f: Filter): Option[(String, Double, Double)] = f match {
+      case EqualTo(a, v) => num(v).map(d => (a, d, d))
+      case GreaterThan(a, v) =>
+        num(v).map(d => (a, Math.nextUp(d), Double.PositiveInfinity))
+      case GreaterThanOrEqual(a, v) =>
+        num(v).map(d => (a, d, Double.PositiveInfinity))
+      case LessThan(a, v) =>
+        num(v).map(d => (a, Double.NegativeInfinity, Math.nextDown(d)))
+      case LessThanOrEqual(a, v) =>
+        num(v).map(d => (a, Double.NegativeInfinity, d))
+      case And(l, r) => merge(one(l), one(r))
+      case _ => None
+    }
+    def merge(a: Option[(String, Double, Double)],
+        b: Option[(String, Double, Double)]): Option[(String, Double, Double)] =
+      for ((c1, lo1, hi1) <- a; (c2, lo2, hi2) <- b; if c1 == c2)
+        yield (c1, math.max(lo1, lo2), math.min(hi1, hi2))
+    filters.map(one).reduceOption(merge).flatten
+      .filter { case (_, lo, hi) => lo <= hi }
+  }
 
   /** Operations that SET the column mapping explicitly — every other
     * commit carries its predecessor's mapping forward (writeManifest).

@@ -569,7 +569,7 @@ object Streams {
         .merge(graft.operators.Lakehouse.mergeSource(o),
           Seq("o_orderkey", "o_orderstatus"),
           partitionBy = Some("o_orderstatus"), trackChanges = true)
-        .deleteWhere("o_totalprice", 0.0, 2000.0,
+        .delete(col("o_totalprice").between(0.0, 2000.0),
           partitionBy = Some("o_orderstatus"), trackChanges = true)
       val sgn = when(col(graft.sources.SnapshotTable.ChangeCol)
         .isin("insert", "update_postimage"), 1).otherwise(-1)

@@ -67,6 +67,20 @@ object GraftStreamShim {
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** `cond` resolved against `df`'s columns, its literal casts folded,
+    * as the v1 source filter data-source pushdown would hand a
+    * connector; None when any part has no v1 form.
+    * `DataSourceStrategy.translateFilter` is `protected[sql]`, hence
+    * this bridge. */
+  def sourceFilterOf(df: DataFrame, cond: Column): Option[sources.Filter] =
+    catalyst.optimizer.ConstantFolding(
+        df.filter(cond).queryExecution.analyzed) match {
+      case catalyst.plans.logical.Filter(c, _) =>
+        execution.datasources.DataSourceStrategy.translateFilter(c,
+          supportNestedPredicatePushdown = false)
+      case _ => None
+    }
+
   /** v2 Column array → StructType with Spark's own metadata mapping
     * (comments, DEFAULT expressions) — `CatalogV2Util` is
     * `private[sql]`, hence this bridge. */

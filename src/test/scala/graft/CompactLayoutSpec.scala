@@ -109,7 +109,8 @@ class CompactLayoutSpec extends AnyFunSuite {
     val s = spark.newSession()
     val t = table(s, "cl_dv")
     val before = content(t)
-    t.deleteWherePositional("k", 200010, 200019) // partition 2 only
+    // partition 2 only
+    t.delete(col("k").between(200010, 200019), positional = true)
     assert(t.dvFiles.nonEmpty)
     val untouched = (0 until 16).filter(_ != 2).map(_.toString)
       .map(pv => pv -> pathsOf(t, pv)).toMap

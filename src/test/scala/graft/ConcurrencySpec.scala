@@ -151,7 +151,7 @@ class ConcurrencySpec extends AnyFunSuite {
       partitionBy = "p",
       beforeCommit = () => if (!injected) {
         injected = true
-        rival.deleteWherePositional("k", 12, 12)
+        rival.delete(col("k") === 12, positional = true)
       })
     assert(injected)
     assert(t.currentVersion == 2) // rival's DV commit + our retried commit
@@ -173,7 +173,7 @@ class ConcurrencySpec extends AnyFunSuite {
         partitionBy = "p",
         beforeCommit = () => if (!injected) {
           injected = true
-          rival.deleteWherePositional("k", 9, 9)
+          rival.delete(col("k") === 9, positional = true)
         })
     }
     assert(t.currentVersion == 1) // the rival's DV commit is intact

@@ -27,7 +27,7 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("positional delete removes rows without rewriting any base file") {
     val t = rangeTable("dv_basic")
     val before = t.files.map(_.path).toSet
-    t.deleteWherePositional("k", 10, 30)
+    t.delete(col("k").between(10, 30), positional = true)
     assert(t.files.map(_.path).toSet == before,
       "base file set must be unchanged by a DV commit")
     val ks = t.read().select("k").collect().map(_.getLong(0)).sorted.toSeq
@@ -38,7 +38,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("marks address only stat-intersecting files, in manifest path format") {
     val t = rangeTable("dv_skip")
-    t.deleteWherePositional("k", 10, 30)
+    t.delete(col("k").between(10, 30), positional = true)
     val markFiles = t.read(t.currentVersion) // touch nothing; read dv parquet directly
     val dvPaths = spark.read.parquet(t.dvFiles.map(_.path): _*)
       .select(SnapshotTable.DvFileCol).distinct()
@@ -51,10 +51,19 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(markFiles.columns.contains("k"))
   }
 
+  test("a positional delete that matches no row commits nothing") {
+    val t = rangeTable("dv_nomatch")
+    val v = t.currentVersion
+    t.delete(col("k").between(200, 300), positional = true) // no candidate
+    t.delete(col("s") === "none", positional = true) // every file, no row
+    assert(t.currentVersion == v, "a delete matching nothing must not commit")
+    assert(t.dvFiles.isEmpty)
+  }
+
   test("overlapping re-delete never duplicates marks (exact accounting)") {
     val t = rangeTable("dv_overlap")
-    t.deleteWherePositional("k", 10, 30)
-    t.deleteWherePositional("k", 20, 40) // overlaps [20,30]
+    t.delete(col("k").between(10, 30), positional = true)
+    t.delete(col("k").between(20, 40), positional = true) // overlaps [20,30]
     assert(t.countFromManifest == 69L)
     assert(t.dvFiles.map(_.rows).sum == 31L)
     assert(t.read().count() == 69L)
@@ -65,7 +74,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     val t = rangeTable("dv_mor")
     // newer version of k=15 lives in a delta; base copy of k=15 is stale
     t.mergeDeferred(Seq((15L, 99L, "fresh")).toDF("k", "g", "s"), Seq("k"))
-    t.deleteWherePositional("k", 10, 20)
+    t.delete(col("k").between(10, 20), positional = true)
     val rows = t.read().filter(col("k") === 15L).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("s") == "fresh",
       "delta layer is newer than the DV'd base copy and must win")
@@ -82,7 +91,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     // state changes (15 survives via the delta; 17 was already gone).
     t.mergeDeferred(Seq((15L, 99L, "fresh")).toDF("k", "g", "s"), Seq("k"))
     t.mergeDeleteDeferred(Seq(Tuple1(17L)).toDF("k"), Seq("k"))
-    t.deleteWherePositional("k", 10, 20, trackChanges = true)
+    t.delete(col("k").between(10, 20), positional = true, trackChanges = true)
     val fed = t.changes(t.currentVersion)
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(fed == ((10L to 20L).filterNot(k => k == 15L || k == 17L)),
@@ -97,7 +106,8 @@ class DeletionVectorSpec extends AnyFunSuite {
       .toDF("k", "g", "s")
     val t = new SnapshotTable(spark, Scratch.dir("dv_cow"))
       .create(df, partitionBy = Some("g"))
-    t.deleteWherePositional("k", 0, 49) // marks across all 4 partitions
+    // marks across all 4 partitions
+    t.delete(col("k").between(0, 49), positional = true)
     val markedRows = t.dvFiles.map(_.rows).sum
     assert(markedRows == 50L)
     // merge touches only partition g=0 → its marks are applied in the
@@ -114,7 +124,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("compact folds deletion vectors away; read is unchanged") {
     val t = rangeTable("dv_compact")
-    t.deleteWherePositional("k", 10, 30)
+    t.delete(col("k").between(10, 30), positional = true)
     t.compact(numFiles = 2)
     assert(t.dvFiles.isEmpty, "compaction must fold DV marks into the base")
     assert(t.read().count() == 79L)
@@ -123,14 +133,14 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("vacuum retains the DV files the current version references") {
     val t = rangeTable("dv_vacuum")
-    t.deleteWherePositional("k", 10, 30)
+    t.delete(col("k").between(10, 30), positional = true)
     t.vacuum(retainVersions = 1)
     assert(t.read().count() == 79L, "DV files must survive vacuum")
   }
 
   test("restore to a pre-delete version brings every row back") {
     val t = rangeTable("dv_restore")
-    t.deleteWherePositional("k", 10, 30)
+    t.delete(col("k").between(10, 30), positional = true)
     t.restoreTo(0)
     assert(t.read().count() == 100L)
   }
@@ -139,13 +149,13 @@ class DeletionVectorSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Some(1L), "a"), (None, "b"), (Some(5L), "c")).toDF("k", "s")
     val t = new SnapshotTable(spark, Scratch.dir("dv_null")).create(df)
-    t.deleteWherePositional("k", 0, 10)
+    t.delete(col("k").between(0, 10), positional = true)
     assert(t.read().select("s").collect().map(_.getString(0)).toSeq == Seq("b"))
   }
 
   test("positional delete with trackChanges emits full-width delete rows") {
     val t = rangeTable("dv_cdc")
-    t.deleteWherePositional("k", 10, 12, trackChanges = true)
+    t.delete(col("k").between(10, 12), positional = true, trackChanges = true)
     val ch = t.changes(t.currentVersion)
     assert(ch.count() == 3L)
     assert(ch.select(SnapshotTable.ChangeCol).distinct()
@@ -165,7 +175,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     val src = Seq((1L, 1L, "w1")).toDF("k", "g", "s")
     intercept[java.util.ConcurrentModificationException] {
       t.mergeConcurrent(src, Seq("k", "g"), "g",
-        beforeCommit = () => t.deleteWherePositional("k", 0, 5))
+        beforeCommit = () =>
+          t.delete(col("k").between(0, 5), positional = true))
     }
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-import graft.sources.SnapshotTable
+import graft.sources.{GraftV2Table, SnapshotTable}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** SQL DELETE through deletion vectors (Delta `enableDeletionVectors`):
   * with the table property set, an arbitrary-predicate DELETE writes
@@ -59,6 +60,44 @@ class DvDeleteSqlSpec extends AnyFunSuite {
     assert(s.sql("SELECT count(*) FROM dvd.ns.t").head.getLong(0) == 0)
     assert(t.commitOperation(t.currentVersion) != "DELETE_DV")
     assert(t.dvFiles.isEmpty)
+  }
+
+  test("an interval DELETE on a DV table opens only stat-intersecting files") {
+    val s = spark.newSession()
+    import s.implicits._
+    val cat = tmp("dvr_cat")
+    s.conf.set("spark.sql.catalog.dvr", "graft.sources.GraftSqlCatalog")
+    s.conf.set("spark.sql.catalog.dvr.root", cat)
+    graft.plans.GraftRowLevelOps.register(s)
+    s.sql("CREATE NAMESPACE dvr.ns")
+    // 100 rows range-clustered on k into 4 files (k-spans 0-24 / 25-49 /
+    // 50-74 / 75-99)
+    val t = new SnapshotTable(s, s"$cat/ns/t").create(
+      (0 until 100).map(i => (i.toLong, s"r$i")).toDF("k", "tag")
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k"))
+    t.withProperty(GraftV2Table.DvDeleteProp, "true")
+    assert(t.files.size == 4)
+    // warm the schema cache, then move the two files whose k-span misses
+    // [10, 30] out of the table: a delete that opened them would fail
+    assert(s.sql("SELECT sum(k) FROM dvr.ns.t").head.getLong(0) == 4950L)
+    val (near, far) = t.files.partition(_.stats("k")._1 <= 30)
+    assert(near.size == 2 && far.size == 2)
+    val aside = Files.createTempDirectory("graft_dvr_aside")
+    def local(p: String) = Paths.get(p.stripPrefix("file:"))
+    val moved = far.map { e =>
+      val src = local(e.path)
+      src -> Files.move(src, aside.resolve(src.getFileName))
+    }
+    try s.sql("DELETE FROM dvr.ns.t WHERE k BETWEEN 10 AND 30")
+    finally moved.foreach { case (src, dst) => Files.move(dst, src) }
+    assert(t.commitOperation(t.currentVersion) == "DELETE_DV")
+    assert(t.dvFiles.map(_.rows).sum == 21L)
+    val marked = s.read.parquet(t.dvFiles.map(_.path): _*)
+      .select(SnapshotTable.DvFileCol).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(marked == near.map(_.path).toSet)
+    val ks = t.read().select("k").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ks == ((0L to 9L) ++ (31L to 99L)))
   }
 
   test("with change-data-feed enabled the DV delete captures pre-images") {

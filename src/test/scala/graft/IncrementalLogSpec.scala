@@ -65,9 +65,9 @@ class IncrementalLogSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, root).create(slice(0, 100))
     t.append(slice(100, 200))
     t.merge(slice(50, 60).withColumn("v", col("v") + 1.0), keys = Seq("id"))
-    t.deleteWhere("id", 150, 159)
+    t.delete(col("id").between(150, 159))
     t.mergeDeferred(slice(20, 25).withColumn("v", col("v") + 2.0), Seq("id"))
-    t.deleteWherePositional("id", 180, 184)
+    t.delete(col("id").between(180, 184), positional = true)
     val expect = t.read().orderBy("id").collect().toSeq
     val cold = reopenCold(root)
     assert(cold.currentVersion === t.currentVersion)

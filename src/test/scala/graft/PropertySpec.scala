@@ -266,7 +266,7 @@ class PropertySpec extends AnyFunSuite {
           case 0 => // positional delete of a random key range
             val lo = rnd.nextInt(60).toLong
             val hi = lo + rnd.nextInt(20)
-            t.deleteWherePositional("k", lo.toDouble, hi.toDouble)
+            t.delete(col("k").between(lo, hi), positional = true)
             model --= model.keys.filter(k => k >= lo && k <= hi).toSeq
           case 1 => // CoW merge of a random update/insert mix
             val rows = (0 until 1 + rnd.nextInt(8)).map { _ =>

@@ -49,7 +49,7 @@ class ReorgPurgePropertySpec extends AnyFunSuite {
         (lo, lo + rnd.nextInt(20).toLong)
       }
       ranges.foreach { case (lo, hi) =>
-        t.deleteWherePositional("k", lo.toDouble, hi.toDouble)
+        t.delete(col("k").between(lo, hi), positional = true)
       }
       def deleted(k: Long): Boolean =
         ranges.exists { case (lo, hi) => k >= lo && k <= hi }

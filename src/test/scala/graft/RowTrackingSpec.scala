@@ -49,7 +49,7 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(t.clusterIncremental(Seq("k"), minBytes = 1L << 20) > 0)
     assert(rids(t) == before, "ids changed across CLUSTER")
     // DV delete: survivors keep their ids; REORG PURGE keeps them too
-    t.deleteExprPositional(col("k") % 10 === 0)
+    t.delete(col("k") % 10 === 0, positional = true)
     val afterDelete = rids(t)
     assert(afterDelete == before.filterNot { case (k, _) => k % 10 == 0 })
     assert(t.reorgPurge(minBytes = 1L << 30) > 0)

@@ -247,7 +247,8 @@ class SnapshotStreamSpec extends AnyFunSuite {
     val root = tmp("snapstream_reorgdv")
     val t = new SnapshotTable(spark, root).create(slice(0, 100))   // v0
     t.append(slice(100, 200))                                      // v1
-    t.deleteWherePositional("id", 0, 9, trackChanges = true)       // v2
+    t.delete(col("id").between(0, 9), positional = true,
+      trackChanges = true)                                         // v2
     assert(t.reorgPurge() > 0)                                     // v3
     t.append(slice(200, 250))                                      // v4
     // data mode, tailing from AFTER the delete: the purge rewrite is a
@@ -281,7 +282,7 @@ class SnapshotStreamSpec extends AnyFunSuite {
     // pending deletion-vector marks
     val root2 = tmp("snapstream_clone_dv")
     val t2 = new SnapshotTable(spark, root2).create(slice(0, 100))
-    t2.deleteWherePositional("id", 10, 30)
+    t2.delete(col("id").between(10, 30), positional = true)
     val cloneRoot2 = tmp("snapstream_clone_dv_dst")
     t2.shallowCloneTo(cloneRoot2)
     val e2 = intercept[StreamingQueryException] {

@@ -370,7 +370,7 @@ class SqlVerbsSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, root)
       .create(batch(0, 50), partitionBy = Some("p"))                 // v0
     t.append(batch(50, 100), partitionBy = Some("p"))                // v1
-    t.deleteWherePositional("k", 0, 9)                               // v2: 10 marks
+    t.delete(col("k").between(0, 9), positional = true)  // v2: 10 marks
     assert(t.dvFiles.map(_.rows).sum == 10)
     val markFree = t.files.filter(_.stats("k")._1 >= 50).map(_.path).toSet
     assert(markFree.size == 2, s"fixture wants 2 mark-free files: $markFree")
@@ -389,7 +389,7 @@ class SqlVerbsSpec extends AnyFunSuite {
         t.files.map(_.path.stripPrefix("file:")): _*)
       .filter($"k" < 10).count() == 0L)
     // partition-scoped purge: marks on unscoped partitions persist
-    t.deleteWherePositional("k", 10, 13)                             // 4 marks
+    t.delete(col("k").between(10, 13), positional = true)  // 4 marks
     sql(s"REORG TABLE graft.`$root` WHERE p = '0' APPLY (PURGE)")
     assert(t.dvFiles.map(_.rows).sum == 2, "odd-partition marks persist")
     sql(s"REORG TABLE graft.`$root` APPLY (PURGE)")
