@@ -89,12 +89,8 @@ object BenchExtras {
       Seq("cow", "mor").flatMap { mode =>
         val clone = staged.shallowCloneTo(graft.Scratch.dir(s"mm_${mode}_$label"))
         val (_, wSec) = time {
-          if (mode == "cow")
-            clone.merge(src, keys = Seq("key", "partition"),
-              partitionBy = Some("partition"))
-          else
-            clone.mergeDeferred(src, keys = Seq("key", "partition"),
-              partitionBy = Some("partition"))
+          clone.merge(src, keys = Seq("key", "partition"),
+            partitionBy = Some("partition"), deferred = mode == "mor")
         }
         val (_, rSec) = time {
           clone.read().agg(sum(col("value"))).collect()
@@ -123,12 +119,9 @@ object BenchExtras {
       Seq("cow", "mor").flatMap { mode =>
         val clone = staged.shallowCloneTo(graft.Scratch.dir(s"dm_${mode}_$label"))
         val (_, wSec) = time {
-          if (mode == "cow")
-            clone.mergeDelete(keys, keys = Seq("key", "partition"),
-              partitionBy = Some("partition"))
-          else
-            clone.mergeDeleteDeferred(keys, keys = Seq("key", "partition"),
-              partitionBy = Some("partition"))
+          clone.merge(keys, keys = Seq("key", "partition"),
+            partitionBy = Some("partition"), deleteMatched = true,
+            deferred = mode == "mor")
         }
         val (_, rSec) = time {
           clone.read().agg(sum(col("value"))).collect()

@@ -75,8 +75,9 @@ object Lakehouse {
   private def stagedOrdersMor1(s: SparkSession, d: String): SnapshotTable =
     staged(s, d, "orders_mor1")(r => new SnapshotTable(s, r)
       .create(Tables.load(s, d, "orders"), partitionBy = Some("o_orderstatus"))
-      .mergeDeferred(mergeSource(Tables.load(s, d, "orders")),
-        Seq("o_orderkey", "o_orderstatus"), partitionBy = Some("o_orderstatus")))
+      .merge(mergeSource(Tables.load(s, d, "orders")),
+        Seq("o_orderkey", "o_orderstatus"), partitionBy = Some("o_orderstatus"),
+        deferred = true))
 
   // MERGE INTO … UPDATE SET * / INSERT * (reference:
   // IncrementalTPCDSBenchmark.scala:276-281), partition-pruned CoW on
@@ -476,8 +477,8 @@ object Lakehouse {
         .filter(col("o_orderkey") % 13 === 0 && col("o_orderstatus") === "F")
         .select("o_orderkey", "o_orderstatus")
       val table = stagedOrders(s, d).shallowCloneTo(tmp("mdel"))
-        .mergeDelete(del, Seq("o_orderkey", "o_orderstatus"),
-          partitionBy = Some("o_orderstatus"))
+        .merge(del, Seq("o_orderkey", "o_orderstatus"),
+          partitionBy = Some("o_orderstatus"), deleteMatched = true)
       table.read().groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("o_totalprice"))))
@@ -594,9 +595,9 @@ object Lakehouse {
         o.filter(col("o_orderkey") % 10 === 0 && col("o_orderstatus") === status)
           .withColumn("o_totalprice", col("o_totalprice") + bump)
       val merges = Seq(("F", 111.0), ("O", 222.0)).map { case (st, b) =>
-        Future(t.mergeConcurrent(src(st, b),
+        Future(t.merge(src(st, b),
           keys = Seq("o_orderkey", "o_orderstatus"),
-          partitionBy = "o_orderstatus"))
+          partitionBy = Some("o_orderstatus")))
       }
       Await.result(Future.sequence(merges), Duration.Inf)
       t.read().agg(count(lit(1)).as("n_rows"),
@@ -1948,8 +1949,8 @@ object Lakehouse {
     (s, d) => {
       val o = Tables.load(s, d, "orders")
       val table = stagedOrders(s, d).shallowCloneTo(tmp("mor"))
-        .mergeDeferred(mergeSource(o), Seq("o_orderkey", "o_orderstatus"),
-          partitionBy = Some("o_orderstatus"))
+        .merge(mergeSource(o), Seq("o_orderkey", "o_orderstatus"),
+          partitionBy = Some("o_orderstatus"), deferred = true)
       table.read()
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority")
@@ -2005,15 +2006,17 @@ object Lakehouse {
       val o = Tables.load(s, d, "orders")
       val keys = Seq("o_orderkey", "o_orderstatus")
       val table = stagedOrders(s, d).shallowCloneTo(tmp("mordel"))
-        .mergeDeferred(mergeSource(o), keys, partitionBy = Some("o_orderstatus"))
-        .mergeDeleteDeferred(
+        .merge(mergeSource(o), keys, partitionBy = Some("o_orderstatus"),
+          deferred = true)
+        .merge(
           o.filter(col("o_orderkey") % 13 === 0)
             .select("o_orderkey", "o_orderstatus"),
-          keys, partitionBy = Some("o_orderstatus"))
-        .mergeDeferred(
+          keys, partitionBy = Some("o_orderstatus"), deleteMatched = true,
+          deferred = true)
+        .merge(
           o.filter(col("o_orderkey") % 26 === 0)
             .withColumn("o_totalprice", col("o_totalprice") + 5000.0),
-          keys, partitionBy = Some("o_orderstatus"))
+          keys, partitionBy = Some("o_orderstatus"), deferred = true)
       table.read()
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority")
@@ -2068,12 +2071,13 @@ object Lakehouse {
       // metadata clone + the two TRACKED commits — versions 1 and 2 of
       // the clone (v0 = CLONE carries the pending deltas forward)
       val table = stagedOrdersMor1(s, d).shallowCloneTo(tmp("cdcmor"))
-        .mergeDeferred(src2, keys, partitionBy = Some("o_orderstatus"),
-          trackChanges = true)
-        .mergeDeleteDeferred(
+        .merge(src2, keys, partitionBy = Some("o_orderstatus"),
+          trackChanges = true, deferred = true)
+        .merge(
           o.filter(col("o_orderkey") % 13 === 0)
             .select("o_orderkey", "o_orderstatus"),
-          keys, partitionBy = Some("o_orderstatus"), trackChanges = true)
+          keys, partitionBy = Some("o_orderstatus"), deleteMatched = true,
+          deferred = true, trackChanges = true)
       table.changes(1).unionByName(table.changes(2))
         .groupBy(col(SnapshotTable.ChangeCol).as("change_type"))
         .agg(count(lit(1)).as("n"),
@@ -2903,12 +2907,12 @@ object Lakehouse {
       val t = new SnapshotTable(s, s"$root/bench/$tbl")
       val o = Tables.load(s, d, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
-      t.mergeDeferred(
+      t.merge(
         o.filter(col("o_orderkey") % 13 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 8.0)
           .unionByName(o.filter(col("o_orderkey") % 31 === 0)
             .withColumn("o_orderkey", col("o_orderkey") + 10000000000L)),
-        Seq("o_orderkey"))                                           // v1: MoR
+        Seq("o_orderkey"), deferred = true)                          // v1: MoR
       require(t.deltaFiles.nonEmpty, "fixture must leave pending deltas")
       s.sql(s"CALL $cat.system.run_compaction('run', 'bench.$tbl')") // v2: fold
       require(t.deltaFiles.isEmpty, "compaction must fold the deltas")

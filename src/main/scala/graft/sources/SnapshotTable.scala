@@ -56,7 +56,7 @@ import org.apache.spark.sql.functions._
   * invariant makes pruning sound: a matched row's partition value cannot
   * change, so stale rows can never hide in an unscanned partition.
   *
-  * Merge-on-read (MoR) upserts ([[mergeDeferred]]) are the deferred
+  * Merge-on-read (MoR) merges ([[merge]] with `deferred`) are the deferred
   * alternative the reference benchmarks against CoW
   * (IncrementalTPCDSBenchmark MoR table options; README.md:30,36):
   * the source is appended as 'delta' files — merge cost is O(source),
@@ -566,8 +566,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Change-data-feed read (Delta `table_changes` analog): the rows a
     * commit inserted/updated/deleted, with a `_change_type` column.
-    * Changes are captured AT COMMIT TIME by [[merge]]/[[mergeDelete]]
-    * (`trackChanges = true`) — reading them back is O(changed rows),
+    * Changes are captured AT COMMIT TIME by [[merge]], [[delete]] and
+    * [[update]] (`trackChanges = true`) — reading them back is O(changed rows),
     * never a version diff over the table. */
   def changes(version: Int): DataFrame = {
     val entries = manifestOf(version).changes
@@ -1615,14 +1615,16 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * no MoR deltas are pending — deferred-merge rows live outside the
     * base files, so base-only stats could exclude their values. */
   def statsMinMax(colName: String): Option[(Double, Double)] = {
-    val entries = fileEntries(currentVersion)
-    val ss = entries.map(_.stats.get(physColName(colName)))
+    val v = currentVersion
+    val entries = fileEntries(v)
     // DV-deleted rows may have held the min/max — footer stats are only
     // an upper bound on the live range, so decline like pending deltas
-    if (entries.isEmpty || ss.exists(_.isEmpty) ||
-      deltaEntries(currentVersion).nonEmpty ||
-      dvEntries(currentVersion).nonEmpty) None
-    else Some((ss.map(_.get._1).min, ss.map(_.get._2).max))
+    if (entries.isEmpty || deltaEntries(v).nonEmpty || dvEntries(v).nonEmpty) None
+    else {
+      val ss = entries.map(statsOf(colName, entries))
+      if (ss.exists(_.isEmpty)) None
+      else Some((ss.map(_.get._1).min, ss.map(_.get._2).max))
+    }
   }
 
   /** Data-skipping file selection: files whose [min,max] for `colName`
@@ -1639,9 +1641,32 @@ class SnapshotTable(spark: SparkSession, root: String) {
     interval match {
       case None => _ => true
       case Some((c, lo, hi)) =>
-        val pc = physColName(c)
-        _.stats.get(pc).forall { case (mn, mx) => mx >= lo && mn <= hi }
+        val stats = statsOf(c, fileEntries(currentVersion))
+        stats(_).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
+
+  /** The footer (min, max) of `colName` for each of `entries`, in value
+    * space — what [[mayIntersect]] and [[statsMinMax]] compare. A
+    * decimal column's footer stats are its UNSCALED parquet integers
+    * (both stats writers store them so); they divide by 10^scale of the
+    * column's type in the file's own generation schema, so logs already
+    * written read right and a decimal widened to a larger scale keeps
+    * each file's scale. */
+  private def statsOf(colName: String,
+      entries: Seq[FileEntry]): FileEntry => Option[(Double, Double)] = {
+    val pc = physColName(colName)
+    val scaleOf: Map[Long, Double] = entries.filter(_.stats.contains(pc))
+      .groupBy(_.origin).flatMap { case (o, es) =>
+        SnapshotTable.probeDataSchema(spark, es.map(_.path), Some(o))
+          .find(_.name == pc).map(_.dataType).collect {
+            case d: org.apache.spark.sql.types.DecimalType =>
+              o -> math.pow(10, d.scale)
+          }
+      }
+    e => e.stats.get(pc).map { case (mn, mx) =>
+      scaleOf.get(e.origin).fold((mn, mx))(f => (mn / f, mx / f))
+    }
+  }
 
   /** Stats-pruned range read: plan only the files [[filesInRange]] keeps
     * — the Delta-style file-level skipping that the reference's
@@ -1832,235 +1857,287 @@ class SnapshotTable(spark: SparkSession, root: String) {
     this
   }
 
-  /** Copy-on-write MERGE (UPDATE SET * / WHEN NOT MATCHED INSERT *):
-    * result = target rows with no key match in source + all source rows.
-    * Source must be unique on `keys`. Pending MoR deltas are folded in
-    * (the rewrite base is the resolved view of touched partitions).
+  /** MERGE of `source` into the table on `keys` (Delta `MERGE INTO …
+    * WHEN MATCHED … WHEN NOT MATCHED INSERT *`); the source must be
+    * unique on `keys`. Two flags choose the shape:
     *
-    * `evolveSchema` (Delta `mergeSchema` on MERGE): source columns
-    * absent from the target are appended; only touched files are
-    * rewritten in the widened schema — untouched files carry over as-is
-    * and null-fill the new columns at scan time ([[readEntries]]). */
+    *  - copy-on-write upsert (the default): result = target rows with no
+    *    key match in `source` + every source row; commits `MERGE`;
+    *  - copy-on-write delete (`deleteMatched`): result = target rows with
+    *    no key match; only the key columns of `source` are read; commits
+    *    `MERGE_DELETE`;
+    *  - merge-on-read (`deferred`): `source`, or for `deleteMatched` its
+    *    key tombstones, append as delta files and no base file is
+    *    touched; commits `MERGE_MOR` / `DELETE_MOR` ([[mergeOnRead]]).
+    *
+    * A copy-on-write merge rewrites only the source's slice of the table
+    * ([[mergeSlice]]) and retries a lost commit race metadata-only
+    * ([[mergeCopyOnWrite]]); a deferred merge does not retry.
+    * `trackChanges` writes the commit's change feed ([[changes]]).
+    *
+    * `evolveSchema` (Delta `mergeSchema`, copy-on-write upsert only):
+    * source columns absent from the target are appended; only rewritten
+    * files take the widened schema, carried files null-fill the new
+    * columns at scan time ([[readEntries]]).
+    *
+    * `txn` (see [[appendIdempotent]]): a call whose (appId, version) is
+    * already recorded is skipped — a keyed replay is content-idempotent,
+    * but the skip saves the whole write. */
   def merge(source: DataFrame, keys: Seq[String], partitionBy: Option[String] = None,
+      deleteMatched: Boolean = false, deferred: Boolean = false,
       trackChanges: Boolean = false, evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None): SnapshotTable = {
-    val v = currentVersion
-    // txn marker (see [[appendIdempotent]]): a replayed micro-batch is
-    // detected by its (appId, version) and skipped — a keyed MERGE replay
-    // is content-idempotent, but the skip saves the whole rewrite
-    if (txn.exists { case (app, ver) =>
-        manifestOf(v).txns.get(app).exists(_ >= ver) })
-      return this
-    withSourceOnce(source) { src =>
+    require(!evolveSchema || !(deleteMatched || deferred),
+      s"MERGE on $root: evolveSchema applies to the copy-on-write upsert only")
+    if (!replayed(currentVersion, txn)) {
+      if (deferred) mergeOnRead(source, keys, partitionBy, deleteMatched,
+        trackChanges, txn)
+      else mergeCopyOnWrite(source, keys, partitionBy, deleteMatched,
+        trackChanges, evolveSchema, txn)
+    }
+    this
+  }
+
+  /** Whether version `v` already records `txn`'s (appId, ≥ version). */
+  private def replayed(v: Int, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, ver) => manifestOf(v).txns.get(app).exists(_ >= ver) }
+
+  /** The copy-on-write core of [[merge]]. The source is evaluated once
+    * ([[withSourceOnce]]; `deleteMatched` keeps only its key columns).
+    * Its slice of the current version ([[mergeSlice]]) is read as the
+    * rewrite base — DV-resolved, the slice's pending deltas resolved in —
+    * and rewritten without the key-matched rows, plus the source rows
+    * for an upsert. Under row tracking the carried (anti-joined) rows
+    * keep their ids; source rows take fresh ones, since the key join
+    * cannot tell an update from an insert without another join (SQL
+    * MERGE keeps updated rows' ids through its delta path).
+    *
+    * The change feed holds update pre- and post-images plus inserts, or
+    * `delete` rows — classified against the rewrite base, so its cost is
+    * O(source + slice), never the table.
+    *
+    * Commit (Delta's optimistic transaction): the data is written once,
+    * against the version read at entry. A lost manifest race retries
+    * metadata-only: the winner must have left this merge's slice (base
+    * files AND pending deltas) and the column metadata the write was
+    * checked against (NOT NULL markers) unchanged, and added no
+    * deletion-vector mark addressing the rewritten files
+    * ([[conflictingNewDvMarks]]) — the rewrite copied that row forward,
+    * so committing would resurrect it. Anything else is a true conflict:
+    * `ConcurrentModificationException`, as in Delta. A passing retry
+    * re-targets the carried files, deltas and marks and the written
+    * entries' origin at the winner's version. A winner that already
+    * recorded this call's `txn` ends it without a commit.
+    *
+    * `beforeCommit` runs before each commit attempt: a test seam that
+    * interleaves a rival commit deterministically. */
+  private[graft] def mergeCopyOnWrite(source: DataFrame, keys: Seq[String],
+      partitionBy: Option[String], deleteMatched: Boolean = false,
+      trackChanges: Boolean = false, evolveSchema: Boolean = false,
+      txn: Option[(String, Long)] = None,
+      beforeCommit: () => Unit = () => ()): Unit =
+    withSourceOnce(if (deleteMatched) source.select(keys.map(col): _*)
+                   else source) { src =>
       val source = src.df
-      val (base, carryOver) = prunedBase(source, keys, partitionBy,
-        source.schema, touchedOverride = src.touched(keys, partitionBy),
-        withRids = true)
-      // carried (anti-joined) rows keep their materialized row ids under
-      // row tracking; source rows (updates + inserts) refresh — the
-      // key-join cannot tell an update from an insert without another
-      // join, so the scoped contract stands for them (SQL MERGE preserves
-      // updated rows' ids via the delta path instead)
-      val hasRid = base.columns.contains(SnapshotTable.RidCol)
-      val srcAligned =
-        if (hasRid)
-          source.withColumn(SnapshotTable.RidCol, lit(null).cast("long"))
-        else source
+      val v0 = currentVersion
+      lazy val touched = partitionBy.fold(Set.empty[String])(src.partValues)
+      val slice = mergeSlice(v0, keys, partitionBy, touched)
+      val base = sliceScan(slice, v0, keys,
+        if (deleteMatched) read(v0).schema else source.schema)
+      val kept = base.join(source, keys, "left_anti")
       val rewritten =
-        if (evolveSchema)
-          base.join(source, keys, "left_anti")
-            .unionByName(srcAligned, allowMissingColumns = true)
-        else base.join(source, keys, "left_anti").unionByName(srcAligned)
-      val written = writeData(rewritten, v + 1, partitionBy)
-      // Change-data-feed capture (Delta CDF analog, cdc files written with
-      // the commit): classify source rows against the touched base — keyed
-      // matches are updates (pre- AND post-image, Delta CDF parity: the
-      // preimage is what lets a downstream consumer decrement an aggregate
-      // it maintains), the rest inserts. Cost is O(source + touched
-      // partitions), never the whole table.
+        if (deleteMatched) kept
+        else kept.unionByName(
+          if (base.columns.contains(SnapshotTable.RidCol))
+            source.withColumn(SnapshotTable.RidCol, lit(null).cast("long"))
+          else source,
+          allowMissingColumns = evolveSchema)
+      val written = writeData(rewritten, v0 + 1, partitionBy)
       val cdc =
         if (!trackChanges) Seq.empty
         else {
-          val baseKeys = base.select(keys.map(col): _*)
-          val srcKeys = source.select(keys.map(col): _*)
+          // pre-images come from the (possibly narrower) base schema —
+          // under evolveSchema the new columns null-fill
+          val matched = base.drop(SnapshotTable.RidCol)
+            .join(source.select(keys.map(col): _*), keys, "left_semi")
           writeChanges(
-            source.join(baseKeys, keys, "left_semi")
-              .withColumn(ChangeCol, lit("update_postimage"))
-              .unionByName(source.join(baseKeys, keys, "left_anti")
-                .withColumn(ChangeCol, lit("insert")))
-              // preimages come from the (possibly narrower) base schema —
-              // under evolveSchema the new columns null-fill
-              .unionByName(base.drop(SnapshotTable.RidCol)
-                .join(srcKeys, keys, "left_semi")
-                .withColumn(ChangeCol, lit("update_preimage")),
-                allowMissingColumns = true),
-            v + 1)
+            if (deleteMatched) matched.withColumn(ChangeCol, lit("delete"))
+            else {
+              val baseKeys = base.select(keys.map(col): _*)
+              source.join(baseKeys, keys, "left_semi")
+                .withColumn(ChangeCol, lit("update_postimage"))
+                .unionByName(source.join(baseKeys, keys, "left_anti")
+                  .withColumn(ChangeCol, lit("insert")))
+                .unionByName(matched.withColumn(ChangeCol, lit("update_preimage")),
+                  allowMissingColumns = true)
+            },
+            v0 + 1)
         }
-      val keptPaths = carryOver.map(_.path).toSet
-      writeManifest(Manifest(v + 1, "MERGE", Seq.empty, written ++ carryOver,
-        Seq.empty, cdc,
-        remainingDvs(v, fileEntries(v).map(_.path).filterNot(keptPaths).toSet,
-          v + 1),
-        txns = txn.map { case (app, ver) => Map(app -> ver) }.getOrElse(Map.empty)))
-    }
-    this
-  }
-
-  /** Copy-on-write MERGE under optimistic concurrency (Delta OCC,
-    * partition-disjoint auto-resolution): N writers merging disjoint
-    * partition slices of the same table all commit. The data rewrite
-    * runs once against the snapshot version observed at entry; losing
-    * the write-once manifest race triggers a METADATA-ONLY retry — the
-    * attempt re-validates that its partition SLICE (base files AND
-    * pending deltas) is unchanged since its rewrite base (so its new
-    * files are still correct), re-targets its carry-over lists at the
-    * winner's manifest, and commits the next version. A winner that
-    * touched our slice is a true conflict →
-    * ConcurrentModificationException, exactly Delta's behavior.
-    *
-    * Pending MoR deltas are supported: deltas laid out under
-    * `partitionBy` classify exactly — those in touched partitions
-    * resolve into the rewrite (their files retire with this commit),
-    * the rest carry over as still-pending deltas. A delta WITHOUT that
-    * layout may span partitions, so it forces a full fold (every file
-    * and delta joins the rewrite base) — correct, just unprunable, and
-    * any concurrent commit then conflicts. Base files under a foreign
-    * layout are treated as always-touched (same rule as [[prunedBase]]):
-    * their rows fold into the rewrite, and writers that share them
-    * conflict instead of corrupting.
-    *
-    * `beforeCommit` is a test seam to interleave a competing commit
-    * deterministically between rewrite and commit. */
-  def mergeConcurrent(source: DataFrame, keys: Seq[String], partitionBy: String,
-      maxAttempts: Int = 10,
-      beforeCommit: () => Unit = () => ()): SnapshotTable = {
-    require(keys.contains(partitionBy),
-      s"mergeConcurrent keys $keys must include partition column $partitionBy")
-    withSourceOnce(source) { src =>
-      val source = src.df
-      val v0 = currentVersion
-      val vals = src.partValues(partitionBy)
-      require(vals.nonEmpty, s"mergeConcurrent on $root with an empty source")
-      def foreign(e: FileEntry) = e.partValue == null || e.partCol != partitionBy
-      def mine(e: FileEntry) = foreign(e) || vals.contains(e.partValue)
-      // the slice this writer folds into its rewrite at a given version:
-      // (base files, pending deltas). A partition-spanning delta widens the
-      // slice to the whole table — its rows may update ANY partition, so
-      // partial carry-over would duplicate or shadow them.
-      def slice(v: Int): (Seq[FileEntry], Seq[FileEntry]) =
-        if (deltaEntries(v).exists(foreign)) (fileEntries(v), deltaEntries(v))
-        else (fileEntries(v).filter(mine),
-          deltaEntries(v).filter(e => vals.contains(e.partValue)))
-      val (baseEntries, foldDeltas) = slice(v0)
-      val base =
-        if (baseEntries.isEmpty && foldDeltas.isEmpty) spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema)
-        else if (foldDeltas.isEmpty) baseScan(baseEntries, dvEntries(v0))
-        else resolveMerged(baseEntries, foldDeltas, mergeKeysOf(v0), dvEntries(v0))
-      val rewritten = base.join(source, keys, "left_anti").unionByName(source)
-      val basePaths = baseEntries.map(_.path).toSet
-      val foldDeltaPaths = foldDeltas.map(_.path).toSet
-      // Deletion vectors are not partition-attributed, so a concurrent DV
-      // change needs CONTENT-level validation on retry (conflictingNewDvMarks
-      // below): a mark ADDED since v0 that addresses a file in this writer's
-      // rewrite slice is a true conflict — the rewrite already copied that
-      // row forward, so committing would resurrect the deleted row. Marks
-      // added against carried-over files stay valid (they ride along), and
-      // marks that merely got REWRITTEN into new DV files by another CoW
-      // winner existed at v0 — this writer's DV-resolved base scan already
-      // applied them.
+      val rewrittenPaths = slice.files.map(_.path).toSet
+      val foldedPaths = slice.deltas.map(_.path).toSet
       val dvPaths0 = dvEntries(v0).map(_.path).toSet
+      var dvs = remainingDvs(v0, rewrittenPaths, v0 + 1)
       var v = v0
-      var attempt = 0
-      var committed = false
-      var attemptFiles: Seq[FileEntry] = Seq.empty
-      var attemptDvs: Seq[FileEntry] = Seq.empty
-      while (!committed) {
-        attempt += 1
-        // written on the first pass only — the rewrite stays valid across
-        // retries once the slice validation passes, so a retry is
-        // metadata-only
-        if (attempt == 1) {
-          attemptFiles = writeData(rewritten, v + 1, Some(partitionBy))
-          attemptDvs = remainingDvs(v0, basePaths, v + 1)
-        }
+      var at = slice
+      var attempt = 1
+      var done = false
+      def conflict(why: String): Nothing =
+        throw new java.util.ConcurrentModificationException(
+          s"concurrent commit to $root $why — the rewrite base is stale")
+      while (!done) {
         beforeCommit()
-        val carryOver = fileEntries(v).filterNot(e => basePaths(e.path))
-        val carryDeltas = deltaEntries(v).filterNot(e => foldDeltaPaths(e.path))
         try {
-          // origin tracks the committing version (a retry re-targets it);
-          // carried deltas keep their original origins so last-writer-wins
-          // ordering against future deltas is unchanged
-          writeManifest(Manifest(v + 1, "MERGE",
-            if (carryDeltas.isEmpty) Seq.empty else mergeKeysOf(v),
-            attemptFiles.map(_.copy(origin = (v + 1).toLong)) ++ carryOver,
-            carryDeltas, dvs = attemptDvs))
-          committed = true
+          writeManifest(Manifest(v + 1,
+            if (deleteMatched) "MERGE_DELETE" else "MERGE",
+            if (at.carriedDeltas.isEmpty) Seq.empty else mergeKeysOf(v),
+            written.map(_.copy(origin = v + 1L)) ++ at.carriedFiles,
+            at.carriedDeltas, cdc.map(_.copy(origin = v + 1L)), dvs,
+            txns = Map.from(txn)))
+          done = true
         } catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException
               | _: java.nio.file.FileAlreadyExistsException =>
-            val newV = currentVersion
-            val (nowBase, nowDeltas) = slice(newV)
-            if (nowBase.map(_.path).toSet != basePaths ||
-                nowDeltas.map(_.path).toSet != foldDeltaPaths)
-              throw new java.util.ConcurrentModificationException(
-                s"concurrent commit to $root touched partitions $vals " +
-                  "(this writer's slice of files or deltas changed) — " +
-                  "rewrite base is stale")
-            if (dvEntries(newV).map(_.path).toSet != dvPaths0) {
-              // DV set changed since the rewrite base. Disjoint DV commits
-              // (marks only on carried-over files) resolve metadata-style:
-              // re-derive the carried DV set from the CURRENT version —
-              // O(dv rows), like Delta's winning-commit action check.
-              if (conflictingNewDvMarks(v0, newV, basePaths))
+            val w = currentVersion
+            done = replayed(w, txn)
+            if (!done) {
+              at = mergeSlice(w, keys, partitionBy, touched)
+              if (at.files.map(_.path).toSet != rewrittenPaths ||
+                  at.deltas.map(_.path).toSet != foldedPaths)
+                conflict("changed this merge's slice of files or deltas")
+              if (manifestOf(w).fieldMeta != manifestOf(v0).fieldMeta)
+                conflict("changed the column metadata the rewrite was checked against")
+              if (dvEntries(w).map(_.path).toSet != dvPaths0) {
+                if (conflictingNewDvMarks(v0, w, rewrittenPaths))
+                  conflict("added deletion-vector marks to this merge's " +
+                    "rewritten files (committing would resurrect deleted rows)")
+                dvs = remainingDvs(w, rewrittenPaths, w + 1)
+              }
+              attempt += 1
+              if (attempt > SnapshotTable.MergeAttempts)
                 throw new java.util.ConcurrentModificationException(
-                  s"concurrent deletion-vector commit to $root addressed " +
-                    s"files in this writer's rewrite slice (partitions $vals) " +
-                    "— the rewrite would resurrect deleted rows")
-              attemptDvs = remainingDvs(newV, basePaths, newV + 1)
+                  s"gave up committing to $root after " +
+                    s"${SnapshotTable.MergeAttempts} attempts")
+              v = w
             }
-            if (attempt >= maxAttempts)
-              throw new java.util.ConcurrentModificationException(
-                s"gave up committing to $root after $maxAttempts attempts")
-            v = newV
         }
       }
     }
-    this
+
+  /** The merge-on-read writer of [[merge]]: appends `source` — or, for
+    * `deleteMatched`, its distinct key tombstones (Iceberg equality-delete
+    * analog: key-width, so high-churn deletes stay affordable) — as delta
+    * files, touching no base file; commit cost is O(source) whatever the
+    * table size. Reads resolve deltas last-writer-wins per key across
+    * kinds (a key re-upserted after a delete resurfaces) until
+    * [[compact]] folds them. Every deferred merge on a table uses the
+    * same `keys` (a fixed primary key). No retry on a lost race.
+    *
+    * The change feed classifies against the RESOLVED view: a key whose
+    * current value sits in a pending delta gets that row as its
+    * pre-image; a tombstoned or absent key has none (its upsert is an
+    * insert, its delete emits nothing). The pre-images are a key-probed
+    * read of the source's slice ([[mergeSlice]]), probed with the
+    * just-written delta copy rather than a re-execution of the source
+    * plan — the resolution shuffle is batch-sized, the commit itself
+    * stays O(source). */
+  private def mergeOnRead(source: DataFrame, keys: Seq[String],
+      partitionBy: Option[String], deleteMatched: Boolean,
+      trackChanges: Boolean, txn: Option[(String, Long)]): Unit = {
+    val v = currentVersion
+    val prior = mergeKeysOf(v)
+    require(prior.isEmpty || prior == keys,
+      s"deferred-merge keys $keys differ from table's $prior")
+    val rows =
+      if (!deleteMatched) source
+      else source.select(keys.map(col): _*).distinct().withColumn(DelCol, lit(true))
+    val written = writeData(rows, v + 1, partitionBy)
+    val cdc =
+      if (!trackChanges) Seq.empty
+      else {
+        val copy = (if (written.nonEmpty) readEntries(written) else rows).drop(DelCol)
+        // no distinct: merge sources are unique on keys, and a semi-join
+        // probe tolerates duplicates anyway (a distinct would cost a
+        // shuffle before the broadcast build)
+        val probe = copy.select(keys.map(col): _*)
+        // the written entries name the touched partitions without a job
+        lazy val touched =
+          if (written.nonEmpty && written.forall(_.partValue != null))
+            written.map(_.partValue).toSet
+          else partitionBy.fold(Set.empty[String])(
+            new OnceSource(copy, local = false).partValues)
+        val pre = sliceScan(mergeSlice(v, keys, partitionBy, touched), v, keys,
+          if (deleteMatched) read(v).schema else source.schema, Some(probe))
+        if (deleteMatched) writeChanges(pre.withColumn(ChangeCol, lit("delete")), v + 1)
+        else {
+          // resolution executed ONCE: the pre-images land in their own
+          // change files, which then serve as the (materialized) key
+          // probe splitting the source into post-images and inserts
+          val preCdc = writeChanges(
+            pre.withColumn(ChangeCol, lit("update_preimage")), v + 1)
+          val preKeys =
+            if (preCdc.nonEmpty) readEntries(preCdc).select(keys.map(col): _*)
+            else spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              org.apache.spark.sql.types.StructType(
+                source.schema.filter(f => keys.contains(f.name))))
+          preCdc ++ writeChanges(
+            copy.join(preKeys, keys, "left_semi")
+              .withColumn(ChangeCol, lit("update_postimage"))
+              .unionByName(copy.join(preKeys, keys, "left_anti")
+                .withColumn(ChangeCol, lit("insert"))),
+            v + 1)
+        }
+      }
+    writeManifest(Manifest(v + 1, if (deleteMatched) "DELETE_MOR" else "MERGE_MOR",
+      keys, fileEntries(v), deltaEntries(v) ++ written, cdc, dvEntries(v),
+      txns = Map.from(txn)))
   }
 
-  /** Copy-on-write MERGE … WHEN MATCHED THEN DELETE: result = target
-    * rows with no key match in `source`. Partition pruning as in
-    * [[merge]] — only partitions named by the source are rewritten;
-    * that is sound for deletes for the same reason (a matched row's
-    * partition value is one of the source's partition values). */
-  def mergeDelete(source: DataFrame, keys: Seq[String], partitionBy: Option[String] = None,
-      trackChanges: Boolean = false): SnapshotTable = {
-    withSourceOnce(source.select(keys.map(col): _*)) { src =>
-      val v = currentVersion
-      val srcKeys = src.df
-      val (base, carryOver) = prunedBase(srcKeys, keys, partitionBy,
-        read(v).schema, touchedOverride = src.touched(keys, partitionBy),
-        withRids = true)
-      // survivors keep their row ids under row tracking (a delete must
-      // not renumber rows it does not remove)
-      val rewritten = base.join(srcKeys, keys, "left_anti")
-      val written = writeData(rewritten, v + 1, partitionBy)
-      val cdc =
-        if (!trackChanges) Seq.empty
-        else writeChanges(
-          base.drop(SnapshotTable.RidCol)
-            .join(srcKeys, keys, "left_semi")
-            .withColumn(ChangeCol, lit("delete")),
-          v + 1)
-      val keptPaths = carryOver.map(_.path).toSet
-      writeManifest(Manifest(v + 1, "MERGE_DELETE", Seq.empty,
-        written ++ carryOver, Seq.empty, cdc,
-        remainingDvs(v, fileEntries(v).map(_.path).filterNot(keptPaths).toSet,
-          v + 1)))
+  /** The slice planner of [[merge]]. With `partitionBy` among `keys`, a
+    * matched row's partition value is one of the source's (`touched`,
+    * manifest directory-string form, forced only here), so the slice is
+    * the files of those partitions; without it the slice is the whole
+    * table. A file laid out under another (or no) partition column says
+    * nothing about `partitionBy`'s values and is always in the slice.
+    *
+    * Untouched pending deltas carry as still-pending deltas when every
+    * delta is laid out under `partitionBy` and the table's merge keys
+    * include it — a delta row then shadows base rows of its own
+    * partition only. Otherwise a pending delta may update any partition,
+    * and every file and delta folds into the slice. */
+  private def mergeSlice(v: Int, keys: Seq[String], partitionBy: Option[String],
+      touched: => Set[String]): MergeSlice = {
+    val files = fileEntries(v)
+    val deltas = deltaEntries(v)
+    partitionBy.filter(keys.contains) match {
+      case Some(p) if deltas.isEmpty || (mergeKeysOf(v).contains(p) &&
+          deltas.forall(e => e.partCol == p && e.partValue != null)) =>
+        val vals = touched
+        def inSlice(e: FileEntry) =
+          e.partValue == null || e.partCol != p || vals.contains(e.partValue)
+        val (f, cf) = files.partition(inSlice)
+        val (d, cd) = deltas.partition(inSlice)
+        MergeSlice(f, d, cf, cd)
+      case _ => MergeSlice(files, deltas, Seq.empty, Seq.empty)
     }
-    this
   }
+
+  /** Reads slice `s` of version `v`: the DV-resolved rewrite base, with
+    * the row ids threaded under row tracking ([[rewriteSource]]) — or,
+    * given `keyProbe`, only the rows whose `keys` the probe holds (the
+    * change-feed pre-image read), restricted before the resolution so
+    * its shuffle is probe-sized. The slice's pending deltas resolve in;
+    * their rows have no base address, hence no threaded id. An empty
+    * slice reads as no rows of `emptySchema`. */
+  private def sliceScan(s: MergeSlice, v: Int, keys: Seq[String],
+      emptySchema: => org.apache.spark.sql.types.StructType,
+      keyProbe: Option[DataFrame] = None): DataFrame =
+    if (s.files.isEmpty && s.deltas.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
+    else if (s.deltas.nonEmpty)
+      resolveMerged(s.files, s.deltas, mergeKeysOf(v), dvEntries(v), keyProbe)
+    else keyProbe.fold(rewriteSource(s.files, dvEntries(v)))(kp =>
+      baseScan(s.files, dvEntries(v)).join(broadcast(kp), keys, "left_semi"))
 
   /** Predicate DELETE (Delta `DELETE FROM … WHERE`): removes the rows
     * where `cond` is TRUE — a row whose predicate is NULL stays (SQL
@@ -2181,7 +2258,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * (Iceberg position-delete semantics), so pending MoR deltas are a
     * later layer: a key whose newest version lives in a delta survives
     * a positional delete of its stale base copy (key-level deletes
-    * belong to [[mergeDeleteDeferred]]).
+    * belong to [[merge]] with `deferred` and `deleteMatched`).
     *
     * `images` Some (Delta 3.1 DV-update parity) must be the
     * post-assignment images of EXACTLY the rows matching `cond` (the
@@ -2249,121 +2326,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** Merge-on-read upsert: append `source` as delta files without
-    * touching base files — commit cost is O(source) regardless of table
-    * size (the MoR side of the reference's CoW/MoR comparison,
-    * README.md:30,36). Reads resolve deltas until [[compact]] folds them
-    * in. All deferred merges on a table must use the same `keys`
-    * (enforced), mirroring a fixed primary key. Upsert-only (no
-    * deferred delete), like the reference's MERGE update-all/insert-all. */
-  def mergeDeferred(source: DataFrame, keys: Seq[String], partitionBy: Option[String] = None,
-      trackChanges: Boolean = false): SnapshotTable = {
-    val v = currentVersion
-    val prior = mergeKeysOf(v)
-    require(prior.isEmpty || prior == keys,
-      s"deferred-merge keys $keys differ from table's $prior")
-    val written = writeData(source, v + 1, partitionBy)
-    // CDF on the MoR path (Delta/Hudi expose the change feed regardless
-    // of CoW/MoR): classification is against the RESOLVED view of the
-    // touched partitions — a key whose current value lives in a pending
-    // delta gets that delta row as its update preimage, and a key whose
-    // newest delta is a tombstone classifies as an insert (resurrection).
-    // Cost: O(source + touched partitions), same shape as the CoW capture
-    // — the commit itself stays O(source).
-    val cdc =
-      if (!trackChanges) Seq.empty
-      else {
-        // The commit just materialized `source` as its delta files: read
-        // them back for every capture branch instead of re-executing the
-        // source plan (an arbitrary multi-scan pipeline) per branch.
-        val src = if (written.nonEmpty) readEntries(written) else source
-        // pre-images: the resolved view restricted to the SOURCE's keys
-        // up front (keyProbe) — the resolution shuffle is batch-sized,
-        // never touched-partition-sized. No distinct: merge sources are
-        // unique on keys by contract, and a semi-join probe tolerates
-        // duplicates anyway — a distinct here would cost a shuffle
-        // before the broadcast build.
-        val srcKeys = src.select(keys.map(col): _*)
-        val (pre, _) = prunedBase(src, keys, partitionBy, source.schema,
-          keyProbe = Some(srcKeys),
-          touchedOverride = writtenPartValues(written))
-        // Two-write capture, resolution executed ONCE: the preimage
-        // slice lands straight in its own change files, which then serve
-        // as the (batch-sized, materialized) key probe classifying the
-        // source rows into postimage vs insert — without this, each of
-        // the three capture branches re-executes the whole base+delta
-        // resolution.
-        val preCdc = writeChanges(
-          pre.withColumn(ChangeCol, lit("update_preimage")), v + 1)
-        val preKeys =
-          if (preCdc.nonEmpty) readEntries(preCdc).select(keys.map(col): _*)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              source.schema.filter(f => keys.contains(f.name))))
-        preCdc ++ writeChanges(
-          src.join(preKeys, keys, "left_semi")
-            .withColumn(ChangeCol, lit("update_postimage"))
-            .unionByName(src.join(preKeys, keys, "left_anti")
-              .withColumn(ChangeCol, lit("insert"))),
-          v + 1)
-      }
-    writeManifest(Manifest(v + 1, "MERGE_MOR", keys, fileEntries(v),
-      deltaEntries(v) ++ written, cdc, dvEntries(v)))
-    this
-  }
-
-  /** Touched-partition values straight from a commit's written entries
-    * (manifest directory-string form) — Some only when every entry is
-    * partition-laid-out, else the caller's scan-based fallback runs. */
-  private def writtenPartValues(written: Seq[FileEntry]): Option[Set[String]] =
-    if (written.nonEmpty && written.forall(_.partValue != null))
-      Some(written.map(_.partValue).toSet)
-    else None
-
-  /** Merge-on-read DELETE (Iceberg equality-delete analog): append
-    * tombstone delta files holding only the deleted KEYS plus a marker
-    * column — commit cost is O(delete keys), no base file touched. Reads
-    * resolve tombstones with last-writer-wins across kinds (a key
-    * re-upserted after a delete resurfaces); [[compact]] folds them away
-    * like upsert deltas. The delta side a scan shuffles stays key-width,
-    * never row-width — the property that makes high-churn deletes
-    * affordable at 100 TB. */
-  def mergeDeleteDeferred(source: DataFrame, keys: Seq[String],
-      partitionBy: Option[String] = None,
-      trackChanges: Boolean = false): SnapshotTable = {
-    val v = currentVersion
-    val prior = mergeKeysOf(v)
-    require(prior.isEmpty || prior == keys,
-      s"deferred-delete keys $keys differ from table's $prior")
-    val tomb = source.select(keys.map(col): _*).distinct()
-      .withColumn(DelCol, lit(true))
-    val written = writeData(tomb, v + 1, partitionBy)
-    // CDF delete rows are FULL-WIDTH pre-images from the resolved view
-    // (a key whose latest value sits in a pending upsert delta emits
-    // that row, not the stale base copy; an already-tombstoned or absent
-    // key emits nothing — deleting a non-row is a no-op in the feed).
-    val cdc =
-      if (!trackChanges) Seq.empty
-      else {
-        // key-restricted resolution (see mergeDeferred): only the
-        // tombstoned keys' rows are resolved for full-width pre-images.
-        // The tombstones were just materialized as this commit's delta
-        // files — probe with the written copy, not a re-execution of
-        // the source plan's scan + distinct.
-        val probe =
-          if (written.nonEmpty) readEntries(written).drop(DelCol)
-          else tomb.drop(DelCol)
-        val (pre, _) = prunedBase(probe, keys, partitionBy, read(v).schema,
-          keyProbe = Some(probe),
-          touchedOverride = writtenPartValues(written))
-        writeChanges(pre.withColumn(ChangeCol, lit("delete")), v + 1)
-      }
-    writeManifest(Manifest(v + 1, "DELETE_MOR", keys, fileEntries(v),
-      deltaEntries(v) ++ written, cdc, dvEntries(v)))
-    this
-  }
-
   /** A DML source evaluated once (see [[withSourceOnce]]). */
   private final class OnceSource(val df: DataFrame, local: Boolean) {
     /** The distinct values of `p` in the manifest's directory-string
@@ -2372,10 +2334,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
       val vals = df.select(col(p).cast("string"))
       (if (local) vals else vals.distinct()).collect().map(_.getString(0)).toSet
     }
-
-    /** [[prunedBase]]'s touched partitions, when it prunes by `partitionBy`. */
-    def touched(keys: Seq[String], partitionBy: Option[String]): Option[Set[String]] =
-      partitionBy.filter(keys.contains).map(partValues)
   }
 
   /** Runs `body` over `source` evaluated once. A DML reads its source
@@ -2398,72 +2356,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
       val cached = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try body(new OnceSource(cached, local = false)) finally cached.unpersist(false)
     }
-  }
-
-  /** Shared CoW prologue: split the current file set into partitions the
-    * source touches (re-read as the rewrite base, with MoR resolution if
-    * deltas are pending) and untouched BASE entries (carried over by
-    * reference; untouched deltas are folded too when present, since a
-    * delta partition-slice may be empty only for untouched partitions). */
-  private def prunedBase(
-      source: DataFrame,
-      keys: Seq[String],
-      partitionBy: Option[String],
-      baseSchema: org.apache.spark.sql.types.StructType,
-      keyProbe: Option[DataFrame] = None,
-      touchedOverride: Option[Set[String]] = None,
-      withRids: Boolean = false)
-      : (DataFrame, Seq[FileEntry]) = {
-    val v = currentVersion
-    val entries = fileEntries(v)
-    val deltas = deltaEntries(v)
-    val pruned = partitionBy.filter(keys.contains)
-    // callers whose source is already materialized under `partitionBy`
-    // pass the written entries' partition values — same canonical
-    // directory-string domain as the manifest, zero jobs
-    def touchedValues(p: String): Set[String] = touchedOverride.getOrElse(
-      source.select(col(p).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSet)
-    // an entry laid out under a DIFFERENT partition column (mixed-layout
-    // table after an evolved append) says nothing about this column's
-    // values — treat it as always-touched, like partValue == null
-    def touchedBy(e: FileEntry, p: String, vals: Set[String]): Boolean =
-      e.partValue == null || e.partCol != p || vals.contains(e.partValue)
-    val (touched, carryOver, touchedDeltas) =
-      if (deltas.isEmpty) pruned match {
-        case Some(p) =>
-          val vals = touchedValues(p)
-          val (tb, cb) = entries.partition(touchedBy(_, p, vals))
-          (tb, cb, Seq.empty[FileEntry])
-        case None => (entries, Seq.empty[FileEntry], Seq.empty[FileEntry])
-      } else pruned match {
-        case Some(p) if deltas.forall(_.partValue != null) =>
-          val vals = touchedValues(p)
-          val (tb, cb) = entries.partition(touchedBy(_, p, vals))
-          val (td, cd) = deltas.partition(touchedBy(_, p, vals))
-          // a CoW commit drops delta entries, so untouched deltas cannot
-          // carry over as-is — fold everything in when any would remain
-          // (correctness over pruning).
-          if (cd.isEmpty) (tb, cb, td) else (entries, Seq.empty[FileEntry], deltas)
-        case _ => (entries, Seq.empty[FileEntry], deltas)
-      }
-    val base =
-      if (touched.isEmpty && touchedDeltas.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], baseSchema)
-      else if (touchedDeltas.isEmpty) {
-        // withRids: under row tracking the CoW DML callers thread the
-        // materialized row id through their rewrite (rewriteSource is
-        // baseScan when tracking is off — behavior identical there);
-        // the MoR-resolution branch has no base addresses to thread
-        val scan =
-          if (withRids) rewriteSource(touched, dvEntries(v))
-          else baseScan(touched, dvEntries(v))
-        keyProbe.map(kp => scan.join(broadcast(kp), keys, "left_semi"))
-          .getOrElse(scan)
-      }
-      else resolveMerged(touched, touchedDeltas, mergeKeysOf(v), dvEntries(v),
-        keyProbe)
-    (base, carryOver)
   }
 
   /** True iff a deletion-vector mark committed AFTER `fromVersion`
@@ -2531,7 +2423,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
   def appendIdempotent(df: DataFrame, appId: String, version: Long,
       partitionBy: Option[String] = None): Boolean = {
     val v = currentVersion
-    if (manifestOf(v).txns.get(appId).exists(_ >= version)) false
+    val txn = Some((appId, version))
+    if (replayed(v, txn)) false
     else {
       val written = writeData(df, v + 1, partitionBy)
       // same retry discipline as [[append]] — but a racing writer of the
@@ -2540,7 +2433,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       var committed = false
       while (!committed) {
         val cur = currentVersion
-        if (manifestOf(cur).txns.get(appId).exists(_ >= version)) return false
+        if (replayed(cur, txn)) return false
         try {
           writeManifest(Manifest(cur + 1, "APPEND", mergeKeysOf(cur),
             fileEntries(cur) ++ written.map(_.copy(origin = (cur + 1).toLong)),
@@ -3569,7 +3462,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       else toPhysicalDf(dfLogical, version - 1)
     // Writer-side NOT NULL enforcement (Delta's invariant shape): SQL
     // writes are also checked by Spark's output resolver, but the
-    // engine API (append/merge/mergeDeferred) bypasses it — and one
+    // engine API (append/merge) bypasses it — and one
     // committed NULL would make the scan's non-nullable schema LIE to
     // the optimizer (IsNull/IsNotNull folding → wrong results, not an
     // error). Row-local codegen'd check inside the write job itself;
@@ -3700,7 +3593,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * the cache. Create-no-overwrite keeps ErrorIfExists semantics — a
     * racing writer's second attempt at the same version FAILS here,
     * which is the engine's whole concurrency-control point (see
-    * [[mergeConcurrent]]). The commit timestamp is stamped strictly
+    * [[mergeCopyOnWrite]] and [[append]]). The commit timestamp is stamped strictly
     * above the previous version's so AS-OF-timestamp order == version
     * order. */
   private def writeManifest(m: Manifest): Unit = commitLock.synchronized {
@@ -3970,13 +3863,17 @@ object SnapshotTable {
     * growth at wide schemas). */
   private val MaxStatCols = 8
 
+  /** Commit attempts of one copy-on-write [[SnapshotTable.merge]] — the
+    * first plus the metadata-only retries after lost manifest races. */
+  private val MergeAttempts = 10
+
   /** Folds an ANDed v1 filter array into one inclusive numeric interval
     * on a single column — the footer-stats file skip of
     * [[SnapshotTable.delete]] / [[SnapshotTable.update]] and the SQL
     * catalog's metadata-only DELETE. Strict bounds tighten by one ULP
     * (exact for the integral values column stats hold). Decimal bounds
-    * decline: a decimal column's footer stats are its UNSCALED parquet
-    * integers, which no decimal bound compares with. None = decline. */
+    * decline: the interval is compared as doubles, and a decimal bound
+    * is not narrowed to one. None = decline. */
   def numericInterval(filters: Array[org.apache.spark.sql.sources.Filter])
       : Option[(String, Double, Double)] = {
     import org.apache.spark.sql.sources._
@@ -4046,6 +3943,13 @@ object SnapshotTable {
       // -1 = unassigned (pre-row-id manifests). Assigned once at the
       // file's writing commit and carried verbatim forever after.
       ridBase: Long = -1L)
+
+  /** One version's files split for a [[SnapshotTable.merge]]: the base
+    * files and pending deltas its rewrite reads, and those it carries
+    * by reference. */
+  private final case class MergeSlice(
+      files: Seq[FileEntry], deltas: Seq[FileEntry],
+      carriedFiles: Seq[FileEntry], carriedDeltas: Seq[FileEntry])
 
   /** One immutable commit: base file entries + pending MoR deltas +
     * the commit's change-data-feed files (empty unless tracked).

@@ -33,34 +33,35 @@ class CdcMorProfileSpec extends AnyFunSuite {
     val base = t("stage: create+mor1") {
       new graft.sources.SnapshotTable(s, Scratch.dir("cdcprof_base"))
         .create(o, partitionBy = Some("o_orderstatus"))
-        .mergeDeferred(src1, keys, partitionBy = Some("o_orderstatus"))
+        .merge(src1, keys, partitionBy = Some("o_orderstatus"), deferred = true)
     }
     // CDC-off baseline: same commits without capture
     for (round <- 1 to 2) {
       val c = base.shallowCloneTo(Scratch.dir(s"cdcprof_nt$round"))
-      val u1 = t(s"nt$round mergeDeferred(no track)") {
-        c.mergeDeferred(src2, keys, partitionBy = Some("o_orderstatus"))
+      val u1 = t(s"nt$round merge deferred (no track)") {
+        c.merge(src2, keys, partitionBy = Some("o_orderstatus"), deferred = true)
       }
-      t(s"nt$round mergeDeleteDef(no track)") {
-        u1.mergeDeleteDeferred(
+      t(s"nt$round merge deferred delete (no track)") {
+        u1.merge(
           o.filter(col("o_orderkey") % 13 === 0)
             .select("o_orderkey", "o_orderstatus"),
-          keys, partitionBy = Some("o_orderstatus"))
+          keys, partitionBy = Some("o_orderstatus"), deleteMatched = true, deferred = true)
       }
     }
     for (round <- 1 to 2) {
       val clone = t(s"r$round clone") {
         base.shallowCloneTo(Scratch.dir(s"cdcprof_c$round"))
       }
-      val t1 = t(s"r$round mergeDeferred(track)") {
-        clone.mergeDeferred(src2, keys, partitionBy = Some("o_orderstatus"),
-          trackChanges = true)
+      val t1 = t(s"r$round merge deferred (track)") {
+        clone.merge(src2, keys, partitionBy = Some("o_orderstatus"),
+          trackChanges = true, deferred = true)
       }
-      val t2 = t(s"r$round mergeDeleteDeferred") {
-        t1.mergeDeleteDeferred(
+      val t2 = t(s"r$round merge deferred delete") {
+        t1.merge(
           o.filter(col("o_orderkey") % 13 === 0)
             .select("o_orderkey", "o_orderstatus"),
-          keys, partitionBy = Some("o_orderstatus"), trackChanges = true)
+          keys, partitionBy = Some("o_orderstatus"), trackChanges = true,
+          deleteMatched = true, deferred = true)
       }
       val n = t(s"r$round changes+agg") {
         t2.changes(1).unionByName(t2.changes(2))

@@ -172,7 +172,7 @@ class ColumnMappingPropertySpec extends AnyFunSuite {
       for (step <- 1 to 10 + rnd.nextInt(4)) {
         rnd.nextInt(5) match {
           case 0 => // MoR upsert: deltas stay pending across later steps
-            t.mergeDeferred(frame(touch(1 + rnd.nextInt(4))), Seq("k"))
+            t.merge(frame(touch(1 + rnd.nextInt(4))), Seq("k"), deferred = true)
           case 1 if columns.size > 2 => // RENAME while deltas may pend
             val old = columns(1 + rnd.nextInt(columns.size - 1))
             val nw = s"m${nextCol}"; nextCol += 1

@@ -74,7 +74,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, tmp("cm_mor"))
       .create(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"))
     t.renameColumn("v", "amount")                    // version 1
-    t.mergeDeferred(Seq((2L, 99.0)).toDF("k", "amount"), Seq("k")) // v2
+    t.merge(Seq((2L, 99.0)).toDF("k", "amount"), Seq("k"), deferred = true) // v2
     assert(t.read().orderBy("k").select("amount").as[Double].collect()
       .toSeq == Seq(10.0, 99.0))
     // merge keys with pending deltas refuse a rename; non-keys renamed fine

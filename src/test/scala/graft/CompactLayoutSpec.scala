@@ -128,8 +128,8 @@ class CompactLayoutSpec extends AnyFunSuite {
     val s = spark.newSession()
     val t = table(s, "cl_mor")
     val old = t.files.map(_.path).toSet
-    t.mergeDeferred(rows(s, 4, 10L).withColumn("s", lit("updated")),
-      Seq("k", "p"), Some("p"))
+    t.merge(rows(s, 4, 10L).withColumn("s", lit("updated")),
+      Seq("k", "p"), Some("p"), deferred = true)
     val resolved = content(t)
     assert(t.deltaFiles.nonEmpty)
     t.compact(16, Some("p"))

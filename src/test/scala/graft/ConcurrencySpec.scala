@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Optimistic concurrency + timestamp travel, with the racing commit
-  * injected DETERMINISTICALLY through mergeConcurrent's beforeCommit
-  * seam (a thread race would exercise whichever interleaving the
-  * scheduler picks; the seam pins both the lost-race-retry path and the
-  * true-conflict path every run). */
+  * injected DETERMINISTICALLY through the beforeCommit seam of
+  * `merge`'s copy-on-write core (`mergeCopyOnWrite`) — a thread race
+  * would exercise whichever interleaving the scheduler picks; the seam
+  * pins both the lost-race-retry path and the true-conflict path every
+  * run. */
 class ConcurrencySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -35,8 +36,8 @@ class ConcurrencySpec extends AnyFunSuite {
     val (t, root) = mkTable("occ_retry")
     val rival = new SnapshotTable(spark, root)
     var injected = false
-    t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"),
-      partitionBy = "p",
+    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+      partitionBy = Some("p"),
       beforeCommit = () => if (!injected) {
         injected = true
         // rival wins version 1 touching only partition A
@@ -58,8 +59,8 @@ class ConcurrencySpec extends AnyFunSuite {
     val rival = new SnapshotTable(spark, root)
     var injected = false
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"),
-        partitionBy = "p",
+      t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"),
         beforeCommit = () => if (!injected) {
           injected = true
           rival.merge(src("B", 7.0), keys = Seq("k", "p"),
@@ -76,11 +77,11 @@ class ConcurrencySpec extends AnyFunSuite {
     import spark.implicits._
     val (t, _) = mkTable("occ_mor")
     // pending deltas: one in OUR partition (B: k=9 -> 900), one in A
-    t.mergeDeferred(Seq((9L, "B", 900.0)).toDF("k", "p", "v"),
-      Seq("k", "p"), Some("p"))
-    t.mergeDeferred(Seq((0L, "A", 500.0)).toDF("k", "p", "v"),
-      Seq("k", "p"), Some("p"))
-    t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"), partitionBy = "p")
+    t.merge(Seq((9L, "B", 900.0)).toDF("k", "p", "v"),
+      Seq("k", "p"), Some("p"), deferred = true)
+    t.merge(Seq((0L, "A", 500.0)).toDF("k", "p", "v"),
+      Seq("k", "p"), Some("p"), deferred = true)
+    t.merge(src("B", 100.0), keys = Seq("k", "p"), partitionBy = Some("p"))
     val got = t.read().orderBy("k").collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toMap
     assert(got(9L) == 109.0)  // B's delta was folded, then the source won
@@ -97,12 +98,12 @@ class ConcurrencySpec extends AnyFunSuite {
     val rival = new SnapshotTable(spark, root)
     var injected = false
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"),
-        partitionBy = "p",
+      t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"),
         beforeCommit = () => if (!injected) {
           injected = true
-          rival.mergeDeferred(Seq((9L, "B", 77.0)).toDF("k", "p", "v"),
-            Seq("k", "p"), Some("p"))
+          rival.merge(Seq((9L, "B", 77.0)).toDF("k", "p", "v"),
+            Seq("k", "p"), Some("p"), deferred = true)
         })
     }
     // the rival's delta commit is intact; ours left no manifest
@@ -117,7 +118,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // files say nothing about p, so every OCC writer must fold them
     t.append(Seq((100L, "A", 100.0), (101L, "B", 101.0)).toDF("k", "p", "v"),
       partitionBy = Some("v"))
-    t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"), partitionBy = "p")
+    t.merge(src("B", 100.0), keys = Seq("k", "p"), partitionBy = Some("p"))
     val got = t.read().orderBy("k").collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toMap
     assert(got.size == 42 && got(9L) == 109.0 && got(11L) == 11.0)
@@ -128,7 +129,8 @@ class ConcurrencySpec extends AnyFunSuite {
     val rival = new SnapshotTable(spark, root)
     var injected = false
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrent(src("B", 7.0), keys = Seq("k", "p"), partitionBy = "p",
+      t.mergeCopyOnWrite(src("B", 7.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"),
         beforeCommit = () => if (!injected) {
           injected = true
           rival.merge(src("A", 1000.0), keys = Seq("k", "p"),
@@ -147,8 +149,8 @@ class ConcurrencySpec extends AnyFunSuite {
     // writer's rewrite slice. The loser must retry metadata-style and
     // CARRY the new mark, not conflict (the r8 engine conflicted on any
     // DV change).
-    t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"),
-      partitionBy = "p",
+    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+      partitionBy = Some("p"),
       beforeCommit = () => if (!injected) {
         injected = true
         rival.delete(col("k") === 12, positional = true)
@@ -169,8 +171,8 @@ class ConcurrencySpec extends AnyFunSuite {
     // rival DV-deletes k=9 — odd key, partition B: the writer's rewrite
     // already copied that row forward, so committing would resurrect it.
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrent(src("B", 100.0), keys = Seq("k", "p"),
-        partitionBy = "p",
+      t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"),
         beforeCommit = () => if (!injected) {
           injected = true
           rival.delete(col("k") === 9, positional = true)
@@ -179,6 +181,87 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(t.currentVersion == 1) // the rival's DV commit is intact
     val ks = t.read().select("k").collect().map(_.getLong(0)).toSet
     assert(!ks.contains(9L) && ks.contains(7L) && ks.size == 39)
+  }
+
+  test("a rival's SET NOT NULL conflicts with a retried merge of NULLs") {
+    import spark.implicits._
+    val (t, root) = mkTable("occ_not_null")
+    val rival = new SnapshotTable(spark, root)
+    // the rewrite is checked against version 0's metadata, where v may
+    // be NULL; committing after the rival's SET NOT NULL would store a
+    // NULL under a non-nullable column
+    intercept[java.util.ConcurrentModificationException] {
+      t.mergeCopyOnWrite(Seq((9L, "B", Option.empty[Double])).toDF("k", "p", "v"),
+        keys = Seq("k", "p"), partitionBy = Some("p"),
+        beforeCommit = () => if (rival.currentVersion == 0) rival.setNotNull("v"))
+    }
+    assert(t.currentVersion == 1) // the rival's commit only
+    // the data files themselves: a scan under the NOT NULL schema would
+    // hide a stored NULL
+    assert(spark.read.parquet(t.files.map(_.path): _*)
+      .filter(col("v").isNull).count() == 0)
+  }
+
+  test("a retried merge keeps carried row ids and writes only its own changes") {
+    val (t, root) = mkTable("occ_rid_cdc")
+    t.withProperty(SnapshotTable.RowTrackingProp, "true")
+    def ids = t.readWithRowIds().select(col("k"), col(SnapshotTable.RidCol))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val before = ids
+    val rival = new SnapshotTable(spark, root)
+    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+      partitionBy = Some("p"), trackChanges = true,
+      beforeCommit = () => if (rival.currentVersion == 0)
+        rival.merge(src("A", 1000.0), keys = Seq("k", "p"), partitionBy = Some("p")))
+    assert(t.history.orderBy("version").select("operation").collect()
+      .map(_.getString(0)).toSeq == Seq("CREATE", "MERGE", "MERGE"))
+    val after = ids
+    assert(after.size == 40 && after.values.toSet.size == 40,
+      "every row, the retried commit's included, has a distinct id")
+    assert((10L until 40L).forall(k => after(k) == before(k)),
+      "rows outside both merges' sources keep their ids")
+    val changes = t.changes(2).select(col("k"), col("v"), col(SnapshotTable.ChangeCol))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
+    val slice = Seq(1L, 3L, 5L, 7L, 9L)
+    assert(changes == (slice.map(k => (k, k.toDouble, "update_preimage")) ++
+      slice.map(k => (k, k + 100.0, "update_postimage"))).toSet)
+  }
+
+  test("a copy-on-write merge carries a pending delta of an untouched partition") {
+    import spark.implicits._
+    Seq(false, true).foreach { deleteMatched =>
+      val (t, _) = mkTable(s"occ_carry_delta_$deleteMatched")
+      // a pending delta in partition A; the merges below touch only B
+      t.merge(Seq((0L, "A", 500.0)).toDF("k", "p", "v"), Seq("k", "p"),
+        Some("p"), deferred = true)
+      val folded = t.shallowCloneTo(Scratch.dir(s"occ_folded_$deleteMatched"))
+        .compact(2, Some("p"))
+      assert(folded.deltaFiles.isEmpty)
+      val delta = t.deltaFiles.map(_.path)
+      val untouched = t.files.filter(_.partValue == "A").map(_.path)
+      val source = if (deleteMatched) src("B", 0.0).select("k", "p") else src("B", 100.0)
+      Seq(t, folded).foreach(_.merge(source, Seq("k", "p"), Some("p"),
+        deleteMatched = deleteMatched))
+      assert(t.deltaFiles.map(_.path) == delta, "the pending delta carries as is")
+      assert(untouched.toSet.subsetOf(t.files.map(_.path).toSet))
+      def rows(x: SnapshotTable) = x.read().orderBy("k").collect().toSeq
+      assert(rows(t) == rows(folded))
+      assert(rows(t).exists(r => r.getLong(0) == 0L && r.getDouble(2) == 500.0))
+    }
+  }
+
+  test("a txn replay the rival commits during the retry is skipped") {
+    val (t, root) = mkTable("occ_txn")
+    val rival = new SnapshotTable(spark, root)
+    val batch = Some(("stream", 1L))
+    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
+      partitionBy = Some("p"), txn = batch,
+      beforeCommit = () => if (rival.currentVersion == 0)
+        rival.merge(src("B", 100.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"), txn = batch))
+    assert(t.currentVersion == 1) // the rival's commit only, no conflict
+    assert(t.txnVersion("stream").contains(1L))
+    assert(t.read().filter(col("k") === 9).select("v").head.getDouble(0) == 109.0)
   }
 
   test("concurrent appenders all commit (append never conflicts)") {

@@ -73,7 +73,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     import spark.implicits._
     val t = rangeTable("dv_mor")
     // newer version of k=15 lives in a delta; base copy of k=15 is stale
-    t.mergeDeferred(Seq((15L, 99L, "fresh")).toDF("k", "g", "s"), Seq("k"))
+    t.merge(Seq((15L, 99L, "fresh")).toDF("k", "g", "s"), Seq("k"), deferred = true)
     t.delete(col("k").between(10, 20), positional = true)
     val rows = t.read().filter(col("k") === 15L).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("s") == "fresh",
@@ -89,8 +89,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     // already tombstoned. Positionally deleting their stale/retired base
     // copies must NOT surface in the change feed — neither key's logical
     // state changes (15 survives via the delta; 17 was already gone).
-    t.mergeDeferred(Seq((15L, 99L, "fresh")).toDF("k", "g", "s"), Seq("k"))
-    t.mergeDeleteDeferred(Seq(Tuple1(17L)).toDF("k"), Seq("k"))
+    t.merge(Seq((15L, 99L, "fresh")).toDF("k", "g", "s"), Seq("k"), deferred = true)
+    t.merge(Seq(Tuple1(17L)).toDF("k"), Seq("k"), deleteMatched = true, deferred = true)
     t.delete(col("k").between(10, 20), positional = true, trackChanges = true)
     val fed = t.changes(t.currentVersion)
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
@@ -174,7 +174,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       .create(df, partitionBy = Some("g"))
     val src = Seq((1L, 1L, "w1")).toDF("k", "g", "s")
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeConcurrent(src, Seq("k", "g"), "g",
+      t.mergeCopyOnWrite(src, Seq("k", "g"), Some("g"),
         beforeCommit = () =>
           t.delete(col("k").between(0, 5), positional = true))
     }

@@ -66,7 +66,7 @@ class IncrementalLogSpec extends AnyFunSuite {
     t.append(slice(100, 200))
     t.merge(slice(50, 60).withColumn("v", col("v") + 1.0), keys = Seq("id"))
     t.delete(col("id").between(150, 159))
-    t.mergeDeferred(slice(20, 25).withColumn("v", col("v") + 2.0), Seq("id"))
+    t.merge(slice(20, 25).withColumn("v", col("v") + 2.0), Seq("id"), deferred = true)
     t.delete(col("id").between(180, 184), positional = true)
     val expect = t.read().orderBy("id").collect().toSeq
     val cold = reopenCold(root)

@@ -15,7 +15,8 @@ object MergeSourceSpec {
 }
 
 /** A copy-on-write MERGE evaluates its source once: the touched
-  * partitions, the anti-join and the union all read that one evaluation.
+  * partitions, the anti-join, the union and a retry after a lost commit
+  * race all read that one evaluation.
   * A source filtered through a nondeterministic UDF therefore commits one
   * consistent draw: no key is lost or duplicated, and the rows committed
   * are exactly the rows the filter kept. Checked on both ways of holding
@@ -82,11 +83,18 @@ class MergeSourceSpec extends AnyFunSuite {
     }
   }
 
-  test("mergeConcurrent commits one evaluation of a nondeterministic source") {
+  test("merge's lost-race retry commits one evaluation of a nondeterministic source") {
     sessions.foreach { case (mode, s) =>
       val t = table(s, s"ms_concurrent_$mode")
+      val rival = new SnapshotTable(s, t.location)
       val cached = s.sparkContext.getPersistentRDDs.keySet
-      t.mergeConcurrent(coinFlipped(rows(s, 0, 400, 1)), Seq("k", "p"), "p")
+      // the rival wins the first commit with a row in a partition the
+      // source does not touch, so the merge retries metadata-only
+      t.mergeCopyOnWrite(coinFlipped(rows(s, 0, 400, 1)), Seq("k", "p"), Some("p"),
+        beforeCommit = () => if (rival.currentVersion == 0)
+          rival.append(s.range(1000, 1001).select(col("id").as("k"),
+            lit(parts + 1).as("p"), lit(0).as("v")), Some("p")))
+      assert(t.currentVersion == 2, s"$mode: the merge did not retry")
       checkUpsert(t, mode)
       assert(s.sparkContext.getPersistentRDDs.keySet == cached,
         s"$mode: source cache not released")
@@ -96,7 +104,8 @@ class MergeSourceSpec extends AnyFunSuite {
   test("mergeDelete deletes exactly the keys of one evaluation") {
     sessions.foreach { case (mode, s) =>
       val t = table(s, s"ms_delete_$mode")
-      t.mergeDelete(coinFlipped(rows(s, 0, 200, 1)), Seq("k", "p"), Some("p"))
+      t.merge(coinFlipped(rows(s, 0, 200, 1)), Seq("k", "p"), Some("p"),
+        deleteMatched = true)
       val left = keys(t, 0)
       assert(left.size == left.distinct.size, s"$mode: duplicated keys")
       assert(left.toSet == (0L until 200L).toSet -- keptKeys, s"$mode: deleted set")

@@ -61,7 +61,7 @@ class PropertySpec extends AnyFunSuite {
             (k, s"p${k % 3}", round * 1000.0 + k)
           }.distinct
           rows.foreach(r => model((r._1, r._2)) = r._3)
-          t = t.mergeDeferred(rows.toDF("k", "p", "v"), Seq("k", "p"), Some("p"))
+          t = t.merge(rows.toDF("k", "p", "v"), Seq("k", "p"), Some("p"), deferred = true)
         } else {
           // delete a random key batch (hits and misses both legal)
           val keys = (0 until 1 + rnd.nextInt(8)).map { _ =>
@@ -69,7 +69,8 @@ class PropertySpec extends AnyFunSuite {
             (k, s"p${k % 3}")
           }.distinct
           keys.foreach(model.remove)
-          t = t.mergeDeleteDeferred(keys.toDF("k", "p"), Seq("k", "p"), Some("p"))
+          t = t.merge(keys.toDF("k", "p"), Seq("k", "p"), Some("p"),
+            deleteMatched = true, deferred = true)
         }
         val got = t.read().select("k", "p", "v").collect()
           .map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
@@ -132,7 +133,7 @@ class PropertySpec extends AnyFunSuite {
         .create(base, Some("p"))
       sources.foreach { src =>
         cow.merge(src, Seq("k", "p"), Some("p"))
-        mor.mergeDeferred(src, Seq("k", "p"), Some("p"))
+        mor.merge(src, Seq("k", "p"), Some("p"), deferred = true)
       }
       val a = cow.read().orderBy("k", "p").collect().toSeq
       val b = mor.read().orderBy("k", "p").collect().toSeq
@@ -157,7 +158,7 @@ class PropertySpec extends AnyFunSuite {
         val src = rnd.shuffle((0 until 60).toList).take(5 + rnd.nextInt(10))
           .map(k => (k.toLong, s"p${k % 2}", gen * 10.0)).toDF("k", "p", "v")
         if (rnd.nextBoolean()) t.merge(src, Seq("k", "p"), Some("p"))
-        else t.mergeDelete(src.select("k", "p"), Seq("k", "p"), Some("p"))
+        else t.merge(src.select("k", "p"), Seq("k", "p"), Some("p"), deleteMatched = true)
       }
       t.restoreTo(0)
       assert(t.read().orderBy("k", "p").collect().toSeq == v0, s"trial $trial")

@@ -141,8 +141,8 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(carried.forall(k => after(k) == before(k)),
       "carried rows must keep ids through the engine MERGE")
     assert(after(500L) > before.values.max)
-    // mergeDelete: survivors keep theirs
-    t.mergeDelete(Seq(Tuple1(500L)).toDF("k"), keys = Seq("k"))
+    // deleteMatched merge: survivors keep theirs
+    t.merge(Seq(Tuple1(500L)).toDF("k"), keys = Seq("k"), deleteMatched = true)
     val after2 = rids(t)
     assert(after2 == after.filter { case (k, _) => k != 500L },
       "mergeDelete survivors must keep their ids")

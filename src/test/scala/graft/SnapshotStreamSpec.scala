@@ -272,7 +272,8 @@ class SnapshotStreamSpec extends AnyFunSuite {
     // pending MoR deltas
     val root = tmp("snapstream_clone_mor")
     val t = new SnapshotTable(spark, root).create(slice(0, 100))
-    t.mergeDeferred(slice(50, 60).withColumn("v", col("v") + 1.0), keys = Seq("id"))
+    t.merge(slice(50, 60).withColumn("v", col("v") + 1.0), keys = Seq("id"),
+      deferred = true)
     val cloneRoot = tmp("snapstream_clone_mor_dst")
     t.shallowCloneTo(cloneRoot)
     val e = intercept[StreamingQueryException] {
@@ -402,7 +403,7 @@ class SnapshotStreamSpec extends AnyFunSuite {
     assert(rd.option("timestampAsOf", t.commitTimestamp(0).toString)
       .load().count() === 100L)
     // unresolved MoR state resolves through the format reader too
-    t.mergeDeferred(slice(0, 10).withColumn("v", col("v") + 1000.0), Seq("id"))
+    t.merge(slice(0, 10).withColumn("v", col("v") + 1000.0), Seq("id"), deferred = true)
     val got = rd.load().filter(col("id") === 5L).select("v").head().getDouble(0)
     assert(got === 1050.0, "format read must see the resolved MoR value")
     assert(rd.load().count() === 200L)

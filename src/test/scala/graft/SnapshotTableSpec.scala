@@ -53,7 +53,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val del = Seq((2L, "a")).toDF("k", "p")
     val t = new SnapshotTable(spark, tmp("md"))
       .create(base, Some("p"))
-      .mergeDelete(del, Seq("k", "p"), Some("p"))
+      .merge(del, Seq("k", "p"), Some("p"), deleteMatched = true)
     assert(t.read().orderBy("k").collect().map(_.getLong(0)).toSeq ==
       Seq(1L, 3L))
     // the b partition was not named by the delete source → carried over
@@ -94,10 +94,10 @@ class SnapshotTableSpec extends AnyFunSuite {
       .toDF("k", "p", "v")
     val t = new SnapshotTable(spark, tmp("mor"))
       .create(base, Some("p"))
-      .mergeDeferred(Seq((2L, "a", 99.0), (4L, "b", 40.0)).toDF("k", "p", "v"),
-        Seq("k", "p"), Some("p"))
-      .mergeDeferred(Seq((2L, "a", 77.0)).toDF("k", "p", "v"),
-        Seq("k", "p"), Some("p"))
+      .merge(Seq((2L, "a", 99.0), (4L, "b", 40.0)).toDF("k", "p", "v"),
+        Seq("k", "p"), Some("p"), deferred = true)
+      .merge(Seq((2L, "a", 77.0)).toDF("k", "p", "v"),
+        Seq("k", "p"), Some("p"), deferred = true)
     // base files untouched — both MoR commits only appended delta files
     assert(t.files.forall(_.path.contains("c00000")))
     val got = t.read().orderBy("k").collect().map(r =>
@@ -120,16 +120,16 @@ class SnapshotTableSpec extends AnyFunSuite {
       .toDF("k", "p", "v")
     val t = new SnapshotTable(spark, tmp("mordel"))
       .create(base, Some("p"))
-      .mergeDeferred(Seq((4L, "b", 40.0)).toDF("k", "p", "v"),
-        Seq("k", "p"), Some("p"))
-      .mergeDeleteDeferred(Seq((2L, "a"), (4L, "b")).toDF("k", "p"),
-        Seq("k", "p"), Some("p"))
+      .merge(Seq((4L, "b", 40.0)).toDF("k", "p", "v"),
+        Seq("k", "p"), Some("p"), deferred = true)
+      .merge(Seq((2L, "a"), (4L, "b")).toDF("k", "p"),
+        Seq("k", "p"), Some("p"), deleteMatched = true, deferred = true)
     // base files untouched — tombstones are delta files of keys only
     assert(t.files.forall(_.path.contains("c00000")))
     assert(t.read().orderBy("k").collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
     // a key upserted AFTER its tombstone resurfaces with the newer row
-    t.mergeDeferred(Seq((2L, "a", 55.0)).toDF("k", "p", "v"),
-      Seq("k", "p"), Some("p"))
+    t.merge(Seq((2L, "a", 55.0)).toDF("k", "p", "v"),
+      Seq("k", "p"), Some("p"), deferred = true)
     val got = t.read().orderBy("k").collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(got == Seq((1L, 10.0), (2L, 55.0), (3L, 30.0)))
@@ -147,7 +147,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     import spark.implicits._
     val t = new SnapshotTable(spark, tmp("morc"))
       .create(Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "p", "v"), Some("p"))
-      .mergeDeferred(Seq((1L, "a", 9.0)).toDF("k", "p", "v"), Seq("k", "p"), Some("p"))
+      .merge(Seq((1L, "a", 9.0)).toDF("k", "p", "v"), Seq("k", "p"), Some("p"),
+        deferred = true)
       .merge(Seq((2L, "b", 8.0)).toDF("k", "p", "v"), Seq("k", "p"), Some("p"))
     assert(t.read().orderBy("k").collect().map(_.getDouble(2)).toSeq
       == Seq(9.0, 8.0))
@@ -360,7 +361,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       "export must be exactly the current version's file list")
     assert(spark.read.parquet(paths: _*).count() === t.read().count())
     // unresolved MoR/DV state cannot be expressed as a file list
-    t.mergeDeferred(Seq((1L, "B", 7.0)).toDF("k", "p", "v"), Seq("k", "p"))
+    t.merge(Seq((1L, "B", 7.0)).toDF("k", "p", "v"), Seq("k", "p"), deferred = true)
     val e = intercept[IllegalArgumentException](t.generateSymlinkManifest())
     assert(e.getMessage.contains("compacted state"))
   }
@@ -459,14 +460,14 @@ class SnapshotTableSpec extends AnyFunSuite {
     // without origin re-basing, making last-writer-wins a coin flip
     val src = new SnapshotTable(spark, tmp("clmor_src"))
       .create(Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
-      .mergeDeferred(Seq((1L, "carried")).toDF("k", "s"), Seq("k"))
+      .merge(Seq((1L, "carried")).toDF("k", "s"), Seq("k"), deferred = true)
     val clone = src.shallowCloneTo(tmp("clmor_dst"))
-    clone.mergeDeferred(Seq((1L, "clone-wins")).toDF("k", "s"), Seq("k"))
+    clone.merge(Seq((1L, "clone-wins")).toDF("k", "s"), Seq("k"), deferred = true)
     val got = clone.read().orderBy("k").collect().map(_.getString(1)).toSeq
     assert(got == Seq("clone-wins", "b"), s"got $got")
     // and a clone OF THE CLONE keeps the ordering (shift composes)
     val c2 = clone.shallowCloneTo(tmp("clmor_dst2"))
-    c2.mergeDeferred(Seq((1L, "c2-wins")).toDF("k", "s"), Seq("k"))
+    c2.merge(Seq((1L, "c2-wins")).toDF("k", "s"), Seq("k"), deferred = true)
     assert(c2.read().orderBy("k").collect().map(_.getString(1)).toSeq
       == Seq("c2-wins", "b"))
     // source resolution is untouched by its clones
@@ -513,8 +514,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(2), r.getString(3))).toSeq
     assert(ch == Seq((2L, 99.0, "update_postimage"), (2L, 20.0, "update_preimage"),
       (3L, 30.0, "insert")))
-    t.mergeDelete(Seq((1L, "a")).toDF("k", "p"), Seq("k", "p"), Some("p"),
-      trackChanges = true)
+    t.merge(Seq((1L, "a")).toDF("k", "p"), Seq("k", "p"), Some("p"),
+      trackChanges = true, deleteMatched = true)
     val del = t.changes(2).collect()
       .map(r => (r.getLong(0), r.getString(3))).toSeq
     assert(del == Seq((1L, "delete")))
@@ -529,25 +530,26 @@ class SnapshotTableSpec extends AnyFunSuite {
       .create(Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
         .toDF("k", "p", "v"), Some("p"))
     // v1: untracked deferred upsert bumps k=1 to 11.0 (pending delta)
-    t.mergeDeferred(Seq((1L, "a", 11.0)).toDF("k", "p", "v"), Seq("k", "p"), Some("p"))
+    t.merge(Seq((1L, "a", 11.0)).toDF("k", "p", "v"), Seq("k", "p"), Some("p"),
+      deferred = true)
     // v2 tracked: k=1's update preimage MUST be the pending delta row
     // (11.0), not the stale base copy (10.0); k=4 is an insert
-    t.mergeDeferred(Seq((1L, "a", 12.0), (4L, "b", 40.0)).toDF("k", "p", "v"),
-      Seq("k", "p"), Some("p"), trackChanges = true)
+    t.merge(Seq((1L, "a", 12.0), (4L, "b", 40.0)).toDF("k", "p", "v"),
+      Seq("k", "p"), Some("p"), trackChanges = true, deferred = true)
     val ch = t.changes(2).orderBy("k", "_change_type").collect()
       .map(r => (r.getLong(0), r.getDouble(2), r.getString(3))).toSeq
     assert(ch == Seq((1L, 12.0, "update_postimage"), (1L, 11.0, "update_preimage"),
       (4L, 40.0, "insert")))
     // v3 tracked delete: k=1's pre-image is its NEWEST delta (12.0);
     // deleting the absent k=9 emits no change row
-    t.mergeDeleteDeferred(Seq((1L, "a"), (9L, "a")).toDF("k", "p"),
-      Seq("k", "p"), Some("p"), trackChanges = true)
+    t.merge(Seq((1L, "a"), (9L, "a")).toDF("k", "p"),
+      Seq("k", "p"), Some("p"), trackChanges = true, deleteMatched = true, deferred = true)
     val del = t.changes(3).collect()
       .map(r => (r.getLong(0), r.getDouble(2), r.getString(3))).toSeq
     assert(del == Seq((1L, 12.0, "delete")))
     // v4 tracked: re-upserting the tombstoned key classifies as INSERT
-    t.mergeDeferred(Seq((1L, "a", 13.0)).toDF("k", "p", "v"),
-      Seq("k", "p"), Some("p"), trackChanges = true)
+    t.merge(Seq((1L, "a", 13.0)).toDF("k", "p", "v"),
+      Seq("k", "p"), Some("p"), trackChanges = true, deferred = true)
     assert(t.changes(4).collect().map(r => (r.getLong(0), r.getString(3))).toSeq
       == Seq((1L, "insert")))
     // the resolved read agrees with the applied change feed
@@ -594,6 +596,23 @@ class SnapshotTableSpec extends AnyFunSuite {
     // stats survive carry-over: merge touching nothing keeps old entries' stats
     val t2 = t.shallowCloneTo(tmp("stats2"))
     assert(t2.statsMinMax("v").contains((0.0, 999.0)))
+  }
+
+  test("decimal footer stats prune and answer min/max in value space") {
+    // p = i / 4 as decimal(7,2), 0.25 … 39.25: the footers hold the
+    // unscaled integers 25 … 3925
+    val df = spark.range(1, 158)
+      .selectExpr("id AS k", "CAST(id / 4.0 AS DECIMAL(7,2)) AS p")
+      .repartitionByRange(4, col("p")).sortWithinPartitions("p")
+    val t = new SnapshotTable(spark, tmp("stats_dec")).create(df)
+    assert(t.files.size == 4)
+    assert(t.statsMinMax("p").contains((0.25, 39.25)))
+    val holding = t.files.filter(e => spark.read.parquet(e.path)
+      .filter(col("p").between(10, 20)).count() > 0).map(_.path)
+    assert(holding.nonEmpty && holding.size < t.files.size)
+    assert(t.filesInRange("p", 10, 20).map(_.path) == holding)
+    assert(t.readRange("p", 10, 20).filter(col("p").between(10, 20))
+      .count() == 41)
   }
 
   test("compactZOrder prunes files on BOTH clustered dimensions") {

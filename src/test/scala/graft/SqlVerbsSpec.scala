@@ -487,7 +487,7 @@ class SqlVerbsSpec extends AnyFunSuite {
     val root = tmp("hudmor")
     val t = new SnapshotTable(spark, root)
       .create(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"))
-      .mergeDeferred(Seq((1L, 11.0), (3L, 30.0)).toDF("k", "v"), Seq("k"))
+      .merge(Seq((1L, 11.0), (3L, 30.0)).toDF("k", "v"), Seq("k"), deferred = true)
     assert(t.deltaFiles.nonEmpty)
     sql(s"OPTIMIZE graft.`$root`")
     assert(t.deltaFiles.isEmpty, "pending deltas must fold into the base")
