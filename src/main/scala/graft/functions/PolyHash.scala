@@ -256,10 +256,11 @@ object ZOrder2 {
   * [[ZOrder2]]'s layout: bit `i` of dimension `d` lands at position
   * `i * n + d`, so the 2-ary case is bit-identical to ZOrder2 and every
   * dimension gets the same interleaving weight. 16 low bits per
-  * dimension (the lattice [[graft.sources.SnapshotTable.compactZOrder]]
-  * normalizes to); 4 × 16 = 64 bits is the Long's capacity and the
-  * practical ZORDER dimension bound Delta documents. Codegen'd — the
-  * rewrite job's hot loop stays in whole-stage codegen. */
+  * dimension (the lattice the ZORDER and CLUSTER rewrites of
+  * [[graft.sources.SnapshotTable.optimize]] normalize to); 4 × 16 = 64
+  * bits is the Long's capacity and the practical ZORDER dimension bound
+  * Delta documents. Codegen'd — the rewrite job's hot loop stays in
+  * whole-stage codegen. */
 case class ZOrderN(children: Seq[Expression]) extends Expression {
 
   private def intLike(dt: DataType): Boolean =

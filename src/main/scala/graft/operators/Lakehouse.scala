@@ -2388,7 +2388,7 @@ object Lakehouse {
       val t = new SnapshotTable(s, tmp("optsf")).create(li.coalesce(1))
       (0 until 4).foreach(i =>
         t.append(li.filter(col("l_orderkey") % 200 === i).coalesce(1)))
-      t.compactSmallFiles(minBytes = t.files.map(_.bytes).max, targetFiles = 1)
+      t.optimize(minBytes = t.files.map(_.bytes).max)
       t.read().groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("l_quantity")))).as("sum_qty"))

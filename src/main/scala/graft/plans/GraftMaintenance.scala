@@ -16,15 +16,18 @@ import graft.sources.SnapshotTable
   * TPCDSDataLoad.scala:137-141), mapped onto the engine's existing
   * metadata-bounded operations:
   *
-  *   - `OPTIMIZE t` — bin-pack files smaller than the threshold
-  *     ([[SnapshotTable.compactSmallFiles]]; cost ∝ small-file bytes,
-  *     already-compact files carry by reference — Delta's OPTIMIZE).
-  *   - `OPTIMIZE t ZORDER BY (a, b)` — Morton-curve rewrite
-  *     ([[SnapshotTable.compactZOrder]]) so BOTH columns get sub-linear
-  *     per-file min/max spans (Delta's OPTIMIZE ZORDER).
-  *   - `VACUUM t [RETAIN n VERSIONS]` — reclaim versions outside the
-  *     retention window ([[SnapshotTable.vacuum]]; O(log + reclaimed
-  *     files), never a data scan).
+  *   - `OPTIMIZE t [WHERE pc IN (…)] [ZORDER BY (a, b) | FULL]` and
+  *     `REORG TABLE t [WHERE …] APPLY (PURGE)` — one call each to
+  *     [[SnapshotTable.optimize]], which picks the files (small files,
+  *     the unclustered tail of a `CLUSTER BY` table, the Z-order scope,
+  *     DV-marked files), bins them and commits; every other file carries
+  *     by reference. The strategy only resolves the `WHERE` literals to
+  *     the layout's partition values.
+  *   - `VACUUM t [RETAIN n VERSIONS | RETAIN n HOURS] [DRY RUN]` —
+  *     reclaim versions outside the retention window
+  *     ([[SnapshotTable.vacuum]]; O(log + reclaimed files), never a data
+  *     scan); hours resolve to versions once, through
+  *     [[SnapshotTable.retentionSince]].
   *   - `DESCRIBE HISTORY t` — the commit log as rows
   *     ([[SnapshotTable.history]]; O(log records), zero data files).
   *
@@ -69,10 +72,6 @@ object GraftMaintenance {
     .add("num_rows", LongType, nullable = false)
     .add("pending_delta_rows", LongType, nullable = false)
     .add("table_features", StringType, nullable = false)
-
-  /** Default small-file threshold for bare `OPTIMIZE` (Delta's
-    * optimize.minFileSize default: files under 128 MiB bin-pack). */
-  val DefaultMinBytes: Long = 128L * 1024 * 1024
 
   /** Default retention for bare `VACUUM` (Delta's
     * deletedFileRetentionDuration default: 7 days). */
@@ -300,9 +299,10 @@ final case class GraftCloneCommand(target: Seq[String],
 }
 
 /** `VACUUM name [RETAIN n VERSIONS | RETAIN n HOURS] [DRY RUN]` —
-  * version-count retention maps to [[SnapshotTable.vacuum]], hour-based
-  * (Delta's syntax) to [[SnapshotTable.vacuumOlderThan]]; `DRY RUN`
-  * previews the reclaimable file list without touching anything. */
+  * hour-based retention (Delta's syntax) resolves to a version count
+  * ([[SnapshotTable.retentionSince]]) for [[SnapshotTable.vacuum]];
+  * `DRY RUN` previews the reclaimable file list without touching
+  * anything. */
 final case class GraftVacuumCommand(name: Seq[String],
     retainVersions: Option[Int],
     retainHours: Option[Int] = None,
@@ -382,76 +382,9 @@ object GraftMaintenanceStrategy extends SparkStrategy {
     case c: GraftOptimizeCommand =>
       GraftMaintenanceExec(c.output, { spark =>
         val t = GraftMaintenance.snapshotOf(spark, c.name, forMutation = true)
-        val entries = t.files
-        val before = entries.size.toLong
-        // Partition-scoped OPTIMIZE (`WHERE pc = v` / `pc IN (…)`):
-        // resolve the filter's column against the table's layout —
-        // identity or hidden transform (each literal maps through the
-        // same applyLiteral the read planner prunes with) — and
-        // restrict the rewrite to exactly those partitions' files.
-        val scope: Option[Set[String]] =
-          c.where.map(GraftMaintenance.resolveScope(t, "OPTIMIZE", _))
-        // size-targeted bins (~128 MiB output files), never a fixed
-        // count: at 100 TB "compact into 1 file" is the wrong shape —
-        // the bin count scales with the bytes being rewritten. All
-        // manifest arithmetic, no scan.
-        def binsFor(bytes: Long): Int =
-          math.max(1L, (bytes + GraftMaintenance.DefaultMinBytes - 1) /
-            GraftMaintenance.DefaultMinBytes).toInt
-        // … computed over the SCOPED file set when a WHERE clause names
-        // partitions — whole-table bytes would over-partition a scoped
-        // rewrite into mostly-empty tasks
-        def inScope(e: graft.sources.SnapshotTable.FileEntry): Boolean =
-          scope.forall(_.contains(e.partValue))
-        if (c.zorderBy.isEmpty) {
-          if (t.deltaFiles.nonEmpty) {
-            // Hudi compaction semantics (`CALL …run_compaction` maps
-            // here): pending MoR deltas FOLD into a compacted base —
-            // the table state the verb exists for. Scoped rewrites
-            // still demand resolved state (a partition-scoped fold
-            // would silently drop unscoped files' delta rows).
-            require(scope.isEmpty, s"partition-scoped OPTIMIZE on " +
-              s"${c.name.mkString(".")} requires compacted state " +
-              "(pending MoR deltas)")
-            val total = (entries ++ t.deltaFiles).map(_.bytes).sum
-            t.compact(binsFor(total), t.layoutSpec)
-          } else {
-            // liquid-clustering tables (CLUSTER BY property): bare
-            // OPTIMIZE runs INCREMENTAL clustering — only files written
-            // since the last clustering commit rewrite onto the curve,
-            // clustered files carry by reference (cost O(new data),
-            // Delta's liquid OPTIMIZE contract). Delta likewise rejects
-            // partition predicates on clustered tables.
-            val clusterCols = t.property(
-              graft.sources.SnapshotTable.ClusterSpecProp)
-              .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-              .filter(_.nonEmpty)
-            clusterCols match {
-              case Some(cols) =>
-                require(scope.isEmpty,
-                  s"OPTIMIZE … WHERE is unsupported on a clustered table " +
-                    s"(${c.name.mkString(".")} clusters by " +
-                    s"${cols.mkString(", ")})")
-                // FULL reclusters everything — the escape hatch after
-                // ALTER … CLUSTER BY changed the columns
-                t.clusterIncremental(cols, GraftMaintenance.DefaultMinBytes,
-                  full = c.full)
-                t
-              case None =>
-                require(!c.full,
-                  s"OPTIMIZE … FULL requires a clustered table " +
-                    s"(${c.name.mkString(".")} has no CLUSTER BY spec)")
-                val smallBytes = entries
-                  .filter(e => e.bytes < GraftMaintenance.DefaultMinBytes &&
-                    inScope(e))
-                  .map(_.bytes).sum
-                t.compactSmallFiles(GraftMaintenance.DefaultMinBytes,
-                  targetFiles = binsFor(smallBytes), onlyPartitions = scope)
-            }
-          }
-        } else t.compactZOrder(
-          binsFor(entries.filter(inScope).map(_.bytes).sum),
-          c.zorderBy, onlyPartitions = scope)
+        val before = t.files.size.toLong
+        t.optimize(c.where.map(GraftMaintenance.resolveScope(t, "OPTIMIZE", _)),
+          c.zorderBy, c.full)
         // Seq[Any] forestalls Scala's numeric widening (a mixed
         // Long/Int Seq infers Seq[Long] and silently widens the Int,
         // breaking the IntegerType projection)
@@ -460,10 +393,9 @@ object GraftMaintenanceStrategy extends SparkStrategy {
     case c: GraftReorgCommand =>
       GraftMaintenanceExec(c.output, { spark =>
         val t = GraftMaintenance.snapshotOf(spark, c.name, forMutation = true)
-        val scope = c.where.map(GraftMaintenance.resolveScope(t, "REORG", _))
         val marksBefore = t.dvFiles.map(_.rows).sum
-        val rewritten = t.reorgPurge(
-          GraftMaintenance.DefaultMinBytes, onlyPartitions = scope)
+        val rewritten = t.optimize(
+          c.where.map(GraftMaintenance.resolveScope(t, "REORG", _)), purge = true)
         val purged = marksBefore - t.dvFiles.map(_.rows).sum
         Seq(Seq[Any](rewritten, purged, t.currentVersion))
       }) :: Nil
@@ -512,45 +444,23 @@ object GraftMaintenanceStrategy extends SparkStrategy {
           else src.shallowCloneTo(dst, srcVersion, c.orReplace)
         Seq(Seq[Any](srcVersion, clone.files.size.toLong))
       }) :: Nil
-    case c: GraftVacuumCommand if c.dryRun =>
-      GraftMaintenanceExec(c.output, { spark =>
-        // the preview carries the SAME db-member guard as the command it
-        // previews: a dry run listing files the real VACUUM refuses to
-        // reclaim (published db snapshots pin them) invites deleting
-        // them out-of-band — the exact accident the guard exists for
-        val t = GraftMaintenance.snapshotOf(spark, c.name, forMutation = true)
-        val retain = c.retainVersions.orElse {
-          val h = c.retainHours.getOrElse(GraftMaintenance.DefaultRetainHours)
-          val cutoff = System.currentTimeMillis() - h * 3600L * 1000L
-          // mirror the real hour-based path: a cutoff preceding the
-          // whole retained log would reclaim nothing
-          t.versionAtOrBefore(cutoff).map(v => t.currentVersion - v + 1)
-        }
-        retain.map(t.vacuumDryRun(_)).getOrElse(Seq.empty)
-          .map(p => Seq[Any](p))
-      }) :: Nil
     case c: GraftVacuumCommand =>
       GraftMaintenanceExec(c.output, { spark =>
+        // the DRY RUN preview carries the SAME db-member guard as the
+        // command it previews: a dry run listing files the real VACUUM
+        // refuses to reclaim (published db snapshots pin them) invites
+        // deleting them out-of-band — the exact accident the guard exists for
         val t = GraftMaintenance.snapshotOf(spark, c.name, forMutation = true)
-        // bare VACUUM (no RETAIN clause) keeps Delta's 168-hour default
-        // retention — destroying ALL history by default would be the
-        // opposite of what the syntax means everywhere else; explicit
-        // RETAIN n VERSIONS is the whole-log reclamation switch
-        val reclaimed = c.retainVersions match {
-          case Some(n) => t.vacuum(n)
-          case None =>
-            val h = c.retainHours.getOrElse(GraftMaintenance.DefaultRetainHours)
-            val cutoff = System.currentTimeMillis() - h * 3600L * 1000L
-            // a cutoff preceding the whole retained log reclaims
-            // nothing — resolved EXPLICITLY (versionAtOrBefore → None)
-            // rather than by catching IllegalArgumentException, which
-            // would also swallow real argument-validation failures
-            t.versionAtOrBefore(cutoff) match {
-              case Some(_) => t.vacuumOlderThan(cutoff)
-              case None    => 0
-            }
-        }
-        Seq(Seq[Any](reclaimed, t.currentVersion))
+        // RETAIN n VERSIONS, else the versions of the last n hours — bare
+        // VACUUM keeps Delta's 168-hour default (destroying ALL history by
+        // default would be the opposite of what the syntax means
+        // everywhere else); a window reaching before the first commit
+        // reclaims nothing
+        val retain = c.retainVersions.orElse(t.retentionSince(
+          System.currentTimeMillis() -
+            c.retainHours.getOrElse(GraftMaintenance.DefaultRetainHours) * 3600L * 1000L))
+        if (c.dryRun) retain.toSeq.flatMap(t.vacuumDryRun(_)).map(p => Seq[Any](p))
+        else Seq(Seq[Any](retain.map(t.vacuum(_)).getOrElse(0), t.currentVersion))
       }) :: Nil
     case c: GraftRemoveOrphansCommand =>
       GraftMaintenanceExec(c.output, { spark =>

@@ -932,11 +932,11 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
   }
 
   /** `DELETE FROM … WHERE` lowers to the engine's stat-pruned
-    * copy-on-write delete when the predicate is a numeric interval on
-    * one column (equality / one- or two-sided bounds); anything else is
-    * declined so Spark raises a clear analysis error instead of a wrong
-    * partial delete. Cost: only files whose min/max overlap the interval
-    * rewrite; the rest carry by reference. */
+    * copy-on-write delete when [[conditionOf]] states every pushed
+    * filter exactly (a conjunction of comparisons against literals);
+    * anything else is declined, and Spark rewrites through its row-level
+    * replace-data plan instead. Cost: only files whose min/max overlap
+    * the numeric conjuncts rewrite; the rest carry by reference. */
   private def allTrue(filters: Array[Filter]): Boolean =
     filters.forall(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
 
@@ -945,32 +945,36 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
       (allTrue(filters) || // unconditional DELETE = metadata truncate,
                            // even with deletion vectors on (marking
                            // every row would be the anti-scale shape)
-        (!dvDeletesEnabled &&
-          SnapshotTable.numericInterval(filters).isDefined))
+        (!dvDeletesEnabled && filters.forall(conditionOf(_).isDefined)))
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     if (allTrue(filters)) { truncateTable(); return }
-    if (SnapshotTable.numericInterval(filters).isEmpty)
-      throw new UnsupportedOperationException(
-        s"unsupported DELETE predicate: ${filters.mkString(", ")}")
-    table.delete(filters.map(conditionOf).reduce(_ && _),
-      partitionBy = partSpec)
+    val conds = filters.map(f => conditionOf(f).getOrElse(
+      throw new UnsupportedOperationException(s"unsupported DELETE predicate: $f")))
+    table.delete(conds.reduce(_ && _), partitionBy = partSpec)
     ()
   }
 
-  /** Column form of a filter [[SnapshotTable.numericInterval]] folds,
-    * each bound keeping its literal type (a bigint column compares with
-    * a bigint literal — no widening cast to hide it from the stats
-    * skip). */
-  private def conditionOf(f: Filter): Column = {
+  /** Column form of a pushed DELETE filter, when it has an exact one: a
+    * comparison of a column with a scalar literal, or a conjunction of
+    * them. Each literal keeps its type (a bigint column compares with a
+    * bigint literal — no widening cast to hide it from the stats skip). */
+  private def conditionOf(f: Filter): Option[Column] = {
     import org.apache.spark.sql.sources._
+    def scalar(v: Any): Option[Any] = v match {
+      case _: Number | _: String | _: Boolean | _: java.sql.Date |
+          _: java.sql.Timestamp | _: java.time.LocalDate |
+          _: java.time.Instant | _: java.time.LocalDateTime => Some(v)
+      case _ => None
+    }
     f match {
-      case EqualTo(a, v) => col(a) === v
-      case GreaterThan(a, v) => col(a) > v
-      case GreaterThanOrEqual(a, v) => col(a) >= v
-      case LessThan(a, v) => col(a) < v
-      case LessThanOrEqual(a, v) => col(a) <= v
-      case And(l, r) => conditionOf(l) && conditionOf(r)
+      case EqualTo(a, v) => scalar(v).map(col(a) === _)
+      case GreaterThan(a, v) => scalar(v).map(col(a) > _)
+      case GreaterThanOrEqual(a, v) => scalar(v).map(col(a) >= _)
+      case LessThan(a, v) => scalar(v).map(col(a) < _)
+      case LessThanOrEqual(a, v) => scalar(v).map(col(a) <= _)
+      case And(l, r) => for (x <- conditionOf(l); y <- conditionOf(r)) yield x && y
+      case _ => None
     }
   }
 

@@ -2187,10 +2187,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   /** The candidate-file planner of [[delete]] and [[update]]: splits the
     * files of version `v` into (may hold a row where `cond` is TRUE,
-    * provably hold none). A `cond` whose conjuncts fold into one numeric
-    * interval on one column ([[SnapshotTable.numericInterval]] over its
-    * v1 filter form, resolved against the table) skips by footer stats;
-    * any other condition keeps every file a candidate. */
+    * provably hold none). The numeric-bound conjuncts of `cond` on one
+    * column ([[SnapshotTable.numericInterval]] over its v1 filter form,
+    * resolved against the table) skip by footer stats; every other
+    * conjunct counts as "may match", and a condition with no such
+    * conjunct keeps every file a candidate. */
   private def splitCandidates(cond: Column,
       v: Int): (Seq[FileEntry], Seq[FileEntry]) = {
     val entries = fileEntries(v)
@@ -2542,78 +2543,197 @@ class SnapshotTable(spark: SparkSession, root: String) {
     this
   }
 
-  /** OPTIMIZE with a small-file threshold (Delta `OPTIMIZE` bin-packing
-    * semantics, vs [[compact]]'s full rewrite): only files smaller than
-    * `minBytes` are folded into size-targeted bins — `targetFiles` bins
-    * on an unpartitioned table, ~`minBytes`-sized bins per partition on
-    * a partitioned one; every already-compact file carries over by
-    * reference — cost ∝ small-file bytes, never table size. At 100 TB
-    * this is the difference between a nightly housekeeping job and a
-    * full rewrite. DV marks on rewritten files are applied and dropped;
-    * marks on carried files persist. */
-  def compactSmallFiles(minBytes: Long, targetFiles: Int = 1,
-      onlyPartitions: Option[Set[String]] = None): SnapshotTable = {
+  /** `OPTIMIZE` with its clauses (Delta ships every file-rewrite
+    * maintenance verb as this one command): `partitions` is the
+    * `WHERE pc IN (…)` scope in the layout's partition values,
+    * `zorderBy` the `ZORDER BY` columns, `full` the `FULL` clause,
+    * `purge` the `REORG TABLE … APPLY (PURGE)` verb, and `minBytes` both
+    * the small-file threshold and the output bin size. Returns the
+    * number of files rewritten (0 = no commit).
+    *
+    *   - bare: the files smaller than `minBytes` rewrite, in
+    *     size-targeted bins; commits `OPTIMIZE`, nothing for 0 or 1 such
+    *     file.
+    *   - bare on a table with a `CLUSTER BY` spec
+    *     ([[SnapshotTable.ClusterSpecProp]]): incremental clustering
+    *     (Delta's liquid OPTIMIZE) — the files written since the last
+    *     `ZORDER` or `CLUSTER` commit (every file with `full`, or after a
+    *     `CLONE`/`RESTORE` reset) rewrite onto the Morton curve of the
+    *     spec's columns, so each run costs O(new data); commits `CLUSTER`,
+    *     nothing when no file is new.
+    *   - `zorderBy`: every file in scope rewrites onto the Morton curve
+    *     of 1–4 columns, so a narrow range on EITHER column prunes files
+    *     ([[readRange]]); commits `ZORDER`, always.
+    *   - `purge`: the files with deletion-vector (DV) marks, and the
+    *     files whose physical schema still stores a dropped column,
+    *     rewrite — the GDPR-style physical removal before VACUUM; commits
+    *     `REORG`, nothing when no file qualifies.
+    *
+    * Every other file carries by reference, path-identical, so the cost
+    * is the rewritten bytes, never the table. Rewrites keep the table's
+    * layout ([[layoutSpec]]), so partition pruning survives; a scope
+    * names partitions of that layout, and files laid out under another
+    * one carry. DV marks on rewritten files are applied and drop; marks
+    * on carried files stay. Pending merge-on-read (MoR) deltas fold only
+    * in a whole-table rewrite — a bare OPTIMIZE compacts the whole table
+    * ([[compact]], `COMPACT`), an unscoped ZORDER curves it — and a
+    * scoped rewrite or a purge requires none. */
+  def optimize(partitions: Option[Set[String]] = None,
+      zorderBy: Seq[String] = Seq.empty, full: Boolean = false,
+      purge: Boolean = false,
+      minBytes: Long = SnapshotTable.DefaultMinBytes): Int = {
     val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"compactSmallFiles on $root requires compacted state (pending MoR deltas)")
-    // mirror compactZOrder's guard: scoping by partition on a table with
-    // no partition layout would silently match nothing and no-op — a
-    // trap for direct API callers (the SQL route pre-validates)
-    require(onlyPartitions.isEmpty || layoutSpec.isDefined,
-      s"partition-scoped compaction on $root requires a partitioned table")
-    // Preserve the table's layout (identity OR hidden transform): the
-    // rewrite commits under the same spec, so partition pruning and
-    // O(partition) overwrites survive an OPTIMIZE — Delta compacts
-    // within partitions for the same reason. Mixed/unknown layouts fall
-    // back to unpartitioned bins (there is no single spec to keep).
     val spec = layoutSpec
-    val specParsed = spec.map(PartitionTransform.parse)
-    def sameLayout(e: FileEntry): Boolean = specParsed.exists(underLayout(_, e))
-    // Partition-scoped OPTIMIZE (`OPTIMIZE t WHERE pc = v`): only
-    // same-layout files of the named partitions rewrite; every other
-    // file — other partitions AND layout-foreign files (which are not
-    // partition-attributable) — carries by reference, path-identical.
-    def inScope(e: FileEntry): Boolean = onlyPartitions match {
-      case None       => true
-      case Some(vals) => sameLayout(e) && vals.contains(e.partValue)
+    require(partitions.isEmpty || spec.isDefined,
+      s"partition-scoped OPTIMIZE on $root requires a partitioned table")
+    if (deltaEntries(v).nonEmpty) {
+      require(partitions.isEmpty && !purge,
+        s"partition-scoped OPTIMIZE and REORG on $root require compacted " +
+          "state (pending MoR deltas — a bare OPTIMIZE folds them first)")
+      if (zorderBy.isEmpty) {
+        val files = fileEntries(v)
+        compact(binsFor((files ++ deltaEntries(v)).map(_.bytes).sum, minBytes),
+          spec)
+        return files.size
+      }
     }
-    val (small, big) = fileEntries(v)
-      .partition(e => e.bytes < minBytes && inScope(e))
-    if (small.size <= 1) this // nothing to gain: 0/1 small file
+    val clusterBy =
+      if (zorderBy.nonEmpty || purge) Seq.empty
+      else property(SnapshotTable.ClusterSpecProp).toSeq
+        .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+    require(!full || clusterBy.nonEmpty,
+      s"OPTIMIZE … FULL requires a clustered table ($root has no CLUSTER BY spec)")
+    require(partitions.isEmpty || clusterBy.isEmpty,
+      s"OPTIMIZE … WHERE is unsupported on a clustered table " +
+        s"($root clusters by ${clusterBy.mkString(", ")})")
+    val curve = zorderBy ++ clusterBy
+    require(curve.size <= 4,
+      s"${if (zorderBy.nonEmpty) "ZORDER" else "CLUSTER"} BY takes 1 to 4 " +
+        s"columns, got ${curve.size} (${curve.mkString(", ")})")
+    lazy val marked = marksByFile(v).keySet
+    // the operation, the fewest picked files that commit, and the pick
+    val (op, least, pick): (String, Int, FileEntry => Boolean) =
+      if (purge) ("REORG", 1, purgeable(v, marked))
+      else if (zorderBy.nonEmpty) ("ZORDER", 0, _ => true)
+      else if (clusterBy.nonEmpty) ("CLUSTER", 1, unclustered(full))
+      else ("OPTIMIZE", 2, _.bytes < minBytes)
+    val specParsed = spec.map(PartitionTransform.parse)
+    val (rewrite, carried) = fileEntries(v).partition(e => pick(e) &&
+      partitions.forall(vals =>
+        specParsed.exists(underLayout(_, e)) && vals.contains(e.partValue)))
+    if (rewrite.size < least) 0
     else {
       val written =
-        writeBinned(small, dvEntries(v), v + 1, spec, minBytes, targetFiles)
-      writeManifest(Manifest(v + 1, "OPTIMIZE", mergeKeysOf(v),
-        written ++ big, Seq.empty,
-        dvs = remainingDvs(v, small.map(_.path).toSet, v + 1)))
-      this
+        if (curve.isEmpty) writeBinned(rewrite, dvEntries(v), v + 1, spec, minBytes)
+        // cluster = false: writeData's default re-clustering by partition
+        // value would destroy the curve ordering just built
+        else writeData(zorderArrange(foldSource(v, rewrite), curve,
+          binsFor(rewrite.map(_.bytes).sum, minBytes), specParsed),
+          v + 1, spec, cluster = false)
+      commitRewrite(v, op, written, rewrite, carried, marked)
+      rewrite.size
     }
   }
 
-  /** The shared rewrite arrangement of OPTIMIZE and REORG: scan exactly
-    * `rewrite` (DV marks applied), arranged into size-targeted output
-    * bins — WITHIN partitions under `spec`, a flat `targetFiles`-way
-    * split otherwise. A partition holding N× `minBytes` of rewritten
-    * bytes emits ~N output files, never one unbounded file — Delta bins
-    * to maxFileSize for the same reason; at 100 TB "one file per
-    * partition" collapses a 10 GiB backlog into a single
-    * unsplittable-write task. Bin assignment is driver-side manifest
-    * arithmetic: each file maps to a globally-unique bin id (round-robin
-    * by descending size within its partition ≈ balanced bins), looked up
-    * by the scan's `_metadata.file_path` — no extra scan, no rand(), and
-    * bin ids are disjoint across partitions (see [[writeAddressedBins]]). */
+  /** [[optimize]]'s purge pick: files with DV marks, and files whose
+    * physical schema still stores a DROPPED column (column-mapping purge,
+    * Delta REORG's second job). The dropped-column probe reads one footer
+    * schema per commit origin — the footer cache the scan planner keeps,
+    * never a data read. */
+  private def purgeable(v: Int, marked: Set[String]): FileEntry => Boolean = {
+    val droppedPhys = manifestOf(v).dropped.toSet
+    val carriesDropped: Map[Long, Boolean] =
+      if (droppedPhys.isEmpty) Map.empty
+      else fileEntries(v).groupBy(_.origin).map { case (o, es) =>
+        o -> SnapshotTable.probeDataSchema(spark, es.map(_.path), Some(o))
+          .fieldNames.exists(droppedPhys)
+      }
+    e => marked(e.path) || carriesDropped.getOrElse(e.origin, false)
+  }
+
+  /** [[optimize]]'s clustering pick: files written after the last
+    * `ZORDER`/`CLUSTER` commit. `CLONE` and `RESTORE` replace the file
+    * set wholesale (clone origins are even rebased negative), so only
+    * clustering commits after the latest of them count; with none, or
+    * with `full`, every file is picked. */
+  private def unclustered(full: Boolean): FileEntry => Boolean = {
+    val vs = versions
+    def last(ops: Set[String], after: Int): Int =
+      vs.filter(x => x > after && ops(manifestOf(x).operation))
+        .maxOption.getOrElse(-1)
+    val lastCluster =
+      if (full) -1
+      else last(Set("ZORDER", "CLUSTER"), last(Set("CLONE", "RESTORE"), -1))
+    e => lastCluster < 0 || e.origin > lastCluster
+  }
+
+  /** Output bins for `bytes` of rewritten data at about `binBytes` each:
+    * the ceiling, at least 1, and overflow-safe (a `binBytes` of
+    * `Long.MaxValue` means one bin). */
+  private def binsFor(bytes: Long, binBytes: Long): Int =
+    math.max(1L, (bytes - 1) / binBytes + 1).toInt
+
+  /** DV marks per addressed data file: one aggregate over the marks, run
+    * only while marks are pending (O(deleted rows), never a data scan). */
+  private def marksByFile(v: Int): Map[String, Long] = {
+    val dvs = dvEntries(v)
+    if (dvs.isEmpty) Map.empty
+    else readEntries(dvs).groupBy(DvFileCol).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** A maintenance rewrite's source rows: the DV-resolved rows of
+    * `rewrite`, keeping materialized row ids under row tracking — or,
+    * with MoR deltas pending, the resolved table (a whole-table rewrite
+    * folds the deltas, Hudi-style; the deferred rows get fresh ids). */
+  private def foldSource(v: Int, rewrite: Seq[FileEntry]): DataFrame =
+    if (deltaEntries(v).isEmpty) rewriteSource(rewrite, dvEntries(v))
+    else read(v)
+
+  /** The one commit of every maintenance rewrite: `op` over
+    * `written ++ carried`, with no pending delta left (a rewrite folds
+    * them or requires none) and so no merge keys. DV marks on rewritten
+    * files were applied by the rewrite and drop; marks on carried files
+    * stay — by reference when no rewritten file had one, through
+    * [[remainingDvs]] otherwise. `marked` (the DV-addressed paths) is
+    * evaluated only when files carry. */
+  private def commitRewrite(v: Int, op: String, written: Seq[FileEntry],
+      rewrite: Seq[FileEntry], carried: Seq[FileEntry],
+      marked: => Set[String]): Unit = {
+    val dvs =
+      if (carried.isEmpty) Seq.empty
+      else {
+        val m = marked
+        if (!carried.exists(e => m(e.path))) Seq.empty
+        else if (!rewrite.exists(e => m(e.path))) dvEntries(v)
+        else remainingDvs(v, rewrite.map(_.path).toSet, v + 1)
+      }
+    writeManifest(Manifest(v + 1, op, Seq.empty, written ++ carried,
+      Seq.empty, dvs = dvs))
+  }
+
+  /** Size-binned rewrite of OPTIMIZE and REORG: scan exactly `rewrite`
+    * (DV marks applied) into ~`minBytes` output bins — WITHIN partitions
+    * under `spec`, one flat split otherwise. A partition holding N×
+    * `minBytes` of rewritten bytes emits ~N output files, never one
+    * unbounded file — Delta bins to maxFileSize for the same reason; at
+    * 100 TB "one file per partition" collapses a 10 GiB backlog into a
+    * single unsplittable-write task. Bin assignment is driver-side
+    * manifest arithmetic: each file maps to a globally-unique bin id
+    * (round-robin by descending size within its partition ≈ balanced
+    * bins), looked up by the scan's `_metadata.file_path` — no extra
+    * scan, no rand(), and bin ids are disjoint across partitions (see
+    * [[writeAddressedBins]]). */
   private def writeBinned(rewrite: Seq[FileEntry], dvs: Seq[FileEntry],
-      nextVersion: Int, spec: Option[String], minBytes: Long,
-      targetFiles: Int): Seq[FileEntry] = spec match {
+      nextVersion: Int, spec: Option[String],
+      minBytes: Long): Seq[FileEntry] = spec match {
     case Some(p) =>
       var next = 0
       val binOf: Map[String, Int] =
         rewrite.groupBy(_.partValue).values.flatMap { es =>
-          // overflow-safe ceil-div (callers pass Long.MaxValue as an
-          // "everything is small" threshold); files are never split, so
-          // more bins than files would only be empty tasks
-          val bins = math.min(es.size.toLong, math.max(1L,
-            (es.map(_.bytes).sum - 1) / minBytes + 1)).toInt
+          // files are never split, so more bins than files would only
+          // be empty tasks
+          val bins = math.min(es.size, binsFor(es.map(_.bytes).sum, minBytes))
           val assigned = es.sortBy(-_.bytes).zipWithIndex
             .map { case (e, i) => e.path -> (next + i % bins) }
           next += bins
@@ -2622,7 +2742,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
       writeAddressedBins(rewrite, dvs, nextVersion, p, next,
         element_at(typedLit(binOf), col(DvFileCol)))
     case None =>
-      writeData(rewriteSource(rewrite, dvs).repartition(targetFiles),
+      writeData(rewriteSource(rewrite, dvs)
+        .repartition(binsFor(rewrite.map(_.bytes).sum, minBytes)),
         nextVersion, None)
   }
 
@@ -2649,78 +2770,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // re-clustering by partition value would collapse them back to one
     // file per partition
     writeData(df, nextVersion, Some(spec), cluster = false)
-  }
-
-  /** `REORG TABLE … APPLY (PURGE)` (Delta's deletion-vector purge verb):
-    * materialize pending DV marks by rewriting ONLY the DV-addressed
-    * data files — the rewrite's DV-resolved scan applies the marks, so
-    * the soft-deleted rows become physically absent and the marks drop;
-    * every mark-free file carries by reference, path-identical. Cost ∝
-    * marked-file bytes, never table size — the difference between
-    * purging a sparse delete on a 100 TB table and rewriting it.
-    * Rewrites preserve the table layout and bin to ~`minBytes` output
-    * files like OPTIMIZE. `onlyPartitions` scopes the purge to named
-    * partitions (`REORG … WHERE pc = v`); marks on unscoped files
-    * persist. Returns the number of files rewritten (0 = metadata-level
-    * no-op, no commit written). After a purge, VACUUM can reclaim the
-    * pre-purge files, which still contain the deleted rows — Delta
-    * documents REORG PURGE as exactly this GDPR-style physical-removal
-    * step. */
-  def reorgPurge(minBytes: Long = 128L * 1024 * 1024,
-      onlyPartitions: Option[Set[String]] = None): Int = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"REORG on $root requires compacted state (pending MoR deltas — " +
-        "OPTIMIZE folds them first)")
-    require(onlyPartitions.isEmpty || layoutSpec.isDefined,
-      s"partition-scoped REORG on $root requires a partitioned table")
-    val dvs = dvEntries(v)
-    // the distinct set of DV-addressed file paths: O(marked files),
-    // bounded by the table's file count — metadata-sized, never rows
-    val addressed =
-      if (dvs.isEmpty) Set.empty[String]
-      else readEntries(dvs).select(col(DvFileCol)).distinct()
-        .collect().map(_.getString(0)).toSet
-    // column-mapping PURGE (Delta REORG's second job): files whose
-    // physical schema still stores a DROPPED column rewrite too, so the
-    // soft-dropped data becomes physically absent (the GDPR step before
-    // VACUUM). Detection is per-ORIGIN footer schema — O(commits), the
-    // footer cache the scan planner already keeps, never a data read.
-    val droppedPhys = manifestOf(v).dropped.toSet
-    val originCarriesDropped: Map[Long, Boolean] =
-      if (droppedPhys.isEmpty) Map.empty
-      else fileEntries(v).groupBy(_.origin).map { case (o, es) =>
-        o -> SnapshotTable.probeDataSchema(spark, es.map(_.path), Some(o))
-          .fieldNames.exists(droppedPhys)
-      }
-    if (addressed.isEmpty && originCarriesDropped.forall(!_._2)) 0
-    else {
-      // scoped purge only touches files UNDER the current layout — a
-      // layout-foreign file's partValue lives under a different
-      // transform, so matching it against the scope literals would be
-      // meaningless (same rule as scoped OPTIMIZE)
-      val specParsed = layoutSpec.map(PartitionTransform.parse)
-      def sameLayout(e: FileEntry): Boolean =
-        specParsed.exists(underLayout(_, e))
-      def inScope(e: FileEntry): Boolean = onlyPartitions.forall(vals =>
-        sameLayout(e) && vals.contains(e.partValue))
-      val (marked, clean) = fileEntries(v)
-        .partition(e => (addressed.contains(e.path) ||
-          originCarriesDropped.getOrElse(e.origin, false)) && inScope(e))
-      if (marked.isEmpty) 0
-      else {
-        // preserve the layout like OPTIMIZE (identity or hidden
-        // transform); mixed/unknown layouts rewrite unpartitioned
-        val spec = layoutSpec
-        val bytes = marked.map(_.bytes).sum
-        val bins = math.max(1L, (bytes - 1) / minBytes + 1).toInt
-        val written = writeBinned(marked, dvs, v + 1, spec, minBytes, bins)
-        writeManifest(Manifest(v + 1, "REORG", mergeKeysOf(v),
-          written ++ clean, Seq.empty,
-          dvs = remainingDvs(v, marked.map(_.path).toSet, v + 1)))
-        marked.size
-      }
-    }
   }
 
   /** Bin-pack compaction into about `numFiles` files; one `COMPACT`
@@ -2752,12 +2801,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       fileEntries(v).forall(e => e.partValue != null && underLayout(s, e)))
     if (perPartition) compactPartitions(v, numFiles, partitionBy.get)
     else {
-      // row tracking: a compaction of RESOLVED state carries the
-      // materialized ids through; folding pending MoR deltas refreshes
-      // them (the deferred rows never had base-file addresses)
-      val src =
-        if (deltaEntries(v).isEmpty) rewriteSource(fileEntries(v), dvEntries(v))
-        else read(v)
+      val src = foldSource(v, fileEntries(v))
       val df = spec match {
         // range-partition on (partition value, row hash) so `numFiles`
         // tasks split large partitions instead of collapsing each into
@@ -2766,8 +2810,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
           PartitionTransform.writeColumn(s), xxhash64(src.columns.map(col): _*))
         case None => src.repartition(numFiles)
       }
-      val written = writeData(df, v + 1, partitionBy, cluster = false)
-      writeManifest(Manifest(v + 1, "COMPACT", Seq.empty, written, Seq.empty))
+      commitRewrite(v, "COMPACT",
+        writeData(df, v + 1, partitionBy, cluster = false),
+        fileEntries(v), Seq.empty, Set.empty)
     }
     this
   }
@@ -2776,13 +2821,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * rewrite the rest to exactly their share of files. */
   private def compactPartitions(v: Int, numFiles: Int, spec: String): Unit = {
     val entries = fileEntries(v)
-    val dvs = dvEntries(v)
-    // DV marks per addressed file: one aggregate over the marks, run only
-    // while marks are pending (O(deleted rows), never a data scan)
-    val marks: Map[String, Long] =
-      if (dvs.isEmpty) Map.empty
-      else readEntries(dvs).groupBy(DvFileCol).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val marks = marksByFile(v)
     val total = entries.map(_.bytes).sum.toDouble
     val parts = entries.groupBy(_.partValue).toSeq.sortBy(_._1).map { case (_, es) =>
       val live = es.map(e => e.rows - marks.getOrElse(e.path, 0L)).sum
@@ -2807,33 +2846,26 @@ class SnapshotTable(spark: SparkSession, root: String) {
             }
           }.toMap
         val slot = element_at(typedLit(slots), col(DvFileCol))
-        writeAddressedBins(rewrite.flatMap(_._1), dvs, v + 1, spec,
-          bases.last, slot("_1") + pmod(slot("_3") + col(DvPosCol), slot("_2")))
+        writeAddressedBins(rewrite.flatMap(_._1), dvEntries(v), v + 1,
+          spec, bases.last, slot("_1") + pmod(slot("_3") + col(DvPosCol), slot("_2")))
       }
-    // no DV mark survives: a partition with a mark is never settled, so
-    // every marked file was rewritten with its marks applied
-    writeManifest(Manifest(v + 1, "COMPACT", Seq.empty,
-      written ++ carried.flatMap(_._1), Seq.empty))
+    // a partition with a mark is never settled, so no mark survives
+    commitRewrite(v, "COMPACT", written, rewrite.flatMap(_._1),
+      carried.flatMap(_._1), marks.keySet)
   }
 
-  /** OPTIMIZE ZORDER BY analog: rewrite the current snapshot clustered
-    * on the Morton curve of two scale-normalized dimensions
-    * (graft_zorder — codegen'd Catalyst expression), range-partitioned
-    * into `numFiles` and sorted within files. BOTH dimensions end up
-    * with sub-linear per-file [min,max] spans in the footer stats the
-    * manifest captures, so [[readRange]] prunes files on EITHER column —
-    * the multi-dimensional data-skipping layout Delta's OPTIMIZE ZORDER
-    * exists to produce. Pending MoR deltas fold in like [[compact]]. */
-  /** Morton-curve arrangement shared by [[compactZOrder]] and
-    * [[clusterIncremental]]: scale-normalize every dim to a 16-bit
-    * lattice (raw interleaving biases toward the wider-ranged column),
-    * interleave with the codegen'd `graft_zorder`, then range-partition
-    * + in-file sort on (partition value, curve). Bounds come from the
-    * manifest's footer stats — no extra scan; a stat-less column falls
-    * back to one min/max aggregate over the source. */
+  /** Morton-curve arrangement of [[optimize]]'s ZORDER and CLUSTER:
+    * scale-normalize every dim to a 16-bit lattice (raw interleaving
+    * biases toward the wider-ranged column), interleave with the
+    * codegen'd `graft_zorder`, then range-partition + in-file sort on
+    * (partition value, curve). Bounds come from the manifest's
+    * whole-table footer stats — no extra scan, and successive
+    * incremental runs cluster on the same coordinates; a stat-less
+    * column falls back to one min/max aggregate over the source. */
   private def zorderArrange(source: DataFrame, zcols: Seq[String],
       numFiles: Int,
       specParsed: Option[PartitionTransform.Spec]): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(spark)
     // stat-less dimensions fall back to a scan for bounds — folded into
     // ONE aggregate with 2K measures, so K stat-less columns cost one
     // pass over the rewrite source, never K
@@ -2888,111 +2920,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
           .sortWithinPartitions(zc)
           .drop((dimCols :+ zc): _*)
     }
-  }
-
-  /** Incremental clustering (Delta liquid-clustering OPTIMIZE analog):
-    * rewrite onto the Morton curve of `zcols` ONLY the files written
-    * since the last clustering commit (ZORDER or CLUSTER operation);
-    * already-clustered files carry by reference, path-identical. Each
-    * OPTIMIZE therefore costs O(new data since the last run), never
-    * O(table) — the property that makes scheduled clustering viable at
-    * 100 TB. Returns the number of files rewritten. The curve lattice
-    * normalizes against WHOLE-TABLE stats, so successive increments
-    * cluster on the same coordinates and file-level [min,max] spans
-    * stay tight table-wide. */
-  def clusterIncremental(zcols: Seq[String],
-      minBytes: Long = 128L * 1024 * 1024, full: Boolean = false): Int = {
-    require(zcols.nonEmpty && zcols.size <= 4,
-      s"CLUSTER BY takes 1 to 4 columns, got ${zcols.size}")
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty && dvEntries(v).isEmpty,
-      s"incremental clustering on $root requires compacted state " +
-        "(pending MoR deltas / DV marks)")
-    graft.functions.GraftFunctions.registerAll(spark)
-    // `full` (Delta's `OPTIMIZE … FULL`): recluster EVERYTHING —
-    // the escape hatch after changing the clustering columns, where
-    // "already clustered" files are clustered on the WRONG curve
-    // CLONE/RESTORE replace the file set wholesale (clone origins are
-    // even rebased negative) — clustering state resets there, so only
-    // clustering commits AFTER the latest reset count
-    val lastReset = versions
-      .filter(x => { val op = manifestOf(x).operation
-        op == "CLONE" || op == "RESTORE" })
-      .maxOption.getOrElse(-1)
-    val lastCluster =
-      if (full) -1
-      else versions
-        .filter(x => x > lastReset && { val op = manifestOf(x).operation
-          op == "ZORDER" || op == "CLUSTER" })
-        .maxOption.getOrElse(-1)
-    // never-clustered (or FULL): EVERYTHING is tail — including
-    // shallow-clone-carried files, whose origins are rebased NEGATIVE
-    // and would otherwise never satisfy an origin comparison
-    val (tail, carried) =
-      if (lastCluster < 0) (fileEntries(v), Seq.empty[FileEntry])
-      else fileEntries(v).partition(_.origin > lastCluster)
-    if (tail.isEmpty) return 0
-    val spec = layoutSpec
-    val numFiles = math.max(1L,
-      (tail.map(_.bytes).sum + minBytes - 1) / minBytes).toInt
-    val df = zorderArrange(rewriteSource(tail, Seq.empty), zcols, numFiles,
-      spec.map(PartitionTransform.parse))
-    val written = writeData(df, v + 1, spec, cluster = false)
-    writeManifest(Manifest(v + 1, "CLUSTER", mergeKeysOf(v),
-      written ++ carried, Seq.empty))
-    tail.size
-  }
-
-  def compactZOrder(numFiles: Int, colA: String, colB: String): SnapshotTable =
-    compactZOrder(numFiles, Seq(colA, colB))
-
-  /** n-ary form (1–4 dimensions; 16 interleaved bits each — beyond four
-    * columns the per-dimension skipping value collapses anyway, which is
-    * why Delta documents the same practical bound). When the table has a
-    * partition layout ([[layoutSpec]]) the rewrite clusters WITHIN
-    * partitions — range-partitioned by (partition value, curve value) —
-    * and commits under the same spec, so partition pruning and
-    * O(partition) overwrites survive the ZORDER. `onlyPartitions`
-    * restricts the rewrite to the named partitions; every other file
-    * carries by reference, path-identical. */
-  def compactZOrder(numFiles: Int, zcols: Seq[String],
-      onlyPartitions: Option[Set[String]] = None): SnapshotTable = {
-    require(zcols.nonEmpty && zcols.size <= 4,
-      s"ZORDER BY takes 1 to 4 columns, got ${zcols.size} " +
-        s"(${zcols.mkString(", ")})")
-    val v = currentVersion
-    graft.functions.GraftFunctions.registerAll(spark)
-    val spec = layoutSpec
-    val specParsed = spec.map(PartitionTransform.parse)
-    require(onlyPartitions.isEmpty || spec.isDefined,
-      s"partition-scoped ZORDER on $root requires a partitioned table")
-    def sameLayout(e: FileEntry): Boolean = specParsed.exists(underLayout(_, e))
-    val (scoped, carried) = onlyPartitions match {
-      case None => (fileEntries(v), Seq.empty[FileEntry])
-      case Some(vals) => fileEntries(v).partition(e =>
-        sameLayout(e) && vals.contains(e.partValue))
-    }
-    // A scoped rewrite must not fold pending deltas/DVs of UNSCOPED
-    // files away silently — restrict scoping to resolved state.
-    require(onlyPartitions.isEmpty ||
-        (deltaEntries(v).isEmpty && dvEntries(v).isEmpty),
-      s"partition-scoped ZORDER on $root requires compacted state")
-    val source = onlyPartitions match {
-      // folds pending MoR deltas (Hudi-style); with row tracking on and
-      // compacted state the scan carries the materialized ids through
-      case None if deltaEntries(v).isEmpty =>
-        rewriteSource(fileEntries(v), dvEntries(v))
-      case None    => read(v)
-      case Some(_) => rewriteSource(scoped, Seq.empty)
-    }
-    val df = zorderArrange(source, zcols, numFiles, specParsed)
-    // cluster = false: writeData's default re-clustering by partition
-    // value would destroy the curve ordering just built
-    val written = writeData(df, v + 1, spec, cluster = false)
-    writeManifest(Manifest(v + 1, "ZORDER",
-      if (onlyPartitions.isEmpty) Seq.empty else mergeKeysOf(v),
-      written ++ carried, Seq.empty))
-    this
   }
 
   /** Metadata-only shallow clone (Delta `SHALLOW CLONE` analog): the
@@ -3240,14 +3167,14 @@ class SnapshotTable(spark: SparkSession, root: String) {
     dropped.size
   }
 
-  /** Time-based retention (Delta `VACUUM … RETAIN n HOURS` analog):
-    * drop every version whose commit instant precedes the newest commit
-    * at or before `ts` — time travel to any instant >= `ts` keeps
-    * working, older reclaims. Metadata resolution via [[versionAsOf]]
-    * (pure manifest), deletion via [[vacuum]]. The current version is
-    * always retained (versionAsOf <= currentVersion by construction). */
-  def vacuumOlderThan(ts: Long): Int =
-    vacuum(retainVersions = currentVersion - versionAsOf(ts) + 1)
+  /** Time-based retention (Delta `VACUUM … RETAIN n HOURS` analog): the
+    * `retainVersions` of [[vacuum]] that keeps time travel to every
+    * instant >= `ts` working — the newest commit at or before `ts` and
+    * every later one. `None` when `ts` precedes the first commit: the
+    * window holds the whole log and nothing is reclaimable. Pure
+    * manifest metadata. */
+  def retentionSince(ts: Long): Option[Int] =
+    versionAtOrBefore(ts).map(currentVersion - _ + 1)
 
   /** Delta `GENERATE symlink_format_manifest` analog: write a text
     * manifest listing the CURRENT version's data-file paths (one per
@@ -3840,9 +3767,15 @@ object SnapshotTable {
 
   /** Sidecar property recording the table's clustering columns (Delta
     * liquid-clustering `CLUSTER BY` analog, comma-separated): a bare
-    * `OPTIMIZE` on a table carrying it runs [[SnapshotTable.clusterIncremental]]
-    * instead of small-file bin-packing. Empty string = CLUSTER BY NONE. */
+    * [[SnapshotTable.optimize]] on a table carrying it clusters
+    * incrementally instead of bin-packing small files. Empty string =
+    * CLUSTER BY NONE. */
   val ClusterSpecProp = "clusterBy"
+
+  /** Default small-file threshold and output bin size of
+    * [[SnapshotTable.optimize]] (Delta's optimize.minFileSize and
+    * maxFileSize defaults): 128 MiB. */
+  val DefaultMinBytes: Long = 128L * 1024 * 1024
 
   /** Directory name Spark's partitioned writer gives null partition
     * values — the on-disk identity of the null partition. */
@@ -3869,11 +3802,13 @@ object SnapshotTable {
 
   /** Folds an ANDed v1 filter array into one inclusive numeric interval
     * on a single column — the footer-stats file skip of
-    * [[SnapshotTable.delete]] / [[SnapshotTable.update]] and the SQL
-    * catalog's metadata-only DELETE. Strict bounds tighten by one ULP
-    * (exact for the integral values column stats hold). Decimal bounds
-    * decline: the interval is compared as doubles, and a decimal bound
-    * is not narrowed to one. None = decline. */
+    * [[SnapshotTable.delete]] / [[SnapshotTable.update]]. Strict bounds
+    * tighten by one ULP (exact for the integral values column stats
+    * hold). A conjunct that is not a numeric bound on the interval's
+    * column (another predicate, another column, a decimal bound — the
+    * interval is compared as doubles, and a decimal bound is not
+    * narrowed to one) never narrows it: the interval only widens toward
+    * "may match". None = no interval, every file may match. */
   def numericInterval(filters: Array[org.apache.spark.sql.sources.Filter])
       : Option[(String, Double, Double)] = {
     import org.apache.spark.sql.sources._
@@ -3897,8 +3832,11 @@ object SnapshotTable {
     }
     def merge(a: Option[(String, Double, Double)],
         b: Option[(String, Double, Double)]): Option[(String, Double, Double)] =
-      for ((c1, lo1, hi1) <- a; (c2, lo2, hi2) <- b; if c1 == c2)
-        yield (c1, math.max(lo1, lo2), math.min(hi1, hi2))
+      (a, b) match {
+        case (Some((c1, lo1, hi1)), Some((c2, lo2, hi2))) if c1 == c2 =>
+          Some((c1, math.max(lo1, lo2), math.min(hi1, hi2)))
+        case _ => a.orElse(b)
+      }
     filters.map(one).reduceOption(merge).flatten
       .filter { case (_, lo, hi) => lo <= hi }
   }

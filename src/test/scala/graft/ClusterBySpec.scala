@@ -14,23 +14,27 @@ class ClusterBySpec extends AnyFunSuite {
 
   private def tmp(p: String) = Files.createTempDirectory(s"graft_$p").toString
 
+  /** A bare OPTIMIZE on `t` clustered by `cols`: incremental clustering. */
+  private def cluster(t: SnapshotTable, cols: String*): Int =
+    t.withProperty(SnapshotTable.ClusterSpecProp, cols.mkString(",")).optimize()
+
   test("clusterIncremental rewrites only the unclustered tail") {
     import spark.implicits._
     val t = new SnapshotTable(spark, tmp("liq"))
       .create((1L to 4000L).map(k => (k, (k * 37 % 1000).toDouble))
         .toDF("k", "v").repartition(4))
-    assert(t.clusterIncremental(Seq("k", "v")) > 0) // v1: clusters all
+    assert(cluster(t, "k", "v") > 0) // v1: clusters all
     val clustered = t.files.map(_.path).toSet
     // appends after clustering form the unclustered tail
     t.append((4001L to 4200L).map(k => (k, k.toDouble)).toDF("k", "v")
       .repartition(2)) // v2
-    assert(t.clusterIncremental(Seq("k", "v")) == 2) // v3: only the tail
+    assert(cluster(t, "k", "v") == 2) // v3: only the tail
     // the originally-clustered files carried by reference, path-identical
     assert(clustered.subsetOf(t.files.map(_.path).toSet),
       "clustered files must carry by reference across incremental runs")
     // nothing new → zero rewrites, no commit
     val v = t.currentVersion
-    assert(t.clusterIncremental(Seq("k", "v")) == 0)
+    assert(cluster(t, "k", "v") == 0)
     assert(t.currentVersion == v)
     // content preserved
     assert(t.read().count() == 4200)
@@ -48,16 +52,16 @@ class ClusterBySpec extends AnyFunSuite {
     // first clustering on the clone must still rewrite them
     val c = src.shallowCloneTo(tmp("liq_clone"))
     assert(c.files.forall(_.origin < 0))
-    assert(c.clusterIncremental(Seq("k", "v")) == 2)
+    assert(cluster(c, "k", "v") == 2)
     assert(c.read().count() == 500)
     // OR REPLACE clone onto a PREVIOUSLY CLUSTERED target: the clone
     // resets clustering state, so the next OPTIMIZE reclusters
     val tgtPath = tmp("liq_tgt")
     val tgt = new SnapshotTable(spark, tgtPath)
       .create((1L to 100L).map(k => (k, k * 1.0)).toDF("k", "v"))
-    tgt.clusterIncremental(Seq("k"))
+    cluster(tgt, "k")
     src.shallowCloneTo(tgtPath, src.currentVersion, orReplace = true)
-    assert(tgt.clusterIncremental(Seq("k")) > 0,
+    assert(cluster(tgt, "k") > 0,
       "post-replace clone files must recluster despite earlier CLUSTER commits")
   }
 
@@ -86,7 +90,7 @@ class ClusterBySpec extends AnyFunSuite {
           case 0 => t.append(batch(20 + rnd.nextInt(50)))
           case 1 =>
             val carriedExpected = clustered
-            t.clusterIncremental(Seq("k", "v")): Unit
+            cluster(t, "k", "v"): Unit
             // files clustered by the previous run carry by reference
             assert(carriedExpected.subsetOf(t.files.map(_.path).toSet),
               s"trial $trial: clustered files must carry by reference")

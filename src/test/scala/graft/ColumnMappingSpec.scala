@@ -132,7 +132,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     // the physical bytes still hold the column until REORG purges
     assert(spark.read.parquet(t.files.head.path)
       .schema.fieldNames.contains("tag"))
-    val rewritten = t.reorgPurge()
+    val rewritten = t.optimize(purge = true)
     assert(rewritten > 0)
     // every current file is now physically free of the dropped column
     t.files.foreach(e => assert(!spark.read.parquet(e.path)
@@ -140,7 +140,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     assert(t.read().orderBy("k").select("v").as[Double].collect()
       .toSeq == Seq(10.0, 20.0))
     // idempotent: a second REORG finds nothing to purge
-    assert(t.reorgPurge() == 0)
+    assert(t.optimize(purge = true) == 0)
   }
 
   test("OR REPLACE deep clone resets the target's stale mapping and sidecar") {

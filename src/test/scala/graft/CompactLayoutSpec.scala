@@ -160,7 +160,7 @@ class CompactLayoutSpec extends AnyFunSuite {
     val t = table(s, "cl_optimize")
     (0 until 4).foreach(p => t.append(rows(s, p, 10L, from = 50000L), Some("p")))
     val before = content(t)
-    val (_, jobs) = JobCount.of(s)(t.compactSmallFiles(minBytes = Long.MaxValue))
+    val (_, jobs) = JobCount.of(s)(t.optimize(minBytes = Long.MaxValue))
     // one job materializes the bin shuffle and one writes the files; the
     // range repartition this replaced ran a third, sampling the bin ids
     // for split points

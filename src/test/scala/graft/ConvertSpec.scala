@@ -144,7 +144,7 @@ class ConvertSpec extends AnyFunSuite {
     // generation that physically carries it
     val carriers = t.files.count(_.origin == 0L)
     t.dropColumn("tag")
-    assert(t.reorgPurge(minBytes = 1L << 30) == carriers)
+    assert(t.optimize(purge = true, minBytes = 1L << 30) == carriers)
     assert(t.read().orderBy("k").select("k").as[Long].collect().toSeq ==
       (1L to 6L))
   }

@@ -51,7 +51,7 @@ class DvDeleteSqlSpec extends AnyFunSuite {
     s.sql("DELETE FROM dvd.ns.t WHERE k = 1")
     assert(s.sql("SELECT count(*) FROM dvd.ns.t").head.getLong(0) == 550)
     // REORG APPLY (PURGE) materializes the marks physically
-    assert(t.reorgPurge() > 0)
+    assert(t.optimize(purge = true) > 0)
     assert(t.dvFiles.isEmpty)
     assert(s.sql("SELECT count(*) FROM dvd.ns.t").head.getLong(0) == 550)
     // unconditional DELETE must NOT mark every row — it stays on the

@@ -58,7 +58,7 @@ class DvMergeSqlSpec extends AnyFunSuite {
     assert(s.sql("SELECT count(*) FROM dvm.ns.t VERSION AS OF 1")
       .head.getLong(0) == 1000)
     // REORG folds the marks; content holds
-    assert(t.reorgPurge(minBytes = 1L << 30) > 0)
+    assert(t.optimize(purge = true, minBytes = 1L << 30) > 0)
     assert(t.dvFiles.isEmpty)
     assert(s.sql("SELECT count(*) FROM dvm.ns.t").head.getLong(0) == 965)
     // a matching-nothing merge commits nothing

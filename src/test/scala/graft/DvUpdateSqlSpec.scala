@@ -56,7 +56,7 @@ class DvUpdateSqlSpec extends AnyFunSuite {
     s.sql("UPDATE dvu.ns.t SET v = 0 WHERE v < -1.0")
     assert(t.currentVersion == v, "empty update must not commit")
     // REORG APPLY (PURGE) folds the marks physically; content holds
-    assert(t.reorgPurge() > 0)
+    assert(t.optimize(purge = true) > 0)
     assert(t.dvFiles.isEmpty)
     assert(s.sql("SELECT count(*) FROM dvu.ns.t").head.getLong(0) == 1000)
     assert(s.sql("SELECT count(*) FROM dvu.ns.t WHERE tag = 'bumped'")

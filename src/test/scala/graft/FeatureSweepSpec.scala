@@ -61,7 +61,7 @@ class FeatureSweepSpec extends AnyFunSuite {
     s.sql("UPDATE fswf.ns.t SET v = v + 1000000 WHERE k % 7 = 0")
     assert(rids() == afterDel, "DV UPDATE renumbered")
     // REORG PURGE folds the marks; widened type and ids both survive
-    assert(t.reorgPurge(minBytes = 1L << 30) > 0)
+    assert(t.optimize(purge = true, minBytes = 1L << 30) > 0)
     assert(rids() == afterDel, "REORG PURGE renumbered")
     val expect = (0L until 500L).filter(_ % 5 != 0)
       .map(k => (k % 100) + (if (k % 7 == 0) 1000000L else 0L)).sum
@@ -116,7 +116,7 @@ class FeatureSweepSpec extends AnyFunSuite {
               .foreach(k => model(k) = model(k) + 7)
             s.sql(s"UPDATE fswr$trial.ns.t SET v = v + 7 WHERE k % $m = $r")
           case 3 => t.compact(1 + rnd.nextInt(2)): Unit
-          case 4 => if (t.dvFiles.nonEmpty) t.reorgPurge(minBytes = 1L << 30): Unit
+          case 4 => if (t.dvFiles.nonEmpty) t.optimize(purge = true, minBytes = 1L << 30): Unit
           case 5 =>
             if (!widened) {
               s.sql(s"ALTER TABLE fswr$trial.ns.t ALTER COLUMN v TYPE BIGINT")

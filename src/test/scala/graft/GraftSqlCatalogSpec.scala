@@ -105,14 +105,35 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
     assert(sql("SELECT count(k) FROM gtest.dml.t").head.getLong(0) == 90)
     sql("DELETE FROM gtest.dml.t WHERE k = 0")                                // v3
     assert(sql("SELECT min(k) FROM gtest.dml.t").head.getLong(0) == 1)
-    // a predicate the metadata path declines (string equality) falls
-    // through to the row-level copy-on-write rewrite instead of failing
+    // a predicate with no numeric bound (string equality) keeps every
+    // file a candidate and still deletes exactly its rows
     sql("DELETE FROM gtest.dml.t WHERE v = 'v5'")                             // v4
     assert(sql("SELECT count(k) FROM gtest.dml.t").head.getLong(0) == 88)
     assert(sql("SELECT count(*) FROM gtest.dml.t WHERE v = 'v5'").head.getLong(0) == 0)
     sql("TRUNCATE TABLE gtest.dml.t")
     assert(sql("SELECT count(*) FROM gtest.dml.t").head.getLong(0) == 0)
     assert(sql("SELECT count(*) FROM gtest.dml.t VERSION AS OF 2").head.getLong(0) == 90)
+  }
+
+  test("DELETE with a mixed conjunction skips files on its numeric conjunct") {
+    sql("CREATE NAMESPACE gtest.mixdel")
+    sql("CREATE TABLE gtest.mixdel.t (k BIGINT, tag STRING)")
+    // 4 range-clustered files: k in [0,25), [25,50), [50,75), [75,100)
+    (0 until 4).foreach(i => sql(s"""INSERT INTO gtest.mixdel.t
+      SELECT id, concat('r', id % 13) FROM range(${i * 25}, ${i * 25 + 25}, 1, 1)"""))
+    val t = new graft.sources.SnapshotTable(spark,
+      spark.conf.get("spark.sql.catalog.gtest.root") + "/mixdel/t")
+    val data = t.files.filter(_.rows > 0).map(_.path).toSet
+    assert(data.size == 4)
+    val expected = sql("SELECT k, tag FROM gtest.mixdel.t")
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+      .filterNot { case (k, tag) => tag == "r12" && k <= 20 }.toSet
+    sql("DELETE FROM gtest.mixdel.t WHERE tag = 'r12' AND k <= 20")
+    assert(t.commitOperation(t.currentVersion) == "DELETE")
+    assert(data.intersect(t.files.map(_.path).toSet).size == 3,
+      "only the file whose k stats meet k <= 20 may rewrite")
+    assert(sql("SELECT k, tag FROM gtest.mixdel.t").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet == expected)
   }
 
   test("UPDATE through SQL commits a copy-on-write rewrite with history") {

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.util.Random
 
-/** Property sweep of [[SnapshotTable.reorgPurge]] (`REORG TABLE … APPLY
-  * (PURGE)`) across layout families and random positional-delete
+/** Property sweep of [[SnapshotTable.optimize]]'s purge (`REORG TABLE …
+  * APPLY (PURGE)`) across layout families and random positional-delete
   * patterns, against a row-level model. The invariants:
   *
   *   - the purged table reads exactly the DV-resolved survivors (the
@@ -60,7 +60,7 @@ class ReorgPurgePropertySpec extends AnyFunSuite {
       }).map(_.path).toSet
       val marksBefore = t.dvFiles.map(_.rows).sum
       val vBefore = t.currentVersion
-      val rewritten = t.reorgPurge(minBytes = 1L << 20)
+      val rewritten = t.optimize(purge = true, minBytes = 1L << 20)
       assert(t.dvFiles.isEmpty, s"$label marks must be gone")
       if (marksBefore == 0)
         assert(rewritten == 0 && t.currentVersion == vBefore,

@@ -46,13 +46,14 @@ class RowTrackingSpec extends AnyFunSuite {
     t.compact(2)
     assert(rids(t) == before, "ids changed across OPTIMIZE")
     // incremental clustering (everything is tail on first run)
-    assert(t.clusterIncremental(Seq("k"), minBytes = 1L << 20) > 0)
+    t.withProperty(SnapshotTable.ClusterSpecProp, "k")
+    assert(t.optimize(minBytes = 1L << 20) > 0)
     assert(rids(t) == before, "ids changed across CLUSTER")
     // DV delete: survivors keep their ids; REORG PURGE keeps them too
     t.delete(col("k") % 10 === 0, positional = true)
     val afterDelete = rids(t)
     assert(afterDelete == before.filterNot { case (k, _) => k % 10 == 0 })
-    assert(t.reorgPurge(minBytes = 1L << 30) > 0)
+    assert(t.optimize(purge = true, minBytes = 1L << 30) > 0)
     assert(rids(t) == afterDelete, "ids changed across REORG PURGE")
     // a fresh append after the rewrites allocates above everything
     t.append(Seq((9999L, 1.0)).toDF("k", "v"))

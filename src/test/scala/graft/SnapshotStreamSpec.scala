@@ -210,7 +210,7 @@ class SnapshotStreamSpec extends AnyFunSuite {
     t.append(slice(100, 200))
     t.compact(2) // rewrite, no logical change — must not kill the tail
     t.append(slice(200, 250))
-    t.compactSmallFiles(minBytes = Long.MaxValue, targetFiles = 1) // OPTIMIZE
+    t.optimize(minBytes = Long.MaxValue) // OPTIMIZE
     t.append(slice(250, 260))
     val (rows, batches) = drain(root,
       Map("startingVersion" -> "0", "maxVersionsPerTrigger" -> "1"),
@@ -249,7 +249,7 @@ class SnapshotStreamSpec extends AnyFunSuite {
     t.append(slice(100, 200))                                      // v1
     t.delete(col("id").between(0, 9), positional = true,
       trackChanges = true)                                         // v2
-    assert(t.reorgPurge() > 0)                                     // v3
+    assert(t.optimize(purge = true) > 0)                           // v3
     t.append(slice(200, 250))                                      // v4
     // data mode, tailing from AFTER the delete: the purge rewrite is a
     // logical no-op and must not kill (or double-feed) the tail

@@ -374,15 +374,63 @@ class SnapshotTableSpec extends AnyFunSuite {
     (0 until 4).foreach(i =>
       t.append(Seq((10000L + i, s"small$i")).toDF("k", "s").coalesce(1)))
     assert(t.files.size === 5)
-    t.compactSmallFiles(minBytes = t.files.map(_.bytes).max, targetFiles = 1)
+    t.optimize(minBytes = t.files.map(_.bytes).max)
     assert(t.files.map(_.path).contains(bigPath),
       "the big file must carry over by reference, not be rewritten")
     assert(t.files.size === 2, s"4 small files must fold into 1, got ${t.files.size}")
     assert(t.read().count() === 5004L)
     // idempotent when nothing qualifies: 0/1 small file → no new commit
     val v = t.currentVersion
-    t.compactSmallFiles(minBytes = t.files.map(_.bytes).max, targetFiles = 1)
+    t.optimize(minBytes = t.files.map(_.bytes).max)
     assert(t.currentVersion === v)
+  }
+
+  test("unpartitioned OPTIMIZE bins small files by size, not into one file") {
+    import spark.implicits._
+    val t = new SnapshotTable(spark, tmp("optsf_flat"))
+      .create((0L until 400L).map(k => (k, s"row$k")).toDF("k", "s").coalesce(1))
+    (1 until 5).foreach(i => t.append((i * 400L until (i + 1) * 400L)
+      .map(k => (k, s"row$k")).toDF("k", "s").coalesce(1)))
+    val before = t.read().orderBy("k").collect().toSeq
+    // 5 similar files totalling 2.5× the threshold, each under it
+    val minBytes = t.files.map(_.bytes).sum * 2 / 5
+    assert(t.files.size == 5 && t.files.forall(_.bytes < minBytes))
+    assert(t.optimize(minBytes = minBytes) == 5)
+    assert(t.files.size == 3,
+      s"2.5 bins of small bytes must write 3 files, got ${t.files.size}")
+    assert(t.read().orderBy("k").collect().toSeq == before)
+  }
+
+  test("scoped ZORDER and CLUSTER apply marks on rewritten files, keep marks on carried files") {
+    import spark.implicits._
+    def rows(lo: Long, hi: Long) = (lo until hi)
+      .map(k => (k, k % 2, (k * 37 % 101).toDouble)).toDF("k", "p", "v").coalesce(1)
+    def content(t: SnapshotTable) = t.read().orderBy("k").collect().toSeq
+    // k % 5 == 0 marks 20 rows of each parity in [0, 200)
+    val z = new SnapshotTable(spark, tmp("zorder_dv"))
+      .create(rows(0, 100), partitionBy = Some("p"))
+    z.append(rows(100, 200), partitionBy = Some("p"))
+    z.delete(col("k") % 5 === 0, positional = true)
+    assert(z.dvFiles.map(_.rows).sum == 40)
+    val zBefore = content(z)
+    val odd = z.files.filter(_.partValue == "1").map(_.path).toSet
+    z.optimize(Some(Set("0")), zorderBy = Seq("k", "v"))
+    assert(z.commitOperation(z.currentVersion) == "ZORDER")
+    assert(content(z) == zBefore)
+    assert(z.files.filter(_.partValue == "1").map(_.path).toSet == odd)
+    assert(z.dvFiles.map(_.rows).sum == 20, "the carried partition's marks persist")
+    // CLUSTER: the clustered file carries with its marks, the tail rewrites
+    val c = new SnapshotTable(spark, tmp("cluster_dv")).create(rows(0, 100))
+    c.withProperty(SnapshotTable.ClusterSpecProp, "k,v").optimize()
+    val clustered = c.files.map(_.path).toSet
+    c.append(rows(100, 200))
+    c.delete(col("k") % 5 === 0, positional = true)
+    val cBefore = content(c)
+    assert(c.optimize() == 1)
+    assert(c.commitOperation(c.currentVersion) == "CLUSTER")
+    assert(content(c) == cBefore)
+    assert(clustered.subsetOf(c.files.map(_.path).toSet))
+    assert(c.dvFiles.map(_.rows).sum == 20, "the clustered file's marks persist")
   }
 
   test("partitioned writes split oversized partitions (optimized-write shape)") {
@@ -436,7 +484,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val (expectA, expectB) = (bins(aBytes), bins(bBytes))
     assert(expectA >= 2, s"fixture must demand >1 bin for A, got $expectA")
     assert(expectA > expectB, "fixture must demand MORE bins for A than B")
-    t.compactSmallFiles(minBytes)
+    t.optimize(minBytes = minBytes)
     val aAfter = t.files.count(_.partValue == "A")
     val bAfter = t.files.count(_.partValue == "B")
     assert(aAfter === expectA,
@@ -449,7 +497,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val u = new SnapshotTable(spark, tmp("optsfp_u"))
       .create(Seq((1L, "x")).toDF("k", "s"))
     val e = intercept[IllegalArgumentException](
-      u.compactSmallFiles(1024, onlyPartitions = Some(Set("x"))))
+      u.optimize(Some(Set("x")), minBytes = 1024))
     assert(e.getMessage.contains("partitioned table"))
   }
 
@@ -617,9 +665,9 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("compactZOrder prunes files on BOTH clustered dimensions") {
     val o = Tables.load(spark, "/root/testdata/sf0.01", "orders")
-    val t = new SnapshotTable(spark, tmp("zopt"))
-      .create(o.repartition(4))
-      .compactZOrder(16, "o_custkey", "o_orderkey")
+    val t = new SnapshotTable(spark, tmp("zopt")).create(o.repartition(4))
+    t.optimize(zorderBy = Seq("o_custkey", "o_orderkey"),
+      minBytes = (t.files.map(_.bytes).sum + 15) / 16)
     assert(t.files.size == 16)
     // content preserved
     assert(t.countFromManifest == o.count())
@@ -654,7 +702,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val tsAfterV1 = t.commitTimestamp(1)
     t.merge(Seq((2L, 8.0)).toDF("k", "v"), Seq("k"))
     // retain from the newest commit at-or-before tsAfterV1 (= v1) on
-    t.vacuumOlderThan(tsAfterV1)
+    t.vacuum(t.retentionSince(tsAfterV1).get)
     assert(t.read(1).orderBy("k").collect().map(_.getDouble(1)).toSeq
       == Seq(9.0, 2.0)) // v1 state: k1 updated, k2 original
     assert(t.read().orderBy("k").collect().map(_.getDouble(1)).toSeq == Seq(9.0, 8.0))
