@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{Ingest, SnapshotTable}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Protocol sweeps reported as bench extra metrics (not gate entries —
@@ -241,14 +241,14 @@ object BenchExtras {
         finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
       }
       val (_, manifestSec) = time(t.countFromManifest)
-      // planning = manifest filter + scan construction, zero jobs. The
+      // planning = the file planner's manifest filter, zero jobs. The
       // probe's key range spans ~20 FILES at every tier (constant result
       // size), so fc_plan isolates metadata cost against file count —
       // a fixed-fraction range would instead grow the planned set 200x
       // and measure scan construction, not planning.
       val hi = rows * 20.0 / nFiles
-      val (pruned, planSec) = time(t.readRange("key", 0.0, hi))
-      val (_, execSec) = time(pruned.filter(col("key") <= hi).count())
+      val (_, planSec) = time(t.planFiles(col("key") <= hi))
+      val (_, execSec) = time(t.read().filter(col("key") <= hi).count())
       // Manifest-tailed streaming at the file-count tiers (1k vs 200k):
       // append ONE small commit, then drain a snapshot stream starting
       // AT that commit. The source plans the micro-batch from the
@@ -363,19 +363,16 @@ object BenchExtras {
     * where an unskipped scan is the difference between reading 8 files
     * and reading the table. */
   def skipRatios(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    def ratio(t: SnapshotTable, colName: String, lo: Double, hi: Double): Double = {
-      val total = t.files.size
-      val planned = t.filesInRange(colName, lo, hi).size
-      math.rint(planned.toDouble / total * 10000) / 10000
-    }
+    def ratio(t: SnapshotTable, cond: Column): Double =
+      math.rint(t.planFiles(cond).size.toDouble / t.files.size * 10000) / 10000
     val ranged = Governance.stagedLineitemRanged(spark, sfDir)
     val z = Governance.stagedOrdersZorder(spark, sfDir)
     Seq(
       // stats_skipping_read's probe: l_quantity >= 49 over 8 range files
-      "skip_ratio_stats" -> ratio(ranged, "l_quantity", 49.0, Double.MaxValue),
+      "skip_ratio_stats" -> ratio(ranged, col("l_quantity") >= 49.0),
       // layout_zorder's probes: BOTH curve dimensions must prune
-      "skip_ratio_zorder_cust" -> ratio(z, "o_custkey", 100.0, 200.0),
-      "skip_ratio_zorder_key" -> ratio(z, "o_orderkey", 1000.0, 2000.0))
+      "skip_ratio_zorder_cust" -> ratio(z, col("o_custkey").between(100, 200)),
+      "skip_ratio_zorder_key" -> ratio(z, col("o_orderkey").between(1000, 2000)))
   }
 
   /** 10-round incremental MERGE protocol (the reference's refresh loop,

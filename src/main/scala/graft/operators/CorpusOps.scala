@@ -602,7 +602,7 @@ object CorpusOps {
             .cast("long"))
         .select("term", "doc_id", "tf", "sm")
         .repartitionByRange(4, col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(s"$root/postings")
+        .write.mode("overwrite").parquet(s"$root/postings.parquet")
       root
     })
 
@@ -632,7 +632,9 @@ object CorpusOps {
     (s, d) => {
       val root = ensureSearchIndex(s, d)
       val terms = Seq("dup", "vector", "merge")
-      s.read.parquet(s"$root/postings")
+      // the session's resolved postings frame: no footer inference and
+      // no data-source resolution per call
+      Tables.load(s, root, "postings")
         .filter(col("term").isin(terms: _*)) // pushed: row-group skip on sorted term
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_terms"), sum("sm").as("sm"))

@@ -101,8 +101,8 @@ object Governance {
   // Partition evolution (Iceberg spec-evolution analog): the base table
   // is laid out by o_orderstatus, a later append by o_orderpriority.
   // A filter on o_orderstatus prunes the old-layout files on metadata
-  // alone and applies a residual row filter to new-layout files only —
-  // no rewrite of existing data to change a table's partitioning.
+  // alone and keeps every new-layout file for the row filter — no
+  // rewrite of existing data to change a table's partitioning.
   private val partitionEvolution = OpQuery(
     "partition_evolution",
     Some("""
@@ -122,7 +122,7 @@ object Governance {
         .withColumn("o_orderkey", col("o_orderkey") + 20000000L)
       val table = Lakehouse.stagedOrders(s, d).shallowCloneTo(tmp("pevo"))
         .append(extra, partitionBy = Some("o_orderpriority"))
-      table.readWhereCol("o_orderstatus", "F")
+      table.read().filter(col("o_orderstatus") === "F")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           moneyOut(sum(dec(col("o_totalprice")))).as("sum_price"))
@@ -145,8 +145,7 @@ object Governance {
     """),
     (s, d) => {
       val table = stagedLineitemRanged(s, d)
-      table.readRange("l_quantity", 49.0, Double.MaxValue)
-        .filter(col("l_quantity") >= 49.0)
+      table.read().filter(col("l_quantity") >= 49.0)
         .agg(count(lit(1)).as("n"),
           moneyOut(sum(dec(col("l_extendedprice")))).as("sum_price"))
     })
@@ -205,7 +204,7 @@ object Governance {
   // OPTIMIZE ZORDER BY on the snapshot table: rewrite clustered on the
   // Morton curve of (o_custkey, o_orderkey), both scale-normalized from
   // MANIFEST stats (no extra scan), then serve a selective custkey range
-  // through stats-pruned planning. Multi-dim pruning is asserted in
+  // through the scan's stats-pruned file planning. Multi-dim pruning is asserted in
   // SnapshotTableSpec; values are oracle-checked here.
   private val optimizeZorder = OpQuery(
     "optimize_zorder_table",
@@ -216,8 +215,7 @@ object Governance {
     """),
     (s, d) => {
       val table = stagedOrdersZorder(s, d)
-      table.readRange("o_custkey", 100.0, 200.0)
-        .filter(col("o_custkey").between(100, 200))
+      table.read().filter(col("o_custkey").between(100, 200))
         .agg(count(lit(1)).as("n"),
           moneyOut(sum(dec(col("o_totalprice")))).as("sum_price"))
     })

@@ -346,12 +346,13 @@ object Lakehouse {
         ("count", flat.read().count()),
         ("limit1", flat.read().limit(1).count()),
         ("manifest_count", flat.countFromManifest), // zero data files read
-        ("partition_filter", parted.readWhere("A").count()),
-        // value filter plans from per-file footer stats (manifest range
-        // pruning — the Delta-stats skipping the reference's file-count
-        // value probe measures), then applies the residual predicate.
-        ("value_filter", ranged.readRange("l_quantity", 49.0, Double.MaxValue)
-          .filter(col("l_quantity") >= 49.0).count()))
+        // both filters prune in the scan's file planner: the partition
+        // filter on the manifest's partition values, the value filter on
+        // per-file footer stats (the Delta-stats skipping the reference's
+        // file-count value probe measures)
+        ("partition_filter",
+          parted.read().filter(col("l_returnflag") === "A").count()),
+        ("value_filter", ranged.read().filter(col("l_quantity") >= 49.0).count()))
         .toDF("probe", "n")
         .orderBy("probe")
     })
@@ -2398,11 +2399,11 @@ object Lakehouse {
   // Hidden partitioning, time shape (Iceberg partition-transform analog:
   // spec §"Partition Transforms"): the table is laid out by
   // months(o_orderdate); the query filters the RAW timestamp column and
-  // the planner maps the range onto month partitions from the manifest
-  // alone — the 100 TB time-series shape, where a one-quarter query
-  // plans a handful of manifest entries whatever the table size. A
-  // second commit appends an UNPARTITIONED slice (layout evolution);
-  // the same read picks its rows up through the residual filter.
+  // the file planner maps the range onto month partitions from the
+  // manifest alone — the 100 TB time-series shape, where a one-quarter
+  // query plans a handful of manifest entries whatever the table size. A
+  // second commit appends an UNPARTITIONED slice (layout evolution); its
+  // files stay planned and the filter picks their rows.
   private val partitionXformTime = OpQuery(
     "partition_xform_time",
     Some("""
@@ -2425,8 +2426,9 @@ object Lakehouse {
         .create(o.drop("o_orderkey"),
           partitionBy = Some("months(o_orderdate)"))
         .append(o.filter(col("o_orderkey") % 11 === 0).drop("o_orderkey"))
-      t.readWhereColRange("o_orderdate",
-          "1995-01-01 00:00:00", "1995-03-31 23:59:59")
+      t.read()
+        .filter(col("o_orderdate")
+          .between("1995-01-01 00:00:00", "1995-03-31 23:59:59"))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           min(col("o_orderdate")).cast("date").as("min_d"),
@@ -2435,10 +2437,10 @@ object Lakehouse {
     })
 
   // Hidden partitioning, point-lookup shape: bucket(8, o_custkey) lays
-  // the table out by a hash the user never sees; an equality probe on
+  // the table out by a hash the user never sees; an equality filter on
   // the raw key is planned onto exactly one bucket's files (CRC-32 of
-  // the literal, computed driver-side from the manifest) with the
-  // residual filter discarding the bucket's other keys.
+  // the literal, computed driver-side from the manifest), and the filter
+  // discards the bucket's other keys.
   private val partitionXformBucket = OpQuery(
     "partition_xform_bucket",
     Some("""
@@ -2451,7 +2453,7 @@ object Lakehouse {
       val o = Tables.load(s, d, "orders").select("o_custkey", "o_totalprice")
       val t = new SnapshotTable(s, tmp("pxb"))
         .create(o, partitionBy = Some("bucket(8, o_custkey)"))
-      t.readWhereColXform("o_custkey", "1")
+      t.read().filter(col("o_custkey") === 1L)
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("o_totalprice"))))

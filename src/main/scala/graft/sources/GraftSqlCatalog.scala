@@ -47,6 +47,10 @@ object SnapshotFilters {
     case Not(c) => toColumn(c).map(!_)
     case _ => None
   }
+
+  /** The conjunction of the translatable `filters`; None when none is. */
+  def toCondition(filters: Array[Filter]): Option[Column] =
+    filters.flatMap(toColumn).reduceOption(_ && _)
 }
 
 /** DataSource-V2 catalog plugin over a directory of snapshot tables —
@@ -748,8 +752,8 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
     table.propertiesMap.get(GraftV2Table.DvDeleteProp).contains("true")
 
   /** SQL UPDATE / MERGE INTO / arbitrary-predicate DELETE: group-based
-    * copy-on-write ([[GraftRowLevelOperation]] — partition-scoped when
-    * the command's condition names the identity partition column).
+    * copy-on-write ([[GraftRowLevelOperation]] — scoped to the files
+    * the planner keeps for the command's condition).
     * Execution happens in [[graft.plans.GraftRowLevelOps]], which
     * commits the replacement query through the engine's DataFrame
     * write path. */
@@ -768,7 +772,7 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
           !table.hasPendingDeltas)
         new GraftDeltaRowLevelOperation(table, partSpec, info.command,
           schema, qualifiedName)
-      else new GraftRowLevelOperation(table, partSpec, info.command,
+      else new GraftRowLevelOperation(table, info.command,
         schema, qualifiedName)
   }
 
@@ -887,23 +891,17 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
           val rel: BaseRelation with TableScan =
             if (nCounts > 0)
               new GraftCountRelation(context, table, cols, nCounts)
-            else new GraftCatalogRelation(context, table, v, cols, filters,
-              partSpec.map(PartitionTransform.parse(_).col))
+            else new GraftCatalogRelation(context, table, v, cols, filters)
           rel.asInstanceOf[T]
         }
 
         /** Manifest-derived size/rows so Catalyst's join strategy sees
-          * real magnitudes (a dimension-sized table auto-broadcasts); a
-          * pushed partition-source-column equality scales the estimate
-          * to the planned files (identity AND hidden layouts) — all
-          * metadata, never a job. */
+          * real magnitudes (a dimension-sized table auto-broadcasts);
+          * pushed filters scale the estimate to the files the planner
+          * keeps ([[GraftV2Table.plannedSize]]) — all metadata, never a
+          * job. */
         override def estimateStatistics(): Statistics = new Statistics {
-          private val prunedSize: Option[(Long, Long)] =
-            if (v >= 0) None
-            else partSpec.map(PartitionTransform.parse(_).col).flatMap { pc =>
-              GraftV2Table.partitionPredicate(filters, pc)
-                .flatMap { case (canon, _) => table.prunedSizeIn(pc, canon) }
-            }
+          private val prunedSize = GraftV2Table.plannedSize(table, v, filters)
           override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(
             math.max(1L, prunedSize.map(_._1)
               .getOrElse(table.manifestSizeBytes)))
@@ -931,12 +929,13 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
     true
   }
 
-  /** `DELETE FROM … WHERE` lowers to the engine's stat-pruned
-    * copy-on-write delete when [[conditionOf]] states every pushed
+  /** `DELETE FROM … WHERE` lowers to the engine's copy-on-write
+    * [[SnapshotTable.delete]] when [[conditionOf]] states every pushed
     * filter exactly (a conjunction of comparisons against literals);
     * anything else is declined, and Spark rewrites through its row-level
-    * replace-data plan instead. Cost: only files whose min/max overlap
-    * the numeric conjuncts rewrite; the rest carry by reference. */
+    * replace-data plan instead. Cost: only the files the planner keeps
+    * (partition value, hidden-layout transform, footer min/max) rewrite,
+    * under the table's layout; the rest carry by reference. */
   private def allTrue(filters: Array[Filter]): Boolean =
     filters.forall(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
 
@@ -951,7 +950,7 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
     if (allTrue(filters)) { truncateTable(); return }
     val conds = filters.map(f => conditionOf(f).getOrElse(
       throw new UnsupportedOperationException(s"unsupported DELETE predicate: $f")))
-    table.delete(conds.reduce(_ && _), partitionBy = partSpec)
+    table.delete(conds.reduce(_ && _))
     ()
   }
 
@@ -1043,7 +1042,6 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
                       .filter(_ => overwriteFilters.length == 1 &&
                         overwriteFilters.forall(f =>
                           f.references.sameElements(Array(pc))))
-                      .map(_._1)
                       .getOrElse(throw new UnsupportedOperationException(
                         s"$qualifiedName: unsupported overwrite condition " +
                           s"${overwriteFilters.mkString(", ")} — only a " +
@@ -1256,26 +1254,41 @@ object GraftV2Table {
     case _ => None
   }
 
-  /** Extract a partition predicate usable for manifest pruning from the
-    * pushed filter set: `pc = v` or `pc IN (…)` with canonicalizable
-    * values. Returns (canonical directory strings, original typed values
-    * for the residual row filter on foreign-layout files). */
+  /** Extract a partition predicate from the pushed filter set: `pc = v`
+    * or `pc IN (…)` with canonicalizable values — the replaced set of an
+    * `INSERT OVERWRITE … PARTITION`, and the equality arm of the file
+    * planner ([[SnapshotTable.planFiles]]). Returns the canonical
+    * directory strings. */
   def partitionPredicate(pushed: Array[Filter],
-      pc: String): Option[(Seq[String], Seq[Any])] = {
+      pc: String): Option[Seq[String]] = {
     import org.apache.spark.sql.sources._
     pushed.collectFirst {
       case EqualTo(a, v) if a == pc && canonPartValue(v).isDefined =>
-        (Seq(canonPartValue(v).get), Seq(v))
+        Seq(canonPartValue(v).get)
       // a static `PARTITION (pc = v)` clause arrives null-safe; with a
       // non-null literal it is plain equality
       case EqualNullSafe(a, v) if v != null && a == pc &&
           canonPartValue(v).isDefined =>
-        (Seq(canonPartValue(v).get), Seq(v))
+        Seq(canonPartValue(v).get)
       case In(a, vs) if a == pc && vs.nonEmpty && vs.length <= 1000 &&
           vs.forall(x => x != null && canonPartValue(x).isDefined) =>
-        (vs.map(canonPartValue(_).get).toSeq, vs.toSeq)
+        vs.map(canonPartValue(_).get).toSeq
     }
   }
+
+  /** Manifest (bytes, rows) of the files a scan of `table` with the
+    * pushed `filters` plans ([[SnapshotTable.planFiles]]) — the scan-size
+    * estimate, metadata only. None (estimate the whole table) when no
+    * filter translates, the read is pinned to a version (`version` >= 0)
+    * or merge-on-read deltas are pending (their rows are not in files
+    * the planner sees). */
+  def plannedSize(table: SnapshotTable, version: Int,
+      filters: Array[Filter]): Option[(Long, Long)] =
+    SnapshotFilters.toCondition(filters)
+      .filter(_ => version < 0 && !table.hasPendingDeltas).map { c =>
+        val planned = table.planFiles(c)
+        (planned.map(_.bytes).sum, planned.map(_.rows).sum)
+      }
 }
 
 /** One-row relation answering pushed ungrouped COUNT(*) aggregates
@@ -1303,16 +1316,13 @@ final class GraftCountRelation(context: SQLContext, table: SnapshotTable,
 }
 
 /** The v1 relation a [[V1Scan]] lowers to: projected + pre-filtered
-  * manifest-planned scan at one version. A pushed equality or IN-list on
-  * the table's partition SOURCE column plans only the matching files
-  * from the manifest — identity partitions prune exactly; hidden layouts
-  * (days/months/bucket/truncate) keep only the buckets/days/prefixes the
-  * literals transform to, with the residual row filter where a kept
-  * bucket may hold other values — so SQL point queries on the partition
-  * key stay O(partition) at any table size. */
+  * manifest-planned scan at one version. The pushed filters are applied
+  * to the table's read, so they reach its [[ManifestFileIndex]], which
+  * plans only the files a matching row may live in (partition values,
+  * hidden-layout transforms and footer stats) — SQL point and range
+  * queries stay O(matching files) at any table size. */
 final class GraftCatalogRelation(context: SQLContext, table: SnapshotTable,
-    version: Int, required: StructType, pushed: Array[Filter],
-    partSourceCol: Option[String])
+    version: Int, required: StructType, pushed: Array[Filter])
   extends BaseRelation with TableScan {
 
   override def sqlContext: SQLContext = context
@@ -1322,48 +1332,26 @@ final class GraftCatalogRelation(context: SQLContext, table: SnapshotTable,
     * its scan relation (ADD CONSTRAINT's validation plan). */
   private[graft] def snapshotTable: SnapshotTable = table
 
-  /** Manifest-derived bytes (partition-scaled when an identity-partition
-    * equality was pushed), so the planner broadcasts dimension-sized
-    * tables on the V1-fallback path too — without this Catalyst sees
+  /** Manifest-derived bytes (scaled to the planned files when filters
+    * were pushed), so the planner broadcasts dimension-sized tables on
+    * the V1-fallback path too — without this Catalyst sees
     * `defaultSizeInBytes` (Long.MaxValue) and plans SortMergeJoin for
     * every catalog join, leaving AQE to rescue after a full fact-side
     * shuffle. All metadata, never a job. */
-  override lazy val sizeInBytes: Long = {
-    val prunedBytes =
-      if (version >= 0) None
-      else partSourceCol.flatMap { pc =>
-        GraftV2Table.partitionPredicate(pushed, pc)
-          .flatMap { case (canon, _) => table.prunedSizeIn(pc, canon) }
-          .map(_._1)
-      }
-    math.max(1L, prunedBytes.getOrElse(table.manifestSizeBytesAt(version)))
-  }
+  override lazy val sizeInBytes: Long = math.max(1L,
+    GraftV2Table.plannedSize(table, version, pushed).map(_._1)
+      .getOrElse(table.manifestSizeBytesAt(version)))
 
   private def base: DataFrame = {
     // engine metadata columns (stable row id / row address — row-level
     // rewrites, explicit `SELECT __graft_rid / __graft_dv_file`) ride
-    // the id- or address-attached scans — partition pruning is skipped
-    // there (correctness first; these paths are DML-shaped or
-    // diagnostic, never the hot read path)
+    // the id- or address-attached scans
     val wantsAddr = required.fieldNames.contains(SnapshotTable.DvFileCol) ||
       required.fieldNames.contains(SnapshotTable.DvPosCol)
     val wantsRid = required.fieldNames.contains(SnapshotTable.RidCol)
-    if (wantsAddr)
-      return table.readAddressedDml(wantsRid, version)
-    if (wantsRid)
-      return table.readWithRowIds(version)
-    // manifest partition pruning: current-version reads only (the
-    // pruned planner works on head state); equality or IN-list on the
-    // partition source column, any value type with a canonical
-    // directory-string form, identity and hidden layouts alike
-    val prunedEq =
-      if (version >= 0) None
-      else partSourceCol.flatMap { pc =>
-        GraftV2Table.partitionPredicate(pushed, pc).flatMap {
-          case (canon, typed) => table.prunedWhereColIn(pc, canon, typed)
-        }
-      }
-    prunedEq.getOrElse(table.read(version))
+    if (wantsAddr) table.readAddressedDml(wantsRid, version)
+    else if (wantsRid) table.readWithRowIds(version)
+    else table.read(version)
   }
 
   override def buildScan(): RDD[Row] = {
@@ -1381,25 +1369,20 @@ final class GraftCatalogRelation(context: SQLContext, table: SnapshotTable,
   *
   * The replacement GROUP is the file: Spark reads groups through this
   * operation's scan, rewrites their rows via the command's replacement
-  * query, and the write replaces exactly what was read. When the
-  * command's condition carries an equality/IN on the partition SOURCE
-  * column (identity or hidden layout — literals map through the
-  * layout's transform), [[pushFilters]] prunes whole conforming
-  * partitions out of the scan — rows there cannot match, and their
-  * files carry by reference through [[SnapshotTable.replaceFiles]] —
+  * query, and the write replaces exactly what was read. The filters
+  * Spark pushes from the command's condition go to the file planner
+  * ([[SnapshotTable.planFiles]]): files whose partition value (identity
+  * or hidden layout) or footer stats prove no row can match drop out of
+  * the scan and carry by reference through [[SnapshotTable.replaceFiles]],
   * so a partition-scoped UPDATE at 100 TB rewrites one partition, not
-  * the table. Foreign-layout and null-partition files always stay in
-  * the replaced set
-  * (their rows might match; group semantics forbid row filtering).
-  * Without a usable partition predicate the whole table is one group
-  * (full OVERWRITE, Delta's unpruned-merge shape).
+  * the table. Every kept file is replaced whole (group semantics forbid
+  * row filtering); with no prunable condition that is the whole table.
   *
   * The planned (replace, carry) split travels to the executor strategy
   * inside [[GraftReplaceWrite]] — scan planning runs before V2Writes
   * builds the write, and both come from this one operation instance. */
 final class GraftRowLevelOperation(
     table: SnapshotTable,
-    partSpec: Option[String],
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
     tableSchema: StructType,
     qualifiedName: String)
@@ -1439,36 +1422,15 @@ final class GraftRowLevelOperation(
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
         // GROUP pruning only, never row filtering: every row of every
         // kept file must reach the replacement query, or carried rows
-        // would vanish from the rewrite. MoR state disables pruning —
-        // delta rows are not file-addressable groups. Hidden layouts
-        // prune too: the condition's literals map through the layout's
-        // transform (months/days/bucket/truncate), and a same-layout
-        // file whose partition value differs from every transformed
-        // literal cannot hold a matching row — so a one-month UPDATE on
-        // a months(ts) table rewrites one month, not the table.
-        val spec = partSpec.map(PartitionTransform.parse)
+        // would vanish from the rewrite. A file the planner drops cannot
+        // hold a row matching the condition (its partition value or
+        // footer stats prove it), so it carries by reference. MoR state
+        // disables pruning — delta rows are not file-addressable groups.
         plannedReplace =
           if (table.hasPendingDeltas) None
-          else spec.flatMap { sp =>
-            GraftV2Table.partitionPredicate(filters, sp.col).map { case (canon, _) =>
-              val vals = canon
-                .map(PartitionTransform.applyLiteral(sp.tag, _)).toSet
-              def sameLayout(e: SnapshotTable.FileEntry): Boolean =
-                if (sp.tag == null) e.partCol == sp.col
-                else e.xformCol == sp.col && e.xformTag == sp.tag
-              // carry = conforming partitions the predicate excludes;
-              // replace = matching partitions + foreign layouts + null
-              val (carry, replace) = table.files.partition(e =>
-                sameLayout(e) && e.partValue != null && !vals(e.partValue))
-              reported = filters.filter {
-                case org.apache.spark.sql.sources.EqualTo(a, _) => a == sp.col
-                case org.apache.spark.sql.sources.In(a, _) => a == sp.col
-                case _ => false
-              }
-              val _ = carry
-              replace
-            }
-          }
+          else Some(SnapshotFilters.toCondition(filters)
+            .fold(table.files)(table.planFiles(_)))
+        reported = filters.filter(f => SnapshotFilters.toColumn(f).isDefined)
         filters // all residual: the rewrite plan re-evaluates the condition
       }
       override def pushedFilters(): Array[Filter] = reported
@@ -1495,7 +1457,7 @@ final class GraftRowLevelOperation(
               new GraftEntriesRelation(context, table, entries, scanSchema)
             case None =>
               new GraftCatalogRelation(context, table, -1, scanSchema,
-                Array.empty, None)
+                Array.empty)
           }).asInstanceOf[T]
       }
     }

@@ -1,10 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftStreamShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, GenericInternalRow, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,17 +21,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * regardless of file count — the scan's split computation uses the
   * manifest's recorded lengths directly.
   *
+  * File pruning: Spark hands [[listFiles]] every filter it pushes into
+  * the scan. Their v1 forms go to `mayHold` (the table's one entry
+  * predicate, [[SnapshotTable.planFiles]]), which drops an entry only
+  * when its partition value (identity layout, or the layout's transform
+  * of the literal) or its footer min/max proves no row can satisfy a
+  * conjunct; everything else is kept as "may match" and filtered by
+  * the scan. So every reader of the table (`read().filter`, the SQL
+  * catalog scan, path-addressed and deletion-vector reads) prunes
+  * without asking, metadata-only, zero files opened.
+  *
   * `partSchema` (CONVERTed tables whose pre-existing files do NOT carry
   * the partition column — the standard Spark/Hive `pc=v/` layout): files
   * group into one [[PartitionDirectory]] per manifest partition value,
   * and Spark's scan surfaces the column from those rows exactly like a
   * catalog-partitioned parquet table. Partition filters pushed by the
-  * planner prune groups here — metadata-only, zero files opened.
+  * planner prune groups here.
   */
 private[graft] class ManifestFileIndex(
     spark: SparkSession,
     root: Path,
     entries: Seq[SnapshotTable.FileEntry],
+    mayHold: Seq[Filter] => SnapshotTable.FileEntry => Boolean,
     partSchema: StructType = StructType(Nil)) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
@@ -72,9 +84,12 @@ private[graft] class ManifestFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val filters = GraftStreamShim.sourceFilters(dataFilters)
+    val planned =
+      if (filters.isEmpty) entries else entries.filter(mayHold(filters))
     if (partSchema.isEmpty)
-      return Seq(PartitionDirectory(InternalRow.empty, entries.map(status)))
-    val groups = entries.groupBy(_.partValue).toSeq.map { case (pv, es) =>
+      return Seq(PartitionDirectory(InternalRow.empty, planned.map(status)))
+    val groups = planned.groupBy(_.partValue).toSeq.map { case (pv, es) =>
       (new GenericInternalRow(Array[Any](typedValue(pv))),
         es.map(status)) }
     // evaluate pushed partition filters against the group rows —

@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Versioned parquet table with a manifest log — the engine's
   * parquet-snapshot algebra standing in for lakehouse DML (no
@@ -419,7 +420,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
       case None => (new org.apache.spark.sql.types.StructType(), withMeta)
     }
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      new ManifestFileIndex(spark, rootPath, entries, partSchema),
+      new ManifestFileIndex(spark, rootPath, entries, mayHold(_, entries),
+        partSchema),
       partitionSchema = partSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
@@ -651,7 +653,19 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * version — the read side of [[replaceFiles]] (group-based row-level
     * SQL rewrites read only the replaced file groups). */
   private[graft] def readEntriesResolved(entries: Seq[FileEntry]): DataFrame =
-    baseScan(entries, dvEntries(currentVersion))
+    withTableColumns(baseScan(entries, dvEntries(currentVersion)), currentVersion)
+
+  /** `df`, a scan of some of version `v`'s files, with the columns that
+    * only other files of `v` carry added as nulls (what a full read
+    * serves for a file without them): a scan of the files a planner kept
+    * must still see every column of the table — a schema-evolving MERGE
+    * widens only the files it rewrites. */
+  private def withTableColumns(df: DataFrame, v: Int): DataFrame = {
+    val missing = read(v).schema.filterNot(f => df.columns.contains(f.name))
+    if (missing.isEmpty) df
+    else df.select(col("*") +:
+      missing.map(f => lit(null).cast(f.dataType).as(f.name, f.metadata)): _*)
+  }
 
   // ---------------------------------------------------- column mapping
   // (Delta columnMapping.mode=name analog.) Physical column names in
@@ -1114,7 +1128,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val addressed =
       if (dvs.isEmpty) readEntriesAddressed(entries, -1, keepRid = true)
       else addressedMinusDvs(entries, dvs, -1, keepRid = true)
-    withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol)
+    withTableColumns(withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol),
+      currentVersion)
   }
 
   /** Scan with stable row ids: every row of the current (or pinned)
@@ -1403,7 +1418,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * files and pending deltas are untouched — O(source) like a streaming
     * sink. `partitionBy` may differ from earlier commits (Iceberg-style
     * partition evolution): each file entry remembers ITS partition
-    * column, and [[readWhereCol]] prunes exactly where metadata allows.
+    * column, and [[planFiles]] prunes exactly where metadata allows.
     *
     * Concurrency: appends NEVER semantically conflict with anything
     * (Delta's append-vs-anything rule) — losing the write-once manifest
@@ -1436,176 +1451,91 @@ class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** Partition-evolution-aware file planning for `colName = value`:
-    * entries partitioned BY that column prune on metadata alone (first
-    * seq, no row filter needed); entries laid out under another (or no)
-    * partition column stay in the plan with a residual row filter
-    * (second seq) — exactly Iceberg's old-spec residual evaluation. */
-  def planFiles(colName: String, value: String): (Seq[FileEntry], Seq[FileEntry]) = {
-    val (exact, rest) = fileEntries(currentVersion).partition(_.partCol == colName)
-    (exact.filter(_.partValue == value), rest)
+  /** The one file planner: the files of `version` (default: latest)
+    * that may hold a row where `cond` is TRUE. `cond` is resolved
+    * against the table, its literal casts are folded, and its conjuncts
+    * are translated to v1 source filters for [[mayHold]]. Scans prune by
+    * the same predicate ([[ManifestFileIndex]]), so `read().filter(cond)`
+    * opens only these files; [[delete]] and [[update]] rewrite exactly
+    * them, and the SQL scan, row-level ops and size estimates plan
+    * through here. Metadata only: no job, and no footer read beyond the
+    * per-origin schema cache. Pending merge-on-read (MoR) deltas are not
+    * base files and never appear in the result. */
+  def planFiles(cond: Column, version: Int = -1): Seq[FileEntry] = {
+    val v = if (version < 0) currentVersion else version
+    val entries = fileEntries(v)
+    if (entries.isEmpty) entries
+    else entries.filter(mayHold(org.apache.spark.sql.GraftStreamShim
+      .sourceFiltersOf(read(v), cond), entries, physColName(_, v)))
   }
 
-  /** Evolution-aware partition read: metadata-pruned files (no filter —
-    * the partition value guarantees every row) unioned with residual-
-    * filtered scans of files from other layouts. */
-  def readWhereCol(colName: String, value: String): DataFrame = {
-    require(deltaEntries(currentVersion).isEmpty,
-      s"readWhereCol on $root requires compacted state (pending MoR deltas)")
-    val df = whereColUnion(colName, value)
-    require(df.isDefined, s"no files for $colName = $value")
-    df.get
-  }
-
-  /** [[readWhereCol]] when its preconditions hold — compacted state and
-    * at least some files laid out under `colName` — else None so
-    * callers (e.g. the SQL catalog's scan) fall back to the full
-    * manifest-planned read. Best-effort metadata pruning with identical
-    * row semantics either way. */
-  def prunedWhereCol(colName: String, value: String): Option[DataFrame] = {
-    if (deltaEntries(currentVersion).nonEmpty) return None
-    if (!fileEntries(currentVersion).exists(_.partCol == colName)) return None
-    whereColUnion(colName, value)
-  }
-
-  /** The shared body of [[readWhereCol]] and [[prunedWhereCol]]: the
-    * metadata-pruned scan unioned with the residual-filtered one, None
-    * when [[planFiles]] keeps no file. */
-  private def whereColUnion(colName: String, value: String): Option[DataFrame] = {
-    val (pruned, residual) = planFiles(colName, value)
-    val dvs = dvEntries(currentVersion)
-    val parts = Seq(
-      if (pruned.nonEmpty) Some(baseScan(pruned, dvs)) else None,
-      if (residual.nonEmpty)
-        Some(baseScan(residual, dvs).filter(col(colName) === value))
-      else None).flatten
-    parts.reduceOption(_ unionByName _)
-  }
-
-  /** Manifest file planning for `colName IN (canon values)` across ALL
-    * layouts an entry may carry: identity partitions prune exactly
-    * (every row matches — no filter); HIDDEN layouts (days/months/
-    * bucket/truncate of `colName`) keep only the buckets/days/prefixes
-    * the literals transform to — the plan-time mirror of the write-side
-    * function — but a kept bucket may hold other values, so those files
-    * take the residual row filter, as do foreign-layout files. Returns
-    * (exact, residual) entry lists; None = no layout on `colName` at
-    * all (the caller falls back to the full manifest plan). */
-  private def planFilesIn(colName: String, canon: Seq[String])
-      : Option[(Seq[FileEntry], Seq[FileEntry])] = {
-    val entries = fileEntries(currentVersion)
-    val anyLayout = entries.exists(e => e.partCol == colName ||
-      (e.xformCol == colName && e.xformTag != null))
-    if (!anyLayout) return None
-    val vals = canon.toSet
-    val (ident, rest0) = entries.partition(_.partCol == colName)
-    val (xf, rest) = rest0.partition(e =>
-      e.xformCol == colName && e.xformTag != null)
-    val identKeep = ident.filter(e => e.partValue != null && vals(e.partValue))
-    val xfKeep = xf.filter(e => e.partValue != null && canon.exists(v =>
-      e.partValue == PartitionTransform.applyLiteral(e.xformTag, v)))
-    Some((identKeep, xfKeep ++ rest))
-  }
-
-  /** [[prunedWhereCol]] generalized to a value SET (SQL `IN`-list, or a
-    * single non-string equality canonicalized to its directory form)
-    * and to hidden-partition layouts — see [[planFilesIn]]. None when
-    * preconditions fail; Some(empty frame) when the manifest PROVES no
-    * file can match (zero data files opened). */
-  def prunedWhereColIn(colName: String, canon: Seq[String],
-      typed: Seq[Any]): Option[DataFrame] = {
-    if (deltaEntries(currentVersion).nonEmpty) return None
-    planFilesIn(colName, canon).map { case (exact, residual) =>
-      val dvs = dvEntries(currentVersion)
-      val parts = Seq(
-        if (exact.nonEmpty) Some(baseScan(exact, dvs)) else None,
-        if (residual.nonEmpty)
-          Some(baseScan(residual, dvs).filter(col(colName).isin(typed: _*)))
-        else None).flatten
-      if (parts.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          read(currentVersion).schema)
-      else parts.reduce(_ unionByName _)
+  /** The entry predicate of [[planFiles]] and [[ManifestFileIndex]]: may
+    * `e` (one of `entries`) hold a row where all of the ANDed v1
+    * `filters` are TRUE? A conjunct rules the file out only when
+    *   - its partition value proves it: an equality or IN-list on the
+    *     layout column whose canonical literal (under a hidden layout,
+    *     the literal's [[PartitionTransform.applyLiteral]]) is not the
+    *     file's value, or a range bound past the value where the layout
+    *     orders like the column (identity strings and dates, `days` and
+    *     `months` of dates and timestamps, `truncate` of strings); or
+    *   - its footer stats prove it: a numeric bound
+    *     ([[SnapshotTable.numericBound]]) outside the file's
+    *     (min, max) of the column ([[statsOf]]).
+    * And/Or combine; any other filter, a file without stats and a null
+    * partition value "may match". `phys` maps the filters' column names
+    * to the physical names stats and layouts are recorded under. */
+  private def mayHold(filters: Seq[org.apache.spark.sql.sources.Filter],
+      entries: Seq[FileEntry],
+      phys: String => String = identity): FileEntry => Boolean = {
+    import org.apache.spark.sql.sources._
+    val stats = filters.flatMap(_.references).distinct
+      .map(c => c -> statsOf(phys(c), entries)).toMap
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val stamp = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    // the literal's canonical form, where layout `tag` orders partition
+    // values like the column's values (the day and month prefixes of a
+    // timestamp are those of its session-zone rendering)
+    def ordered(v: Any, tag: String): Option[String] = (v, tag) match {
+      case (s: String, null) => Some(s)
+      case (s: String, t) if t.startsWith("trunc") => Some(s)
+      case (_: java.sql.Date | _: java.time.LocalDate, null | "days" | "months") =>
+        Some(v.toString)
+      case (t: java.sql.Timestamp, "days" | "months") =>
+        Some(stamp.format(t.toInstant.atZone(zone)))
+      case (t: java.time.Instant, "days" | "months") => Some(stamp.format(t.atZone(zone)))
+      case (t: java.time.LocalDateTime, "days" | "months") => Some(stamp.format(t))
+      case _ => None
     }
-  }
-
-  /** Manifest bytes/rows for the entries [[prunedWhereColIn]] would plan
-    * (pruned partitions + residual-layout files) — stats estimation for
-    * the SQL catalog, metadata only. None = no pruning applies. */
-  def prunedSizeIn(colName: String, canon: Seq[String]): Option[(Long, Long)] = {
-    if (hasPendingDeltas) return None
-    planFilesIn(colName, canon).map { case (exact, residual) =>
-      val planned = exact ++ residual
-      (planned.map(_.bytes).sum, planned.map(_.rows).sum)
+    def byPartition(f: Filter, e: FileEntry): Boolean = {
+      val (c, tag) = if (e.partCol != null) (e.partCol, null) else (e.xformCol, e.xformTag)
+      val pv = Option(e.partValue).filter(_ != HiveNullPart).map(
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName)
+      def past(v: Any, sign: Int): Boolean = ordered(v, tag).exists { x =>
+        sign * UTF8String.fromString(pv.get).compareTo(UTF8String.fromString(
+          PartitionTransform.applyLiteral(tag, x))) < 0 }
+      c == null || pv.isEmpty || !f.references.forall(phys(_) == c) || (f match {
+        case EqualTo(a, v) =>
+          GraftV2Table.partitionPredicate(Array(f), a)
+            .orElse(ordered(v, tag).map(Seq(_)))
+            .forall(_.exists(PartitionTransform.applyLiteral(tag, _) == pv.get))
+        case GreaterThan(_, v) => !past(v, 1)
+        case GreaterThanOrEqual(_, v) => !past(v, 1)
+        case LessThan(_, v) => !past(v, -1)
+        case LessThanOrEqual(_, v) => !past(v, -1)
+        case _ => true
+      })
     }
-  }
-
-  /** Transform-aware file planning for `colName = value` over hidden
-    * partition layouts ([[PartitionTransform]]): returns (identity-pruned
-    * — every row matches, no filter needed; transform-pruned — the file's
-    * partition is `xf(value)` but may hold other values of the same
-    * day/bucket/prefix, residual filter required; unprunable — other
-    * layouts, residual filter required). Metadata-only: consults the
-    * manifest's per-file partition values, never the data. */
-  def planFilesXform(colName: String, value: String)
-      : (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) = {
-    val entries = fileEntries(currentVersion)
-    val (ident, rest0) = entries.partition(_.partCol == colName)
-    val (xf, rest) = rest0.partition(e =>
-      e.xformCol == colName && e.xformTag != null)
-    (ident.filter(_.partValue == value),
-      xf.filter(e =>
-        e.partValue == PartitionTransform.applyLiteral(e.xformTag, value)),
-      rest)
-  }
-
-  /** Hidden-partition-aware point read: `colName = value` filtering on
-    * the RAW column while the layout is a transform of it — the day,
-    * bucket, or prefix containing `value` is located from the manifest
-    * alone and only those files (plus any foreign-layout files) are
-    * scanned, with the residual row filter applied where the partition
-    * value doesn't already guarantee every row. */
-  def readWhereColXform(colName: String, value: String): DataFrame = {
-    require(deltaEntries(currentVersion).isEmpty,
-      s"readWhereColXform on $root requires compacted state (pending MoR deltas)")
-    val (ident, xf, rest) = planFilesXform(colName, value)
-    val dvs = dvEntries(currentVersion)
-    val parts = Seq(
-      if (ident.nonEmpty) Some(baseScan(ident, dvs)) else None,
-      if (xf.nonEmpty)
-        Some(baseScan(xf, dvs).filter(col(colName) === value))
-      else None,
-      if (rest.nonEmpty)
-        Some(baseScan(rest, dvs).filter(col(colName) === value))
-      else None).flatten
-    require(parts.nonEmpty, s"no files for $colName = $value")
-    parts.reduce(_ unionByName _)
-  }
-
-  /** Range read `lo <= colName <= hi` (canonical string forms, e.g. ISO
-    * dates) with metadata range pruning: identity layouts and
-    * order-preserving transforms (day/month/prefix — NOT buckets) keep
-    * only files whose partition value falls in the transformed range;
-    * bucketed and foreign layouts scan with the row filter. This is the
-    * time-series shape at 100 TB: `days(event_ts)` plans a one-day query
-    * from the manifest entries of that day, whatever the table size. */
-  def readWhereColRange(colName: String, lo: String, hi: String): DataFrame = {
-    require(deltaEntries(currentVersion).isEmpty,
-      s"readWhereColRange on $root requires compacted state (pending MoR deltas)")
-    val keep = fileEntries(currentVersion).filter { e =>
-      if (e.partCol == colName && e.partValue != null)
-        e.partValue >= lo && e.partValue <= hi
-      else if (e.xformCol == colName && e.xformTag != null &&
-          PartitionTransform.orderPreserving(e.xformTag))
-        e.partValue >= PartitionTransform.applyLiteral(e.xformTag, lo) &&
-          e.partValue <= PartitionTransform.applyLiteral(e.xformTag, hi)
-      else true // bucket / foreign layout: no metadata range pruning
+    def byStats(f: Filter, e: FileEntry): Boolean =
+      SnapshotTable.numericBound(f).forall { case (c, lo, hi) =>
+        stats(c)(e).forall { case (mn, mx) => mx >= lo && mn <= hi } }
+    def may(f: Filter, e: FileEntry): Boolean = f match {
+      case And(l, r) => may(l, e) && may(r, e)
+      case Or(l, r) => may(l, e) || may(r, e)
+      case In(a, vs) => vs.exists(v => may(EqualTo(a, v), e))
+      case EqualNullSafe(a, v) if v != null => may(EqualTo(a, v), e)
+      case _ => byPartition(f, e) && byStats(f, e)
     }
-    require(keep.nonEmpty, s"no files for $colName in [$lo, $hi]")
-    baseScan(keep, dvEntries(currentVersion))
-      .filter(col(colName).cast("string") >= lo &&
-        col(colName).cast("string") <= hi)
+    e => filters.forall(may(_, e))
   }
 
   /** Manifest-only column MIN/MAX (ANALYZE-style): combined from the
@@ -1621,40 +1551,21 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // an upper bound on the live range, so decline like pending deltas
     if (entries.isEmpty || deltaEntries(v).nonEmpty || dvEntries(v).nonEmpty) None
     else {
-      val ss = entries.map(statsOf(colName, entries))
+      val ss = entries.map(statsOf(physColName(colName), entries))
       if (ss.exists(_.isEmpty)) None
       else Some((ss.map(_.get._1).min, ss.map(_.get._2).max))
     }
   }
 
-  /** Data-skipping file selection: files whose [min,max] for `colName`
-    * intersects [lo,hi]. Files WITHOUT stats for the column are kept
-    * (soundness over pruning); the caller still applies the row filter. */
-  def filesInRange(colName: String, lo: Double, hi: Double): Seq[FileEntry] =
-    fileEntries(currentVersion).filter(mayIntersect(Some((colName, lo, hi))))
-
-  /** The footer-stats file skip: may a file hold a value of the
-    * interval's column inside the interval? A file without stats for
-    * the column may; with no interval, every file may. */
-  private def mayIntersect(
-      interval: Option[(String, Double, Double)]): FileEntry => Boolean =
-    interval match {
-      case None => _ => true
-      case Some((c, lo, hi)) =>
-        val stats = statsOf(c, fileEntries(currentVersion))
-        stats(_).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-
-  /** The footer (min, max) of `colName` for each of `entries`, in value
-    * space — what [[mayIntersect]] and [[statsMinMax]] compare. A
-    * decimal column's footer stats are its UNSCALED parquet integers
-    * (both stats writers store them so); they divide by 10^scale of the
-    * column's type in the file's own generation schema, so logs already
-    * written read right and a decimal widened to a larger scale keeps
-    * each file's scale. */
-  private def statsOf(colName: String,
+  /** The footer (min, max) of physical column `pc` for each of
+    * `entries`, in value space — what [[mayHold]] and [[statsMinMax]]
+    * compare. A decimal column's footer stats are its UNSCALED parquet
+    * integers (both stats writers store them so); they divide by
+    * 10^scale of the column's type in the file's own generation schema,
+    * so logs already written read right and a decimal widened to a
+    * larger scale keeps each file's scale. */
+  private def statsOf(pc: String,
       entries: Seq[FileEntry]): FileEntry => Option[(Double, Double)] = {
-    val pc = physColName(colName)
     val scaleOf: Map[Long, Double] = entries.filter(_.stats.contains(pc))
       .groupBy(_.origin).flatMap { case (o, es) =>
         SnapshotTable.probeDataSchema(spark, es.map(_.path), Some(o))
@@ -1666,36 +1577,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     e => e.stats.get(pc).map { case (mn, mx) =>
       scaleOf.get(e.origin).fold((mn, mx))(f => (mn / f, mx / f))
     }
-  }
-
-  /** Stats-pruned range read: plan only the files [[filesInRange]] keeps
-    * — the Delta-style file-level skipping that the reference's
-    * value-filter probe measures (FileCountBenchmark.scala:248). Callers
-    * apply the actual predicate on the (possibly empty) result. */
-  def readRange(colName: String, lo: Double, hi: Double): DataFrame = {
-    require(deltaEntries(currentVersion).isEmpty,
-      s"readRange on $root requires compacted state (pending MoR deltas)")
-    val picked = filesInRange(colName, lo, hi)
-    if (picked.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        read().schema)
-    else baseScan(picked, dvEntries(currentVersion))
-  }
-
-  /** Manifest-pruned read of one partition value: file selection is pure
-    * metadata (no directory listing, no scan of other partitions) — the
-    * same partition-pruning-from-the-log that the reference's file-count
-    * partition-filter probe measures (FileCountBenchmark.scala:244-249).
-    * On a MoR version the resolution runs within the partition only. */
-  def readWhere(partValue: String): DataFrame = {
-    val v = currentVersion
-    val base = fileEntries(v).filter(_.partValue == partValue)
-    val deltas = deltaEntries(v).filter(_.partValue == partValue)
-    require(base.nonEmpty || deltas.nonEmpty, s"no files for partition $partValue")
-    // DV rows addressing files outside this partition slice simply never
-    // match the anti-join — no per-partition DV bookkeeping needed
-    if (deltas.isEmpty) baseScan(base, dvEntries(v))
-    else resolveMerged(base, deltas, mergeKeysOf(v), dvEntries(v))
   }
 
   /** Footer-stat row count of the whole table straight from the manifest —
@@ -2141,77 +2022,60 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   /** Predicate DELETE (Delta `DELETE FROM … WHERE`): removes the rows
     * where `cond` is TRUE — a row whose predicate is NULL stays (SQL
-    * three-valued logic). Only the candidate files
-    * ([[splitCandidates]]) are read: on a range-clustered layout an
-    * interval predicate touches O(matching files), not the table.
+    * three-valued logic). Only the files [[planFiles]] keeps are read:
+    * a partition predicate touches the matching partitions, and on a
+    * range-clustered layout an interval predicate touches O(matching
+    * files), not the table.
     *
-    * Copy-on-write (the default): candidate files rewrite without the
-    * matched rows under `partitionBy`, everything else carries by
-    * reference, and under row tracking the survivors keep their ids.
-    * Commits `DELETE`, also when nothing matched; requires compacted
-    * state.
+    * Copy-on-write (the default): planned files rewrite without the
+    * matched rows under the table's layout ([[layoutSpec]]), everything
+    * else carries by reference, and under row tracking the survivors
+    * keep their ids. Commits `DELETE`, also when nothing matched;
+    * requires compacted state.
     *
     * `positional = true` (Iceberg position-delete / Delta
     * deletion-vector analog): the matched rows' (file, position)
     * addresses commit as deletion-vector marks — no base rewrite, no key
     * columns needed; [[compact]] and REORG PURGE fold the marks away.
     * See [[markPositional]] for its rules on pending MoR deltas and on
-    * a delete that matches nothing. `partitionBy` does not apply (marks
-    * are not partitioned). */
+    * a delete that matches nothing. */
   def delete(cond: Column, positional: Boolean = false,
-      partitionBy: Option[String] = None,
       trackChanges: Boolean = false): SnapshotTable = {
     if (positional) markPositional(cond, None, None, trackChanges)
-    else rewriteWhere(cond, None, partitionBy, trackChanges)
+    else rewriteWhere(cond, None, trackChanges)
     this
   }
 
   /** Copy-on-write UPDATE … SET `set` WHERE `cond` (Delta `UPDATE` with
-    * data skipping): candidate files as in [[delete]] rewrite with the
+    * data skipping): planned files as in [[delete]] rewrite with the
     * matched rows assigned; everything else carries by reference. All
     * SET expressions evaluate against the OLD row (single projection,
-    * standard UPDATE semantics — `SET a = b, b = a` swaps). The
-    * partition column cannot be assigned (rows never move between
-    * partitions, which keeps the carry-over sound). Under row tracking
-    * carried and updated rows keep their ids. Commits `UPDATE`; requires
-    * compacted state. The positional UPDATE is the SQL path's
-    * [[markPositional]] with analyzer-built images. */
+    * standard UPDATE semantics — `SET a = b, b = a` swaps). The layout
+    * column cannot be assigned (rows never move between partitions,
+    * which keeps the carry-over sound). Under row tracking carried and
+    * updated rows keep their ids. Commits `UPDATE`; requires compacted
+    * state. The positional UPDATE is the SQL path's [[markPositional]]
+    * with analyzer-built images. */
   def update(cond: Column, set: Map[String, Column],
-      partitionBy: Option[String] = None,
       trackChanges: Boolean = false): SnapshotTable = {
-    require(!partitionBy.exists(set.contains),
+    require(!layoutSpec.exists(s => set.contains(PartitionTransform.parse(s).col)),
       s"UPDATE on $root must not assign the partition column")
-    rewriteWhere(cond, Some(set), partitionBy, trackChanges)
+    rewriteWhere(cond, Some(set), trackChanges)
     this
   }
 
-  /** The candidate-file planner of [[delete]] and [[update]]: splits the
-    * files of version `v` into (may hold a row where `cond` is TRUE,
-    * provably hold none). The numeric-bound conjuncts of `cond` on one
-    * column ([[SnapshotTable.numericInterval]] over its v1 filter form,
-    * resolved against the table) skip by footer stats; every other
-    * conjunct counts as "may match", and a condition with no such
-    * conjunct keeps every file a candidate. */
-  private def splitCandidates(cond: Column,
-      v: Int): (Seq[FileEntry], Seq[FileEntry]) = {
-    val entries = fileEntries(v)
-    if (entries.isEmpty) (entries, entries)
-    else entries.partition(mayIntersect(SnapshotTable.numericInterval(
-      org.apache.spark.sql.GraftStreamShim.sourceFilterOf(read(v), cond)
-        .toArray)))
-  }
-
   /** The copy-on-write core of [[delete]] (`set` None) and [[update]]:
-    * candidate files rewrite with the matched rows dropped or assigned,
-    * the rest carry by reference, and marks on rewritten files drop (the
-    * rewrite's DV-resolved scan applied them). */
+    * the planned files rewrite under the table's layout with the matched
+    * rows dropped or assigned, the rest carry by reference, and marks on
+    * rewritten files drop (the rewrite's DV-resolved scan applied them). */
   private def rewriteWhere(cond: Column, set: Option[Map[String, Column]],
-      partitionBy: Option[String], trackChanges: Boolean): Unit = {
+      trackChanges: Boolean): Unit = {
     val v = currentVersion
     val op = if (set.isEmpty) "DELETE" else "UPDATE"
     require(deltaEntries(v).isEmpty,
       s"$op on $root requires compacted state (pending MoR deltas)")
-    val (touched, carryOver) = splitCandidates(cond, v)
+    val touched = planFiles(cond, v)
+    val carryOver = fileEntries(v).diff(touched)
     val dvs = dvEntries(v)
     val matches = cond <=> true
     def assigned(df: DataFrame, s: Map[String, Column]): DataFrame =
@@ -2224,9 +2088,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // rewriteSource: under row tracking carried AND updated rows keep
         // their ids (the rid column rides through the SET projection
         // untouched — no SET can name an engine column)
-        val src = rewriteSource(touched, dvs)
+        val src = withTableColumns(rewriteSource(touched, dvs), v)
         writeData(set.fold(src.filter(!matches))(assigned(src, _)),
-          v + 1, partitionBy)
+          v + 1, layoutSpecAt(v))
       }
     val cdc =
       if (!trackChanges || touched.isEmpty) Seq.empty
@@ -2234,7 +2098,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // both update images derive from the SAME pre-update row set:
         // filtering post-update rows would unpair the feed when a SET
         // assigns the predicate column
-        val old = baseScan(touched, dvs).filter(matches)
+        val old = withTableColumns(baseScan(touched, dvs), v).filter(matches)
         writeChanges(set.fold(old.withColumn(ChangeCol, lit("delete"))) { s =>
           assigned(old, s).withColumn(ChangeCol, lit("update_postimage"))
             .unionByName(old.withColumn(ChangeCol, lit("update_preimage")))
@@ -2247,7 +2111,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   /** The deletion-vector writer behind [[delete]]`(positional = true)`
     * and the SQL positional UPDATE: one addressed scan of the candidate
-    * files ([[splitCandidates]]) minus pending marks finds the rows
+    * files ([[planFiles]]) minus pending marks finds the rows
     * where `cond` is TRUE, and their (file, position) addresses commit
     * as marks — no base file rewritten, cost O(candidate scan + matched
     * rows). Readers anti-join the marks out ([[baseScan]]). The
@@ -2278,11 +2142,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
     require(images.isEmpty || deltas.isEmpty,
       s"positional UPDATE on $root requires compacted state (pending MoR " +
         "deltas — OPTIMIZE folds them first)")
-    val (candidates, _) = splitCandidates(cond, v)
+    val candidates = planFiles(cond, v)
     if (candidates.isEmpty) return
     val dvs = dvEntries(v)
-    val matched = (if (dvs.isEmpty) readEntriesAddressed(candidates)
-      else addressedMinusDvs(candidates, dvs)).filter(cond <=> true)
+    val matched = withTableColumns(if (dvs.isEmpty) readEntriesAddressed(candidates)
+      else addressedMinusDvs(candidates, dvs), v).filter(cond <=> true)
     val marks = writeData(matched.select(col(DvFileCol), col(DvPosCol)),
       v + 1, None).filter(_.rows > 0)
     if (marks.isEmpty) return
@@ -2563,7 +2427,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     *     nothing when no file is new.
     *   - `zorderBy`: every file in scope rewrites onto the Morton curve
     *     of 1–4 columns, so a narrow range on EITHER column prunes files
-    *     ([[readRange]]); commits `ZORDER`, always.
+    *     ([[planFiles]]); commits `ZORDER`, always.
     *   - `purge`: the files with deletion-vector (DV) marks, and the
     *     files whose physical schema still stores a dropped column,
     *     rewrite — the GDPR-style physical removal before VACUUM; commits
@@ -3800,45 +3664,31 @@ object SnapshotTable {
     * first plus the metadata-only retries after lost manifest races. */
   private val MergeAttempts = 10
 
-  /** Folds an ANDed v1 filter array into one inclusive numeric interval
-    * on a single column — the footer-stats file skip of
-    * [[SnapshotTable.delete]] / [[SnapshotTable.update]]. Strict bounds
-    * tighten by one ULP (exact for the integral values column stats
-    * hold). A conjunct that is not a numeric bound on the interval's
-    * column (another predicate, another column, a decimal bound — the
-    * interval is compared as doubles, and a decimal bound is not
-    * narrowed to one) never narrows it: the interval only widens toward
-    * "may match". None = no interval, every file may match. */
-  def numericInterval(filters: Array[org.apache.spark.sql.sources.Filter])
+  /** The inclusive numeric interval that one v1 comparison of a column
+    * with a number bounds the column to — what [[SnapshotTable.mayHold]]
+    * compares with footer stats. Strict bounds tighten by one ULP (exact
+    * for the integral and floating values column stats hold), except a
+    * decimal's: its double is rounded, so its bound stays inclusive,
+    * which only widens toward "may match". A NaN literal bounds nothing
+    * (NaN sorts above every number in Spark). None = no numeric bound. */
+  private def numericBound(f: org.apache.spark.sql.sources.Filter)
       : Option[(String, Double, Double)] = {
     import org.apache.spark.sql.sources._
-    def num(v: Any): Option[Double] = v match {
-      case _: java.math.BigDecimal | _: scala.math.BigDecimal => None
-      case n: Number => Some(n.doubleValue)
+    import Double.{NegativeInfinity => Lo, PositiveInfinity => Hi}
+    def num(v: Any, strict: Double => Double): Option[Double] = v match {
+      case d: java.math.BigDecimal => Some(d.doubleValue)
+      case d: scala.math.BigDecimal => Some(d.doubleValue)
+      case n: Number if !n.doubleValue.isNaN => Some(strict(n.doubleValue))
       case _ => None
     }
-    def one(f: Filter): Option[(String, Double, Double)] = f match {
-      case EqualTo(a, v) => num(v).map(d => (a, d, d))
-      case GreaterThan(a, v) =>
-        num(v).map(d => (a, Math.nextUp(d), Double.PositiveInfinity))
-      case GreaterThanOrEqual(a, v) =>
-        num(v).map(d => (a, d, Double.PositiveInfinity))
-      case LessThan(a, v) =>
-        num(v).map(d => (a, Double.NegativeInfinity, Math.nextDown(d)))
-      case LessThanOrEqual(a, v) =>
-        num(v).map(d => (a, Double.NegativeInfinity, d))
-      case And(l, r) => merge(one(l), one(r))
+    f match {
+      case EqualTo(a, v) => num(v, identity).map(d => (a, d, d))
+      case GreaterThan(a, v) => num(v, Math.nextUp).map((a, _, Hi))
+      case GreaterThanOrEqual(a, v) => num(v, identity).map((a, _, Hi))
+      case LessThan(a, v) => num(v, Math.nextDown).map((a, Lo, _))
+      case LessThanOrEqual(a, v) => num(v, identity).map((a, Lo, _))
       case _ => None
     }
-    def merge(a: Option[(String, Double, Double)],
-        b: Option[(String, Double, Double)]): Option[(String, Double, Double)] =
-      (a, b) match {
-        case (Some((c1, lo1, hi1)), Some((c2, lo2, hi2))) if c1 == c2 =>
-          Some((c1, math.max(lo1, lo2), math.min(hi1, hi2)))
-        case _ => a.orElse(b)
-      }
-    filters.map(one).reduceOption(merge).flatten
-      .filter { case (_, lo, hi) => lo <= hi }
   }
 
   /** Operations that SET the column mapping explicitly — every other
@@ -3867,11 +3717,10 @@ object SnapshotTable {
   /** `partCol`/`partValue` describe an IDENTITY partition layout (the
     * value is the column's own string form — prunable by every DML
     * path). A hidden-partitioned layout ([[PartitionTransform]]) instead
-    * sets `xformCol`/`xformTag`, keeping `partCol` null so existing
-    * partition-pruning paths conservatively treat the file like an
-    * unpartitioned one; `partValue` then holds the TRANSFORMED value and
-    * only the transform-aware read paths ([[SnapshotTable.planFilesXform]])
-    * prune on it. */
+    * sets `xformCol`/`xformTag` and keeps `partCol` null; `partValue`
+    * then holds the TRANSFORMED value, which the file planner
+    * ([[SnapshotTable.planFiles]]) compares with the transformed
+    * literal. */
   final case class FileEntry(
       path: String, partValue: String, bytes: Long, rows: Long,
       origin: Long = 0L, partCol: String = null,

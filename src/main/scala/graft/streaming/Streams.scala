@@ -569,8 +569,7 @@ object Streams {
         .merge(graft.operators.Lakehouse.mergeSource(o),
           Seq("o_orderkey", "o_orderstatus"),
           partitionBy = Some("o_orderstatus"), trackChanges = true)
-        .delete(col("o_totalprice").between(0.0, 2000.0),
-          partitionBy = Some("o_orderstatus"), trackChanges = true)
+        .delete(col("o_totalprice").between(0.0, 2000.0), trackChanges = true)
       val sgn = when(col(graft.sources.SnapshotTable.ChangeCol)
         .isin("insert", "update_postimage"), 1).otherwise(-1)
       // Manifest-tailed change-feed source: one micro-batch per tracked

@@ -67,19 +67,33 @@ object GraftStreamShim {
   def columnOf(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
-  /** `cond` resolved against `df`'s columns, its literal casts folded,
-    * as the v1 source filter data-source pushdown would hand a
-    * connector; None when any part has no v1 form.
+  /** `cond` resolved against `df`'s columns, with no-op casts dropped,
+    * literal casts folded and the casts the analyzer put on a column
+    * unwrapped where the comparison allows (the optimizer's own rules),
+    * as the v1 source filters of its conjuncts that have one — what
+    * data-source pushdown would hand a connector. */
+  def sourceFiltersOf(df: DataFrame, cond: Column): Seq[sources.Filter] = {
+    import catalyst.optimizer.{ConstantFolding, SimplifyCasts, UnwrapCastInBinaryComparison}
+    UnwrapCastInBinaryComparison(ConstantFolding(SimplifyCasts(
+        df.filter(cond).queryExecution.analyzed))) match {
+      case catalyst.plans.logical.Filter(c, _) => sourceFilters(Seq(c))
+      case _ => Seq.empty
+    }
+  }
+
+  /** The v1 source filters of the conjuncts of `exprs` that have one.
     * `DataSourceStrategy.translateFilter` is `protected[sql]`, hence
     * this bridge. */
-  def sourceFilterOf(df: DataFrame, cond: Column): Option[sources.Filter] =
-    catalyst.optimizer.ConstantFolding(
-        df.filter(cond).queryExecution.analyzed) match {
-      case catalyst.plans.logical.Filter(c, _) =>
-        execution.datasources.DataSourceStrategy.translateFilter(c,
-          supportNestedPredicatePushdown = false)
-      case _ => None
+  def sourceFilters(
+      exprs: Seq[catalyst.expressions.Expression]): Seq[sources.Filter] = {
+    def conjuncts(e: catalyst.expressions.Expression)
+        : Seq[catalyst.expressions.Expression] = e match {
+      case catalyst.expressions.And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case _ => Seq(e)
     }
+    exprs.flatMap(conjuncts).flatMap(execution.datasources.DataSourceStrategy
+      .translateFilter(_, supportNestedPredicatePushdown = false))
+  }
 
   /** v2 Column array → StructType with Spark's own metadata mapping
     * (comments, DEFAULT expressions) — `CatalogV2Util` is

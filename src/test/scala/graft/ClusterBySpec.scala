@@ -40,7 +40,7 @@ class ClusterBySpec extends AnyFunSuite {
     assert(t.read().count() == 4200)
     assert(t.read().agg(sum("k")).head.getLong(0) == (1L to 4200L).sum)
     // curve clustering tightens per-file ranges → skipping prunes
-    assert(t.filesInRange("k", 1.0, 10.0).size < t.files.size)
+    assert(t.planFiles(col("k").between(1, 10)).size < t.files.size)
   }
 
   test("clones cluster from scratch: negative carried origins still rewrite") {

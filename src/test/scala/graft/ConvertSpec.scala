@@ -28,7 +28,7 @@ class ConvertSpec extends AnyFunSuite {
     assert(t.countFromManifest == 100)
     // footer stats make skipping work immediately
     assert(t.statsMinMax("k").contains((1.0, 100.0)))
-    assert(t.filesInRange("k", 1.0, 1.0).size < t.files.size)
+    assert(t.planFiles(col("k") === 1L).size < t.files.size)
     // the converted table is a full citizen: DML + time travel
     t.append(Seq((101L, 202.0)).toDF("k", "v"))
     assert(t.read().count() == 101)
@@ -54,9 +54,9 @@ class ConvertSpec extends AnyFunSuite {
     assert(got == Seq((1L, "O", 10.0), (2L, "F", 20.0), (3L, "O", 30.0),
       (4L, "P", 40.0)))
     // manifest partition pruning works (identity layout recorded)
-    val (pruned, residual) = t.planFiles("status", "O")
-    assert(pruned.nonEmpty && residual.isEmpty)
-    assert(t.readWhereCol("status", "O").count() == 2)
+    val pruned = t.planFiles(col("status") === "O")
+    assert(pruned.nonEmpty && pruned.forall(_.partValue == "O"))
+    assert(t.read().filter(col("status") === "O").count() == 2)
     // partition filters prune metadata-only on the SQL path too
     assert(t.read().filter(col("status") === "F").count() == 1)
     // engine writes after conversion carry the column natively and

@@ -13,6 +13,15 @@ class CorpusOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  test("text_search_inverted resolves its postings once per session") {
+    val q = SparkEntry.queries("text_search_inverted")
+    val first = q(spark, sf).collect().toSeq // builds the standing index
+    val (again, jobs) = JobCount.of(spark)(q(spark, sf).collect().toSeq)
+    assert(again == first)
+    // the query's own two jobs; no footer-inference job for the postings
+    assert(jobs.size == 2, s"second call launched ${jobs.size} jobs: $jobs")
+  }
+
   test("dedup_incremental covers every batch doc exactly once") {
     val out = SparkEntry.queries("dedup_incremental")(spark, sf)
     val rows = out.collect()

@@ -114,8 +114,7 @@ class DmlSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, Scratch.dir("dml_part"))
       .create(df, partitionBy = Some("p"))
     intercept[IllegalArgumentException] {
-      t.update(col("k").between(0, 10), Map("p" -> lit("z")),
-        partitionBy = Some("p"))
+      t.update(col("k").between(0, 10), Map("p" -> lit("z")))
     }
   }
 

@@ -32,7 +32,7 @@ class FileCountSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, tmp("fcp"))
       .create(li, partitionBy = Some("l_returnflag"))
     val expect = li.filter(col("l_returnflag") === "A").count()
-    assert(t.readWhere("A").count() == expect)
+    assert(t.read().filter(col("l_returnflag") === "A").count() == expect)
     // the pruned read plans strictly fewer files than the full table
     val aFiles = t.files.count(_.partValue == "A")
     assert(aFiles < t.files.size)
@@ -44,11 +44,10 @@ class FileCountSpec extends AnyFunSuite {
       .create(li.repartitionByRange(8, col("l_quantity"))
         .sortWithinPartitions("l_quantity"))
     val expect = li.filter(col("l_quantity") >= 49.0).count()
-    val picked = t.filesInRange("l_quantity", 49.0, Double.MaxValue)
+    val picked = t.planFiles(col("l_quantity") >= 49.0)
     // range clustering makes most files' [min,max] miss the predicate
     assert(picked.nonEmpty && picked.size < t.files.size)
-    assert(t.readRange("l_quantity", 49.0, Double.MaxValue)
-      .filter(col("l_quantity") >= 49.0).count() == expect)
+    assert(t.read().filter(col("l_quantity") >= 49.0).count() == expect)
   }
 
   test("range pruning stays proportional at a 1k-file layout") {
@@ -60,11 +59,10 @@ class FileCountSpec extends AnyFunSuite {
       .sortWithinPartitions("key")
     val t = new SnapshotTable(spark, tmp("fc1k")).create(df)
     assert(t.files.size == 1000)
-    val picked = t.filesInRange("key", 0.0, 500.0)
+    val picked = t.planFiles(col("key").between(0, 500))
     assert(picked.nonEmpty && picked.size <= 20,
       s"pruned to ${picked.size} files of 1000 — manifest pruning degraded")
-    assert(t.readRange("key", 0.0, 500.0)
-      .filter(col("key") <= 500).count() == 501)
+    assert(t.read().filter(col("key").between(0, 500)).count() == 501)
   }
 
   test("planning split reports a sub-total planning time") {

@@ -241,7 +241,7 @@ class PropertySpec extends AnyFunSuite {
         .append(extra, Some("q"))
       val want = base.unionByName(extra)
       for (c <- Seq("p", "q"); v <- Seq(s"${c}0", s"${c}1")) {
-        val got = t.readWhereCol(c, v).orderBy("k").collect().toSeq
+        val got = t.read().filter(col(c) === v).orderBy("k").collect().toSeq
         val exp = want.filter(col(c) === v).orderBy("k").collect().toSeq
         assert(got == exp, s"trial $trial $c=$v")
       }

@@ -105,7 +105,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // k=2 takes the NEWEST delta (77.0), k=4 inserted, k=1/3 from base
     assert(got == Seq((1L, 10.0), (2L, 77.0), (3L, 30.0), (4L, 40.0)))
     // partition-scoped read resolves within the partition
-    assert(t.readWhere("a").orderBy("k").collect().map(_.getDouble(2)).toSeq
+    assert(t.read().filter(col("p") === "a").orderBy("k").collect().map(_.getDouble(2)).toSeq
       == Seq(10.0, 77.0))
     // compaction folds deltas into base files and drops delta entries
     t.compact(1)
@@ -134,7 +134,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(got == Seq((1L, 10.0), (2L, 55.0), (3L, 30.0)))
     // partition-scoped read applies tombstones within the partition
-    assert(t.readWhere("b").collect().map(_.getLong(0)).toSeq == Seq(3L))
+    assert(t.read().filter(col("p") === "b").collect().map(_.getLong(0)).toSeq == Seq(3L))
     // compaction folds tombstones away; no marker column leaks
     t.compact(1)
     assert(t.read().orderBy("k").collect()
@@ -612,19 +612,20 @@ class SnapshotTableSpec extends AnyFunSuite {
         .toDF("k", "p", "q", "v"), Some("p"))
       .append(Seq((4L, "a", "y", 4.0), (5L, "b", "y", 5.0))
         .toDF("k", "p", "q", "v"), Some("q"))
-    // plan for p='b': files laid out by p prune exactly; q-layout files residual
-    val (pruned, residual) = t.planFiles("p", "b")
-    assert(pruned.nonEmpty && pruned.forall(e =>
-      e.partCol == "p" && e.partValue == "b"))
-    assert(residual.forall(_.partCol == "q"))
-    assert(t.readWhereCol("p", "b").orderBy("k").collect().map(_.getLong(0)).toSeq
-      == Seq(2L, 3L, 5L))
+    // plan for p='b': files laid out by p prune exactly; q-layout files
+    // stay planned for the row filter
+    val planned = t.planFiles(col("p") === "b")
+    val (pruned, residual) = planned.partition(_.partCol == "p")
+    assert(pruned.nonEmpty && pruned.forall(_.partValue == "b"))
+    assert(residual.toSet == t.files.filter(_.partCol == "q").toSet)
+    assert(t.read().filter(col("p") === "b").orderBy("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(2L, 3L, 5L))
     // the evolved layout also serves its own column's filter with pruning
-    val (prunedQ, residualQ) = t.planFiles("q", "y")
-    assert(prunedQ.forall(e => e.partCol == "q" && e.partValue == "y"))
-    assert(residualQ.forall(_.partCol == "p"))
-    assert(t.readWhereCol("q", "y").orderBy("k").collect().map(_.getLong(0)).toSeq
-      == Seq(3L, 4L, 5L))
+    val (prunedQ, residualQ) = t.planFiles(col("q") === "y").partition(_.partCol == "q")
+    assert(prunedQ.forall(_.partValue == "y"))
+    assert(residualQ.toSet == t.files.filter(_.partCol == "p").toSet)
+    assert(t.read().filter(col("q") === "y").orderBy("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(3L, 4L, 5L))
   }
 
   test("footer stats power manifest min/max and file-level range pruning") {
@@ -637,10 +638,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.statsMinMax("k").contains((0.0, 999.0)))
     assert(t.statsMinMax("nope").isEmpty)
     // range [900, inf) must plan strictly fewer files than the table holds
-    val picked = t.filesInRange("v", 900.0, Double.MaxValue)
+    val picked = t.planFiles(col("v") >= 900.0)
     assert(picked.nonEmpty && picked.size < t.files.size)
-    assert(t.readRange("v", 900.0, Double.MaxValue)
-      .filter(col("v") >= 900.0).count() == 100)
+    assert(t.read().filter(col("v") >= 900.0).count() == 100)
     // stats survive carry-over: merge touching nothing keeps old entries' stats
     val t2 = t.shallowCloneTo(tmp("stats2"))
     assert(t2.statsMinMax("v").contains((0.0, 999.0)))
@@ -658,9 +658,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val holding = t.files.filter(e => spark.read.parquet(e.path)
       .filter(col("p").between(10, 20)).count() > 0).map(_.path)
     assert(holding.nonEmpty && holding.size < t.files.size)
-    assert(t.filesInRange("p", 10, 20).map(_.path) == holding)
-    assert(t.readRange("p", 10, 20).filter(col("p").between(10, 20))
-      .count() == 41)
+    assert(t.planFiles(col("p").between(10, 20)).map(_.path) == holding)
+    assert(t.read().filter(col("p").between(10, 20)).count() == 41)
   }
 
   test("compactZOrder prunes files on BOTH clustered dimensions") {
@@ -673,16 +672,15 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.countFromManifest == o.count())
     // a narrow range on EITHER dimension plans strictly fewer files —
     // the property a linear sort gives only its leading column
-    val custPicked = t.filesInRange("o_custkey", 100.0, 200.0)
-    val keyPicked = t.filesInRange("o_orderkey", 1000.0, 2000.0)
+    val custPicked = t.planFiles(col("o_custkey").between(100, 200))
+    val keyPicked = t.planFiles(col("o_orderkey").between(1000, 2000))
     assert(custPicked.nonEmpty && custPicked.size < t.files.size,
       s"custkey pruning: ${custPicked.size}/${t.files.size}")
     assert(keyPicked.nonEmpty && keyPicked.size < t.files.size,
       s"orderkey pruning: ${keyPicked.size}/${t.files.size}")
-    // pruned read + residual filter equals a plain filter
+    // the pruned read equals a plain filter
     val expect = o.filter(col("o_custkey").between(100, 200)).count()
-    assert(t.readRange("o_custkey", 100.0, 200.0)
-      .filter(col("o_custkey").between(100, 200)).count() == expect)
+    assert(t.read().filter(col("o_custkey").between(100, 200)).count() == expect)
   }
 
   test("vacuum retains the current version's CDC files") {
@@ -741,21 +739,21 @@ class SnapshotTableSpec extends AnyFunSuite {
     // plans exactly one month's files, a quarter range plans three
     val tm = new SnapshotTable(spark, tmp("pxm"))
       .create(df, Some("months(ts)"))
-    val (id1, xf1, rest1) = tm.planFilesXform("ts", "2024-03-15 08:00:00")
-    assert(id1.isEmpty && rest1.isEmpty)
+    val xf1 = tm.planFiles(col("ts") === "2024-03-15 08:00:00")
     assert(xf1.nonEmpty && xf1.forall(_.partValue == "2024-03"))
     assert(xf1.size < tm.files.size)
-    val q = tm.readWhereColRange("ts", "2024-02-01 00:00:00", "2024-04-30 23:59:59")
+    val q = tm.read().filter(
+      col("ts").between("2024-02-01 00:00:00", "2024-04-30 23:59:59"))
     assert(q.count() == 30) // months 2,3,4 × 10 rows each
     assert(tm.read().count() == 120)
 
     // bucket(4, u): a point probe plans one bucket, result is exact
     val tb = new SnapshotTable(spark, tmp("pxu"))
       .create(df, Some("bucket(4, u)"))
-    val (_, xfB, restB) = tb.planFilesXform("u", "u7")
-    assert(restB.isEmpty && xfB.nonEmpty && xfB.size < tb.files.size)
+    val xfB = tb.planFiles(col("u") === "u7")
+    assert(xfB.nonEmpty && xfB.size < tb.files.size)
     assert(xfB.map(_.partValue).distinct.size == 1)
-    assert(tb.readWhereColXform("u", "u7").count() == 12)
+    assert(tb.read().filter(col("u") === "u7").count() == 12)
 
     // truncate(7, ...) on the string form == months for these values;
     // manifest roundtrip must preserve the transform across a reopen
@@ -764,13 +762,14 @@ class SnapshotTableSpec extends AnyFunSuite {
       .create(df.withColumn("s", col("ts").cast("string")).drop("ts"),
         Some("truncate(7, s)"))
     val reopened = new SnapshotTable(spark, rootT)
-    val (_, xfT, _) = reopened.planFilesXform("s", "2024-05-15 08:00:00")
+    val xfT = reopened.planFiles(col("s") === "2024-05-15 08:00:00")
     assert(xfT.nonEmpty && xfT.forall(_.partValue == "2024-05"))
 
-    // layout evolution: append an UNPARTITIONED slice; range reads
-    // union it via residual filter, transform files still prune
+    // layout evolution: append an UNPARTITIONED slice; range reads keep
+    // its files for the row filter, transform files still prune
     tm.append(df.filter(col("k") <= 12))
-    val q2 = tm.readWhereColRange("ts", "2024-03-01 00:00:00", "2024-03-31 23:59:59")
+    val q2 = tm.read().filter(
+      col("ts").between("2024-03-01 00:00:00", "2024-03-31 23:59:59"))
     assert(q2.count() == 11) // 10 march rows + k∈{2} from the slice (i%12==2 → month 3)
   }
 

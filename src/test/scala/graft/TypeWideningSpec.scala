@@ -67,7 +67,7 @@ class TypeWideningSpec extends AnyFunSuite {
     assert(t.read().orderBy("n").select("v").as[Double].collect().toSeq ==
       Seq(10.0, 99.0, 50.0))
     // manifest stats still prune (stored as doubles — type-agnostic)
-    assert(t.filesInRange("n", 1.0, 2.0).size < t.files.size)
+    assert(t.planFiles(col("n").between(1, 2)).size < t.files.size)
     // rename after widen: the overlay keys on the stable physical name
     t.renameColumn("n", "id")
     assert(t.read().schema("id").dataType == LongType)
