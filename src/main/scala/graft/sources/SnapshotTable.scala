@@ -307,7 +307,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       keepRid: Boolean = false): DataFrame =
     // metadata columns are selected on the RAW scan (before the
     // column-mapping projection — a Project on top would hide them)
-    toLogicalDf(readEntriesRaw(entries, mapV, keepRid).select(col("*"),
+    toLogicalDf(readEntriesRaw(entries, mapV, keepRid, tableFiles(mapV)).select(col("*"),
       col("_metadata.file_path").as(DvFileCol),
       col("_metadata.row_index").as(DvPosCol)), mapV)
 
@@ -326,18 +326,15 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * are pending — the address projection is only paid on DV tables). */
   private def baseScan(entries: Seq[FileEntry], dvs: Seq[FileEntry],
       mapV: Int = -1): DataFrame =
-    if (dvs.isEmpty) readEntries(entries, mapV)
+    if (dvs.isEmpty) toLogicalDf(readEntriesRaw(entries, mapV,
+      schemaFrom = tableFiles(mapV)), mapV)
     else addressedMinusDvs(entries, dvs, mapV).drop(DvFileCol, DvPosCol)
 
-  /** Manifest-planned scan: file list, sizes and splits come straight
-    * from the log via [[ManifestFileIndex]] — zero filesystem listing.
-    * The data schema is the UNION over the distinct writing commits in
-    * the entry list (one cached footer read per origin — O(commits),
-    * never O(files)): a schema-evolving MERGE widens only the files it
-    * rewrites, and carried-over older files null-fill the added columns
-    * at scan time (Delta-style metadata-only evolution, no full
-    * rewrite). Field order is oldest-origin-first, so added columns
-    * append in evolution order. */
+  /** The data files of version `mapV` (current when negative): a base
+    * scan of any subset of them reads under their whole schema. */
+  private def tableFiles(mapV: Int): Seq[FileEntry] =
+    fileEntries(if (mapV < 0) currentVersion else mapV)
+
   /** [[readEntriesRaw]] with the column-mapping projection applied —
     * frames leaving the file layer are LOGICAL (identity on unmapped
     * tables). `mapV` pins which version's mapping to apply (current
@@ -346,11 +343,25 @@ class SnapshotTable(spark: SparkSession, root: String) {
   private def readEntries(entries: Seq[FileEntry], mapV: Int = -1): DataFrame =
     toLogicalDf(readEntriesRaw(entries, mapV), mapV)
 
+  /** Manifest-planned scan: file list, sizes and splits come straight
+    * from the log via [[ManifestFileIndex]] — zero filesystem listing.
+    * The data schema is the UNION over the distinct writing commits of
+    * `entries` and `schemaFrom` (one cached footer read per origin —
+    * O(commits), never O(files)): a schema-evolving MERGE or ADD COLUMNS
+    * widens only the files it writes, and a file without an added
+    * column reads it as its `EXISTS_DEFAULT`, or null, at scan time
+    * (Delta-style metadata-only evolution, no full rewrite). Base scans
+    * pass their version's files as `schemaFrom`, so a scan of the files
+    * a planner kept still sees every column. Field order is
+    * oldest-origin-first, so added columns append in evolution order. */
   private def readEntriesRaw(
       entries: Seq[FileEntry], mapV: Int = -1,
-      keepRid: Boolean = false): DataFrame = {
+      keepRid: Boolean = false,
+      schemaFrom: Seq[FileEntry] = Seq.empty): DataFrame = {
     require(entries.nonEmpty, s"no data files to read at $root")
-    val schema = entries.groupBy(_.origin).toSeq.sortBy(_._1)
+    val schemaFiles =
+      if (schemaFrom.isEmpty || (schemaFrom eq entries)) entries else entries ++ schemaFrom
+    val schema = schemaFiles.groupBy(_.origin).toSeq.sortBy(_._1)
       .map { case (o, es) =>
         SnapshotTable.probeDataSchema(spark, es.map(_.path), Some(o))
       }
@@ -653,19 +664,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * version — the read side of [[replaceFiles]] (group-based row-level
     * SQL rewrites read only the replaced file groups). */
   private[graft] def readEntriesResolved(entries: Seq[FileEntry]): DataFrame =
-    withTableColumns(baseScan(entries, dvEntries(currentVersion)), currentVersion)
-
-  /** `df`, a scan of some of version `v`'s files, with the columns that
-    * only other files of `v` carry added as nulls (what a full read
-    * serves for a file without them): a scan of the files a planner kept
-    * must still see every column of the table — a schema-evolving MERGE
-    * widens only the files it rewrites. */
-  private def withTableColumns(df: DataFrame, v: Int): DataFrame = {
-    val missing = read(v).schema.filterNot(f => df.columns.contains(f.name))
-    if (missing.isEmpty) df
-    else df.select(col("*") +:
-      missing.map(f => lit(null).cast(f.dataType).as(f.name, f.metadata)): _*)
-  }
+    baseScan(entries, dvEntries(currentVersion))
 
   // ---------------------------------------------------- column mapping
   // (Delta columnMapping.mode=name analog.) Physical column names in
@@ -1128,8 +1127,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val addressed =
       if (dvs.isEmpty) readEntriesAddressed(entries, -1, keepRid = true)
       else addressedMinusDvs(entries, dvs, -1, keepRid = true)
-    withTableColumns(withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol),
-      currentVersion)
+    withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol)
   }
 
   /** Scan with stable row ids: every row of the current (or pinned)
@@ -1471,7 +1469,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   /** The entry predicate of [[planFiles]] and [[ManifestFileIndex]]: may
     * `e` (one of `entries`) hold a row where all of the ANDed v1
-    * `filters` are TRUE? A conjunct rules the file out only when
+    * `filters` are TRUE? A file without rows holds none (a schema
+    * carrier is never planned, so no rewrite drops it). A conjunct rules
+    * the file out only when
     *   - its partition value proves it: an equality or IN-list on the
     *     layout column whose canonical literal (under a hidden layout,
     *     the literal's [[PartitionTransform.applyLiteral]]) is not the
@@ -1483,59 +1483,93 @@ class SnapshotTable(spark: SparkSession, root: String) {
     *     (min, max) of the column ([[statsOf]]).
     * And/Or combine; any other filter, a file without stats and a null
     * partition value "may match". `phys` maps the filters' column names
-    * to the physical names stats and layouts are recorded under. */
+    * to the physical names stats and layouts are recorded under. Each
+    * conjunct's literals are transformed once per layout, not per file. */
   private def mayHold(filters: Seq[org.apache.spark.sql.sources.Filter],
       entries: Seq[FileEntry],
       phys: String => String = identity): FileEntry => Boolean = {
     import org.apache.spark.sql.sources._
     val stats = filters.flatMap(_.references).distinct
       .map(c => c -> statsOf(phys(c), entries)).toMap
-    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val stamp = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-    // the literal's canonical form, where layout `tag` orders partition
-    // values like the column's values (the day and month prefixes of a
-    // timestamp are those of its session-zone rendering)
-    def ordered(v: Any, tag: String): Option[String] = (v, tag) match {
-      case (s: String, null) => Some(s)
-      case (s: String, t) if t.startsWith("trunc") => Some(s)
-      case (_: java.sql.Date | _: java.time.LocalDate, null | "days" | "months") =>
-        Some(v.toString)
-      case (t: java.sql.Timestamp, "days" | "months") =>
-        Some(stamp.format(t.toInstant.atZone(zone)))
-      case (t: java.time.Instant, "days" | "months") => Some(stamp.format(t.atZone(zone)))
-      case (t: java.time.LocalDateTime, "days" | "months") => Some(stamp.format(t))
-      case _ => None
+    // The literal's canonical form where layout `tag` orders partition
+    // values like the column's values, as the lowest (`upper` false) or
+    // highest rendering any writer could have given it. `days`/`months`
+    // of a timestamp are prefixes of its rendering in the WRITER's
+    // session zone, which the log does not record: render at the
+    // extreme offsets any zone can have (-18:00, +18:00), so no writer's
+    // partition value for a matching row falls outside the bounds.
+    def ordered(v: Any, tag: String, upper: Boolean): Option[String] = {
+      def instant(i: java.time.Instant) = Some(stamp.format(i.atOffset(
+        if (upper) java.time.ZoneOffset.MAX else java.time.ZoneOffset.MIN)))
+      (v, tag) match {
+        case (s: String, null) => Some(s)
+        case (s: String, t) if t.startsWith("trunc") => Some(s)
+        case (_: java.sql.Date | _: java.time.LocalDate, null | "days" | "months") =>
+          Some(v.toString)
+        case (t: java.sql.Timestamp, "days" | "months") => instant(t.toInstant)
+        case (t: java.time.Instant, "days" | "months") => instant(t)
+        case (t: java.time.LocalDateTime, "days" | "months") => Some(stamp.format(t))
+        case _ => None
+      }
     }
-    def byPartition(f: Filter, e: FileEntry): Boolean = {
-      val (c, tag) = if (e.partCol != null) (e.partCol, null) else (e.xformCol, e.xformTag)
-      val pv = Option(e.partValue).filter(_ != HiveNullPart).map(
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName)
-      def past(v: Any, sign: Int): Boolean = ordered(v, tag).exists { x =>
-        sign * UTF8String.fromString(pv.get).compareTo(UTF8String.fromString(
-          PartitionTransform.applyLiteral(tag, x))) < 0 }
-      c == null || pv.isEmpty || !f.references.forall(phys(_) == c) || (f match {
-        case EqualTo(a, v) =>
-          GraftV2Table.partitionPredicate(Array(f), a)
-            .orElse(ordered(v, tag).map(Seq(_)))
-            .forall(_.exists(PartitionTransform.applyLiteral(tag, _) == pv.get))
-        case GreaterThan(_, v) => !past(v, 1)
-        case GreaterThanOrEqual(_, v) => !past(v, 1)
-        case LessThan(_, v) => !past(v, -1)
-        case LessThanOrEqual(_, v) => !past(v, -1)
-        case _ => true
-      })
+    val unescaped = scala.collection.mutable.HashMap.empty[String, UTF8String]
+    def partValue(e: FileEntry): Option[UTF8String] =
+      Option(e.partValue).filter(_ != HiveNullPart).map(p =>
+        unescaped.getOrElseUpdate(p, UTF8String.fromString(org.apache.spark.sql
+          .catalyst.catalog.ExternalCatalogUtils.unescapePathName(p))))
+    // leaf `f`'s test of a partition value under layout `tag`
+    def partTest(f: Filter, tag: String): UTF8String => Boolean = {
+      def applied(x: String) = UTF8String.fromString(PartitionTransform.applyLiteral(tag, x))
+      // is the value on the literal's side of its lower/upper bound?
+      def side(v: Any, upper: Boolean): UTF8String => Boolean =
+        ordered(v, tag, upper).map(applied).fold((_: UTF8String) => true) { b =>
+          pv => if (upper) pv.compareTo(b) <= 0 else pv.compareTo(b) >= 0 }
+      def equal(v: Any): UTF8String => Boolean = {
+        val (lo, hi) = (side(v, upper = false), side(v, upper = true))
+        pv => lo(pv) && hi(pv)
+      }
+      val listed = f.references.headOption.flatMap(a =>
+        GraftV2Table.partitionPredicate(Array(f), a))
+      f match {
+        case _ if listed.isDefined => listed.get.map(applied).toSet
+        case EqualTo(_, v) => equal(v)
+        case In(_, vs) =>
+          val tests = vs.map(equal)
+          pv => tests.exists(_(pv))
+        case GreaterThan(_, v) => side(v, upper = false)
+        case GreaterThanOrEqual(_, v) => side(v, upper = false)
+        case LessThan(_, v) => side(v, upper = true)
+        case LessThanOrEqual(_, v) => side(v, upper = true)
+        case _ => _ => true
+      }
     }
-    def byStats(f: Filter, e: FileEntry): Boolean =
-      SnapshotTable.numericBound(f).forall { case (c, lo, hi) =>
-        stats(c)(e).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    def may(f: Filter, e: FileEntry): Boolean = f match {
-      case And(l, r) => may(l, e) && may(r, e)
-      case Or(l, r) => may(l, e) || may(r, e)
-      case In(a, vs) => vs.exists(v => may(EqualTo(a, v), e))
-      case EqualNullSafe(a, v) if v != null => may(EqualTo(a, v), e)
-      case _ => byPartition(f, e) && byStats(f, e)
+    def byPartition(f: Filter): FileEntry => Boolean = {
+      val cols = f.references.map(phys).distinct
+      val tests = scala.collection.mutable.HashMap.empty[String, UTF8String => Boolean]
+      e => {
+        val (c, tag) = if (e.partCol != null) (e.partCol, null) else (e.xformCol, e.xformTag)
+        c == null || cols.exists(_ != c) ||
+          partValue(e).forall(tests.getOrElseUpdate(tag, partTest(f, tag)))
+      }
     }
-    e => filters.forall(may(_, e))
+    def byStats(f: Filter): FileEntry => Boolean =
+      SnapshotTable.numericBound(f).fold((_: FileEntry) => true) { case (c, lo, hi) =>
+        e => stats(c)(e).forall { case (mn, mx) => mx >= lo && mn <= hi } }
+    def may(f: Filter): FileEntry => Boolean = f match {
+      case And(l, r) =>
+        val (a, b) = (may(l), may(r))
+        e => a(e) && b(e)
+      case Or(l, r) =>
+        val (a, b) = (may(l), may(r))
+        e => a(e) || b(e)
+      case EqualNullSafe(a, v) if v != null => may(EqualTo(a, v))
+      case _ =>
+        val (p, s) = (byPartition(f), byStats(f))
+        e => p(e) && s(e)
+    }
+    val tests = filters.map(may)
+    e => e.rows > 0 && tests.forall(_(e))
   }
 
   /** Manifest-only column MIN/MAX (ANALYZE-style): combined from the
@@ -2088,7 +2122,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // rewriteSource: under row tracking carried AND updated rows keep
         // their ids (the rid column rides through the SET projection
         // untouched — no SET can name an engine column)
-        val src = withTableColumns(rewriteSource(touched, dvs), v)
+        val src = rewriteSource(touched, dvs)
         writeData(set.fold(src.filter(!matches))(assigned(src, _)),
           v + 1, layoutSpecAt(v))
       }
@@ -2098,7 +2132,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // both update images derive from the SAME pre-update row set:
         // filtering post-update rows would unpair the feed when a SET
         // assigns the predicate column
-        val old = withTableColumns(baseScan(touched, dvs), v).filter(matches)
+        val old = baseScan(touched, dvs).filter(matches)
         writeChanges(set.fold(old.withColumn(ChangeCol, lit("delete"))) { s =>
           assigned(old, s).withColumn(ChangeCol, lit("update_postimage"))
             .unionByName(old.withColumn(ChangeCol, lit("update_preimage")))
@@ -2145,8 +2179,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val candidates = planFiles(cond, v)
     if (candidates.isEmpty) return
     val dvs = dvEntries(v)
-    val matched = withTableColumns(if (dvs.isEmpty) readEntriesAddressed(candidates)
-      else addressedMinusDvs(candidates, dvs), v).filter(cond <=> true)
+    val matched = (if (dvs.isEmpty) readEntriesAddressed(candidates)
+      else addressedMinusDvs(candidates, dvs)).filter(cond <=> true)
     val marks = writeData(matched.select(col(DvFileCol), col(DvPosCol)),
       v + 1, None).filter(_.rows > 0)
     if (marks.isEmpty) return
@@ -3665,7 +3699,8 @@ object SnapshotTable {
   private val MergeAttempts = 10
 
   /** The inclusive numeric interval that one v1 comparison of a column
-    * with a number bounds the column to — what [[SnapshotTable.mayHold]]
+    * with a number (or an IN-list of numbers: their hull) bounds the
+    * column to — what [[SnapshotTable.mayHold]]
     * compares with footer stats. Strict bounds tighten by one ULP (exact
     * for the integral and floating values column stats hold), except a
     * decimal's: its double is rounded, so its bound stays inclusive,
@@ -3683,6 +3718,9 @@ object SnapshotTable {
     }
     f match {
       case EqualTo(a, v) => num(v, identity).map(d => (a, d, d))
+      case In(a, vs) if vs.nonEmpty =>
+        val ds = vs.flatMap(num(_, identity))
+        if (ds.length < vs.length) None else Some((a, ds.min, ds.max))
       case GreaterThan(a, v) => num(v, Math.nextUp).map((a, _, Hi))
       case GreaterThanOrEqual(a, v) => num(v, identity).map((a, _, Hi))
       case LessThan(a, v) => num(v, Math.nextDown).map((a, Lo, _))

@@ -85,12 +85,38 @@ class FilePlannerSpec extends AnyFunSuite {
     val tm = new SnapshotTable(spark, tmp("fp_months"))
       .create(df, Some("months(ts)"))
     assert(tm.read().count() == 120)
-    val q = col("ts").between("2024-02-01 00:00:00", "2024-04-30 23:59:59")
+    // mid-month bounds: a timestamp bound is widened by the widest zone
+    // offset (the writer's zone is not in the log), so a bound on a
+    // month's first or last day would also keep the month beside it
+    val q = col("ts").between("2024-02-10 00:00:00", "2024-04-20 00:00:00")
     val months = tm.planFiles(q)
     assert(months.map(_.partValue).toSet == Set("2024-02", "2024-03", "2024-04"))
     without(tm.files.diff(months)) {
       assert(tm.read().filter(q).count() == 30)
     }
+  }
+
+  test("a months(ts) read in another session zone finds rows the writer's zone placed") {
+    import spark.implicits._
+    val w = spark.newSession()
+    w.conf.set("spark.sql.session.timeZone", "UTC")
+    val root = tmp("fp_zone")
+    new SnapshotTable(w, root).create(
+      Seq((1L, "2024-03-15 12:00:00"), (2L, "2024-04-01 03:00:00"),
+        (3L, "2024-05-15 12:00:00")).toDF("k", "ts0")
+        .withColumn("ts", col("ts0").cast("timestamp")).drop("ts0"),
+      Some("months(ts)"))
+    // 2024-04-01 03:00 UTC lies in month 2024-04 of the writer's zone,
+    // but renders as 2024-03-31 20:00 in Los Angeles
+    val r = spark.newSession()
+    r.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val t = new SnapshotTable(r, root)
+    val at = lit(java.sql.Timestamp.from(java.time.Instant.parse("2024-04-01T03:00:00Z")))
+    assert(t.planFiles(col("ts") === at).map(_.partValue).toSet == Set("2024-03", "2024-04"))
+    assert(t.read().filter(col("ts") === at).select("k").as[Long].collect().toSeq == Seq(2L))
+    assert(t.read().filter(col("ts") >= at).count() == 2)
+    t.delete(col("ts") === at)
+    assert(t.read().select("k").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
   test("a filtered read prunes a numeric range on footer stats") {
@@ -100,7 +126,10 @@ class FilePlannerSpec extends AnyFunSuite {
     assert(t.planFiles(col("k").between(0, 10)) == low)
     without(t.files.diff(low)) {
       assert(t.read().filter(col("k").between(0, 10)).count() == 11)
+      // a numeric IN-list prunes on the hull of its values
+      assert(t.read().filter(col("k").isin(3L, 7L)).count() == 2)
     }
+    assert(t.planFiles(col("k").isin(3L, 7L)) == low)
   }
 
   test("a decimal range prunes on the scaled stats") {
@@ -192,6 +221,31 @@ class FilePlannerSpec extends AnyFunSuite {
       Seq("web", "store", "mail"))
   }
 
+  test("a pruned rewrite keeps an added column's default, and the column") {
+    val (s, cat) = catalog("fpdef")
+    def table(name: String, rows: String): SnapshotTable = {
+      s.sql(s"CREATE TABLE fpdef.ns.$name (k BIGINT, p STRING) PARTITIONED BY (p)")
+      s.sql(s"INSERT INTO fpdef.ns.$name VALUES $rows")
+      s.sql(s"ALTER TABLE fpdef.ns.$name ADD COLUMNS (c INT DEFAULT 5)")
+      new SnapshotTable(s, s"$cat/ns/$name")
+    }
+    // files without c read its default, and a rewrite stores it, also
+    // when the zero-row schema file is not among the planned files
+    val t = table("t", "(1, '1'), (2, '2'), (22, '2'), (4, '4')")
+    t.delete(col("p") === "2" && col("k") === 2L)
+    t.update(col("p") === "1", Map("k" -> lit(10L)))
+    s.sql("UPDATE fpdef.ns.t SET k = 40 WHERE p = '4'")
+    assert(s.sql("SELECT k, c FROM fpdef.ns.t ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((10L, 5), (22L, 5), (40L, 5)))
+    // a DELETE that empties its partition writes no file; the schema
+    // file is never planned, so no rewrite drops it and c stays
+    val u = table("u", "(1, '1'), (2, '2'), (3, '3')")
+    u.delete(col("p") === "2")
+    s.sql("DELETE FROM fpdef.ns.u WHERE p = '3'")
+    assert(s.sql("SELECT k, c FROM fpdef.ns.u").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((1L, 5)))
+  }
+
   /** A session with the graft catalog `name` rooted in a fresh dir. */
   private def catalog(name: String): (SparkSession, String) = {
     val s = spark.newSession()
@@ -228,9 +282,9 @@ class FilePlannerSpec extends AnyFunSuite {
     }
     val t = new SnapshotTable(s, s"$cat/ns/t")
     assert(t.files.count(_.partCol == "p") == 5) // plus CREATE's schema file
-    // CREATE's schema file has no partition value: it may match
+    // CREATE's zero-row schema file holds no row: it is carried too
     def carried(pv: String): Set[String] = t.files
-      .filter(e => e.partCol == "p" && e.partValue != pv).map(_.path).toSet
+      .filter(_.partValue != pv).map(_.path).toSet
     val notTwo = carried("2")
     s.sql("DELETE FROM fpdml.ns.t WHERE p = '2'")
     assert(notTwo.subsetOf(t.files.map(_.path).toSet))
