@@ -151,11 +151,12 @@ object GraftRowLevelOps extends SparkStrategy {
     * order (plus the materialized row id under row tracking when the
     * rewrite carried it), generated-column recomputation, identity fill
     * for NULL slots. One definition so DELETE/UPDATE/MERGE can never
-    * diverge. */
+    * diverge. An identity fill's batch is held in `caches`, which the
+    * calling exec releases once its commit has ended. */
   private[plans] def alignImages(
       snapshot: SnapshotTable,
       tableSchema: org.apache.spark.sql.types.StructType,
-      keepRid: Boolean)(
+      keepRid: Boolean, caches: SnapshotTable.CacheScope)(
       images: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val cols = snapshot.read().schema.fieldNames.toIndexedSeq ++
@@ -163,7 +164,7 @@ object GraftRowLevelOps extends SparkStrategy {
     GraftV2Table.applyIdentityColumns(
       GraftV2Table.regenerateColumns(
         images.select(cols.map(col): _*), tableSchema),
-      tableSchema, snapshot, validateExplicit = false)
+      tableSchema, snapshot, validateExplicit = false, caches)
   }
 }
 
@@ -205,11 +206,13 @@ final case class GraftReplaceDataExec(
     // merge-inserted rows arrive with NULL identity slots — fill them;
     // carried/updated rows keep their stored values (no validation here:
     // the rewrite frame cannot distinguish carried from assigned)
-    val aligned =
-      GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid)(df)
-    replace match {
-      case Some(entries) => snapshot.replaceFiles(entries, aligned, partSpec)
-      case None => snapshot.overwriteAll(aligned, partSpec)
+    SnapshotTable.withCaches { caches =>
+      val aligned =
+        GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid, caches)(df)
+      replace match {
+        case Some(entries) => snapshot.replaceFiles(entries, aligned, partSpec)
+        case None => snapshot.overwriteAll(aligned, partSpec)
+      }
     }
     ()
   }
@@ -246,9 +249,9 @@ final case class GraftWriteDeltaExec(
     val df = org.apache.spark.sql.GraftStreamShim.ofRows(spark, query)
     val keepRid = trackRids && df.columns.contains(SnapshotTable.RidCol)
     val cdf = snapshot.property(GraftV2Table.CdcProp).contains("true")
-    snapshot.writeDeltaPositional(df,
-      GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid),
-      partSpec, trackChanges = cdf): Unit
+    SnapshotTable.withCaches(caches => snapshot.writeDeltaPositional(df,
+      GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid, caches),
+      partSpec, trackChanges = cdf)): Unit
   }
 
   override def executeCollect(): Array[InternalRow] = { done; Array.empty }
@@ -306,12 +309,11 @@ final case class GraftDvUpdateExec(
     // explicit identity assignments.
     val keepRid = snapshot.rowTrackingEnabled &&
       df.columns.contains(SnapshotTable.RidCol)
-    val updated =
-      GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid)(df)
     val cdf = snapshot.property(GraftV2Table.CdcProp).contains("true")
-    snapshot.markPositional(
+    SnapshotTable.withCaches(caches => snapshot.markPositional(
       org.apache.spark.sql.GraftStreamShim.columnOf(rebound),
-      Some(updated), partSpec, trackChanges = cdf)
+      Some(GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid, caches)(df)),
+      partSpec, trackChanges = cdf))
   }
 
   override def executeCollect(): Array[InternalRow] = { done; Array.empty }
@@ -377,13 +379,15 @@ final case class GraftDynamicOverwriteExec(
     // INSERT semantics: omitted/NULL generated slots fill, provided
     // values must match (same projection the V1 insert path applies);
     // identity slots allocate
-    val aligned = GraftV2Table.applyIdentityColumns(
-      GraftV2Table.applyGeneratedColumns(df.select(cols.map(col): _*),
-        tableSchema),
-      tableSchema, snapshot, validateExplicit = true)
-    partSpec match {
-      case Some(pc) => snapshot.overwritePartitions(aligned, pc)
-      case None => snapshot.overwriteAll(aligned, None)
+    SnapshotTable.withCaches { caches =>
+      val aligned = GraftV2Table.applyIdentityColumns(
+        GraftV2Table.applyGeneratedColumns(df.select(cols.map(col): _*),
+          tableSchema),
+        tableSchema, snapshot, validateExplicit = true, caches)
+      partSpec match {
+        case Some(pc) => snapshot.overwritePartitions(aligned, pc)
+        case None => snapshot.overwriteAll(aligned, None)
+      }
     }
     ()
   }

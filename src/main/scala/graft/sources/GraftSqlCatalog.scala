@@ -47,10 +47,6 @@ object SnapshotFilters {
     case Not(c) => toColumn(c).map(!_)
     case _ => None
   }
-
-  /** The conjunction of the translatable `filters`; None when none is. */
-  def toCondition(filters: Array[Filter]): Option[Column] =
-    filters.flatMap(toColumn).reduceOption(_ && _)
 }
 
 /** DataSource-V2 catalog plugin over a directory of snapshot tables —
@@ -1007,10 +1003,14 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
       override def build(): Write = new V1Write {
         override def toInsertableRelation(): InsertableRelation =
           new InsertableRelation {
-            override def insert(dataRaw: DataFrame, overwriteArg: Boolean): Unit = {
-              val data = GraftV2Table.applyIdentityColumns(
-                GraftV2Table.applyGeneratedColumns(dataRaw, schema),
-                schema, table, validateExplicit = true)
+            override def insert(dataRaw: DataFrame, overwriteArg: Boolean): Unit =
+              SnapshotTable.withCaches(caches => insertFilled(
+                GraftV2Table.applyIdentityColumns(
+                  GraftV2Table.applyGeneratedColumns(dataRaw, schema),
+                  schema, table, validateExplicit = true, caches),
+                overwriteArg))
+
+            private def insertFilled(data: DataFrame, overwriteArg: Boolean): Unit = {
               val identityPartCol = partSpec.filterNot(_.contains("("))
               mode match {
                 case "truncate" => table.overwriteAll(data, partSpec)
@@ -1211,13 +1211,13 @@ object GraftV2Table {
     * values, and only merge-inserted NULL slots fill. */
   private[graft] def applyIdentityColumns(
       data: DataFrame, schema: StructType, snapshot: SnapshotTable,
-      validateExplicit: Boolean): DataFrame = {
+      validateExplicit: Boolean, caches: SnapshotTable.CacheScope): DataFrame = {
     import org.apache.spark.sql.catalyst.util.IdentityColumn
     val ids = schema.fields.flatMap(f =>
       IdentityColumn.getIdentityInfo(f).map(f -> _))
     ids.foldLeft(data) { case (df, (f, spec)) =>
       snapshot.fillIdentity(df, f, spec.getStart, spec.getStep,
-        forbidExplicit = validateExplicit && !spec.isAllowExplicitInsert)
+        forbidExplicit = validateExplicit && !spec.isAllowExplicitInsert, caches)
     }
   }
 
@@ -1277,18 +1277,19 @@ object GraftV2Table {
   }
 
   /** Manifest (bytes, rows) of the files a scan of `table` with the
-    * pushed `filters` plans ([[SnapshotTable.planFiles]]) — the scan-size
-    * estimate, metadata only. None (estimate the whole table) when no
-    * filter translates, the read is pinned to a version (`version` >= 0)
-    * or merge-on-read deltas are pending (their rows are not in files
-    * the planner sees). */
+    * pushed `filters` plans — the scan-size estimate, metadata only: the
+    * filters go straight to the planner's entry predicate
+    * ([[SnapshotTable.planFilters]]), with no resolution pass. None
+    * (estimate the whole table) when no filter is pushed, the read is
+    * pinned to a version (`version` >= 0) or merge-on-read deltas are
+    * pending (their rows are not in files the planner sees). */
   def plannedSize(table: SnapshotTable, version: Int,
       filters: Array[Filter]): Option[(Long, Long)] =
-    SnapshotFilters.toCondition(filters)
-      .filter(_ => version < 0 && !table.hasPendingDeltas).map { c =>
-        val planned = table.planFiles(c)
-        (planned.map(_.bytes).sum, planned.map(_.rows).sum)
-      }
+    if (filters.isEmpty || version >= 0 || table.hasPendingDeltas) None
+    else {
+      val planned = table.planFilters(filters.toSeq)
+      Some((planned.map(_.bytes).sum, planned.map(_.rows).sum))
+    }
 }
 
 /** One-row relation answering pushed ungrouped COUNT(*) aggregates
@@ -1428,8 +1429,8 @@ final class GraftRowLevelOperation(
         // disables pruning — delta rows are not file-addressable groups.
         plannedReplace =
           if (table.hasPendingDeltas) None
-          else Some(SnapshotFilters.toCondition(filters)
-            .fold(table.files)(table.planFiles(_)))
+          else Some(if (filters.isEmpty) table.files
+            else table.planFilters(filters.toSeq))
         reported = filters.filter(f => SnapshotFilters.toColumn(f).isDefined)
         filters // all residual: the rewrite plan re-evaluates the condition
       }

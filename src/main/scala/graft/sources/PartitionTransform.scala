@@ -96,7 +96,11 @@ private[graft] object PartitionTransform {
     case "days"    => v.take(10)
     case "months"  => v.take(7)
     case Bucket(n) => (crc32Of(v) % n.toLong).toString
-    case Trunc(w)  => v.take(w.toInt)
+    // `substring` counts characters, so a code point outside the BMP
+    // (a surrogate pair in the JVM string) is one of the W
+    case Trunc(w)  =>
+      if (v.codePointCount(0, v.length) <= w.toInt) v
+      else v.substring(0, v.offsetByCodePoints(0, w.toInt))
     case t         => throw new IllegalArgumentException(s"unknown transform $t")
   }
 

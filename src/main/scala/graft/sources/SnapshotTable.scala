@@ -570,11 +570,22 @@ class SnapshotTable(spark: SparkSession, root: String) {
   def restoreTo(version: Int): SnapshotTable = {
     val cur = currentVersion
     require(version >= 0 && version < cur, s"cannot restore to $version from $cur")
-    val m = manifestOf(version)
-    writeManifest(Manifest(cur + 1, "RESTORE", m.mergeKeys, m.files, m.deltas,
-      dvs = m.dvs, renames = m.renames, dropped = m.dropped,
-      fieldMeta = m.fieldMeta, widened = m.widened))
+    // the identity marks stay the current ones: ids never go backwards
+    replaceState("RESTORE", cur, manifestOf(version).copy(identHwm = Map.empty))
     this
+  }
+
+  /** Commit `target`'s files, deltas, DV marks, merge keys, mapping and
+    * high-water marks as the whole state on top of version `v` (RESTORE,
+    * OR REPLACE CLONE): it reads every file of `v`, and any file a rival
+    * adds conflicts. */
+  private def replaceState(op: String, v: Int, target: Manifest): Unit = {
+    val all = fileEntries(v) ++ deltaEntries(v)
+    commit(Commit(op, v, read = all, predicate = Some(Seq.empty),
+      removed = all, files = target.files, deltas = target.deltas,
+      keptDvs = Some(Seq.empty), marks = target.dvs,
+      mergeKeys = Some(target.mergeKeys), mapping = Some(Mapping.of(target)),
+      rowIdHwm = target.rowIdHwm, identHwm = target.identHwm)): Unit
   }
 
   /** Change-data-feed read (Delta `table_changes` analog): the rows a
@@ -656,9 +667,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   /** Manifest-planned scan of an arbitrary entry list (streaming-source
-    * micro-batch construction). */
+    * micro-batch construction), under the current version's whole
+    * schema as [[read]] gives it: a column added after `entries` were
+    * written reads as its `EXISTS_DEFAULT`, or null. */
   private[graft] def readEntriesDf(entries: Seq[FileEntry]): DataFrame =
-    readEntries(entries)
+    toLogicalDf(readEntriesRaw(entries, schemaFrom = tableFiles(-1)), -1)
 
   /** Deletion-vector-resolved scan of exactly `entries` at the current
     * version — the read side of [[replaceFiles]] (group-based row-level
@@ -737,9 +750,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val newRenames =
       if (phys == newName) m.renames - oldName // rename-back to identity
       else (m.renames - oldName) + (newName -> phys)
-    writeManifest(Manifest(v + 1, "RENAME_COLUMN", m.mergeKeys, m.files,
-      m.deltas, Seq.empty, m.dvs, renames = newRenames, dropped = m.dropped,
-      fieldMeta = m.fieldMeta, widened = m.widened))
+    commit(Commit("RENAME_COLUMN", v,
+      mapping = Some(Mapping.of(m).copy(renames = newRenames)))): Unit
     this
   }
 
@@ -780,10 +792,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val v = currentVersion
     val m = manifestOf(v)
     val phys = physColName(name, v)
-    writeManifest(Manifest(v + 1, "DROP_COLUMN", m.mergeKeys, m.files,
-      m.deltas, Seq.empty, m.dvs,
-      renames = m.renames - name, dropped = m.dropped :+ phys,
-      fieldMeta = m.fieldMeta - phys, widened = m.widened - phys))
+    commit(Commit("DROP_COLUMN", v, mapping = Some(Mapping(m.renames - name,
+      m.dropped :+ phys, m.fieldMeta - phys, m.widened - phys)))): Unit
     this
   }
 
@@ -918,10 +928,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
       case f if f.metadata != org.apache.spark.sql.types.Metadata.empty =>
         freshPhys.getOrElse(f.name, f.name) -> f.metadata.json
     }
-    writeManifest(Manifest(v + 1, "ADD_COLUMNS", mergeKeysOf(v),
-      fileEntries(v) ++ written, deltaEntries(v), Seq.empty, dvEntries(v),
-      renames = m.renames ++ freshPhys, dropped = m.dropped,
-      fieldMeta = m.fieldMeta ++ addedMeta, widened = m.widened))
+    commit(Commit("ADD_COLUMNS", v, files = written,
+      mapping = Some(Mapping(m.renames ++ freshPhys, m.dropped,
+        m.fieldMeta ++ addedMeta, m.widened)))): Unit
     this
   }
 
@@ -941,10 +950,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
       s"ALTER COLUMN on $root: no column $name")
     val phys = physColName(name, v)
     val nf = transform(logical(name).copy(name = phys))
-    writeManifest(Manifest(v + 1, "ALTER_COLUMN", m.mergeKeys, m.files,
-      m.deltas, Seq.empty, m.dvs, renames = m.renames, dropped = m.dropped,
-      fieldMeta = m.fieldMeta + (phys -> nf.metadata.json),
-      widened = m.widened))
+    commit(Commit("ALTER_COLUMN", v, mapping = Some(Mapping.of(m).copy(
+      fieldMeta = m.fieldMeta + (phys -> nf.metadata.json))))): Unit
     SnapshotTable.mappedRoots.add(root)
     this
   }
@@ -1045,10 +1052,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * rewritten; total cost O(changed rows) past the join — the 100 TB
     * MERGE shape (Delta's DV-enabled MERGE does exactly this).
     *
-    * The delta frame is persisted for the duration of the commit (it
-    * feeds the marks write, the image write, and the CDF capture — each
-    * a separate job; without the cache each would re-run the MERGE
-    * join) and released when the manifest lands. Change capture: delete
+    * The delta frame is persisted until the commit ends, landed or
+    * failed (it feeds the marks write, the image write, and the CDF
+    * capture — each a separate job; without the cache each would re-run
+    * the MERGE join, and a non-deterministic source or condition could
+    * address different rows than the stored marks). Change capture: delete
     * pre-images and update pre-images come from one addressed-scan
     * semi-join per kind against the O(changed) address sets; post
     * images and inserts come from the delta frame itself. */
@@ -1062,60 +1070,60 @@ class SnapshotTable(spark: SparkSession, root: String) {
       s"positional MERGE on $root requires compacted state (pending MoR " +
         "deltas — OPTIMIZE folds them first)")
     val opCol = col(RowDeltaUtils.OPERATION_COLUMN)
-    val cached = registerCommitCache(delta)
-    try {
-    val marks = writeData(
-      cached.filter(opCol.isin(RowDeltaUtils.DELETE_OPERATION,
-          RowDeltaUtils.UPDATE_OPERATION))
-        .select(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol)),
-      v + 1, None).filter(_.rows > 0)
-    // align ONCE per subset and reuse the same frames for the data write
-    // and the change feed — identity fill reserves values at alignment,
-    // so a second alignment would hand the CDF different ids than the
-    // ones stored
-    val updImages = imageAlign(
-      cached.filter(opCol === RowDeltaUtils.UPDATE_OPERATION))
-    val insImages = imageAlign(cached.filter(opCol.isin(
-      RowDeltaUtils.INSERT_OPERATION, RowDeltaUtils.REINSERT_OPERATION)))
-    val newFiles = writeData(updImages.unionByName(insImages), v + 1,
-      partitionBy).filter(_.rows > 0)
-    if (marks.isEmpty && newFiles.isEmpty) {
-      drainCommitCaches()
-      return 0L
-    }
-    val cdc =
-      if (!trackChanges) Seq.empty
+    withCaches { caches =>
+      val cached = caches.persist(delta)
+      val marks = writeData(
+        cached.filter(opCol.isin(RowDeltaUtils.DELETE_OPERATION,
+            RowDeltaUtils.UPDATE_OPERATION))
+          .select(col(SnapshotTable.DvFileCol), col(SnapshotTable.DvPosCol)),
+        v + 1, None).filter(_.rows > 0)
+      // align ONCE per subset and reuse the same frames for the data write
+      // and the change feed — identity fill reserves values at alignment,
+      // so a second alignment would hand the CDF different ids than the
+      // ones stored
+      val updImages = imageAlign(
+        cached.filter(opCol === RowDeltaUtils.UPDATE_OPERATION))
+      val insImages = imageAlign(cached.filter(opCol.isin(
+        RowDeltaUtils.INSERT_OPERATION, RowDeltaUtils.REINSERT_OPERATION)))
+      val newFiles = writeData(updImages.unionByName(insImages), v + 1,
+        partitionBy).filter(_.rows > 0)
+      if (marks.isEmpty && newFiles.isEmpty) 0L
       else {
-        val addressed = readAddressedDml(keepRid = false)
-        def pre(op: Int, tag: String): DataFrame =
-          addressed.join(
-              cached.filter(opCol === op)
-                .select(col(SnapshotTable.DvFileCol),
-                  col(SnapshotTable.DvPosCol)),
-              Seq(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol),
-              "left_semi")
-            .drop(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
-            .withColumn(ChangeCol, lit(tag))
-        val post = updImages.drop(SnapshotTable.RidCol)
-          .withColumn(ChangeCol, lit("update_postimage"))
-        val ins = insImages.drop(SnapshotTable.RidCol)
-          .withColumn(ChangeCol, lit("insert"))
-        writeChanges(
-          pre(RowDeltaUtils.DELETE_OPERATION, "delete")
-            .unionByName(pre(RowDeltaUtils.UPDATE_OPERATION,
-              "update_preimage"))
-            .unionByName(post).unionByName(ins), v + 1)
+        val cdc =
+          if (!trackChanges) Seq.empty
+          else {
+            val addressed = readAddressedDml(keepRid = false)
+            def pre(op: Int, tag: String): DataFrame =
+              addressed.join(
+                  cached.filter(opCol === op)
+                    .select(col(SnapshotTable.DvFileCol),
+                      col(SnapshotTable.DvPosCol)),
+                  Seq(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol),
+                  "left_semi")
+                .drop(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
+                .withColumn(ChangeCol, lit(tag))
+            val post = updImages.drop(SnapshotTable.RidCol)
+              .withColumn(ChangeCol, lit("update_postimage"))
+            val ins = insImages.drop(SnapshotTable.RidCol)
+              .withColumn(ChangeCol, lit("insert"))
+            writeChanges(
+              pre(RowDeltaUtils.DELETE_OPERATION, "delete")
+                .unionByName(pre(RowDeltaUtils.UPDATE_OPERATION,
+                  "update_preimage"))
+                .unionByName(post).unionByName(ins), v + 1)
+          }
+        // affected rows = the delta frame's row count (each changed row
+        // appears exactly once there; marks + images would double-count
+        // updates)
+        val affected = cached.count()
+        // the MERGE joined the whole table, so every file is read and any
+        // file a rival adds may hold a row it would have matched
+        commit(Commit("MERGE_DV", v, read = fileEntries(v),
+          predicate = Some(Seq.empty), files = newFiles, marks = marks,
+          changes = cdc)): Unit
+        affected
       }
-    // affected rows = the delta frame's row count (each changed row
-    // appears exactly once there; marks + images would double-count
-    // updates). Counted BEFORE the commit drains the cache.
-    val affected = cached.count()
-    writeManifest(Manifest(v + 1, "MERGE_DV", mergeKeysOf(v),
-      fileEntries(v) ++ newFiles, Seq.empty, cdc, dvEntries(v) ++ marks))
-    affected
-    // a failed commit releases its own caches (writeManifest drains on
-    // success; the early no-op return above drains explicitly)
-    } catch { case e: Throwable => drainCommitCaches(); throw e }
+    }
   }
 
   /** [[readWithRowIds]] restricted to `entries` (the row-level
@@ -1172,12 +1180,12 @@ class SnapshotTable(spark: SparkSession, root: String) {
         seedIdentity(col, start, step)))
     // Cross-process visibility: advance to the latest COMMITTED mark
     // first — another process may have committed allocations this one
-    // never saw. The insert's own commit targets currentVersion + 1 on
-    // a write-once manifest, so a writer that raced past this check
-    // forces this writer's commit to FAIL; the statement retry
-    // re-reserves above the raced-in mark. A lost race is a retry,
-    // never a duplicate (Delta's identity contract). SYNC IDENTITY's
-    // forward realignment survives (max/min keeps the later mark).
+    // never saw. A writer that raced past this check advanced the
+    // committed marks, which makes this writer's commit conflict
+    // ([[commit]]); the statement retry re-reserves above the raced-in
+    // mark. A lost race is a retry, never a duplicate (Delta's identity
+    // contract). SYNC IDENTITY's forward realignment survives (max/min
+    // keeps the later mark).
     val v = currentVersion
     manifestOf(v).identHwm.get(physColName(col, v)).foreach { committed =>
       hwm.updateAndGet(cur =>
@@ -1260,10 +1268,13 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * cost is O(batch), never table-sized). `forbidExplicit` raises on
     * any non-NULL provided value (GENERATED ALWAYS AS IDENTITY without
     * ALLOW EXPLICIT INSERT); explicit values never advance the
-    * high-water mark (Delta parity — SYNC semantics are out of scope). */
+    * high-water mark (Delta parity — SYNC semantics are out of scope).
+    * The sized batch is held in `caches`, so the insert that writes the
+    * filled frame releases it when it ends. */
   private[graft] def fillIdentity(
       df: DataFrame, f: org.apache.spark.sql.types.StructField,
-      start: Long, step: Long, forbidExplicit: Boolean): DataFrame = {
+      start: Long, step: Long, forbidExplicit: Boolean,
+      caches: CacheScope): DataFrame = {
     val idx = df.schema.fieldIndex(f.name)
     val name = f.name
     // fast path: no NULL slot to fill (the common shape for row-level
@@ -1277,19 +1288,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
             "are not allowed (declare BY DEFAULT to permit them)")
       return df
     }
-    // a previous FAILED commit's batch releases now — but NEVER the
-    // in-flight commit's own caches (a DV MERGE's delta frame must stay
-    // persisted between its marks and image writes; see pendingUnpersist)
-    drainStaleCommitCaches()
-    val rdd = df.rdd
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the cache lives until the COMMIT consumes the frame (writeManifest
-    // drains [[pendingUnpersist]]) — never for the session: an insert
-    // batch pinned in the block manager forever is a leak, not a cache
-    val release: () => Unit = () => { rdd.unpersist(false); () }
-    addCommitRelease(release)
+    val rdd = caches.persistRdd(df.rdd)
     val n = rdd.count()
-    if (n == 0) { removeCommitRelease(release); rdd.unpersist(false); return df }
+    if (n == 0) return df
     val base = reserveIdentity(f.name, start, step, n)
     val isLong = f.dataType == org.apache.spark.sql.types.LongType
     val filled = rdd.zipWithIndex().map { case (r, i) =>
@@ -1360,10 +1361,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     require(!bloomCols.contains(phys),
       s"ALTER COLUMN TYPE on $root: $name carries a bloom-filter " +
         "property — equality probes hash by physical type; clear it first")
-    writeManifest(Manifest(v + 1, "WIDEN_COLUMN", m.mergeKeys, m.files,
-      m.deltas, Seq.empty, m.dvs, renames = m.renames, dropped = m.dropped,
-      fieldMeta = m.fieldMeta,
-      widened = m.widened + (phys -> newType.catalogString)))
+    commit(Commit("WIDEN_COLUMN", v, mapping = Some(Mapping.of(m).copy(
+      widened = m.widened + (phys -> newType.catalogString))))): Unit
     SnapshotTable.mappedRoots.add(root)
     this
   }
@@ -1403,12 +1402,12 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val v = currentVersion
     require(deltaEntries(v).isEmpty,
       s"replaceFiles on $root requires compacted state (pending MoR deltas)")
-    val replacedPaths = replaced.map(_.path).toSet
-    val carryOver = fileEntries(v).filterNot(e => replacedPaths(e.path))
     val written = writeData(df, v + 1, partitionBy)
-    writeManifest(Manifest(v + 1, "OVERWRITE", Seq.empty,
-      written ++ carryOver, Seq.empty, Seq.empty,
-      remainingDvs(v, replacedPaths, v + 1)))
+    // the rewrite query does not reach the table as a predicate, so any
+    // file a rival adds may hold a row it would have matched
+    commit(Commit("OVERWRITE", v, read = replaced, predicate = Some(Seq.empty),
+      removed = replaced, files = written, mergeKeys = Some(Seq.empty),
+      keptDvs = remainingDvs(v, replaced.map(_.path).toSet, v + 1))): Unit
     this
   }
 
@@ -1418,35 +1417,14 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * partition evolution): each file entry remembers ITS partition
     * column, and [[planFiles]] prunes exactly where metadata allows.
     *
-    * Concurrency: appends NEVER semantically conflict with anything
-    * (Delta's append-vs-anything rule) — losing the write-once manifest
-    * race just re-targets the already-written files at the winner's
-    * state and retries metadata-only. N concurrent appenders all
-    * commit; the data is written exactly once per appender. */
+    * Concurrency: an append reads no file, so a lost race rebases it on
+    * the winner metadata-only ([[commit]]); only a winner that changed
+    * the column mapping or metadata (a `SET NOT NULL` the write was not
+    * checked against) conflicts. The data is written exactly once. */
   def append(df: DataFrame, partitionBy: Option[String] = None): SnapshotTable = {
-    val written = writeData(df, currentVersion + 1, partitionBy)
-    commitAppendWithRetry(written, txns = Map.empty)
+    val v = currentVersion
+    commit(Commit("APPEND", v, files = writeData(df, v + 1, partitionBy))): Unit
     this
-  }
-
-  /** Commit `written` as an APPEND on top of whatever the current
-    * version is, retrying on a lost manifest race (see [[append]]).
-    * The attempt-unique data dir makes the retry metadata-only. */
-  private def commitAppendWithRetry(
-      written: Seq[FileEntry], txns: Map[String, Long]): Unit = {
-    var committed = false
-    while (!committed) {
-      val v = currentVersion
-      try {
-        writeManifest(Manifest(v + 1, "APPEND", mergeKeysOf(v),
-          fileEntries(v) ++ written.map(_.copy(origin = (v + 1).toLong)),
-          deltaEntries(v), dvs = dvEntries(v), txns = txns))
-        committed = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException
-            | _: java.nio.file.FileAlreadyExistsException => // lost race: retry
-      }
-    }
   }
 
   /** The one file planner: the files of `version` (default: latest)
@@ -1461,11 +1439,27 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * base files and never appear in the result. */
   def planFiles(cond: Column, version: Int = -1): Seq[FileEntry] = {
     val v = if (version < 0) currentVersion else version
-    val entries = fileEntries(v)
-    if (entries.isEmpty) entries
-    else entries.filter(mayHold(org.apache.spark.sql.GraftStreamShim
-      .sourceFiltersOf(read(v), cond), entries, physColName(_, v)))
+    planFilters(sourceFilters(cond, v), v)
   }
+
+  /** [[planFiles]] for v1 filters a scan already pushed (the SQL size
+    * estimates): no resolution pass, the filters go straight to
+    * [[mayHold]]. */
+  private[graft] def planFilters(
+      filters: Seq[org.apache.spark.sql.sources.Filter],
+      version: Int = -1): Seq[FileEntry] = {
+    val v = if (version < 0) currentVersion else version
+    val entries = fileEntries(v)
+    entries.filter(mayHold(filters, entries, physColName(_, v)))
+  }
+
+  /** `cond` resolved against version `v` as the v1 source filters of its
+    * conjuncts (see [[planFiles]]); none, which plans every file, when
+    * `v` has no file to resolve it against. */
+  private def sourceFilters(cond: Column,
+      v: Int): Seq[org.apache.spark.sql.sources.Filter] =
+    if (fileEntries(v).isEmpty) Seq.empty
+    else org.apache.spark.sql.GraftStreamShim.sourceFiltersOf(read(v), cond)
 
   /** The entry predicate of [[planFiles]] and [[ManifestFileIndex]]: may
     * `e` (one of `entries`) hold a row where all of the ANDed v1
@@ -1751,7 +1745,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       withProperty(SnapshotTable.PartSpecProp, f.name)
     }
     synthPartCache = None
-    writeManifest(Manifest(0, "CONVERT", Seq.empty, entries, Seq.empty))
+    createManifest(Manifest(0, "CONVERT", Seq.empty, entries, Seq.empty))
     this
   }
 
@@ -1766,7 +1760,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       case f if f.metadata != org.apache.spark.sql.types.Metadata.empty =>
         f.name -> f.metadata.json
     }.toMap
-    writeManifest(Manifest(0, "CREATE", Seq.empty, written, Seq.empty,
+    createManifest(Manifest(0, "CREATE", Seq.empty, written, Seq.empty,
       txns = txn.map(t => Map(t._1 -> t._2)).getOrElse(Map.empty),
       fieldMeta = createMeta))
     this
@@ -1786,9 +1780,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
     *    touched; commits `MERGE_MOR` / `DELETE_MOR` ([[mergeOnRead]]).
     *
     * A copy-on-write merge rewrites only the source's slice of the table
-    * ([[mergeSlice]]) and retries a lost commit race metadata-only
-    * ([[mergeCopyOnWrite]]); a deferred merge does not retry.
-    * `trackChanges` writes the commit's change feed ([[changes]]).
+    * ([[mergeSlice]]). Both modes read that slice, so a lost commit race
+    * rebases on the winner unless it changed the slice or added rows in
+    * the source's partitions ([[commit]]). `trackChanges` writes the
+    * commit's change feed ([[changes]]).
     *
     * `evolveSchema` (Delta `mergeSchema`, copy-on-write upsert only):
     * source columns absent from the target are appended; only rewritten
@@ -1831,26 +1826,15 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * `delete` rows — classified against the rewrite base, so its cost is
     * O(source + slice), never the table.
     *
-    * Commit (Delta's optimistic transaction): the data is written once,
-    * against the version read at entry. A lost manifest race retries
-    * metadata-only: the winner must have left this merge's slice (base
-    * files AND pending deltas) and the column metadata the write was
-    * checked against (NOT NULL markers) unchanged, and added no
-    * deletion-vector mark addressing the rewritten files
-    * ([[conflictingNewDvMarks]]) — the rewrite copied that row forward,
-    * so committing would resurrect it. Anything else is a true conflict:
-    * `ConcurrentModificationException`, as in Delta. A passing retry
-    * re-targets the carried files, deltas and marks and the written
-    * entries' origin at the winner's version. A winner that already
-    * recorded this call's `txn` ends it without a commit.
-    *
-    * `beforeCommit` runs before each commit attempt: a test seam that
-    * interleaves a rival commit deterministically. */
-  private[graft] def mergeCopyOnWrite(source: DataFrame, keys: Seq[String],
-      partitionBy: Option[String], deleteMatched: Boolean = false,
-      trackChanges: Boolean = false, evolveSchema: Boolean = false,
-      txn: Option[(String, Long)] = None,
-      beforeCommit: () => Unit = () => ()): Unit =
+    * The data is written once, against the version read at entry; the
+    * commit reads the slice's files and deltas, and its predicate is the
+    * source's partitions (every partition when the slice is the whole
+    * table), so a lost race rebases metadata-only on a disjoint winner
+    * ([[commit]]). */
+  private def mergeCopyOnWrite(source: DataFrame, keys: Seq[String],
+      partitionBy: Option[String], deleteMatched: Boolean,
+      trackChanges: Boolean, evolveSchema: Boolean,
+      txn: Option[(String, Long)]): Unit =
     withSourceOnce(if (deleteMatched) source.select(keys.map(col): _*)
                    else source) { src =>
       val source = src.df
@@ -1888,54 +1872,12 @@ class SnapshotTable(spark: SparkSession, root: String) {
             },
             v0 + 1)
         }
-      val rewrittenPaths = slice.files.map(_.path).toSet
-      val foldedPaths = slice.deltas.map(_.path).toSet
-      val dvPaths0 = dvEntries(v0).map(_.path).toSet
-      var dvs = remainingDvs(v0, rewrittenPaths, v0 + 1)
-      var v = v0
-      var at = slice
-      var attempt = 1
-      var done = false
-      def conflict(why: String): Nothing =
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit to $root $why — the rewrite base is stale")
-      while (!done) {
-        beforeCommit()
-        try {
-          writeManifest(Manifest(v + 1,
-            if (deleteMatched) "MERGE_DELETE" else "MERGE",
-            if (at.carriedDeltas.isEmpty) Seq.empty else mergeKeysOf(v),
-            written.map(_.copy(origin = v + 1L)) ++ at.carriedFiles,
-            at.carriedDeltas, cdc.map(_.copy(origin = v + 1L)), dvs,
-            txns = Map.from(txn)))
-          done = true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException
-              | _: java.nio.file.FileAlreadyExistsException =>
-            val w = currentVersion
-            done = replayed(w, txn)
-            if (!done) {
-              at = mergeSlice(w, keys, partitionBy, touched)
-              if (at.files.map(_.path).toSet != rewrittenPaths ||
-                  at.deltas.map(_.path).toSet != foldedPaths)
-                conflict("changed this merge's slice of files or deltas")
-              if (manifestOf(w).fieldMeta != manifestOf(v0).fieldMeta)
-                conflict("changed the column metadata the rewrite was checked against")
-              if (dvEntries(w).map(_.path).toSet != dvPaths0) {
-                if (conflictingNewDvMarks(v0, w, rewrittenPaths))
-                  conflict("added deletion-vector marks to this merge's " +
-                    "rewritten files (committing would resurrect deleted rows)")
-                dvs = remainingDvs(w, rewrittenPaths, w + 1)
-              }
-              attempt += 1
-              if (attempt > SnapshotTable.MergeAttempts)
-                throw new java.util.ConcurrentModificationException(
-                  s"gave up committing to $root after " +
-                    s"${SnapshotTable.MergeAttempts} attempts")
-              v = w
-            }
-        }
-      }
+      val sliced = slice.files ++ slice.deltas
+      commit(Commit(if (deleteMatched) "MERGE_DELETE" else "MERGE", v0,
+        read = sliced, predicate = Some(slice.predicate), txn = txn,
+        removed = sliced, files = written, changes = cdc,
+        keptDvs = remainingDvs(v0, slice.files.map(_.path).toSet, v0 + 1),
+        mergeKeys = if (slice.carriedDeltas.isEmpty) Some(Seq.empty) else None)): Unit
     }
 
   /** The merge-on-read writer of [[merge]]: appends `source` — or, for
@@ -1945,7 +1887,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * table size. Reads resolve deltas last-writer-wins per key across
     * kinds (a key re-upserted after a delete resurfaces) until
     * [[compact]] folds them. Every deferred merge on a table uses the
-    * same `keys` (a fixed primary key). No retry on a lost race.
+    * same `keys` (a fixed primary key). Like the copy-on-write merge it
+    * commits as having read the source's slice ([[mergeSlice]]).
     *
     * The change feed classifies against the RESOLVED view: a key whose
     * current value sits in a pending delta gets that row as its
@@ -1966,21 +1909,21 @@ class SnapshotTable(spark: SparkSession, root: String) {
       if (!deleteMatched) source
       else source.select(keys.map(col): _*).distinct().withColumn(DelCol, lit(true))
     val written = writeData(rows, v + 1, partitionBy)
+    lazy val copy = (if (written.nonEmpty) readEntries(written) else rows).drop(DelCol)
+    // the written entries name the touched partitions without a job
+    lazy val touched =
+      if (written.forall(_.partValue != null)) written.map(_.partValue).toSet
+      else partitionBy.fold(Set.empty[String])(
+        new OnceSource(copy, local = false).partValues)
+    val slice = mergeSlice(v, keys, partitionBy, touched)
     val cdc =
       if (!trackChanges) Seq.empty
       else {
-        val copy = (if (written.nonEmpty) readEntries(written) else rows).drop(DelCol)
         // no distinct: merge sources are unique on keys, and a semi-join
         // probe tolerates duplicates anyway (a distinct would cost a
         // shuffle before the broadcast build)
         val probe = copy.select(keys.map(col): _*)
-        // the written entries name the touched partitions without a job
-        lazy val touched =
-          if (written.nonEmpty && written.forall(_.partValue != null))
-            written.map(_.partValue).toSet
-          else partitionBy.fold(Set.empty[String])(
-            new OnceSource(copy, local = false).partValues)
-        val pre = sliceScan(mergeSlice(v, keys, partitionBy, touched), v, keys,
+        val pre = sliceScan(slice, v, keys,
           if (deleteMatched) read(v).schema else source.schema, Some(probe))
         if (deleteMatched) writeChanges(pre.withColumn(ChangeCol, lit("delete")), v + 1)
         else {
@@ -2003,9 +1946,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
             v + 1)
         }
       }
-    writeManifest(Manifest(v + 1, if (deleteMatched) "DELETE_MOR" else "MERGE_MOR",
-      keys, fileEntries(v), deltaEntries(v) ++ written, cdc, dvEntries(v),
-      txns = Map.from(txn)))
+    commit(Commit(if (deleteMatched) "DELETE_MOR" else "MERGE_MOR", v,
+      read = slice.files ++ slice.deltas, predicate = Some(slice.predicate),
+      txn = txn, deltas = written, changes = cdc, mergeKeys = Some(keys))): Unit
   }
 
   /** The slice planner of [[merge]]. With `partitionBy` among `keys`, a
@@ -2019,7 +1962,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * delta is laid out under `partitionBy` and the table's merge keys
     * include it — a delta row then shadows base rows of its own
     * partition only. Otherwise a pending delta may update any partition,
-    * and every file and delta folds into the slice. */
+    * and every file and delta folds into the slice.
+    *
+    * The slice's `predicate` is what [[mayHold]] keeps a file of it by:
+    * `partitionBy IN touched` when the slice is pruned, none (every file)
+    * otherwise — what a rival's added file is checked against. */
   private def mergeSlice(v: Int, keys: Seq[String], partitionBy: Option[String],
       touched: => Set[String]): MergeSlice = {
     val files = fileEntries(v)
@@ -2032,8 +1979,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
           e.partValue == null || e.partCol != p || vals.contains(e.partValue)
         val (f, cf) = files.partition(inSlice)
         val (d, cd) = deltas.partition(inSlice)
-        MergeSlice(f, d, cf, cd)
-      case _ => MergeSlice(files, deltas, Seq.empty, Seq.empty)
+        MergeSlice(f, d, cf, cd,
+          Seq(org.apache.spark.sql.sources.In(p, vals.toArray[Any])))
+      case _ => MergeSlice(files, deltas, Seq.empty, Seq.empty, Seq.empty)
     }
   }
 
@@ -2108,8 +2056,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val op = if (set.isEmpty) "DELETE" else "UPDATE"
     require(deltaEntries(v).isEmpty,
       s"$op on $root requires compacted state (pending MoR deltas)")
-    val touched = planFiles(cond, v)
-    val carryOver = fileEntries(v).diff(touched)
+    val filters = sourceFilters(cond, v)
+    val touched = planFilters(filters, v)
     val dvs = dvEntries(v)
     val matches = cond <=> true
     def assigned(df: DataFrame, s: Map[String, Column]): DataFrame =
@@ -2138,9 +2086,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
             .unionByName(old.withColumn(ChangeCol, lit("update_preimage")))
         }, v + 1)
       }
-    writeManifest(Manifest(v + 1, op, Seq.empty,
-      written ++ carryOver, Seq.empty, cdc,
-      remainingDvs(v, touched.map(_.path).toSet, v + 1)))
+    commit(Commit(op, v, read = touched, predicate = Some(filters),
+      removed = touched, files = written, changes = cdc,
+      keptDvs = remainingDvs(v, touched.map(_.path).toSet, v + 1),
+      mergeKeys = Some(Seq.empty))): Unit
   }
 
   /** The deletion-vector writer behind [[delete]]`(positional = true)`
@@ -2176,7 +2125,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     require(images.isEmpty || deltas.isEmpty,
       s"positional UPDATE on $root requires compacted state (pending MoR " +
         "deltas — OPTIMIZE folds them first)")
-    val candidates = planFiles(cond, v)
+    val filters = sourceFilters(cond, v)
+    val candidates = planFilters(filters, v)
     if (candidates.isEmpty) return
     val dvs = dvEntries(v)
     val matched = (if (dvs.isEmpty) readEntriesAddressed(candidates)
@@ -2187,8 +2137,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // the images feed the data write AND the change feed — cache them so
     // a non-deterministic SET expression cannot store one value and feed
     // the change feed another
-    val cachedImages = images.map(registerCommitCache)
-    try {
+    withCaches { caches =>
+      val cachedImages = images.map(caches.persist)
       val added = cachedImages.fold(Seq.empty[FileEntry])(
         writeData(_, v + 1, partitionBy).filter(_.rows > 0))
       val cdc =
@@ -2213,15 +2163,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
             lit(if (images.isEmpty) "delete" else "update_preimage")))(
             _ unionByName _), v + 1)
         }
-      writeManifest(Manifest(v + 1,
-        if (images.isEmpty) "DELETE_DV" else "UPDATE_DV", mergeKeysOf(v),
-        fileEntries(v) ++ added, deltas, cdc, dvs ++ marks))
-    // a failed commit releases the caches it registered (success path
-    // drains in writeManifest)
-    } catch {
-      case e: Throwable =>
-        if (cachedImages.isDefined) drainCommitCaches()
-        throw e
+      commit(Commit(if (images.isEmpty) "DELETE_DV" else "UPDATE_DV", v,
+        read = candidates, predicate = Some(filters), files = added,
+        marks = marks, changes = cdc)): Unit
     }
   }
 
@@ -2251,10 +2195,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
         java.util.Arrays.asList(source.collect(): _*), source.schema), local = true))
     else if (source.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
       body(new OnceSource(source, local = false))
-    else {
-      val cached = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try body(new OnceSource(cached, local = false)) finally cached.unpersist(false)
-    }
+    else withCaches(caches =>
+      body(new OnceSource(caches.persist(source), local = false)))
   }
 
   /** True iff a deletion-vector mark committed AFTER `fromVersion`
@@ -2286,18 +2228,19 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * addressing rewritten files were already applied by the rewrite's
     * DV-resolved base scan, so they are dropped — one O(dv rows) pass
     * that also keeps the DV set from accumulating stale addresses (and
-    * keeps the manifest's exact row accounting sound). With no DVs or
-    * no rewritten files the carry is free (entries pass by reference). */
-  private def remainingDvs(
-      version: Int, rewrittenPaths: Set[String], newVersion: Int): Seq[FileEntry] = {
+    * keeps the manifest's exact row accounting sound). The result
+    * replaces `version`'s DV files; None (no DVs or no rewritten files)
+    * carries them by reference. */
+  private def remainingDvs(version: Int, rewrittenPaths: Set[String],
+      newVersion: Int): Option[Seq[FileEntry]] = {
     val dvs = dvEntries(version)
-    if (dvs.isEmpty || rewrittenPaths.isEmpty) dvs
+    if (dvs.isEmpty || rewrittenPaths.isEmpty) None
     else {
       import spark.implicits._
       val gone = rewrittenPaths.toSeq.toDF(DvFileCol)
       val kept = readEntries(dvs)
         .join(broadcast(gone), Seq(DvFileCol), "left_anti")
-      writeData(kept, newVersion, None).filter(_.rows > 0)
+      Some(writeData(kept, newVersion, None).filter(_.rows > 0))
     }
   }
 
@@ -2323,29 +2266,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
       partitionBy: Option[String] = None): Boolean = {
     val v = currentVersion
     val txn = Some((appId, version))
-    if (replayed(v, txn)) false
-    else {
-      val written = writeData(df, v + 1, partitionBy)
-      // same retry discipline as [[append]] — but a racing writer of the
-      // SAME appId may have recorded this (or a newer) version while we
-      // wrote, so the idempotence check re-runs inside the loop
-      var committed = false
-      while (!committed) {
-        val cur = currentVersion
-        if (replayed(cur, txn)) return false
-        try {
-          writeManifest(Manifest(cur + 1, "APPEND", mergeKeysOf(cur),
-            fileEntries(cur) ++ written.map(_.copy(origin = (cur + 1).toLong)),
-            deltaEntries(cur), dvs = dvEntries(cur),
-            txns = Map(appId -> version)))
-          committed = true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException
-              | _: java.nio.file.FileAlreadyExistsException => // retry
-        }
-      }
-      true
-    }
+    // a racing writer of the SAME appId may record this (or a newer)
+    // version while this one writes: [[commit]] then ends without a commit
+    !replayed(v, txn) && commit(Commit("APPEND", v, txn = txn,
+      files = writeData(df, v + 1, partitionBy)))
   }
 
   /** Full-table overwrite (`INSERT OVERWRITE TABLE` without a partition
@@ -2355,8 +2279,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * versions stay time-travelable, unlike a drop-and-recreate. */
   def overwriteAll(df: DataFrame, partitionBy: Option[String] = None): SnapshotTable = {
     val v = currentVersion
-    val written = writeData(df, v + 1, partitionBy)
-    writeManifest(Manifest(v + 1, "OVERWRITE", Seq.empty, written, Seq.empty))
+    val all = fileEntries(v) ++ deltaEntries(v)
+    commit(Commit("OVERWRITE", v, read = all, removed = all,
+      files = writeData(df, v + 1, partitionBy), keptDvs = Some(Seq.empty),
+      mergeKeys = Some(Seq.empty))): Unit
     this
   }
 
@@ -2416,7 +2342,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
       entries.filter(e => e.partValue == null || !underLayout(spec, e))
     val replaced = entries.filter(e => e.partValue != null &&
       underLayout(spec, e) && diskVals.contains(e.partValue))
-    val carry = entries.filterNot(e => foreign.contains(e) || replaced.contains(e))
     val written = writeData(df, v + 1, Some(partitionBy))
     // rows of mixed-layout files that do NOT belong to a replaced
     // partition survive the rewrite. isin over a null-bearing list is
@@ -2434,10 +2359,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
       else writeData(
         baseScan(foreign, dvEntries(v)).filter(keepRow),
         v + 1, Some(partitionBy))
-    val gonePaths = (replaced ++ foreign).map(_.path).toSet
-    writeManifest(Manifest(v + 1, "OVERWRITE", Seq.empty,
-      written ++ residue ++ carry, Seq.empty,
-      dvs = remainingDvs(v, gonePaths, v + 1)))
+    val gone = replaced ++ foreign
+    commit(Commit("OVERWRITE", v, read = gone, removed = gone,
+      files = written ++ residue, mergeKeys = Some(Seq.empty),
+      keptDvs = remainingDvs(v, gone.map(_.path).toSet, v + 1))): Unit
     this
   }
 
@@ -2588,9 +2513,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
     if (deltaEntries(v).isEmpty) rewriteSource(rewrite, dvEntries(v))
     else read(v)
 
-  /** The one commit of every maintenance rewrite: `op` over
-    * `written ++ carried`, with no pending delta left (a rewrite folds
-    * them or requires none) and so no merge keys. DV marks on rewritten
+  /** The one commit of every maintenance rewrite: `op` replaces
+    * `rewrite` and every pending delta (a rewrite folds them or requires
+    * none) by `written`, and `carried` stays. It reads what it replaces
+    * and has no predicate: a rival's added files never conflict with a
+    * rewrite that leaves the rows as they were. DV marks on rewritten
     * files were applied by the rewrite and drop; marks on carried files
     * stay — by reference when no rewritten file had one, through
     * [[remainingDvs]] otherwise. `marked` (the DV-addressed paths) is
@@ -2598,16 +2525,17 @@ class SnapshotTable(spark: SparkSession, root: String) {
   private def commitRewrite(v: Int, op: String, written: Seq[FileEntry],
       rewrite: Seq[FileEntry], carried: Seq[FileEntry],
       marked: => Set[String]): Unit = {
-    val dvs =
-      if (carried.isEmpty) Seq.empty
+    val keptDvs =
+      if (carried.isEmpty) Some(Seq.empty)
       else {
         val m = marked
-        if (!carried.exists(e => m(e.path))) Seq.empty
-        else if (!rewrite.exists(e => m(e.path))) dvEntries(v)
+        if (!carried.exists(e => m(e.path))) Some(Seq.empty)
+        else if (!rewrite.exists(e => m(e.path))) None
         else remainingDvs(v, rewrite.map(_.path).toSet, v + 1)
       }
-    writeManifest(Manifest(v + 1, op, Seq.empty, written ++ carried,
-      Seq.empty, dvs = dvs))
+    val replaced = rewrite ++ deltaEntries(v)
+    commit(Commit(op, v, read = replaced, removed = replaced, files = written,
+      keptDvs = keptDvs, mergeKeys = Some(Seq.empty))): Unit
   }
 
   /** Size-binned rewrite of OPTIMIZE and REORG: scan exactly `rewrite`
@@ -2849,16 +2777,15 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val shift = if (all.isEmpty) 0L else all.map(_.origin).max + 1L
     def rebased(es: Seq[FileEntry]): Seq[FileEntry] =
       es.map(e => e.copy(origin = e.origin - shift))
-    clone.writeManifest(Manifest(atVersion, "CLONE", mergeKeysOf(v),
-      rebased(fileEntries(v)), rebased(deltaEntries(v)),
-      dvs = rebased(dvEntries(v)),
-      renames = manifestOf(v).renames, dropped = manifestOf(v).dropped,
-      fieldMeta = manifestOf(v).fieldMeta,
-      widened = manifestOf(v).widened,
-      rowIdHwm = manifestOf(v).rowIdHwm,
-      // the clone carries the SOURCE's identity marks so clone inserts
-      // can never re-issue ids the carried rows already hold
-      identHwm = manifestOf(v).identHwm))
+    // the clone carries the SOURCE's row-id and identity marks so clone
+    // inserts can never re-issue ids the carried rows already hold
+    val m = manifestOf(v)
+    val cloned = Manifest(atVersion, "CLONE", mergeKeysOf(v), rebased(m.files),
+      rebased(m.deltas), dvs = rebased(m.dvs), renames = m.renames,
+      dropped = m.dropped, fieldMeta = m.fieldMeta, widened = m.widened,
+      rowIdHwm = m.rowIdHwm, identHwm = m.identHwm)
+    if (atVersion == 0) clone.createManifest(cloned)
+    else clone.replaceState("CLONE", atVersion - 1, cloned)
     // The clone inherits the durable property sidecar: a hidden-layout
     // table's partition spec and bloom-filter columns live there — a
     // clone losing them would write subsequent commits unpartitioned
@@ -2901,8 +2828,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
       // names happen to collide (the re-clone-from-backup case)
       val written = clone.writeData(read(v), cv + 1, layoutSpecAt(v),
         physical = true)
-      clone.writeManifest(Manifest(cv + 1, "CLONE", Seq.empty,
-        written, Seq.empty))
+      clone.replaceState("CLONE", cv,
+        Manifest(cv + 1, "CLONE", Seq.empty, written, Seq.empty))
     }
     else clone.create(read(v), partitionBy = layoutSpecAt(v))
     // the clone takes the SOURCE's property sidecar wholesale — and a
@@ -3415,14 +3342,16 @@ class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   /** Persist one commit's manifest as a write-once JSON file and prime
-    * the cache. Create-no-overwrite keeps ErrorIfExists semantics — a
-    * racing writer's second attempt at the same version FAILS here,
-    * which is the engine's whole concurrency-control point (see
-    * [[mergeCopyOnWrite]] and [[append]]). The commit timestamp is stamped strictly
-    * above the previous version's so AS-OF-timestamp order == version
-    * order. */
-  private def writeManifest(m: Manifest): Unit = commitLock.synchronized {
+    * the cache; false, writing nothing, when version `m.version` already
+    * exists — the lost race [[commit]] rebases from. Under
+    * [[SnapshotTable.commitLock]] the check and the write are one step
+    * for every writer in this JVM; across processes the create without
+    * overwrite is the only guard (it throws). The commit timestamp is
+    * stamped strictly above the previous version's so
+    * AS-OF-timestamp order == version order. */
+  private def writeManifest(m: Manifest): Boolean = commitLock.synchronized {
     val p = manifestPath(m.version)
+    if (fs.exists(p)) return false
     fs.mkdirs(logDir)
     val prev = if (m.version == 0) null else manifestOf(m.version - 1)
     // txn markers accumulate: every commit carries the predecessor's map
@@ -3430,14 +3359,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
     // visible at every later version — one lookup, no log replay
     val carriedTxns =
       if (prev == null) m.txns else prev.txns ++ m.txns
-    // Column mapping carries forward like txns: only the mapping ops
-    // (and RESTORE/CLONE, which pin a specific historical mapping) set
-    // it explicitly; every other commit inherits the predecessor's.
-    val setsMapping =
-      prev == null || MappingOps.contains(m.operation)
-    val (carriedRenames, carriedDropped, carriedFieldMeta, carriedWidened) =
-      if (setsMapping) (m.renames, m.dropped, m.fieldMeta, m.widened)
-      else (prev.renames, prev.dropped, prev.fieldMeta, prev.widened)
+    // the column mapping is the manifest's own: the mapping ops (and
+    // RESTORE/CLONE, which pin a historical one) set it, every other
+    // commit carries its base's ([[Commit.manifestAt]])
     // Stable row-id bases (Delta row-tracking analog): every data file
     // THIS commit writes takes a contiguous id range off the carried
     // high-water mark — pure manifest math, zero data cost, so every
@@ -3472,7 +3396,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       SnapshotTable.identityHwm.asScala.collect {
         case (k, ctr) if k.startsWith(pfx) =>
           val logical = k.substring(pfx.length)
-          carriedRenames.getOrElse(logical, logical) -> ctr.get()
+          m.renames.getOrElse(logical, logical) -> ctr.get()
       }.toMap
     }
     val carriedIdent =
@@ -3486,15 +3410,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
       ts = math.max(System.currentTimeMillis(),
         (if (prev == null) 0L else prev.ts) + 1),
       txns = carriedTxns,
-      renames = carriedRenames,
-      dropped = carriedDropped,
-      fieldMeta = carriedFieldMeta,
-      widened = carriedWidened,
       // manifest-stored column names are always PHYSICAL: merge keys
       // arrive logical from DML callers and translate here, centrally
       // (idempotent — a physical name is never a logical name, the
       // rename guards forbid reusing one)
-      mergeKeys = m.mergeKeys.map(k => carriedRenames.getOrElse(k, k)))
+      mergeKeys = m.mergeKeys.map(k => m.renames.getOrElse(k, k)))
     // Incremental log: checkpoint versions (0 and every
     // CheckpointInterval-th) persist as FULL manifests; everything else
     // as a DELTA against the predecessor — commit metadata written is
@@ -3515,119 +3435,87 @@ class SnapshotTable(spark: SparkSession, root: String) {
         stamped.fieldMeta.nonEmpty || stamped.widened.nonEmpty)
       SnapshotTable.mappedRoots.add(root)
     manifestCache.put(p.toString, stamped)
-    // caches owned by this commit (identity-fill batches, merge delta
-    // frames) are consumed once the manifest lands — release them
-    drainCommitCaches()
+    true
   }
 
-  /** Cache-release thunks owned by the IN-FLIGHT commit
-    * ([[fillIdentity]]'s sized insert batch, [[writeDeltaPositional]]'s
-    * delta frame, [[markPositional]]'s images): registered when
-    * the cache is created, run by [[writeManifest]] once the commit
-    * that consumed them lands. The drain is COMMIT-SCOPED: while a
-    * multi-job commit is consuming its registered caches
-    * ([[commitCachesInFlight]]), a nested [[fillIdentity]] (identity
-    * fill inside the commit's image alignment) must NOT release them —
-    * a DV MERGE writes its marks from the first evaluation of the delta
-    * frame, and recomputing the frame for the image/CDF jobs after a
-    * mid-commit drain would, with a non-deterministic source or
-    * condition, address DIFFERENT rows than the stored marks. A commit
-    * that failed mid-flight releases its caches in its own failure
-    * handler (and, belt-and-braces, at the next stale drain). */
-  private final class CommitCacheState {
-    /** The thread whose commits own these caches, held weakly so a dead
-      * thread can be collected while its state waits to be reaped. */
-    val owner = new java.lang.ref.WeakReference(Thread.currentThread())
-    val pending = new java.util.ArrayDeque[() => Unit]()
-    var inFlight = false
-    def ownerDead: Boolean = { val t = owner.get(); t == null || !t.isAlive }
+  /** The single write of a table-creating commit (CREATE, CONVERT, a new
+    * clone target): a table already at `root` fails it. */
+  private def createManifest(m: Manifest): Unit =
+    if (!writeManifest(m)) throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+      s"$root already holds version ${m.version}")
+
+  /** Test seam: runs before each attempt of [[commit]] on this handle, so
+    * a test can land a rival commit at a chosen point. */
+  @volatile private var commitHook: () => Unit = () => ()
+
+  /** Runs `body` with `hook` before each commit attempt of this handle. */
+  private[graft] def withCommitHook[T](hook: => Unit)(body: => T): T = {
+    commitHook = () => hook
+    try body finally commitHook = () => ()
   }
 
-  /** Every thread's state, so a stale drain can reap the caches of a
-    * thread that died without draining (a hard-stopped micro-batch
-    * thread): its releases would otherwise stay pinned in the block
-    * manager for the life of the session. States are held strongly —
-    * their release thunks must outlive the thread — and their owners
-    * weakly. */
-  private val commitCacheStates =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[CommitCacheState]()
-
-  /** Commit-cache state is PER-THREAD (the commit token): a commit is a
-    * straight-line call sequence on one thread (registerCommitCache →
-    * writes → writeManifest / failure handler), so thread identity
-    * scopes the caches to exactly one commit. Two concurrent commits on
-    * the same instance therefore cannot cross-drain — thread A's
-    * writeManifest releases only A's caches, never B's in-flight delta
-    * frame (releasing it mid-commit would re-open the
-    * non-deterministic-recompute window the commit-scoped drain closed:
-    * a DV MERGE's recomputed frame could address different rows than
-    * its stored marks). */
-  private val commitCaches =
-    new ThreadLocal[CommitCacheState] {
-      override def initialValue(): CommitCacheState = {
-        val st = new CommitCacheState
-        commitCacheStates.add(st)
-        st
+  /** The one optimistic commit of every writer that changes an existing
+    * version (Delta's optimistic transaction, VLDB 2020): applies `c`'s
+    * actions to the latest version and writes the next one. On a lost
+    * race it checks the winners against what `c` read at `c.version`
+    * ([[conflictOf]]) and either throws
+    * `ConcurrentModificationException` or rebases — the same actions on
+    * the winner's version, written data re-targeted, no data rewritten —
+    * and tries again, at most [[SnapshotTable.CommitAttempts]] times in
+    * all. A winner that already recorded `c.txn` ends the call: false. */
+  private def commit(c: Commit): Boolean = {
+    @scala.annotation.tailrec
+    def attempt(n: Int, at: Int, keptDvs: Option[Seq[FileEntry]]): Boolean = {
+      commitHook()
+      if (writeManifest(c.manifestAt(manifestOf(at), keptDvs))) true
+      else {
+        val w = currentVersion
+        if (replayed(w, c.txn)) false
+        else {
+          conflictOf(c, w).foreach(why =>
+            throw new java.util.ConcurrentModificationException(
+              s"concurrent commit to $root $why — ${c.op} read version ${c.version}"))
+          if (n == SnapshotTable.CommitAttempts)
+            throw new java.util.ConcurrentModificationException(
+              s"gave up committing ${c.op} to $root after $n attempts")
+          // a winner that rewrote the DV files: re-drop the marks on the
+          // files this commit removes (a new mark there is a conflict)
+          attempt(n + 1, w,
+            if (c.removed.nonEmpty && dvEntries(w) != dvEntries(at))
+              remainingDvs(w, c.removed.map(_.path).toSet, w + 1)
+            else keptDvs)
+        }
       }
     }
-
-  /** Persist `df` for the duration of the in-flight commit and register
-    * its release; leftovers from a previous FAILED commit on THIS thread
-    * release now (only when no commit is currently consuming its
-    * caches). The cache belongs to this thread's state: the commit must
-    * drain on this thread. */
-  private[sources] def registerCommitCache(df: DataFrame): DataFrame = {
-    val st = commitCaches.get()
-    if (!st.inFlight) drainCommitCaches()
-    val cached = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    st.pending.add(() => { cached.unpersist(false); () })
-    st.inFlight = true
-    cached
+    attempt(1, c.version, c.keptDvs)
   }
 
-  /** Release stale commit caches: every state whose owning thread is
-    * dead, then this thread's unless a commit is mid-flight on it — the
-    * guard nested steps ([[fillIdentity]]) go through. */
-  private[sources] def drainStaleCommitCaches(): Unit = {
-    commitCacheStates.forEach { st =>
-      if (st.ownerDead && commitCacheStates.remove(st)) releaseCaches(st)
+  /** Why the commits after `c.version` up to `w` conflict with `c`, if
+    * they do: a winner removed or rewrote a file `c` read, changed the
+    * column mapping or field metadata `c` was written against (or, when
+    * `c` adds rows, the identity marks their values came from), added
+    * deletion-vector marks to a file `c` read (its rows were copied or
+    * matched before the mark existed), or added a file or delta that
+    * [[mayHold]] keeps for `c`'s predicate. */
+  private def conflictOf(c: Commit, w: Int): Option[String] = {
+    val (was, now) = (manifestOf(c.version), manifestOf(w))
+    val live = (now.files ++ now.deltas).map(_.path).toSet
+    val read = c.read.map(_.path).toSet
+    lazy val added = {
+      val before = (was.files ++ was.deltas).map(_.path).toSet
+      (now.files ++ now.deltas).filterNot(e => before(e.path))
     }
-    if (!commitCaches.get().inFlight) drainCommitCaches()
-  }
-
-  private[sources] def drainCommitCaches(): Unit =
-    releaseCaches(commitCaches.get())
-
-  /** Run `st`'s releases. Only its owning thread may drain a live
-    * state: a commit that hopped threads would otherwise release
-    * (or strand) another commit's caches, so it fails here instead. */
-  private def releaseCaches(st: CommitCacheState): Unit = {
-    require(st.ownerDead || (st.owner.get() eq Thread.currentThread()),
-      s"commit caches of a live thread drained from thread " +
-        s"${Thread.currentThread().getName}: a commit must stay on one thread")
-    st.inFlight = false
-    var release = st.pending.poll()
-    while (release != null) { release(); release = st.pending.poll() }
-  }
-
-  /** Test hook: true while this thread's commit holds registered
-    * caches. */
-  private[sources] def commitCachesInFlightForTest: Boolean =
-    commitCaches.get().inFlight
-
-  /** Register a release thunk with this thread's commit WITHOUT marking
-    * a commit in flight ([[fillIdentity]]'s insert batch: the cache
-    * lives until the commit that consumes the frame drains — or, when
-    * no commit is open, until the next stale drain). */
-  private def addCommitRelease(release: () => Unit): Unit = {
-    commitCaches.get().pending.add(release)
-    ()
-  }
-
-  private def removeCommitRelease(release: () => Unit): Unit = {
-    commitCaches.get().pending.remove(release)
-    ()
+    if (!read.subsetOf(live)) Some("removed or rewrote a file it read")
+    else if (Mapping.of(now) != Mapping.of(was))
+      Some("changed the column mapping or metadata it was written against")
+    else if ((c.files ++ c.deltas).nonEmpty && now.identHwm != was.identHwm)
+      Some("advanced the identity marks its rows may be numbered below")
+    else if (now.dvs != was.dvs && conflictingNewDvMarks(c.version, w, read))
+      Some("added deletion-vector marks to a file it read")
+    else if (c.predicate.exists(fs =>
+        added.exists(mayHold(fs, added, physColName(_, w)))))
+      Some("added rows its predicate may match")
+    else None
   }
 }
 
@@ -3694,9 +3582,9 @@ object SnapshotTable {
     * growth at wide schemas). */
   private val MaxStatCols = 8
 
-  /** Commit attempts of one copy-on-write [[SnapshotTable.merge]] — the
-    * first plus the metadata-only retries after lost manifest races. */
-  private val MergeAttempts = 10
+  /** Attempts of one [[SnapshotTable.commit]]: the first plus the
+    * metadata-only rebases after lost manifest races. */
+  private[graft] val CommitAttempts = 10
 
   /** The inclusive numeric interval that one v1 comparison of a column
     * with a number (or an IN-list of numbers: their hull) bounds the
@@ -3729,11 +3617,12 @@ object SnapshotTable {
     }
   }
 
-  /** Operations that SET the column mapping explicitly — every other
-    * commit carries its predecessor's mapping forward (writeManifest).
-    * RESTORE and CLONE pin the mapping of the version they reference,
-    * so a restore below a RENAME also restores the old logical schema
-    * (Delta parity: schema metadata is versioned with the commit). */
+  /** Operations that SET the column mapping explicitly, persisted as
+    * FULL manifests — every other commit carries its predecessor's
+    * mapping forward ([[Commit.manifestAt]]). RESTORE and CLONE pin the
+    * mapping of the version they reference, so a restore below a RENAME
+    * also restores the old logical schema (Delta parity: schema metadata
+    * is versioned with the commit). */
   private val MappingOps =
     Set("RENAME_COLUMN", "DROP_COLUMN", "ADD_COLUMNS", "ALTER_COLUMN",
       "WIDEN_COLUMN", "RESTORE", "CLONE")
@@ -3770,11 +3659,12 @@ object SnapshotTable {
       ridBase: Long = -1L)
 
   /** One version's files split for a [[SnapshotTable.merge]]: the base
-    * files and pending deltas its rewrite reads, and those it carries
-    * by reference. */
+    * files and pending deltas its rewrite reads, those it carries by
+    * reference, and the v1 filters a file of the slice may match. */
   private final case class MergeSlice(
       files: Seq[FileEntry], deltas: Seq[FileEntry],
-      carriedFiles: Seq[FileEntry], carriedDeltas: Seq[FileEntry])
+      carriedFiles: Seq[FileEntry], carriedDeltas: Seq[FileEntry],
+      predicate: Seq[org.apache.spark.sql.sources.Filter])
 
   /** One immutable commit: base file entries + pending MoR deltas +
     * the commit's change-data-feed files (empty unless tracked).
@@ -3831,6 +3721,92 @@ object SnapshotTable {
     def numRows: Long = (files ++ deltas).map(_.rows).sum - dvs.map(_.rows).sum
     def numDeltaRows: Long = deltas.map(_.rows).sum
     def numFiles: Long = (files.size + deltas.size).toLong
+  }
+
+  /** A version's column mapping and field overlays: what the mapping
+    * operations set and every other commit carries. */
+  private final case class Mapping(renames: Map[String, String],
+      dropped: Seq[String], fieldMeta: Map[String, String],
+      widened: Map[String, String])
+
+  private object Mapping {
+    def of(m: Manifest): Mapping = Mapping(m.renames, m.dropped, m.fieldMeta, m.widened)
+  }
+
+  /** One optimistic commit ([[SnapshotTable.commit]]): what it read at
+    * `version` — the files and deltas it read or rewrites, the v1
+    * filters of its read `predicate` (None: it depends on no row, like
+    * a blind append; `Some(Nil)`: on every row) and its `txn` marker —
+    * and what it does there: `removed` files and deltas go, `files`,
+    * `deltas`, DV `marks` and `changes` are added, `keptDvs` replaces
+    * the DV files when the removed files had marks (None carries them),
+    * and `mergeKeys` (logical; None carries the version's), `mapping`
+    * and the high-water marks are set. */
+  private final case class Commit(
+      op: String, version: Int,
+      read: Seq[FileEntry] = Seq.empty,
+      predicate: Option[Seq[org.apache.spark.sql.sources.Filter]] = None,
+      txn: Option[(String, Long)] = None,
+      removed: Seq[FileEntry] = Seq.empty,
+      files: Seq[FileEntry] = Seq.empty,
+      deltas: Seq[FileEntry] = Seq.empty,
+      marks: Seq[FileEntry] = Seq.empty,
+      keptDvs: Option[Seq[FileEntry]] = None,
+      changes: Seq[FileEntry] = Seq.empty,
+      mergeKeys: Option[Seq[String]] = None,
+      mapping: Option[Mapping] = None,
+      rowIdHwm: Long = 0L,
+      identHwm: Map[String, Long] = Map.empty) {
+
+    /** The next manifest after `base`: these actions applied to it, with
+      * the DV files `dvs` computed against it. Entries this commit wrote
+      * for `version + 1` take the new version as their origin. */
+    def manifestAt(base: Manifest, dvs: Option[Seq[FileEntry]]): Manifest = {
+      val next = base.version + 1
+      def ours(es: Seq[FileEntry]): Seq[FileEntry] =
+        if (next == version + 1) es
+        else es.map(e => if (e.origin == version + 1L) e.copy(origin = next) else e)
+      val gone = removed.map(_.path).toSet
+      val ds = base.deltas.filterNot(e => gone(e.path)) ++ ours(deltas)
+      val mp = mapping.getOrElse(Mapping.of(base))
+      Manifest(next, op,
+        // cleared keys never strand the pending delta of a rival
+        mergeKeys.filter(_.nonEmpty || ds.isEmpty).getOrElse(base.mergeKeys),
+        base.files.filterNot(e => gone(e.path)) ++ ours(files), ds,
+        ours(changes), dvs.map(ours).getOrElse(base.dvs) ++ ours(marks),
+        txns = Map.from(txn), renames = mp.renames, dropped = mp.dropped,
+        fieldMeta = mp.fieldMeta, widened = mp.widened,
+        rowIdHwm = rowIdHwm, identHwm = identHwm)
+    }
+  }
+
+  /** The caches one operation persists for its own later jobs — a DV
+    * MERGE's delta frame, a positional UPDATE's images, an identity
+    * fill's sized batch — released together when the operation ends,
+    * committed or failed ([[withCaches]]). */
+  private[graft] final class CacheScope private[SnapshotTable] () {
+    private val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+    def persist(df: DataFrame): DataFrame = {
+      val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      releases += (() => { cached.unpersist(false); () })
+      cached
+    }
+
+    def persistRdd[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
+      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      releases += (() => { rdd.unpersist(false); () })
+      rdd
+    }
+
+    private[SnapshotTable] def release(): Unit = releases.foreach(_())
+  }
+
+  /** Runs `body` with a fresh [[CacheScope]] and releases what it holds
+    * when `body` ends, normally or not. */
+  private[graft] def withCaches[T](body: CacheScope => T): T = {
+    val caches = new CacheScope
+    try body(caches) finally caches.release()
   }
 
   /** Process-wide cache of committed (immutable) manifests, keyed by

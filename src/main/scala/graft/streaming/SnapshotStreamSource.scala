@@ -179,7 +179,8 @@ class SnapshotStreamSource(
   /** One commit's contribution to the stream (None = adds no rows). */
   private def batchSlice(v: Int): Option[DataFrame] = {
     val op = table.commitOperation(v)
-    if (!changeFeed) {
+    if (addsKnownColumns(op, v)) None
+    else if (!changeFeed) {
       // Data reorganization (dataChange=false): the logical relation is
       // unchanged, so the commit is skipped — emitting its rewritten
       // files would duplicate rows, and failing would kill every tailed
@@ -236,6 +237,15 @@ class SnapshotStreamSource(
         Some(table.readEntriesDf(changes))
     }
   }
+
+  /** An ADD COLUMNS commit adds no row, only a zero-row schema file; it
+    * streams as nothing once this stream's schema holds its columns
+    * (earlier files read them as their default, [[SnapshotTable.read]]'s
+    * way). A stream started before it fails on it, as on any other
+    * schema change. */
+  private def addsKnownColumns(op: String, v: Int): Boolean =
+    op == "ADD_COLUMNS" &&
+      table.read(v).schema.fieldNames.forall(schema.fieldNames.contains)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -1,17 +1,22 @@
 package graft
 
 import graft.sources.SnapshotTable
+import java.util.ConcurrentModificationException
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Optimistic concurrency + timestamp travel, with the racing commit
-  * injected DETERMINISTICALLY through the beforeCommit seam of
-  * `merge`'s copy-on-write core (`mergeCopyOnWrite`) — a thread race
-  * would exercise whichever interleaving the scheduler picks; the seam
-  * pins both the lost-race-retry path and the true-conflict path every
-  * run. */
-class ConcurrencySpec extends AnyFunSuite {
+  * injected DETERMINISTICALLY through the commit hook every
+  * `SnapshotTable` commit attempt runs (`withCommitHook`) — a thread
+  * race would exercise whichever interleaving the scheduler picks; the
+  * seam pins both the lost-race rebase path and the true-conflict path
+  * every run. */
+class ConcurrencySpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private def mkTable(prefix: String): (SnapshotTable, String) = {
     import spark.implicits._
@@ -36,14 +41,15 @@ class ConcurrencySpec extends AnyFunSuite {
     val (t, root) = mkTable("occ_retry")
     val rival = new SnapshotTable(spark, root)
     var injected = false
-    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-      partitionBy = Some("p"),
-      beforeCommit = () => if (!injected) {
-        injected = true
-        // rival wins version 1 touching only partition A
-        rival.merge(src("A", 1000.0), keys = Seq("k", "p"),
-          partitionBy = Some("p"))
-      })
+    t.withCommitHook(if (!injected) {
+      injected = true
+      // rival wins version 1 touching only partition A
+      rival.merge(src("A", 1000.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"))
+    }) {
+      t.merge(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"))
+    }
     assert(injected)
     assert(t.currentVersion == 2) // rival's commit + our retried commit
     val got = t.read().orderBy("k").collect()
@@ -59,13 +65,14 @@ class ConcurrencySpec extends AnyFunSuite {
     val rival = new SnapshotTable(spark, root)
     var injected = false
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-        partitionBy = Some("p"),
-        beforeCommit = () => if (!injected) {
-          injected = true
-          rival.merge(src("B", 7.0), keys = Seq("k", "p"),
-            partitionBy = Some("p"))
-        })
+      t.withCommitHook(if (!injected) {
+        injected = true
+        rival.merge(src("B", 7.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"))
+      }) {
+        t.merge(src("B", 100.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"))
+      }
     }
     // the rival's commit is intact and ours left no manifest
     assert(t.currentVersion == 1)
@@ -98,13 +105,14 @@ class ConcurrencySpec extends AnyFunSuite {
     val rival = new SnapshotTable(spark, root)
     var injected = false
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-        partitionBy = Some("p"),
-        beforeCommit = () => if (!injected) {
-          injected = true
-          rival.merge(Seq((9L, "B", 77.0)).toDF("k", "p", "v"),
-            Seq("k", "p"), Some("p"), deferred = true)
-        })
+      t.withCommitHook(if (!injected) {
+        injected = true
+        rival.merge(Seq((9L, "B", 77.0)).toDF("k", "p", "v"),
+          Seq("k", "p"), Some("p"), deferred = true)
+      }) {
+        t.merge(src("B", 100.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"))
+      }
     }
     // the rival's delta commit is intact; ours left no manifest
     assert(t.currentVersion == 1)
@@ -129,13 +137,14 @@ class ConcurrencySpec extends AnyFunSuite {
     val rival = new SnapshotTable(spark, root)
     var injected = false
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeCopyOnWrite(src("B", 7.0), keys = Seq("k", "p"),
-        partitionBy = Some("p"),
-        beforeCommit = () => if (!injected) {
-          injected = true
-          rival.merge(src("A", 1000.0), keys = Seq("k", "p"),
-            partitionBy = Some("p"))
-        })
+      t.withCommitHook(if (!injected) {
+        injected = true
+        rival.merge(src("A", 1000.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"))
+      }) {
+        t.merge(src("B", 7.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"))
+      }
     }
     assert(t.read().filter(col("k") === 0).select("v").head.getDouble(0) == 1000.0)
   }
@@ -149,12 +158,13 @@ class ConcurrencySpec extends AnyFunSuite {
     // writer's rewrite slice. The loser must retry metadata-style and
     // CARRY the new mark, not conflict (the r8 engine conflicted on any
     // DV change).
-    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-      partitionBy = Some("p"),
-      beforeCommit = () => if (!injected) {
-        injected = true
-        rival.delete(col("k") === 12, positional = true)
-      })
+    t.withCommitHook(if (!injected) {
+      injected = true
+      rival.delete(col("k") === 12, positional = true)
+    }) {
+      t.merge(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"))
+    }
     assert(injected)
     assert(t.currentVersion == 2) // rival's DV commit + our retried commit
     val got = t.read().orderBy("k").collect()
@@ -171,12 +181,13 @@ class ConcurrencySpec extends AnyFunSuite {
     // rival DV-deletes k=9 — odd key, partition B: the writer's rewrite
     // already copied that row forward, so committing would resurrect it.
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-        partitionBy = Some("p"),
-        beforeCommit = () => if (!injected) {
-          injected = true
-          rival.delete(col("k") === 9, positional = true)
-        })
+      t.withCommitHook(if (!injected) {
+        injected = true
+        rival.delete(col("k") === 9, positional = true)
+      }) {
+        t.merge(src("B", 100.0), keys = Seq("k", "p"),
+          partitionBy = Some("p"))
+      }
     }
     assert(t.currentVersion == 1) // the rival's DV commit is intact
     val ks = t.read().select("k").collect().map(_.getLong(0)).toSet
@@ -191,9 +202,10 @@ class ConcurrencySpec extends AnyFunSuite {
     // be NULL; committing after the rival's SET NOT NULL would store a
     // NULL under a non-nullable column
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeCopyOnWrite(Seq((9L, "B", Option.empty[Double])).toDF("k", "p", "v"),
-        keys = Seq("k", "p"), partitionBy = Some("p"),
-        beforeCommit = () => if (rival.currentVersion == 0) rival.setNotNull("v"))
+      t.withCommitHook(if (rival.currentVersion == 0) rival.setNotNull("v")) {
+        t.merge(Seq((9L, "B", Option.empty[Double])).toDF("k", "p", "v"),
+          keys = Seq("k", "p"), partitionBy = Some("p"))
+      }
     }
     assert(t.currentVersion == 1) // the rival's commit only
     // the data files themselves: a scan under the NOT NULL schema would
@@ -209,10 +221,11 @@ class ConcurrencySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val before = ids
     val rival = new SnapshotTable(spark, root)
-    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-      partitionBy = Some("p"), trackChanges = true,
-      beforeCommit = () => if (rival.currentVersion == 0)
-        rival.merge(src("A", 1000.0), keys = Seq("k", "p"), partitionBy = Some("p")))
+    t.withCommitHook(if (rival.currentVersion == 0)
+        rival.merge(src("A", 1000.0), keys = Seq("k", "p"), partitionBy = Some("p"))) {
+      t.merge(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"), trackChanges = true)
+    }
     assert(t.history.orderBy("version").select("operation").collect()
       .map(_.getString(0)).toSeq == Seq("CREATE", "MERGE", "MERGE"))
     val after = ids
@@ -254,11 +267,12 @@ class ConcurrencySpec extends AnyFunSuite {
     val (t, root) = mkTable("occ_txn")
     val rival = new SnapshotTable(spark, root)
     val batch = Some(("stream", 1L))
-    t.mergeCopyOnWrite(src("B", 100.0), keys = Seq("k", "p"),
-      partitionBy = Some("p"), txn = batch,
-      beforeCommit = () => if (rival.currentVersion == 0)
+    t.withCommitHook(if (rival.currentVersion == 0)
         rival.merge(src("B", 100.0), keys = Seq("k", "p"),
-          partitionBy = Some("p"), txn = batch))
+          partitionBy = Some("p"), txn = batch)) {
+      t.merge(src("B", 100.0), keys = Seq("k", "p"),
+        partitionBy = Some("p"), txn = batch)
+    }
     assert(t.currentVersion == 1) // the rival's commit only, no conflict
     assert(t.txnVersion("stream").contains(1L))
     assert(t.read().filter(col("k") === 9).select("v").head.getDouble(0) == 109.0)
@@ -304,5 +318,127 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(t.readAsOf(ts1).filter(col("k") === 0).select("v")
       .head.getDouble(0) == 50.0)
     intercept[IllegalArgumentException](t.versionAsOf(ts0 - 1))
+  }
+
+  // ---- every writer through the one commit: one rival commit lands
+  // before the writer's first commit attempt
+
+  /** Runs `write` on a fresh table after `rival` commits version 1 on
+    * another handle. */
+  private def raced(prefix: String, rival: SnapshotTable => Unit)(
+      write: SnapshotTable => Unit): SnapshotTable = {
+    val (t, root) = mkTable(prefix)
+    val r = new SnapshotTable(spark, root)
+    t.withCommitHook(if (r.currentVersion == 0) rival(r))(write(t))
+    t
+  }
+
+  private def row(k: Long, p: String) = {
+    import spark.implicits._
+    Seq((k, p, k * 1.0)).toDF("k", "p", "v")
+  }
+
+  private def vs(t: SnapshotTable, cond: org.apache.spark.sql.Column) =
+    t.read().filter(cond).select("v").collect().map(_.getDouble(0)).toSeq
+
+  /** Writer name, its operation, the write, and what it leaves (checked
+    * after a disjoint rival). */
+  private val writers: Seq[(String, String, SnapshotTable => Unit, SnapshotTable => Boolean)] = Seq(
+    ("copy-on-write delete", "DELETE", _.delete(col("p") === "B"),
+      t => vs(t, col("p") === "B").isEmpty),
+    ("positional delete", "DELETE_DV",
+      _.delete(col("p") === "B" && col("k") < 10, positional = true),
+      t => vs(t, col("p") === "B" && col("k") < 10).isEmpty),
+    ("update", "UPDATE", _.update(col("p") === "B", Map("v" -> lit(-1.0))),
+      t => vs(t, col("p") === "B").forall(_ == -1.0)),
+    ("merge-on-read merge", "MERGE_MOR",
+      _.merge(src("B", 100.0), Seq("k", "p"), Some("p"), deferred = true),
+      t => vs(t, col("k") === 9) == Seq(109.0)),
+    ("optimize", "OPTIMIZE", t => { assert(t.optimize() >= 2); () },
+      t => t.read().count() == 41),
+    ("compact", "COMPACT", _.compact(1), t => t.read().count() == 41),
+    ("overwriteAll", "OVERWRITE", _.overwriteAll(src("B", 100.0)),
+      t => vs(t, col("p") === "B").sorted == Seq(101.0, 103.0, 105.0, 107.0, 109.0)),
+    ("addColumns", "ADD_COLUMNS", _.addColumns(Seq(StructField("c", IntegerType))),
+      t => t.read().filter(col("k") === 100).select("c").head.isNullAt(0)))
+
+  writers.foreach { case (name, op, write, left) =>
+    test(s"$name commits after a rival append to another partition") {
+      val t = raced(s"occ_disjoint_$op", _.append(row(100L, "C"), Some("p")))(write)
+      assert(t.history.orderBy("version").select("operation").collect()
+        .map(_.getString(0)).toSeq == Seq("CREATE", "APPEND", op))
+      assert(vs(t, col("k") === 100) == Seq(100.0), "the rival's row survives")
+      assert(left(t), s"$name's own change is missing")
+    }
+  }
+
+  writers.filter(_._2 != "ADD_COLUMNS").foreach { case (name, op, write, _) =>
+    test(s"$name conflicts with a rival that rewrote a file it read") {
+      var t: SnapshotTable = null
+      intercept[ConcurrentModificationException] {
+        raced(s"occ_rewritten_$op", _.delete(col("k") === 9))(w => { t = w; write(w) })
+      }
+      assert(t.currentVersion == 1 && vs(t, col("k") === 9).isEmpty,
+        "the rival's commit only")
+    }
+  }
+
+  writers.filter(w => Set("DELETE", "DELETE_DV", "UPDATE", "MERGE_MOR")(w._2))
+    .foreach { case (name, op, write, _) =>
+      test(s"$name conflicts with a rival append its predicate matches") {
+        var t: SnapshotTable = null
+        intercept[ConcurrentModificationException] {
+          // k = -1 in partition B: a row every one of these predicates holds
+          raced(s"occ_matched_$op", _.append(row(-1L, "B"), Some("p")))(
+            w => { t = w; write(w) })
+        }
+        assert(t.currentVersion == 1 && vs(t, col("k") === -1) == Seq(-1.0))
+      }
+    }
+
+  test("addColumns conflicts with a rival column rename") {
+    var t: SnapshotTable = null
+    intercept[ConcurrentModificationException] {
+      raced("occ_add_rename", _.renameColumn("v", "w"))(w => {
+        t = w; w.addColumns(Seq(StructField("c", IntegerType))) })
+    }
+    assert(t.currentVersion == 1 && !t.read().columns.contains("c"))
+  }
+
+  test("an append of NULLs conflicts with a rival SET NOT NULL") {
+    import spark.implicits._
+    var t: SnapshotTable = null
+    intercept[ConcurrentModificationException] {
+      raced("occ_append_not_null", _.setNotNull("v"))(w => {
+        t = w
+        w.append(Seq((50L, "B", Option.empty[Double])).toDF("k", "p", "v"), Some("p"))
+      })
+    }
+    assert(t.currentVersion == 1) // the rival's commit only
+    assert(spark.read.parquet(t.files.map(_.path): _*)
+      .filter(col("v").isNull).count() == 0)
+  }
+
+  Seq[(String, (SnapshotTable, Long) => Unit)](
+    ("append", (t, k) => t.append(row(k, "C"), Some("p")): Unit),
+    ("appendIdempotent", (t, k) =>
+      t.appendIdempotent(row(k, "C"), "sink", k, Some("p")): Unit)
+  ).foreach { case (name, write) =>
+    test(s"$name gives up after the attempt bound when a rival wins every attempt") {
+      failAfter(Span(120, Seconds)) {
+        val (t, root) = mkTable(s"occ_bound_$name")
+        val rival = new SnapshotTable(spark, root)
+        var k = 200L
+        val e = intercept[ConcurrentModificationException] {
+          t.withCommitHook { k += 1; rival.append(row(k, "A"), Some("p")) } {
+            write(t, 100L)
+          }
+        }
+        assert(e.getMessage.contains("gave up"), e.getMessage)
+        assert(t.currentVersion == SnapshotTable.CommitAttempts,
+          "every version is the rival's")
+        assert(vs(t, col("k") === 100).isEmpty)
+      }
+    }
   }
 }

@@ -173,10 +173,11 @@ class DeletionVectorSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, Scratch.dir("dv_occ"))
       .create(df, partitionBy = Some("g"))
     val src = Seq((1L, 1L, "w1")).toDF("k", "g", "s")
+    val rival = new SnapshotTable(spark, t.location)
     intercept[java.util.ConcurrentModificationException] {
-      t.mergeCopyOnWrite(src, Seq("k", "g"), Some("g"),
-        beforeCommit = () =>
-          t.delete(col("k").between(0, 5), positional = true))
+      t.withCommitHook(rival.delete(col("k").between(0, 5), positional = true)) {
+        t.merge(src, Seq("k", "g"), Some("g"))
+      }
     }
   }
 }

@@ -119,6 +119,20 @@ class FilePlannerSpec extends AnyFunSuite {
     assert(t.read().select("k").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
+  test("truncate(W, s) plans W characters of a literal, as the writer does") {
+    import spark.implicits._
+    // a character outside the BMP is two UTF-16 units but one character
+    val vals = Seq("\uD83D\uDE00abc", "\uD83D\uDE00b", "xyz")
+    for (w <- Seq(1, 2)) {
+      val spec = graft.sources.PartitionTransform.parse(s"truncate($w, s)")
+      val written = vals.toDF("s")
+        .select(graft.sources.PartitionTransform.writeColumn(spec))
+        .collect().map(_.getString(0)).toSeq
+      assert(vals.map(graft.sources.PartitionTransform.applyLiteral(spec.tag, _)) ==
+        written, s"truncate($w, s)")
+    }
+  }
+
   test("a filtered read prunes a numeric range on footer stats") {
     val t = ranged("fp_range")
     val low = t.files.filter(_.stats("k")._1 <= 10)

@@ -90,10 +90,11 @@ class MergeSourceSpec extends AnyFunSuite {
       val cached = s.sparkContext.getPersistentRDDs.keySet
       // the rival wins the first commit with a row in a partition the
       // source does not touch, so the merge retries metadata-only
-      t.mergeCopyOnWrite(coinFlipped(rows(s, 0, 400, 1)), Seq("k", "p"), Some("p"),
-        beforeCommit = () => if (rival.currentVersion == 0)
+      t.withCommitHook(if (rival.currentVersion == 0)
           rival.append(s.range(1000, 1001).select(col("id").as("k"),
-            lit(parts + 1).as("p"), lit(0).as("v")), Some("p")))
+            lit(parts + 1).as("p"), lit(0).as("v")), Some("p"))) {
+        t.merge(coinFlipped(rows(s, 0, 400, 1)), Seq("k", "p"), Some("p"))
+      }
       assert(t.currentVersion == 2, s"$mode: the merge did not retry")
       checkUpsert(t, mode)
       assert(s.sparkContext.getPersistentRDDs.keySet == cached,

@@ -101,6 +101,21 @@ class SnapshotStreamSpec extends AnyFunSuite {
     assert(latestRows.isEmpty || latestRows.head.getLong(0) === 0L)
   }
 
+  test("rows written before ADD COLUMNS stream with the column's default") {
+    import org.apache.spark.sql.types._
+    val root = tmp("snapstream_addcol")
+    val t = new SnapshotTable(spark, root).create(slice(0, 10))
+    t.addColumns(Seq(StructField("c", IntegerType, nullable = true,
+      new MetadataBuilder().putString("EXISTS_DEFAULT", "5")
+        .putString("CURRENT_DEFAULT", "5").build())))
+    t.append(slice(10, 12).withColumn("c", lit(7)))
+    def byC(df: DataFrame) = df.groupBy("c").agg(count(lit(1)).as("n"))
+    val want = byC(t.read()).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(want == Map(5 -> 10L, 7 -> 2L))
+    val (rows, _) = drain(root, Map("startingVersion" -> "0"), byC)
+    assert(rows.map(r => r.getInt(0) -> r.getLong(1)).toMap == want)
+  }
+
   test("non-append commit fails the data stream loudly") {
     val root = tmp("snapstream_dml")
     val t = new SnapshotTable(spark, root).create(slice(0, 100))

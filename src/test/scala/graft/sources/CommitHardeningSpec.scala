@@ -2,14 +2,13 @@ package graft.sources
 
 import graft.TestSpark
 import org.apache.spark.sql.GraftParquetWrite
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Hardening pins for the r18 commit machinery (VERDICT/ADVICE items):
-  *   - commit caches are scoped per commit (thread): two concurrent
-  *     commits on ONE instance cannot cross-drain, and a stale drain
-  *     reaps the caches of a thread that died without draining;
+/** Hardening pins for the commit machinery:
+  *   - the caches a writer persists (a DV MERGE's delta frame, an
+  *     identity fill's batch) are released when the operation ends,
+  *     committed or failed;
   *   - in-task stats and partition values match the footer probe's
   *     over the same files for ESCAPED partition values (space, %, =);
   *   - the documented multi-row-group divergence (footer drops a column
@@ -21,77 +20,37 @@ class CommitHardeningSpec extends AnyFunSuite {
 
   private def tmp(p: String) = Files.createTempDirectory(s"graft_$p").toString
 
-  test("concurrent commits on one instance do not cross-drain caches") {
+  test("a DV MERGE and an identity INSERT leave no cache, committed or failed") {
     val s = spark.newSession()
-    import s.implicits._
-    val t = new SnapshotTable(s, tmp("cache_scope"))
-    t.create(Seq((1L, 1.0)).toDF("k", "v"))
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try {
-      // thread A opens a commit and registers its delta-frame cache
-      val dfA = pool.submit(() =>
-        t.registerCommitCache(Seq((2L, 2.0)).toDF("k", "v"))).get()
-      assert(dfA.storageLevel != StorageLevel.NONE)
-      assert(pool.submit(() =>
-        java.lang.Boolean.valueOf(t.commitCachesInFlightForTest)).get())
-      // thread B (this thread) runs its own full commit-cache lifecycle,
-      // including the stale-drain a nested fillIdentity would attempt
-      t.drainStaleCommitCaches()
-      val dfB = t.registerCommitCache(Seq((3L, 3.0)).toDF("k", "v"))
-      t.drainCommitCaches()
-      assert(dfB.storageLevel == StorageLevel.NONE, "B's drain frees B's cache")
-      // the critical invariant: B's lifecycle must NOT have released A's
-      // in-flight cache (the DV-MERGE marks/images recompute window)
-      assert(dfA.storageLevel != StorageLevel.NONE,
-        "thread B's drain released thread A's in-flight commit cache")
-      assert(pool.submit(() =>
-        java.lang.Boolean.valueOf(t.commitCachesInFlightForTest)).get())
-      // A finishes: its own drain releases its cache
-      pool.submit(new Runnable { def run(): Unit = t.drainCommitCaches() })
-        .get()
-      assert(dfA.storageLevel == StorageLevel.NONE)
-    } finally pool.shutdown()
-  }
-
-  test("a stale drain reaps the caches of a thread that died without draining") {
-    val s = spark.newSession()
-    import s.implicits._
-    val t = new SnapshotTable(s, tmp("cache_reap"))
-    t.create(Seq((1L, 1.0)).toDF("k", "v"))
+    s.conf.set("spark.sql.catalog.cr", "graft.sources.GraftSqlCatalog")
+    s.conf.set("spark.sql.catalog.cr.root", tmp("cache_release"))
+    graft.plans.GraftRowLevelOps.register(s)
     def persisted = s.sparkContext.getPersistentRDDs.keySet
-    val idsBefore = persisted
-    var cached: org.apache.spark.sql.DataFrame = null
-    // a commit opens on a thread that then exits: no drain ever runs there
-    val owner = new Thread(() => {
-      cached = t.registerCommitCache(Seq((2L, 2.0)).toDF("k", "v"))
-      cached.count(); ()
-    })
-    owner.start()
-    owner.join()
-    val pinned = persisted -- idsBefore
-    assert(pinned.nonEmpty && cached.storageLevel != StorageLevel.NONE,
-      "the dead thread's cache is materialized and pinned")
-    t.drainStaleCommitCaches()
-    assert(cached.storageLevel == StorageLevel.NONE, "cache still registered")
-    assert(persisted.intersect(pinned).isEmpty,
-      s"getPersistentRDDs still lists ${persisted.intersect(pinned)}")
-    // a live thread's in-flight caches are never reaped from here
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val registered = new java.util.concurrent.CountDownLatch(1)
-    var live: org.apache.spark.sql.DataFrame = null
-    val busy = new Thread(() => {
-      live = t.registerCommitCache(Seq((3L, 3.0)).toDF("k", "v"))
-      registered.countDown()
-      gate.await()
-      t.drainCommitCaches()
-    })
-    busy.start()
-    try {
-      registered.await()
-      t.drainStaleCommitCaches()
-      assert(live.storageLevel != StorageLevel.NONE)
-    } finally { gate.countDown(); busy.join() }
-    assert(live.storageLevel == StorageLevel.NONE)
+    s.sql("CREATE NAMESPACE cr.ns")
+    s.sql("CREATE TABLE cr.ns.dv (k BIGINT, v DOUBLE NOT NULL) " +
+      "TBLPROPERTIES ('graft.enableDeletionVectors' = 'true')")
+    s.sql("INSERT INTO cr.ns.dv SELECT id, CAST(id AS DOUBLE) FROM range(100)")
+    s.sql("CREATE TABLE cr.ns.id (id BIGINT GENERATED ALWAYS AS IDENTITY, v DOUBLE)")
+    val before = persisted
+    def merge(v: String) = s.sql(
+      s"""MERGE INTO cr.ns.dv t USING (SELECT id * 10 AS k, $v AS v FROM range(20)) src
+          ON t.k = src.k WHEN MATCHED THEN UPDATE SET t.v = src.v
+          WHEN NOT MATCHED THEN INSERT (k, v) VALUES (src.k, src.v)""")
+    merge("-1.0")
+    assert(new SnapshotTable(s, s"${s.conf.get("spark.sql.catalog.cr.root")}/ns/dv")
+      .commitOperation(2) == "MERGE_DV")
+    assert(persisted == before, "a committed DV MERGE left its delta frame cached")
+    // a NULL for the NOT NULL column fails the image write after the
+    // delta frame is cached
+    intercept[Exception](merge("CAST(NULL AS DOUBLE)"))
+    assert(persisted == before, "a failed DV MERGE left its delta frame cached")
+    s.sql("INSERT INTO cr.ns.id (v) SELECT CAST(id AS DOUBLE) FROM range(50)")
+    assert(s.sql("SELECT count(DISTINCT id) FROM cr.ns.id").head.getLong(0) == 50)
+    assert(persisted == before, "a committed identity INSERT left its batch cached")
+    // the explicit value fails the ALWAYS check inside the write job,
+    // after the batch holding the NULL slot was cached and sized
+    intercept[Exception](s.sql("INSERT INTO cr.ns.id VALUES (NULL, 1.0), (7, 2.0)"))
+    assert(persisted == before, "a failed identity INSERT left its batch cached")
   }
 
   private def statKey(c: String, lo: Double, hi: Double) = s"$c=[$lo,$hi]"
