@@ -942,16 +942,24 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * the commit log never does). Version-correct under time travel. */
   def alterColumnMeta(name: String,
       transform: org.apache.spark.sql.types.StructField =>
+        org.apache.spark.sql.types.StructField): SnapshotTable =
+    alterColumnMetaAt(currentVersion, name, None, transform)
+
+  /** [[alterColumnMeta]] on version `v`, committed as depending on the
+    * rows `predicate` matches there (None: on no row). */
+  private def alterColumnMetaAt(v: Int, name: String,
+      predicate: Option[Seq[org.apache.spark.sql.sources.Filter]],
+      transform: org.apache.spark.sql.types.StructField =>
         org.apache.spark.sql.types.StructField): SnapshotTable = {
-    val v = currentVersion
     val m = manifestOf(v)
     val logical = read(v).schema
     require(logical.fieldNames.contains(name),
       s"ALTER COLUMN on $root: no column $name")
     val phys = physColName(name, v)
     val nf = transform(logical(name).copy(name = phys))
-    commit(Commit("ALTER_COLUMN", v, mapping = Some(Mapping.of(m).copy(
-      fieldMeta = m.fieldMeta + (phys -> nf.metadata.json))))): Unit
+    commit(Commit("ALTER_COLUMN", v, predicate = predicate,
+      mapping = Some(Mapping.of(m).copy(
+        fieldMeta = m.fieldMeta + (phys -> nf.metadata.json))))): Unit
     SnapshotTable.mappedRoots.add(root)
     this
   }
@@ -1180,18 +1188,14 @@ class SnapshotTable(spark: SparkSession, root: String) {
         seedIdentity(col, start, step)))
     // Cross-process visibility: advance to the latest COMMITTED mark
     // first — another process may have committed allocations this one
-    // never saw. A writer that raced past this check advanced the
-    // committed marks, which makes this writer's commit conflict
-    // ([[commit]]); the statement retry re-reserves above the raced-in
-    // mark. A lost race is a retry, never a duplicate (Delta's identity
-    // contract). SYNC IDENTITY's forward realignment survives (max/min
-    // keeps the later mark).
+    // never saw. A commit of another process that advanced the marks
+    // after the insert read its version makes the insert's commit
+    // conflict ([[commit]]); the statement retry re-reserves above the
+    // raced-in mark. SYNC IDENTITY's forward realignment survives
+    // (max/min keeps the later mark).
     val v = currentVersion
-    manifestOf(v).identHwm.get(physColName(col, v)).foreach { committed =>
-      hwm.updateAndGet(cur =>
-        if (step > 0) math.max(cur, committed)
-        else math.min(cur, committed)): Unit
-    }
+    manifestOf(v).identHwm.get(physColName(col, v)).foreach(committed =>
+      hwm.updateAndGet(beyond(step, _, committed)))
     hwm.getAndAdd(step * n) + step
   }
 
@@ -1218,19 +1222,17 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * stats — zero data read), `start - step` on an empty table. */
   private def seedIdentity(name: String, start: Long, step: Long): Long = {
     val v = currentVersion
-    val phys = physColName(name, v)
-    val virgin = start - step
-    def beyond(a: Long, b: Long): Long =
-      if (step > 0) math.max(a, b) else math.min(a, b)
     // the durable mark first: committed transactionally with every
     // identity insert, it survives deletes of the highest rows (which
     // footer stats do not — stats would re-issue the deleted ids).
     // Stats remain the legacy fallback for pre-mark tables.
-    manifestOf(v).identHwm.get(phys) match {
-      case Some(mark) => beyond(mark, virgin)
-      case None => storedIdentityExtreme(name, start, step)
-    }
+    manifestOf(v).identHwm.get(physColName(name, v)).fold(
+      storedIdentityExtreme(name, start, step))(beyond(step, _, start - step))
   }
+
+  /** The later of two identity values in allocation direction `step`. */
+  private def beyond(step: Long, a: Long, b: Long): Long =
+    if (step > 0) math.max(a, b) else math.min(a, b)
 
   /** The stored extreme of identity column `name` across the current
     * snapshot (manifest stats — zero data read; one max()/min() scan on
@@ -1242,8 +1244,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val v = currentVersion
     val phys = physColName(name, v)
     val virgin = start - step
-    def beyond(a: Long, b: Long): Long =
-      if (step > 0) math.max(a, b) else math.min(a, b)
     val entries =
       (fileEntries(v) ++ deltaEntries(v)).filter(_.rows > 0)
     if (entries.isEmpty) return virgin
@@ -1251,13 +1251,13 @@ class SnapshotTable(spark: SparkSession, root: String) {
       val extreme =
         if (step > 0) math.ceil(entries.map(_.stats(phys)._2).max).toLong
         else math.floor(entries.map(_.stats(phys)._1).min).toLong
-      beyond(extreme, virgin)
+      beyond(step, extreme, virgin)
     } else {
       // stat-less column: one aggregate over the snapshot, once per
       // session — after that the atomic carries the mark
       val agg = if (step > 0) max(col(name)) else min(col(name))
       val r = read(v).agg(agg.cast("long")).head()
-      if (r.isNullAt(0)) virgin else beyond(r.getLong(0), virgin)
+      if (r.isNullAt(0)) virgin else beyond(step, r.getLong(0), virgin)
     }
   }
 
@@ -1371,19 +1371,24 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * probe — a scan claiming non-nullable over stored NULLs would
     * mislead the optimizer, so the constraint must never land on
     * violating data. */
-  private[graft] def requireNoNulls(name: String, verb: String): Unit =
-    require(read().filter(col(name).isNull).limit(1).count() == 0,
+  private[graft] def requireNoNulls(name: String, verb: String,
+      v: Int = currentVersion): Unit =
+    require(read(v).filter(col(name).isNull).limit(1).count() == 0,
       s"$verb ${name} SET NOT NULL: existing rows contain NULLs")
 
   /** ALTER COLUMN … SET NOT NULL as a metadata-only commit: existing
     * rows validate once ([[requireNoNulls]], skippable when the caller
     * pre-validated a multi-change statement), then the flag rides the
     * versioned overlay and Spark's output resolver enforces it on every
-    * subsequent write. Shared by the SQL-extension verb and the
-    * catalog's ALTER path. */
+    * subsequent write. The commit depends on the column's NULL rows at
+    * the version it validated, so a rival that adds a file which may
+    * hold one conflicts with it. Shared by the SQL-extension verb and
+    * the catalog's ALTER path. */
   def setNotNull(name: String, validate: Boolean = true): SnapshotTable = {
-    if (validate) requireNoNulls(name, "ALTER COLUMN")
-    alterColumnMeta(name, { f =>
+    val v = currentVersion
+    if (validate) requireNoNulls(name, "ALTER COLUMN", v)
+    alterColumnMetaAt(v, name,
+      Some(Seq(org.apache.spark.sql.sources.IsNull(name))), { f =>
       f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
         .withMetadata(f.metadata)
         .putBoolean(SnapshotTable.NotNullKey, true).build())
@@ -3072,6 +3077,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   private def invalidateCachesUnder(rootAbs: String): Unit = {
     val prefix = rootAbs + "/"
     manifestCache.keySet.removeIf(_.contains(prefix))
+    SnapshotTable.identityCommits.removeIf(_.contains(prefix))
     schemaCache.keySet.removeIf(_.contains(prefix))
     // a table re-created at the same path must restart its identity
     // sequences at their declared START, not the dropped table's mark.
@@ -3346,7 +3352,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * exists — the lost race [[commit]] rebases from. Under
     * [[SnapshotTable.commitLock]] the check and the write are one step
     * for every writer in this JVM; across processes the create without
-    * overwrite is the only guard (it throws). The commit timestamp is
+    * overwrite is the guard, and a create that fails because the version
+    * now exists is the same lost race. The commit timestamp is
     * stamped strictly above the previous version's so
     * AS-OF-timestamp order == version order. */
   private def writeManifest(m: Manifest): Boolean = commitLock.synchronized {
@@ -3385,23 +3392,12 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val ridFiles = assignRids(m.files)
     val ridDeltas = assignRids(m.deltas)
     // Identity high-water marks commit transactionally (next to
-    // rowIdHwm): seeding reads them back, so a cross-process lost race
-    // is an OCC retry on the write-once manifest, never a duplicate id
-    // (Delta's contract). Keys are PHYSICAL names (rename-stable, like
-    // fieldMeta). Live in-process counters win over carried marks —
-    // they only ever move in allocation direction.
-    val liveIdent: Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      val pfx = root + SnapshotTable.IdentKeySep
-      SnapshotTable.identityHwm.asScala.collect {
-        case (k, ctr) if k.startsWith(pfx) =>
-          val logical = k.substring(pfx.length)
-          m.renames.getOrElse(logical, logical) -> ctr.get()
-      }.toMap
-    }
+    // rowIdHwm) and seeding reads them back. Keys are PHYSICAL names
+    // (rename-stable, like fieldMeta). Live in-process counters win over
+    // carried marks — they only ever move in allocation direction.
     val carriedIdent =
       (if (prev == null) Map.empty[String, Long] else prev.identHwm) ++
-        m.identHwm ++ liveIdent
+        m.identHwm ++ identityCounters(m.renames).map { case (c, n) => c -> n.get() }
     val stamped = m.copy(
       files = ridFiles,
       deltas = ridDeltas,
@@ -3428,13 +3424,17 @@ class SnapshotTable(spark: SparkSession, root: String) {
         manifestJson(stamped)
       else deltaJson(stamped, prev, newTxns = m.txns)
         .getOrElse(manifestJson(stamped))
-    val out = fs.create(p, /* overwrite = */ false)
+    val out = try fs.create(p, /* overwrite = */ false) catch {
+      case _: java.io.IOException if fs.exists(p) => return false // lost to another process
+    }
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (stamped.renames.nonEmpty || stamped.dropped.nonEmpty ||
         stamped.fieldMeta.nonEmpty || stamped.widened.nonEmpty)
       SnapshotTable.mappedRoots.add(root)
     manifestCache.put(p.toString, stamped)
+    if (prev == null || carriedIdent != prev.identHwm)
+      SnapshotTable.identityCommits.add(p.toString)
     true
   }
 
@@ -3493,10 +3493,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
   /** Why the commits after `c.version` up to `w` conflict with `c`, if
     * they do: a winner removed or rewrote a file `c` read, changed the
     * column mapping or field metadata `c` was written against (or, when
-    * `c` adds rows, the identity marks their values came from), added
-    * deletion-vector marks to a file `c` read (its rows were copied or
-    * matched before the mark existed), or added a file or delta that
-    * [[mayHold]] keeps for `c`'s predicate. */
+    * `c` adds rows, moved an identity mark from another process —
+    * [[foreignIdentity]]), added deletion-vector marks to a file `c`
+    * read (its rows were copied or matched before the mark existed), or
+    * added a file or delta that [[mayHold]] keeps for `c`'s predicate. */
   private def conflictOf(c: Commit, w: Int): Option[String] = {
     val (was, now) = (manifestOf(c.version), manifestOf(w))
     val live = (now.files ++ now.deltas).map(_.path).toSet
@@ -3508,14 +3508,39 @@ class SnapshotTable(spark: SparkSession, root: String) {
     if (!read.subsetOf(live)) Some("removed or rewrote a file it read")
     else if (Mapping.of(now) != Mapping.of(was))
       Some("changed the column mapping or metadata it was written against")
-    else if ((c.files ++ c.deltas).nonEmpty && now.identHwm != was.identHwm)
-      Some("advanced the identity marks its rows may be numbered below")
+    else if ((c.files ++ c.deltas).nonEmpty && foreignIdentity(c.version, w))
+      Some("issued identity values in another process that its rows may hold")
     else if (now.dvs != was.dvs && conflictingNewDvMarks(c.version, w, read))
       Some("added deletion-vector marks to a file it read")
     else if (c.predicate.exists(fs =>
         added.exists(mayHold(fs, added, physColName(_, w)))))
       Some("added rows its predicate may match")
     else None
+  }
+
+  /** Whether a commit after `from` up to `to` that another process wrote
+    * moved the identity mark of a column this process reserves values
+    * for: it may have issued values this process reserved too (within
+    * one process the shared counter keeps reservations apart). */
+  private def foreignIdentity(from: Int, to: Int): Boolean = {
+    val issued = identityCounters(manifestOf(to).renames).keySet
+    issued.nonEmpty && (from + 1 to to).exists { u =>
+      val (a, b) = (manifestOf(u - 1).identHwm, manifestOf(u).identHwm)
+      issued.exists(c => a.get(c) != b.get(c)) &&
+        !SnapshotTable.identityCommits.contains(manifestPath(u).toString)
+    }
+  }
+
+  /** This process's identity counters for the table, by physical column
+    * name under `renames`. */
+  private def identityCounters(renames: Map[String, String])
+      : Map[String, java.util.concurrent.atomic.AtomicLong] = {
+    import scala.jdk.CollectionConverters._
+    val pfx = root + SnapshotTable.IdentKeySep
+    SnapshotTable.identityHwm.asScala.collect { case (k, n) if k.startsWith(pfx) =>
+      val logical = k.substring(pfx.length)
+      renames.getOrElse(logical, logical) -> n
+    }.toMap
   }
 }
 
@@ -3836,6 +3861,10 @@ object SnapshotTable {
   private val identityHwm =
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicLong]()
+
+  /** Manifest paths of the commits this process wrote that moved an
+    * identity mark ([[SnapshotTable.foreignIdentity]]). */
+  private val identityCommits = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Process-wide data-schema cache keyed by a representative file path
     * (one footer read per distinct table generation). */

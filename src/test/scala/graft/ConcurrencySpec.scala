@@ -419,6 +419,77 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
       .filter(col("v").isNull).count() == 0)
   }
 
+  test("SET NOT NULL conflicts with a rival append of NULLs") {
+    import spark.implicits._
+    var t: SnapshotTable = null
+    intercept[ConcurrentModificationException] {
+      raced("occ_not_null_nulls", _.append(
+        Seq((50L, "B", Option.empty[Double])).toDF("k", "p", "v"), Some("p")))(
+        w => { t = w; w.setNotNull("v") })
+    }
+    assert(t.currentVersion == 1 && t.commitOperation(1) == "APPEND",
+      "the rival's commit only")
+  }
+
+  test("a create that loses to another process's version rebases like any lost race") {
+    val (_, root) = mkTable("occ_create_race")
+    spark.sparkContext.hadoopConfiguration.set("fs.racefs.impl", classOf[RaceFs].getName)
+    spark.sparkContext.hadoopConfiguration.set("fs.racefs.impl.disable.cache", "true")
+    val t = new SnapshotTable(spark, "racefs:" + root)
+    val rival = new SnapshotTable(spark, root)
+    RaceFs.arm(() => rival.append(row(100L, "C"), Some("p")): Unit)
+    try t.append(row(101L, "C"), Some("p")) finally RaceFs.arm(() => ())
+    assert(ops(rival) == Seq("CREATE", "APPEND", "APPEND"))
+    assert(vs(rival, col("p") === "C").sorted == Seq(100.0, 101.0))
+  }
+
+  // ---- identity values: `k` takes values reserved off this process's
+  // counter for the table, seeded from the stored maximum (39)
+
+  private def identityRows(t: SnapshotTable, n: Int) = {
+    import spark.implicits._
+    val base = t.reserveIdentity("k", 1L, 1L, n.toLong)
+    (0 until n).map(i => (base + i, "C", 0.0)).toDF("k", "p", "v")
+  }
+
+  private def ops(t: SnapshotTable) =
+    t.history.orderBy("version").select("operation").collect().map(_.getString(0)).toSeq
+
+  test("identity appends racing in one process both commit with distinct values") {
+    val (t, root) = mkTable("occ_ident_local")
+    val r = new SnapshotTable(spark, root)
+    val mine = identityRows(t, 3)
+    t.withCommitHook(if (r.currentVersion == 0) r.append(identityRows(r, 2), Some("p"))) {
+      t.append(mine, Some("p"))
+    }
+    assert(ops(t) == Seq("CREATE", "APPEND", "APPEND"))
+    val ks = t.read().filter(col("p") === "C").select("k").collect().map(_.getLong(0))
+    assert(ks.sorted.toSeq == (40L to 44L), ks.sorted.mkString(","))
+  }
+
+  test("an optimize rebases over an identity append") {
+    val t = raced("occ_ident_optimize", r => r.append(identityRows(r, 2), Some("p")))(
+      w => { assert(w.optimize() >= 2); () })
+    assert(ops(t) == Seq("CREATE", "APPEND", "OPTIMIZE"))
+    assert(t.read().count() == 42)
+  }
+
+  test("an identity append conflicts with another process's identity append") {
+    val (t, root) = mkTable("occ_ident_foreign")
+    // a second spelling of the root has its own counters and manifest
+    // cache, as another process would: both reserve from 40
+    val other = new SnapshotTable(spark, "file:" + root)
+    val mine = identityRows(t, 3)
+    intercept[ConcurrentModificationException] {
+      t.withCommitHook(if (other.currentVersion == 0)
+          other.append(identityRows(other, 2), Some("p"))) {
+        t.append(mine, Some("p"))
+      }
+    }
+    assert(ops(t) == Seq("CREATE", "APPEND"), "the other process's commit only")
+    assert(t.read().filter(col("p") === "C").count() == 2)
+  }
+
   Seq[(String, (SnapshotTable, Long) => Unit)](
     ("append", (t, k) => t.append(row(k, "C"), Some("p")): Unit),
     ("appendIdempotent", (t, k) =>
@@ -441,4 +512,25 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
       }
     }
   }
+}
+
+/** The local filesystem under the `racefs` scheme, whose next manifest
+  * create first runs the armed rival: another process creating the
+  * same version between a commit's existence check and its create. */
+class RaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("racefs:///")
+
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    if (f.getName.matches("\\d+\\.json")) RaceFs.take()()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object RaceFs {
+  private var rival: () => Unit = () => ()
+  def arm(r: () => Unit): Unit = synchronized { rival = r }
+  def take(): () => Unit = synchronized { val r = rival; rival = () => (); r }
 }
