@@ -448,8 +448,9 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces {
       case nn: TableChange.UpdateColumnNullability =>
         require(nn.fieldNames.length == 1,
           s"ALTER COLUMN NULLABILITY: nested field ${nn.fieldNames.mkString(".")} unsupported")
-        // SET NOT NULL must validate EXISTING rows once (Delta's
-        // contract) before anything in the change list commits
+        // SET NOT NULL validates EXISTING rows (Delta's contract) before
+        // anything in the change list commits; its commit validates
+        // again at the version it commits from
         if (!nn.nullable)
           t.requireNoNulls(nn.fieldNames.head, "ALTER COLUMN")
       case c: TableChange.UpdateColumnComment =>
@@ -581,10 +582,10 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces {
           f.copy(metadata = b.build())
         })
       // ALTER COLUMN … SET / DROP NOT NULL: the flag is an overlay
-      // metadata marker (existing rows pre-validated above); Spark's
-      // output resolver enforces it on every subsequent write
+      // metadata marker; Spark's output resolver enforces it on every
+      // subsequent write
       case nn: TableChange.UpdateColumnNullability =>
-        if (!nn.nullable) t.setNotNull(nn.fieldNames.head, validate = false)
+        if (!nn.nullable) t.setNotNull(nn.fieldNames.head)
         else t.alterColumnMeta(nn.fieldNames.head, { f =>
           f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
             .withMetadata(f.metadata)
@@ -1343,19 +1344,15 @@ final class GraftCatalogRelation(context: SQLContext, table: SnapshotTable,
     GraftV2Table.plannedSize(table, version, pushed).map(_._1)
       .getOrElse(table.manifestSizeBytesAt(version)))
 
-  private def base: DataFrame = {
+  override def buildScan(): RDD[Row] = {
     // engine metadata columns (stable row id / row address — row-level
     // rewrites, explicit `SELECT __graft_rid / __graft_dv_file`) ride
-    // the id- or address-attached scans
-    val wantsAddr = required.fieldNames.contains(SnapshotTable.DvFileCol) ||
-      required.fieldNames.contains(SnapshotTable.DvPosCol)
-    val wantsRid = required.fieldNames.contains(SnapshotTable.RidCol)
-    if (wantsAddr) table.readAddressedDml(wantsRid, version)
-    else if (wantsRid) table.readWithRowIds(version)
-    else table.read(version)
-  }
-
-  override def buildScan(): RDD[Row] = {
+    // the scan when selected
+    val names = required.fieldNames
+    val base = table.readVersion(version,
+      addressed = names.contains(SnapshotTable.DvFileCol) ||
+        names.contains(SnapshotTable.DvPosCol),
+      rowIds = names.contains(SnapshotTable.RidCol))
     val filtered = pushed.flatMap(SnapshotFilters.toColumn)
       .foldLeft(base)((d, c) => d.filter(c))
     val projected =
@@ -1567,7 +1564,8 @@ final class GraftDeltaRowLevelOperation(
               override lazy val sizeInBytes: Long =
                 math.max(1L, table.manifestSizeBytesAt(-1))
               override def buildScan(): RDD[Row] = {
-                val base = table.readAddressedDml(trackRids)
+                val base = table.readVersion(-1, addressed = true,
+                  rowIds = trackRids)
                 // filters compose with the scan plan, so Catalyst
                 // pushes them into the parquet reader (footer-stats
                 // row-group skipping included)
@@ -1660,10 +1658,10 @@ final class GraftEntriesRelation(context: SQLContext, table: SnapshotTable,
   override def buildScan(): RDD[Row] = {
     if (entries.isEmpty)
       return context.sparkContext.emptyRDD[Row]
-    val df =
-      if (required.fieldNames.contains(SnapshotTable.RidCol))
-        table.readEntriesRowIds(entries) // row-tracking rewrite source
-      else table.readEntriesResolved(entries)
-    df.select(required.fieldNames.map(col(_)).toIndexedSeq: _*).rdd
+    // the stable row id rides along when the rewrite selects it (row
+    // tracking)
+    table.scan(entries, table.dvFiles, -1,
+        rowIds = required.fieldNames.contains(SnapshotTable.RidCol))
+      .select(required.fieldNames.map(col(_)).toIndexedSeq: _*).rdd
   }
 }

@@ -289,51 +289,55 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * MoR delta files, the scan resolves them transparently (base rows
     * without a delta key match + the latest delta row per key); pending
     * deletion vectors anti-join out their (file, position) marks first. */
-  def read(version: Int = -1): DataFrame = {
+  def read(version: Int = -1): DataFrame = readVersion(version)
+
+  /** [[read]] of `version` (current when negative), with each row's
+    * (file, position) address when `addressed` and its stable row id
+    * when `rowIds` ([[scan]]) — the one read of every catalog scan,
+    * which states the engine columns it selects. Either needs compacted
+    * state: a pending MoR delta row has no base-file address. */
+  private[graft] def readVersion(version: Int, addressed: Boolean = false,
+      rowIds: Boolean = false): DataFrame = {
     val v = if (version < 0) currentVersion else version
     val deltas = deltaEntries(v)
-    if (deltas.isEmpty) baseScan(fileEntries(v), dvEntries(v), v)
-    else resolveMerged(fileEntries(v), deltas, mergeKeysOf(v), dvEntries(v),
-      mapV = v)
+    if (deltas.isEmpty) scan(fileEntries(v), dvEntries(v), v, addressed, rowIds)
+    else {
+      require(!addressed && !rowIds, s"a scan with row addresses or ids on $root " +
+        "requires compacted state (pending MoR deltas — OPTIMIZE folds them first)")
+      resolveMerged(fileEntries(v), deltas, mergeKeysOf(v), dvEntries(v), mapV = v)
+    }
   }
 
-  /** Scan `entries` with each row's physical address attached — the
-    * parquet scan's `_metadata.file_path` / `_metadata.row_index`
-    * columns, resolved through the manifest-planned relation. Address
-    * strings render identically at capture and at read (both come from
-    * the same scan machinery), so DV anti-joins match exactly. */
-  private def readEntriesAddressed(
-      entries: Seq[FileEntry], mapV: Int = -1,
-      keepRid: Boolean = false): DataFrame =
+  /** The one scan of data files: `entries` under the schema and column
+    * mapping of `version` (current when negative), so a column the
+    * scanned files lack reads as its `ADD COLUMNS … DEFAULT`, or null,
+    * as a full read gives it; minus the deletion-vector marks `dvs` (one
+    * hash anti-join on (file, pos) — the DV side is O(deleted rows),
+    * broadcast when small, a shuffled anti join keyed by file path when
+    * not, never a rewrite). `addressed` keeps each row's physical address
+    * under [[SnapshotTable.DvFileCol]] / [[SnapshotTable.DvPosCol]] — the
+    * parquet scan's `_metadata.file_path` / `_metadata.row_index`, which
+    * render identically at mark capture and at read, so the anti-join
+    * matches exactly; `rowIds` attaches [[SnapshotTable.RidCol]]
+    * ([[withRidColumn]]). A scan with neither and no marks adds no
+    * address projection. */
+  private[graft] def scan(entries: Seq[FileEntry], dvs: Seq[FileEntry],
+      version: Int, addressed: Boolean = false,
+      rowIds: Boolean = false): DataFrame = {
+    val v = if (version < 0) currentVersion else version
+    val raw = readEntriesRaw(entries, v, rowIds, fileEntries(v))
+    if (!addressed && !rowIds && dvs.isEmpty) return toLogicalDf(raw, v)
     // metadata columns are selected on the RAW scan (before the
     // column-mapping projection — a Project on top would hide them)
-    toLogicalDf(readEntriesRaw(entries, mapV, keepRid, tableFiles(mapV)).select(col("*"),
+    val withAddress = toLogicalDf(raw.select(col("*"),
       col("_metadata.file_path").as(DvFileCol),
-      col("_metadata.row_index").as(DvPosCol)), mapV)
-
-  /** Addressed scan minus deletion-vector marks: one hash anti-join on
-    * (file, pos). The DV side is O(deleted rows) — dimension-sized next
-    * to the base scan; AQE broadcasts it when small, and at a large
-    * deleted fraction the join degrades gracefully to a shuffled anti
-    * join keyed by file path, never a full-table rewrite. */
-  private def addressedMinusDvs(
-      entries: Seq[FileEntry], dvs: Seq[FileEntry], mapV: Int = -1,
-      keepRid: Boolean = false): DataFrame =
-    readEntriesAddressed(entries, mapV, keepRid)
-      .join(readEntriesRaw(dvs), Seq(DvFileCol, DvPosCol), "left_anti")
-
-  /** Base-layer scan with deletion vectors applied (no-op scan when none
-    * are pending — the address projection is only paid on DV tables). */
-  private def baseScan(entries: Seq[FileEntry], dvs: Seq[FileEntry],
-      mapV: Int = -1): DataFrame =
-    if (dvs.isEmpty) toLogicalDf(readEntriesRaw(entries, mapV,
-      schemaFrom = tableFiles(mapV)), mapV)
-    else addressedMinusDvs(entries, dvs, mapV).drop(DvFileCol, DvPosCol)
-
-  /** The data files of version `mapV` (current when negative): a base
-    * scan of any subset of them reads under their whole schema. */
-  private def tableFiles(mapV: Int): Seq[FileEntry] =
-    fileEntries(if (mapV < 0) currentVersion else mapV)
+      col("_metadata.row_index").as(DvPosCol)), v)
+    val live =
+      if (dvs.isEmpty) withAddress
+      else withAddress.join(readEntriesRaw(dvs), Seq(DvFileCol, DvPosCol), "left_anti")
+    val out = if (rowIds) withRidColumn(live, entries) else live
+    if (addressed) out else out.drop(DvFileCol, DvPosCol)
+  }
 
   /** [[readEntriesRaw]] with the column-mapping projection applied —
     * frames leaving the file layer are LOGICAL (identity on unmapped
@@ -481,7 +485,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         latest.filter(!(col(DelCol) <=> true)).drop(DelCol)
       else latest
     val baseDf =
-      if (base.nonEmpty) restrict(baseScan(base, dvs, mapV))
+      if (base.nonEmpty) restrict(scan(base, dvs, mapV))
       // all-delta slice (a folded partition set with no base files yet):
       // the resolution is the survivors alone
       else spark.createDataFrame(
@@ -666,19 +670,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
       (m.deltas.nonEmpty || m.dvs.nonEmpty)
   }
 
-  /** Manifest-planned scan of an arbitrary entry list (streaming-source
-    * micro-batch construction), under the current version's whole
-    * schema as [[read]] gives it: a column added after `entries` were
-    * written reads as its `EXISTS_DEFAULT`, or null. */
-  private[graft] def readEntriesDf(entries: Seq[FileEntry]): DataFrame =
-    toLogicalDf(readEntriesRaw(entries, schemaFrom = tableFiles(-1)), -1)
-
-  /** Deletion-vector-resolved scan of exactly `entries` at the current
-    * version — the read side of [[replaceFiles]] (group-based row-level
-    * SQL rewrites read only the replaced file groups). */
-  private[graft] def readEntriesResolved(entries: Seq[FileEntry]): DataFrame =
-    baseScan(entries, dvEntries(currentVersion))
-
   // ---------------------------------------------------- column mapping
   // (Delta columnMapping.mode=name analog.) Physical column names in
   // data files are IMMUTABLE; the manifest's versioned `renames`
@@ -686,7 +677,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   // logical schema. DataFrames crossing the public API are always
   // LOGICAL; manifest-stored names (merge keys, stats, partition
   // columns) are always PHYSICAL. Translation happens at exactly two
-  // frame boundaries — [[readEntries]] (physical→logical) and
+  // frame boundaries — [[toLogicalDf]] (physical→logical) and
   // [[writeData]] (logical→physical) — plus the by-name stats lookups.
 
   private def isMapped: Boolean = SnapshotTable.mappedRoots.contains(root)
@@ -977,7 +968,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   // it through the UPDATE/MERGE/DELETE rewrite untouched for
   // carried/updated rows (NULL on merge-inserts), and the replacement
   // write re-materializes it — row LINEAGE, Delta's contract. The
-  // engine-API copy-on-write `delete`/`update` use [[rewriteSource]]
+  // engine-API copy-on-write `delete`/`update` [[scan]] with `rowIds`
   // for the same guarantee; only the engine-API key-join `merge` still
   // refreshes rewritten rows' ids (documented in SURVEY §2).
 
@@ -1006,19 +997,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     joined.withColumn(SnapshotTable.RidCol, rid).drop(pathCol, baseCol)
   }
 
-  /** Maintenance-rewrite source over `entries`: the DV-resolved rows,
-    * plus the materialized row-id column when row tracking is on — a
-    * rewrite must not renumber rows it does not logically change. */
-  private def rewriteSource(
-      entries: Seq[FileEntry], dvs: Seq[FileEntry]): DataFrame =
-    if (!rowTrackingEnabled) baseScan(entries, dvs)
-    else {
-      val addressed =
-        if (dvs.isEmpty) readEntriesAddressed(entries, -1, keepRid = true)
-        else addressedMinusDvs(entries, dvs, -1, keepRid = true)
-      withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol)
-    }
-
   /** Addressed DML scan: every live row of the current version plus its
     * (file, position) address under [[SnapshotTable.DvFileCol]] /
     * [[SnapshotTable.DvPosCol]] (and its stable row id when `keepRid`)
@@ -1028,26 +1006,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * analog). DV-marked rows are already excluded. Requires compacted
     * state (pending MoR delta rows have no base-file address). */
   private[graft] def readAddressedDml(keepRid: Boolean,
-      version: Int = -1): DataFrame = {
-    val v = if (version < 0) currentVersion else version
-    require(deltaEntries(v).isEmpty,
-      s"addressed scan on $root requires compacted state (pending MoR " +
-        "deltas — OPTIMIZE folds them first)")
-    val entries = fileEntries(v)
-    if (entries.isEmpty) {
-      var df = read(v)
-        .withColumn(SnapshotTable.DvFileCol, lit(null).cast("string"))
-        .withColumn(SnapshotTable.DvPosCol, lit(null).cast("long"))
-      if (keepRid)
-        df = df.withColumn(SnapshotTable.RidCol, lit(null).cast("long"))
-      return df
-    }
-    val dvs = dvEntries(v)
-    val addressed =
-      if (dvs.isEmpty) readEntriesAddressed(entries, v, keepRid)
-      else addressedMinusDvs(entries, dvs, v, keepRid)
-    if (keepRid) withRidColumn(addressed, entries) else addressed
-  }
+      version: Int = -1): DataFrame =
+    readVersion(version, addressed = true, rowIds = keepRid)
 
   /** Commit one DELTA-based row-level write (Spark's `WriteDelta` plan —
     * the positional MERGE): `delta` is the rewrite query's output, one
@@ -1134,38 +1094,14 @@ class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** [[readWithRowIds]] restricted to `entries` (the row-level
-    * rewrite's planned replace set): DV-resolved rows plus their stable
-    * ids — the partition-scoped CoW DML source under row tracking. */
-  private[graft] def readEntriesRowIds(
-      entries: Seq[FileEntry]): DataFrame = {
-    val dvs = dvEntries(currentVersion)
-    val addressed =
-      if (dvs.isEmpty) readEntriesAddressed(entries, -1, keepRid = true)
-      else addressedMinusDvs(entries, dvs, -1, keepRid = true)
-    withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol)
-  }
-
   /** Scan with stable row ids: every row of the current (or pinned)
     * version plus its id under `__graft_rid`. Ids are unique per row,
     * stable across maintenance rewrites when
     * [[SnapshotTable.RowTrackingProp]] is set, and survive DV deletes
     * (survivor rows keep theirs). Requires compacted state (pending
     * MoR delta rows have no base-file address yet). */
-  def readWithRowIds(version: Int = -1): DataFrame = {
-    val v = if (version < 0) currentVersion else version
-    require(deltaEntries(v).isEmpty,
-      s"readWithRowIds on $root requires compacted state (pending MoR " +
-        "deltas — OPTIMIZE folds them first)")
-    val entries = fileEntries(v)
-    if (entries.isEmpty)
-      return read(v).withColumn(SnapshotTable.RidCol, lit(null).cast("long"))
-    val dvs = dvEntries(v)
-    val addressed =
-      if (dvs.isEmpty) readEntriesAddressed(entries, v, keepRid = true)
-      else addressedMinusDvs(entries, dvs, v, keepRid = true)
-    withRidColumn(addressed, entries).drop(DvFileCol, DvPosCol)
-  }
+  def readWithRowIds(version: Int = -1): DataFrame =
+    readVersion(version, rowIds = true)
 
   /** Reserve `n` consecutive identity values for column `col` and
     * return the FIRST of them (row i of the batch takes base + step·i).
@@ -1376,17 +1312,16 @@ class SnapshotTable(spark: SparkSession, root: String) {
     require(read(v).filter(col(name).isNull).limit(1).count() == 0,
       s"$verb ${name} SET NOT NULL: existing rows contain NULLs")
 
-  /** ALTER COLUMN … SET NOT NULL as a metadata-only commit: existing
-    * rows validate once ([[requireNoNulls]], skippable when the caller
-    * pre-validated a multi-change statement), then the flag rides the
-    * versioned overlay and Spark's output resolver enforces it on every
-    * subsequent write. The commit depends on the column's NULL rows at
-    * the version it validated, so a rival that adds a file which may
-    * hold one conflicts with it. Shared by the SQL-extension verb and
-    * the catalog's ALTER path. */
-  def setNotNull(name: String, validate: Boolean = true): SnapshotTable = {
+  /** ALTER COLUMN … SET NOT NULL as a metadata-only commit: the rows of
+    * the version it commits from validate ([[requireNoNulls]]), then the
+    * flag rides the versioned overlay and Spark's output resolver
+    * enforces it on every subsequent write. The commit depends on the
+    * column's NULL rows at that version, so a rival that adds a file
+    * which may hold one conflicts with it. Shared by the SQL-extension
+    * verb and the catalog's ALTER path. */
+  def setNotNull(name: String): SnapshotTable = {
     val v = currentVersion
-    if (validate) requireNoNulls(name, "ALTER COLUMN", v)
+    requireNoNulls(name, "ALTER COLUMN", v)
     alterColumnMetaAt(v, name,
       Some(Seq(org.apache.spark.sql.sources.IsNull(name))), { f =>
       f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
@@ -1991,7 +1926,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   }
 
   /** Reads slice `s` of version `v`: the DV-resolved rewrite base, with
-    * the row ids threaded under row tracking ([[rewriteSource]]) — or,
+    * the row ids threaded under row tracking ([[scan]]) — or,
     * given `keyProbe`, only the rows whose `keys` the probe holds (the
     * change-feed pre-image read), restricted before the resolution so
     * its shuffle is probe-sized. The slice's pending deltas resolve in;
@@ -2004,8 +1939,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
     else if (s.deltas.nonEmpty)
       resolveMerged(s.files, s.deltas, mergeKeysOf(v), dvEntries(v), keyProbe)
-    else keyProbe.fold(rewriteSource(s.files, dvEntries(v)))(kp =>
-      baseScan(s.files, dvEntries(v)).join(broadcast(kp), keys, "left_semi"))
+    else keyProbe.fold(scan(s.files, dvEntries(v), v, rowIds = rowTrackingEnabled))(
+      kp => scan(s.files, dvEntries(v), v).join(broadcast(kp), keys, "left_semi"))
 
   /** Predicate DELETE (Delta `DELETE FROM … WHERE`): removes the rows
     * where `cond` is TRUE — a row whose predicate is NULL stays (SQL
@@ -2072,10 +2007,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val written =
       if (touched.isEmpty) Seq.empty
       else {
-        // rewriteSource: under row tracking carried AND updated rows keep
-        // their ids (the rid column rides through the SET projection
-        // untouched — no SET can name an engine column)
-        val src = rewriteSource(touched, dvs)
+        // under row tracking carried AND updated rows keep their ids (the
+        // rid column rides through the SET projection untouched — no SET
+        // can name an engine column)
+        val src = scan(touched, dvs, v, rowIds = rowTrackingEnabled)
         writeData(set.fold(src.filter(!matches))(assigned(src, _)),
           v + 1, layoutSpecAt(v))
       }
@@ -2085,7 +2020,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // both update images derive from the SAME pre-update row set:
         // filtering post-update rows would unpair the feed when a SET
         // assigns the predicate column
-        val old = baseScan(touched, dvs).filter(matches)
+        val old = scan(touched, dvs, v).filter(matches)
         writeChanges(set.fold(old.withColumn(ChangeCol, lit("delete"))) { s =>
           assigned(old, s).withColumn(ChangeCol, lit("update_postimage"))
             .unionByName(old.withColumn(ChangeCol, lit("update_preimage")))
@@ -2102,7 +2037,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * files ([[planFiles]]) minus pending marks finds the rows
     * where `cond` is TRUE, and their (file, position) addresses commit
     * as marks — no base file rewritten, cost O(candidate scan + matched
-    * rows). Readers anti-join the marks out ([[baseScan]]). The
+    * rows). Readers anti-join the marks out ([[scan]]). The
     * predicate evaluates on the DV-resolved scan, so overlapping
     * re-deletes never duplicate marks (row accounting stays exact).
     * When no row matched, nothing commits.
@@ -2134,8 +2069,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val candidates = planFilters(filters, v)
     if (candidates.isEmpty) return
     val dvs = dvEntries(v)
-    val matched = (if (dvs.isEmpty) readEntriesAddressed(candidates)
-      else addressedMinusDvs(candidates, dvs)).filter(cond <=> true)
+    val matched = scan(candidates, dvs, v, addressed = true).filter(cond <=> true)
     val marks = writeData(matched.select(col(DvFileCol), col(DvPosCol)),
       v + 1, None).filter(_.rows > 0)
     if (marks.isEmpty) return
@@ -2362,7 +2296,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     val residue =
       if (foreign.isEmpty) Seq.empty
       else writeData(
-        baseScan(foreign, dvEntries(v)).filter(keepRow),
+        scan(foreign, dvEntries(v), v).filter(keepRow),
         v + 1, Some(partitionBy))
     val gone = replaced ++ foreign
     commit(Commit("OVERWRITE", v, read = gone, removed = gone,
@@ -2452,7 +2386,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     if (rewrite.size < least) 0
     else {
       val written =
-        if (curve.isEmpty) writeBinned(rewrite, dvEntries(v), v + 1, spec, minBytes)
+        if (curve.isEmpty) writeBinned(v, rewrite, spec, minBytes)
         // cluster = false: writeData's default re-clustering by partition
         // value would destroy the curve ordering just built
         else writeData(zorderArrange(foldSource(v, rewrite), curve,
@@ -2515,7 +2449,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * with MoR deltas pending, the resolved table (a whole-table rewrite
     * folds the deltas, Hudi-style; the deferred rows get fresh ids). */
   private def foldSource(v: Int, rewrite: Seq[FileEntry]): DataFrame =
-    if (deltaEntries(v).isEmpty) rewriteSource(rewrite, dvEntries(v))
+    if (deltaEntries(v).isEmpty)
+      scan(rewrite, dvEntries(v), v, rowIds = rowTrackingEnabled)
     else read(v)
 
   /** The one commit of every maintenance rewrite: `op` replaces
@@ -2555,9 +2490,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * bins), looked up by the scan's `_metadata.file_path` — no extra
     * scan, no rand(), and bin ids are disjoint across partitions (see
     * [[writeAddressedBins]]). */
-  private def writeBinned(rewrite: Seq[FileEntry], dvs: Seq[FileEntry],
-      nextVersion: Int, spec: Option[String],
-      minBytes: Long): Seq[FileEntry] = spec match {
+  private def writeBinned(v: Int, rewrite: Seq[FileEntry],
+      spec: Option[String], minBytes: Long): Seq[FileEntry] = spec match {
     case Some(p) =>
       var next = 0
       val binOf: Map[String, Int] =
@@ -2570,12 +2504,12 @@ class SnapshotTable(spark: SparkSession, root: String) {
           next += bins
           assigned
         }.toMap
-      writeAddressedBins(rewrite, dvs, nextVersion, p, next,
+      writeAddressedBins(v, rewrite, p, next,
         element_at(typedLit(binOf), col(DvFileCol)))
     case None =>
-      writeData(rewriteSource(rewrite, dvs)
+      writeData(scan(rewrite, dvEntries(v), v, rowIds = rowTrackingEnabled)
         .repartition(binsFor(rewrite.map(_.bytes).sum, minBytes)),
-        nextVersion, None)
+        v + 1, None)
   }
 
   /** Rewrite `rewrite` under partition `spec` with every row sent to the
@@ -2585,22 +2519,17 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * range-bound sampling job and no approximate split points, so when
     * every bin lies inside one partition each non-empty bin is exactly
     * one output file. */
-  private def writeAddressedBins(rewrite: Seq[FileEntry],
-      dvs: Seq[FileEntry], nextVersion: Int, spec: String, nBins: Int,
+  private def writeAddressedBins(v: Int, rewrite: Seq[FileEntry],
+      spec: String, nBins: Int,
       bin: org.apache.spark.sql.Column): Seq[FileEntry] = {
-    val keepRid = rowTrackingEnabled
-    val addressed0 =
-      if (dvs.isEmpty) readEntriesAddressed(rewrite, keepRid = keepRid)
-      else addressedMinusDvs(rewrite, dvs, keepRid = keepRid)
-    // row tracking: stamp ids while the address columns are live
-    val addressed =
-      if (keepRid) withRidColumn(addressed0, rewrite) else addressed0
-    val df = addressed.repartitionById(nBins, bin.cast("int"))
+    val df = scan(rewrite, dvEntries(v), v, addressed = true,
+        rowIds = rowTrackingEnabled)
+      .repartitionById(nBins, bin.cast("int"))
       .drop(DvFileCol, DvPosCol)
     // cluster = false: the bins ARE the distribution; writeData's default
     // re-clustering by partition value would collapse them back to one
     // file per partition
-    writeData(df, nextVersion, Some(spec), cluster = false)
+    writeData(df, v + 1, Some(spec), cluster = false)
   }
 
   /** Bin-pack compaction into about `numFiles` files; one `COMPACT`
@@ -2677,8 +2606,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
             }
           }.toMap
         val slot = element_at(typedLit(slots), col(DvFileCol))
-        writeAddressedBins(rewrite.flatMap(_._1), dvEntries(v), v + 1,
-          spec, bases.last, slot("_1") + pmod(slot("_3") + col(DvPosCol), slot("_2")))
+        writeAddressedBins(v, rewrite.flatMap(_._1), spec, bases.last, slot("_1") + pmod(slot("_3") + col(DvPosCol), slot("_2")))
       }
     // a partition with a mark is never settled, so no mark survives
     commitRewrite(v, "COMPACT", written, rewrite.flatMap(_._1),

@@ -208,7 +208,7 @@ class SnapshotStreamSource(
               "not plain rows. Compact the table before streaming it " +
               "(or start from a later, resolved version).")
         val added = table.commitAddedDataFiles(v)
-        if (added.isEmpty) None else Some(table.readEntriesDf(added))
+        if (added.isEmpty) None else Some(table.scan(added, Nil, -1))
       }
     } else op match {
       case op if SnapshotStreamSource.AppendOps(op) =>
@@ -224,7 +224,7 @@ class SnapshotStreamSource(
               "streaming it (or start from a later, resolved version).")
         val added = table.commitAddedDataFiles(v)
         if (added.isEmpty) None
-        else Some(table.readEntriesDf(added)
+        else Some(table.scan(added, Nil, -1)
           .withColumn(SnapshotTable.ChangeCol, lit("insert")))
       case "COMPACT" | "OPTIMIZE" | "ZORDER" | "REORG" | "RESTORE" =>
         None // data reorganization: no logical change
@@ -234,7 +234,7 @@ class SnapshotStreamSource(
           throw new UnsupportedOperationException(
             s"change-feed stream: version $v ($op) carries no change " +
               "files — commit DML with trackChanges = true to stream it.")
-        Some(table.readEntriesDf(changes))
+        Some(table.scan(changes, Nil, -1))
     }
   }
 

@@ -443,6 +443,32 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
     assert(vs(rival, col("p") === "C").sorted == Seq(100.0, 101.0))
   }
 
+  test("a catalog SET NOT NULL validates the version it commits from") {
+    val (_, root) = mkTable("occ_alter_not_null")
+    val ns = new java.io.File(root).getParent
+    spark.sparkContext.hadoopConfiguration.set("fs.racefs.impl", classOf[RaceFs].getName)
+    spark.sparkContext.hadoopConfiguration.set("fs.racefs.impl.disable.cache", "true")
+    val cat = new graft.sources.GraftSqlCatalog
+    cat.initialize("racecat", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("root", "racefs:" + new java.io.File(ns).getParent)))
+    import org.apache.spark.sql.connector.catalog.{Identifier, TableChange}
+    val ident = Identifier.of(Array(new java.io.File(ns).getName),
+      new java.io.File(root).getName)
+    val rival = new SnapshotTable(spark, root)
+    import spark.implicits._
+    // the pre-pass validates version 0; the rival's NULL lands while the
+    // comment change commits, before SET NOT NULL reads its version
+    RaceFs.arm(() => rival.append(
+      Seq((100L, "C", Option.empty[Double])).toDF("k", "p", "v"), Some("p")): Unit)
+    try intercept[IllegalArgumentException] {
+      cat.alterTable(ident, TableChange.updateColumnComment(Array("k"), "key"),
+        TableChange.updateColumnNullability(Array("v"), false))
+    } finally RaceFs.arm(() => ())
+    assert(ops(rival) == Seq("CREATE", "APPEND", "ALTER_COLUMN"))
+    assert(rival.read().schema("v").nullable)
+    assert(rival.read().filter(col("v").isNull).count() == 1)
+  }
+
   // ---- identity values: `k` takes values reserved off this process's
   // counter for the table, seeded from the stored maximum (39)
 
