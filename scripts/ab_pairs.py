@@ -2,7 +2,8 @@
 """Run alternating parent/change pairs of the benchmark and judge a claim.
 
     ab_pairs.py --parent DIR --change DIR --workload W --seeds 41-50 \
-        --seconds 10 [--metric cpu_total_s ...] [--log runs.jsonl]
+        --seconds 10 [--metric cpu_total_s ...] [--log runs.jsonl] \
+        [--trace-seed N]
 
 Each of DIR is a checkout with its own `perfbench/run.py` (make the
 parent one with `git archive` or `git clone`). For every seed the two
@@ -19,6 +20,11 @@ at least nine tenths of at least ten pairs and the medians differ, in the
 better direction, by more than the parent's interquartile spread. Runs
 that are not correct or have failed operations are reported.
 
+`--trace-seed N` then runs one traced run (`--trace 1`) per side at seed
+N and prints the plan-shape counts side by side (jobs, stages, tasks,
+scanned records, scan tasks, shuffle bytes), flagging each count that
+differs: a change that claims the same plans must show the same counts.
+
 `--log` appends every run's result line, tagged with side and seed. The
 script only reads the checkouts; it writes nothing under `perfbench/`.
 """
@@ -28,6 +34,11 @@ import os
 import statistics
 import subprocess
 import sys
+
+# the per-layer counts of a traced run that describe the plans run, not
+# their timing: a change that keeps the plans keeps every one of them
+PLAN_COUNTS = ["exec.jobs", "exec.stages", "exec.tasks", "scan.input_records",
+               "scan.tasks", "shuffle.write_bytes", "shuffle.read_bytes"]
 
 
 def parse_seeds(text):
@@ -47,11 +58,11 @@ def end_to_end(checkout):
     return {m["name"]: m.get("better", "lower") for m in spec["end_to_end"]}
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     """One benchmark run; its JSON result line."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=checkout, capture_output=True, text=True)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or not lines:
@@ -94,6 +105,9 @@ def main():
     ap.add_argument("--metric", action="append",
                     help="metric to judge (repeatable); default: end_to_end")
     ap.add_argument("--log", help="append each run's result line here")
+    ap.add_argument("--trace-seed", type=int,
+                    help="after the pairs, one traced run per side at this "
+                         "seed; print its plan-shape counts side by side")
     args = ap.parse_args()
 
     better = end_to_end(args.parent)
@@ -131,6 +145,17 @@ def main():
               f"change median {cm:.3f} [q1 {c1:.3f}, q3 {c3:.3f}] "
               f"({(cm - pm) / pm:+.1%}); change won {wins}/{len(pv)}; "
               f"median gap {gap:+.3f} vs parent IQR {iqr:.3f}: {word}")
+
+    if args.trace_seed is not None:
+        traced = {side: run(checkout, args.workload, args.trace_seed,
+                            args.seconds, trace=1)
+                  for side, checkout in (("parent", args.parent),
+                                         ("change", args.change))}
+        print(f"\ntraced pair, seed {args.trace_seed}: parent / change")
+        for m in PLAN_COUNTS:
+            p, c = (traced[side]["metrics"][m]["value"]
+                    for side in ("parent", "change"))
+            print(f"  {m}: {p:,.0f} / {c:,.0f}{'' if p == c else '  DIFFERS'}")
 
 
 if __name__ == "__main__":

@@ -822,7 +822,7 @@ object Lakehouse {
         val t = db.table("facts").merge(mergeSource(o),
           Seq("o_orderkey", "o_orderstatus"),
           partitionBy = Some("o_orderstatus"))
-        db.table("summary").overwriteAll(txnDbSummary(t.read())): Unit
+        db.table("summary").overwrite(txnDbSummary(t.read())): Unit
       }
       r
     }))
@@ -2322,12 +2322,15 @@ object Lakehouse {
     (s, d) => {
       val o = Tables.load(s, d, "orders")
       val t = stagedOrders(s, d).shallowCloneTo(tmp("txnsink"))
-      def batch(m: Int) = o.filter(col("o_orderkey") % m === 0)
-      require(t.appendIdempotent(batch(7), "sink", 1, Some("o_orderstatus")))
-      require(t.appendIdempotent(batch(11), "sink", 2, Some("o_orderstatus")))
+      // whether the append of batch `m` tagged ("sink", id) committed
+      def applied(m: Int, id: Long) = {
+        val v = t.currentVersion
+        t.append(o.filter(col("o_orderkey") % m === 0), Some("o_orderstatus"),
+          txn = Some(("sink", id))).currentVersion > v
+      }
+      require(applied(7, 1) && applied(11, 2))
       // checkpoint-recovery re-delivery: both batches replayed, both skipped
-      require(!t.appendIdempotent(batch(7), "sink", 1, Some("o_orderstatus")))
-      require(!t.appendIdempotent(batch(11), "sink", 2, Some("o_orderstatus")))
+      require(!applied(7, 1) && !applied(11, 2))
       t.read().groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("o_totalprice"))))
@@ -2355,10 +2358,10 @@ object Lakehouse {
     (s, d) => {
       val o = Tables.load(s, d, "orders")
       val t = stagedOrders(s, d).shallowCloneTo(tmp("ovw"))
-      t.overwritePartitions(
+      t.overwrite(
         o.filter(col("o_orderstatus") === "F" && col("o_orderkey") % 2 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 100.0),
-        "o_orderstatus")
+        Some("o_orderstatus"), SnapshotTable.Replace.Present)
       t.read().groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           graft.Cols.moneyOut(sum(graft.Cols.dec(col("o_totalprice"))))

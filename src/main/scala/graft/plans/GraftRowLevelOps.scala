@@ -19,10 +19,10 @@ import graft.sources.{GraftV2Table, SnapshotTable}
   * `SupportsRowLevelOperations`: the command's `query` is the complete
   * new content of every replacement group the row-level scan read —
   * carried rows, updated rows, and merge-inserted rows. graft's
-  * row-level scan reads the whole current snapshot (one group, no
-  * pushdown — see `GraftV2Table.newRowLevelOperationBuilder`), so the
-  * query IS the table's next state and the correct commit is a
-  * full-table OVERWRITE under the table's recorded partition layout.
+  * row-level scan reads the files the pushed condition plans (the
+  * groups; `GraftRowLevelOperation`), so the query is their next state
+  * and the correct commit is an OVERWRITE of exactly those files under
+  * the table's recorded partition layout.
   *
   * Spark's own `ReplaceDataExec` requires a DSv2 `BatchWrite` (no V1
   * fallback exists for row-level writes), which would mean hand-rolling
@@ -30,7 +30,7 @@ import graft.sources.{GraftV2Table, SnapshotTable}
   * command onto the engine's existing DataFrame write path: the
   * replacement query stays a fully distributed Catalyst plan (scan
   * pruning, codegen, AQE all intact) flowing into the same
-  * `overwriteAll` commit SQL INSERT OVERWRITE uses — only the plan
+  * `overwrite` commit SQL INSERT OVERWRITE uses — only the plan
   * hand-off happens on the driver. Registered ahead of the built-in
   * strategies via `spark.experimental.extraStrategies`, so Spark's
   * `ReplaceDataExec` is never reached for graft tables.
@@ -83,11 +83,11 @@ object GraftRowLevelOps extends SparkStrategy {
           GraftDvUpdateExec(t.snapshot, t.writePartSpec, r.query,
             r.condition, t.schema) :: Nil
         else {
-          // partition-scoped rewrites carry their planned file split on
-          // the write (set during scan planning); None = whole table
+          // partition-scoped rewrites carry their planned files on the
+          // write (set during scan planning)
           val replace = r.write match {
             case Some(w: graft.sources.GraftReplaceWrite) => w.op.plannedReplace
-            case _ => None
+            case _ => SnapshotTable.Replace.All
           }
           GraftReplaceDataExec(t.snapshot, t.writePartSpec, r.query, replace,
             t.schema) :: Nil
@@ -103,7 +103,7 @@ object GraftRowLevelOps extends SparkStrategy {
       wd.write match {
         case Some(w: graft.sources.GraftDeltaWrite) =>
           GraftWriteDeltaExec(w.op.snapshot, w.op.writePartSpec, wd.query,
-            w.op.trackRids, w.op.tableSchema) :: Nil
+            w.op.trackRids, w.op.tableSchema, w.op.scanVersion) :: Nil
         case _ => Nil
       }
     // Spark has no V1-fallback exec for dynamic partition overwrite
@@ -169,9 +169,9 @@ object GraftRowLevelOps extends SparkStrategy {
 }
 
 /** Physical node for a graft [[ReplaceData]]: run the replacement query
-  * as a distributed DataFrame and commit it — replacing only the
-  * planned file groups when the scan pruned to a partition subset, a
-  * full OVERWRITE otherwise. Runs once (commands are eagerly executed);
+  * as a distributed DataFrame and commit it as an OVERWRITE of what the
+  * scan planned (`replace`: the planned files, or the whole table under
+  * merge-on-read state). Runs once (commands are eagerly executed);
   * output is empty like Spark's own row-level write execs.
   *
   * GENERATED ALWAYS columns are RECOMPUTED from their source columns on
@@ -186,7 +186,7 @@ final case class GraftReplaceDataExec(
     snapshot: SnapshotTable,
     partSpec: Option[String],
     query: LogicalPlan,
-    replace: Option[Seq[SnapshotTable.FileEntry]],
+    replace: SnapshotTable.Replace,
     tableSchema: org.apache.spark.sql.types.StructType) extends LeafExecNode {
 
   override def output: Seq[Attribute] = Seq.empty
@@ -209,10 +209,7 @@ final case class GraftReplaceDataExec(
     SnapshotTable.withCaches { caches =>
       val aligned =
         GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid, caches)(df)
-      replace match {
-        case Some(entries) => snapshot.replaceFiles(entries, aligned, partSpec)
-        case None => snapshot.overwriteAll(aligned, partSpec)
-      }
+      snapshot.overwrite(aligned, partSpec, replace)
     }
     ()
   }
@@ -233,14 +230,16 @@ final case class GraftReplaceDataExec(
   * generated columns recomputed and merge-inserted identity slots
   * filled, exactly like the CoW path) append as new files —
   * [[SnapshotTable.writeDeltaPositional]] commits both in one
-  * `MERGE_DV` version. Write cost O(changed rows); no base rewrite; no
-  * separate condition re-evaluation (subqueries fine). */
+  * `MERGE_DV` version, from the `version` the rewrite's scan read.
+  * Write cost O(changed rows); no base rewrite; no separate condition
+  * re-evaluation (subqueries fine). */
 final case class GraftWriteDeltaExec(
     snapshot: SnapshotTable,
     partSpec: Option[String],
     query: LogicalPlan,
     trackRids: Boolean,
-    tableSchema: org.apache.spark.sql.types.StructType) extends LeafExecNode {
+    tableSchema: org.apache.spark.sql.types.StructType,
+    version: Int) extends LeafExecNode {
 
   override def output: Seq[Attribute] = Seq.empty
 
@@ -251,7 +250,7 @@ final case class GraftWriteDeltaExec(
     val cdf = snapshot.property(GraftV2Table.CdcProp).contains("true")
     SnapshotTable.withCaches(caches => snapshot.writeDeltaPositional(df,
       GraftRowLevelOps.alignImages(snapshot, tableSchema, keepRid, caches),
-      partSpec, trackChanges = cdf)): Unit
+      partSpec, trackChanges = cdf, version)): Unit
   }
 
   override def executeCollect(): Array[InternalRow] = { done; Array.empty }
@@ -360,9 +359,8 @@ final case class GraftDvDeleteExec(
   * mode: the partitions PRESENT in the query's result replace wholesale
   * (O(new data)); every other partition carries by reference. Hidden
   * layouts (`months(ts)`, `bucket(n, k)`, …) replace at the TRANSFORMED
-  * partition granularity — `overwritePartitions` maps the data through
-  * the layout's write function, so one month's rows replace exactly
-  * that month. Only a genuinely unpartitioned table widens to a full
+  * partition granularity, so one month's rows replace exactly that
+  * month. Only a genuinely unpartitioned table widens to a full
   * overwrite (the standard dynamic-overwrite semantic there). */
 final case class GraftDynamicOverwriteExec(
     snapshot: SnapshotTable,
@@ -384,10 +382,7 @@ final case class GraftDynamicOverwriteExec(
         GraftV2Table.applyGeneratedColumns(df.select(cols.map(col): _*),
           tableSchema),
         tableSchema, snapshot, validateExplicit = true, caches)
-      partSpec match {
-        case Some(pc) => snapshot.overwritePartitions(aligned, pc)
-        case None => snapshot.overwriteAll(aligned, None)
-      }
+      snapshot.overwrite(aligned, partSpec, SnapshotTable.Replace.Present)
     }
     ()
   }

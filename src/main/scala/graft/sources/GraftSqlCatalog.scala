@@ -921,8 +921,7 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
   override def truncateTable(): Boolean = {
     require(pinned.isEmpty, refuseWrite("truncate"))
     val s = SparkSession.active
-    table.overwriteAll(
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], schema), None)
+    table.overwrite(s.createDataFrame(s.sparkContext.emptyRDD[Row], schema))
     true
   }
 
@@ -1012,18 +1011,15 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
                 overwriteArg))
 
             private def insertFilled(data: DataFrame, overwriteArg: Boolean): Unit = {
+              import SnapshotTable.Replace
               val identityPartCol = partSpec.filterNot(_.contains("("))
               mode match {
-                case "truncate" => table.overwriteAll(data, partSpec)
+                case "append" if !overwriteArg => table.append(data, partSpec)
                 // dynamic overwrite replaces the partitions present in
                 // the data under ANY layout — identity AND hidden
-                // transforms (overwritePartitions maps the data through
-                // the layout's write function); only a genuinely
-                // unpartitioned table widens to a full overwrite
-                case "dynamic" => partSpec match {
-                  case Some(pc) => table.overwritePartitions(data, pc)
-                  case None => table.overwriteAll(data, None)
-                }
+                // transforms; only a genuinely unpartitioned table widens
+                // to a full overwrite
+                case "dynamic" => table.overwrite(data, partSpec, Replace.Present)
                 case "filters" =>
                   // a raw-value condition does not align with hidden-
                   // transform partition boundaries (one month/bucket
@@ -1052,11 +1048,9 @@ final class GraftV2Table(table: SnapshotTable, pinned: Option[Int],
                   // set, not the data's: a filtered partition the data
                   // has no rows for is emptied (Spark validates the data
                   // against the condition, so rows ⊆ filtered partitions)
-                  table.overwritePartitionValues(data, pc,
-                    canon.toSet, hasNull = false)
-                case _ =>
-                  if (overwriteArg) table.overwriteAll(data, partSpec)
-                  else table.append(data, partSpec)
+                  table.overwrite(data, partSpec,
+                    Replace.Values(canon.map(Option(_)).toSet))
+                case _ => table.overwrite(data, partSpec)
               }
               ()
             }
@@ -1371,14 +1365,18 @@ final class GraftCatalogRelation(context: SQLContext, table: SnapshotTable,
   * Spark pushes from the command's condition go to the file planner
   * ([[SnapshotTable.planFiles]]): files whose partition value (identity
   * or hidden layout) or footer stats prove no row can match drop out of
-  * the scan and carry by reference through [[SnapshotTable.replaceFiles]],
+  * the scan and carry by reference through [[SnapshotTable.overwrite]],
   * so a partition-scoped UPDATE at 100 TB rewrites one partition, not
   * the table. Every kept file is replaced whole (group semantics forbid
   * row filtering); with no prunable condition that is the whole table.
   *
-  * The planned (replace, carry) split travels to the executor strategy
-  * inside [[GraftReplaceWrite]] — scan planning runs before V2Writes
-  * builds the write, and both come from this one operation instance. */
+  * The planned split travels to the executor strategy inside
+  * [[GraftReplaceWrite]] as a `Planned` scope — scan planning runs
+  * before V2Writes builds the write, and both come from this one
+  * operation instance. The scan reads the version it planned at, and
+  * the rewrite commits from it with the pushed filters as its
+  * predicate: a rival commit since conflicts when it touched a planned
+  * file or added one the filters keep, and rebases otherwise. */
 final class GraftRowLevelOperation(
     table: SnapshotTable,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
@@ -1388,9 +1386,11 @@ final class GraftRowLevelOperation(
 
   import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, Write, WriteBuilder}
 
-  /** Files the rewrite must replace; None = whole table. Set during
-    * scan planning (after Spark pushes the command condition). */
-  @volatile private[graft] var plannedReplace: Option[Seq[SnapshotTable.FileEntry]] = None
+  /** What the rewrite replaces: the planned files, or the whole table
+    * under merge-on-read (MoR) state. Set during scan planning (after
+    * Spark pushes the command condition). */
+  @volatile private[graft] var plannedReplace: SnapshotTable.Replace =
+    SnapshotTable.Replace.All
 
   /** Row-id PRESERVATION through the CoW rewrite (Delta row-tracking
     * DML parity): under the table property, the rewrite scan serves
@@ -1424,10 +1424,12 @@ final class GraftRowLevelOperation(
         // hold a row matching the condition (its partition value or
         // footer stats prove it), so it carries by reference. MoR state
         // disables pruning — delta rows are not file-addressable groups.
+        val v = table.currentVersion
         plannedReplace =
-          if (table.hasPendingDeltas) None
-          else Some(if (filters.isEmpty) table.files
-            else table.planFilters(filters.toSeq))
+          if (table.deltaEntries(v).nonEmpty) SnapshotTable.Replace.All
+          else SnapshotTable.Replace.Planned(
+            if (filters.isEmpty) table.fileEntries(v) else table.planFilters(filters.toSeq, v),
+            v, filters.toSeq)
         reported = filters.filter(f => SnapshotFilters.toColumn(f).isDefined)
         filters // all residual: the rewrite plan re-evaluates the condition
       }
@@ -1451,9 +1453,9 @@ final class GraftRowLevelOperation(
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T =
           (replace match {
-            case Some(entries) =>
-              new GraftEntriesRelation(context, table, entries, scanSchema)
-            case None =>
+            case SnapshotTable.Replace.Planned(entries, v, _) =>
+              new GraftEntriesRelation(context, table, entries, v, scanSchema)
+            case _ =>
               new GraftCatalogRelation(context, table, -1, scanSchema,
                 Array.empty)
           }).asInstanceOf[T]
@@ -1508,6 +1510,10 @@ final class GraftDeltaRowLevelOperation(
     * [[GraftRowLevelOperation.trackRids]]). */
   private[graft] val trackRids: Boolean = table.rowTrackingEnabled
 
+  /** The version the scan reads, pinned when it is built; the commit
+    * ([[SnapshotTable.writeDeltaPositional]]) reads it too. */
+  @volatile private[graft] var scanVersion: Int = -1
+
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String =
     s"GraftDeltaRowLevelOp[$qualifiedName, $cmd]"
@@ -1543,6 +1549,8 @@ final class GraftDeltaRowLevelOperation(
 
       override def build(): Scan = new V1Scan with graft.plans.GraftV1StatsScan {
         private val applied = pushed
+        private val version = table.currentVersion
+        scanVersion = version
         private val scanSchema = {
           var s = StructType(tableSchema.fields)
           s = s.add(SnapshotTable.DvFileCol,
@@ -1562,9 +1570,9 @@ final class GraftDeltaRowLevelOperation(
               override def sqlContext: SQLContext = context
               override def schema: StructType = scanSchema
               override lazy val sizeInBytes: Long =
-                math.max(1L, table.manifestSizeBytesAt(-1))
+                math.max(1L, table.manifestSizeBytesAt(version))
               override def buildScan(): RDD[Row] = {
-                val base = table.readVersion(-1, addressed = true,
+                val base = table.readVersion(version, addressed = true,
                   rowIds = trackRids)
                 // filters compose with the scan plan, so Catalyst
                 // pushes them into the parquet reader (footer-stats
@@ -1642,12 +1650,13 @@ final class GraftMetaTable(table: SnapshotTable, kind: String,
     }
 }
 
-/** v1 relation over an explicit file set with deletion-vector
-  * resolution — the read side of a partition-scoped row-level rewrite.
+/** v1 relation over an explicit file set of `version`, minus that
+  * version's deletion-vector marks — the read side of a
+  * partition-scoped row-level rewrite.
   * Reports the entries' manifest bytes so join planning inside the
   * replacement query (e.g. a MERGE source join) sees real magnitudes. */
 final class GraftEntriesRelation(context: SQLContext, table: SnapshotTable,
-    entries: Seq[SnapshotTable.FileEntry], required: StructType)
+    entries: Seq[SnapshotTable.FileEntry], version: Int, required: StructType)
   extends BaseRelation with TableScan {
 
   override def sqlContext: SQLContext = context
@@ -1660,7 +1669,7 @@ final class GraftEntriesRelation(context: SQLContext, table: SnapshotTable,
       return context.sparkContext.emptyRDD[Row]
     // the stable row id rides along when the rewrite selects it (row
     // tracking)
-    table.scan(entries, table.dvFiles, -1,
+    table.scan(entries, table.dvEntries(version), version,
         rowIds = required.fieldNames.contains(SnapshotTable.RidCol))
       .select(required.fieldNames.map(col(_)).toIndexedSeq: _*).rdd
   }

@@ -269,10 +269,10 @@ class SnapshotTable(spark: SparkSession, root: String) {
     }
   }
 
-  private def fileEntries(version: Int): Seq[FileEntry] =
+  private[graft] def fileEntries(version: Int): Seq[FileEntry] =
     manifestOf(version).files
 
-  private def deltaEntries(version: Int): Seq[FileEntry] =
+  private[graft] def deltaEntries(version: Int): Seq[FileEntry] =
     manifestOf(version).deltas
 
   /** Merge keys of `version` in LOGICAL names (manifests store physical
@@ -281,7 +281,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   private def mergeKeysOf(version: Int): Seq[String] =
     manifestOf(version).mergeKeys.map(logColName(_, version))
 
-  private def dvEntries(version: Int): Seq[FileEntry] =
+  private[graft] def dvEntries(version: Int): Seq[FileEntry] =
     manifestOf(version).dvs
 
   /** Read the table at `version` (default: latest) straight from the
@@ -1019,6 +1019,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * recomputation, identity fill) append as new files. ZERO base files
     * rewritten; total cost O(changed rows) past the join — the 100 TB
     * MERGE shape (Delta's DV-enabled MERGE does exactly this).
+    * `version` is the one the rewrite's addressed scan read: the marks
+    * address its files, so the commit reads it and a rival commit since
+    * is checked like any lost race ([[commit]]).
     *
     * The delta frame is persisted until the commit ends, landed or
     * failed (it feeds the marks write, the image write, and the CDF
@@ -1031,9 +1034,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
   def writeDeltaPositional(delta: DataFrame,
       imageAlign: DataFrame => DataFrame,
       partitionBy: Option[String],
-      trackChanges: Boolean): Long = {
+      trackChanges: Boolean, version: Int): Long = {
     import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-    val v = currentVersion
+    val v = version
     require(deltaEntries(v).isEmpty,
       s"positional MERGE on $root requires compacted state (pending MoR " +
         "deltas — OPTIMIZE folds them first)")
@@ -1060,7 +1063,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         val cdc =
           if (!trackChanges) Seq.empty
           else {
-            val addressed = readAddressedDml(keepRid = false)
+            val addressed = readAddressedDml(keepRid = false, v)
             def pre(op: Int, tag: String): DataFrame =
               addressed.join(
                   cached.filter(opCol === op)
@@ -1330,41 +1333,102 @@ class SnapshotTable(spark: SparkSession, root: String) {
     })
   }
 
-  /** Group-based copy-on-write replace: commit `df` as the new content
-    * of exactly the `replaced` file set; every other current file
-    * carries by reference. This is the write half of a partition-scoped
-    * SQL UPDATE/DELETE — the planner proves rows outside `replaced`
-    * cannot match, so commit cost is O(touched partitions), not
-    * O(table). DV marks addressing replaced files were applied by the
-    * resolved read and drop; marks on carried files stay valid. */
-  def replaceFiles(replaced: Seq[FileEntry], df: DataFrame,
-      partitionBy: Option[String] = None): SnapshotTable = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"replaceFiles on $root requires compacted state (pending MoR deltas)")
-    val written = writeData(df, v + 1, partitionBy)
-    // the rewrite query does not reach the table as a predicate, so any
-    // file a rival adds may hold a row it would have matched
-    commit(Commit("OVERWRITE", v, read = replaced, predicate = Some(Seq.empty),
-      removed = replaced, files = written, mergeKeys = Some(Seq.empty),
-      keptDvs = remainingDvs(v, replaced.map(_.path).toSet, v + 1))): Unit
-    this
-  }
-
   /** Blind append commit: new files join the current file set; existing
     * files and pending deltas are untouched — O(source) like a streaming
     * sink. `partitionBy` may differ from earlier commits (Iceberg-style
     * partition evolution): each file entry remembers ITS partition
     * column, and [[planFiles]] prunes exactly where metadata allows.
     *
+    * `txn` = (appId, version) makes the append idempotent — the
+    * exactly-once handshake of streaming sinks ([[txnVersion]]): the
+    * marker is recorded atomically with the commit, and a call whose
+    * (appId, version) is already recorded commits nothing, as does one
+    * that a racing writer of the same appId beats to it ([[commit]]). A
+    * re-delivered append would duplicate rows, so here the skip is
+    * load-bearing (a keyed [[merge]] replay is only wasted work).
+    *
     * Concurrency: an append reads no file, so a lost race rebases it on
     * the winner metadata-only ([[commit]]); only a winner that changed
     * the column mapping or metadata (a `SET NOT NULL` the write was not
     * checked against) conflicts. The data is written exactly once. */
-  def append(df: DataFrame, partitionBy: Option[String] = None): SnapshotTable = {
+  def append(df: DataFrame, partitionBy: Option[String] = None,
+      txn: Option[(String, Long)] = None): SnapshotTable = {
     val v = currentVersion
-    commit(Commit("APPEND", v, files = writeData(df, v + 1, partitionBy))): Unit
+    if (!replayed(v, txn))
+      commit(Commit("APPEND", v, txn = txn,
+        files = writeData(df, v + 1, partitionBy))): Unit
     this
+  }
+
+  /** Overwrite commit: `df` becomes the new content of what `replace`
+    * supersedes ([[SnapshotTable.Replace]] has each scope's rules), and
+    * every other file carries by reference; earlier versions stay
+    * time-travelable. Under `Present` and `Values`, files laid out under
+    * a different (or no) layout may hold rows of both kinds: they are
+    * rewritten with the replaced partitions' rows filtered out (the
+    * residue rewrite that keeps mixed-layout tables correct). Every
+    * scope but `All` requires compacted state; DV marks on replaced
+    * files die with them, and marks on carried files ride along. The
+    * data is written once, and a lost race rebases ([[commit]]). */
+  def overwrite(df: DataFrame, partitionBy: Option[String] = None,
+      replace: SnapshotTable.Replace = SnapshotTable.Replace.All): SnapshotTable = {
+    import SnapshotTable.Replace._
+    val scope = (replace, partitionBy) match {
+      case (Present, None) => Some(All)
+      case (Present, Some(spec)) =>
+        // the data's partition values in the layout's on-disk form:
+        // writeColumn(spec) is the function the writer names directories
+        // with (for identity, the cast to string)
+        val present = df.select(PartitionTransform.writeColumn(
+            PartitionTransform.parse(spec))).distinct().collect()
+          .map(r => Option(r.getString(0))).toSet
+        if (present.isEmpty) None else Some(Values(present))
+      case (s, _) => Some(s)
+    }
+    scope.foreach { s =>
+      val v = s match { case Planned(_, at, _) => at; case _ => currentVersion }
+      require(s == All || deltaEntries(v).isEmpty,
+        s"OVERWRITE of part of $root requires compacted state (pending MoR deltas)")
+      val written = writeData(df, v + 1, partitionBy)
+      val (gone, residue) = s match {
+        case Planned(files, _, _) => (files, Seq.empty)
+        case Values(vals) => replacedPartitions(v, partitionBy, vals)
+        case _ => (fileEntries(v) ++ deltaEntries(v), Seq.empty) // All
+      }
+      commit(Commit("OVERWRITE", v, read = gone,
+        predicate = s match { case Planned(_, _, fs) => Some(fs); case _ => None },
+        removed = gone, files = written ++ residue, mergeKeys = Some(Seq.empty),
+        keptDvs = if (s == All) Some(Seq.empty)
+          else remainingDvs(v, gone.map(_.path).toSet, v + 1))): Unit
+    }
+    this
+  }
+
+  /** The files at `v` that a partition overwrite of `vals` (on-disk
+    * values of layout `partitionBy`; None is the null partition)
+    * removes, and the residue it writes: the rows of files laid out
+    * under another (or no) layout that belong to no replaced partition. */
+  private def replacedPartitions(v: Int, partitionBy: Option[String],
+      vals: Set[Option[String]]): (Seq[FileEntry], Seq[FileEntry]) = {
+    require(partitionBy.isDefined && vals.nonEmpty,
+      s"a partition OVERWRITE of $root names a layout and at least one partition")
+    val spec = PartitionTransform.parse(partitionBy.get)
+    // on disk identity layouts hold the null partition under the Hive
+    // default-partition sentinel, so that is the file-level match key
+    val diskVals = vals.map(_.getOrElse(HiveNullPart))
+    val (mine, foreign) = fileEntries(v)
+      .partition(e => e.partValue != null && underLayout(spec, e))
+    // isin over a null-bearing list is three-valued (non-matches go NULL
+    // and get filtered), so null membership is handled by predicate
+    // shape, never by isin(null)
+    val pv = PartitionTransform.writeColumn(spec)
+    val named = vals.flatten.toSeq
+    val nonNullKept = if (named.isEmpty) pv.isNotNull else pv.isNotNull && !pv.isin(named: _*)
+    val keepRow = if (vals.contains(None)) nonNullKept else nonNullKept || pv.isNull
+    val residue =
+      if (foreign.isEmpty) Seq.empty
+      else writeData(scan(foreign, dvEntries(v), v).filter(keepRow), v + 1, partitionBy)
+    (mine.filter(e => diskVals.contains(e.partValue)) ++ foreign, residue)
   }
 
   /** The one file planner: the files of `version` (default: latest)
@@ -1730,7 +1794,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * files take the widened schema, carried files null-fill the new
     * columns at scan time ([[readEntries]]).
     *
-    * `txn` (see [[appendIdempotent]]): a call whose (appId, version) is
+    * `txn` (as in [[append]]): a call whose (appId, version) is
     * already recorded is skipped — a keyed replay is content-idempotent,
     * but the skip saves the whole write. */
   def merge(source: DataFrame, keys: Seq[String], partitionBy: Option[String] = None,
@@ -2193,117 +2257,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * double-applied. Markers are carried forward by every commit. */
   def txnVersion(appId: String): Option[Long] =
     manifestOf(currentVersion).txns.get(appId)
-
-  /** Idempotent [[append]]: applies only if `version` is newer than the
-    * last recorded version for `appId`, recording (appId, version)
-    * ATOMICALLY with the commit (same manifest). Returns whether the
-    * append was applied — false means a replay was skipped. This is the
-    * operation where idempotence is load-bearing: a re-delivered APPEND
-    * would duplicate rows (a re-delivered keyed MERGE is content-
-    * idempotent, but still wasted work — see [[merge]]'s txn param). */
-  def appendIdempotent(df: DataFrame, appId: String, version: Long,
-      partitionBy: Option[String] = None): Boolean = {
-    val v = currentVersion
-    val txn = Some((appId, version))
-    // a racing writer of the SAME appId may record this (or a newer)
-    // version while this one writes: [[commit]] then ends without a commit
-    !replayed(v, txn) && commit(Commit("APPEND", v, txn = txn,
-      files = writeData(df, v + 1, partitionBy)))
-  }
-
-  /** Full-table overwrite (`INSERT OVERWRITE TABLE` without a partition
-    * spec / SaveMode.Overwrite): one commit whose file list is exactly
-    * the new data — every previous file, pending delta, and DV mark is
-    * superseded (reclaimable by VACUUM). History is preserved: earlier
-    * versions stay time-travelable, unlike a drop-and-recreate. */
-  def overwriteAll(df: DataFrame, partitionBy: Option[String] = None): SnapshotTable = {
-    val v = currentVersion
-    val all = fileEntries(v) ++ deltaEntries(v)
-    commit(Commit("OVERWRITE", v, read = all, removed = all,
-      files = writeData(df, v + 1, partitionBy), keptDvs = Some(Seq.empty),
-      mergeKeys = Some(Seq.empty))): Unit
-    this
-  }
-
-  /** Dynamic partition overwrite (`INSERT OVERWRITE` / Delta
-    * `replaceWhere` at partition granularity): partitions PRESENT in
-    * `df` are replaced wholesale — their old files are never read, cost
-    * is O(new data) — and every other partition carries over by
-    * reference. `partitionBy` is the table's partition SPEC — an
-    * identity column or a hidden-partitioning transform
-    * (`"months(ts)"`, `"bucket(8, k)"`, …); for transforms the
-    * replaced set is the TRANSFORMED partition values present in the
-    * data (one month's rows replace that month, never the table).
-    * Files laid out under a DIFFERENT (or no) layout may hold rows of
-    * both kinds, so they are rewritten with the overwritten
-    * partitions' rows filtered out (the residue rewrite that keeps
-    * mixed-layout tables correct). DV marks addressing replaced files
-    * die with them; marks on carried files ride along. */
-  def overwritePartitions(df: DataFrame, partitionBy: String): SnapshotTable = {
-    val spec = PartitionTransform.parse(partitionBy)
-    // the data's partition values in the layout's on-disk form — for a
-    // transform layout that is writeColumn(spec) (the exact function the
-    // writer names directories with), for identity the cast to string
-    val rawVals = df.select(PartitionTransform.writeColumn(spec).as("__graft_pv"))
-      .distinct().collect().map(_.getString(0))
-    // no rows → no partitions present → nothing replaces: dynamic
-    // overwrite of an empty source is a NO-OP (Spark's dynamic-mode
-    // contract), not an error and never a truncate
-    if (rawVals.isEmpty) return this
-    overwritePartitionValues(df, partitionBy,
-      rawVals.filter(_ != null).toSet, rawVals.contains(null))
-  }
-
-  /** Partition overwrite with an EXPLICIT replaced set (SQL
-    * `INSERT OVERWRITE … REPLACE WHERE pc IN (…)` semantics —
-    * Spark's OverwriteByExpression contract): every partition named in
-    * `vals` (plus the null partition when `hasNull`) is replaced by the
-    * matching rows of `df`, whether or not the data HAS rows for it — a
-    * filtered partition absent from the data is emptied, and an empty
-    * `df` empties every filtered partition. `vals` are the layout's
-    * on-disk partition-value strings. Cost O(new data); unfiltered
-    * partitions carry by reference. */
-  def overwritePartitionValues(df: DataFrame, partitionBy: String,
-      vals: Set[String], hasNull: Boolean): SnapshotTable = {
-    val v = currentVersion
-    require(deltaEntries(v).isEmpty,
-      s"overwritePartitions on $root requires compacted state (pending MoR deltas)")
-    require(vals.nonEmpty || hasNull,
-      s"overwritePartitionValues on $root with an empty replaced set")
-    val spec = PartitionTransform.parse(partitionBy)
-    val pvCol = PartitionTransform.writeColumn(spec)
-    // NULL replaces the null partition like any other value; on disk
-    // identity layouts hold it under the Hive default-partition
-    // sentinel, so that is the file-level match key
-    val diskVals = if (hasNull) vals + HiveNullPart else vals
-    val entries = fileEntries(v)
-    val foreign =
-      entries.filter(e => e.partValue == null || !underLayout(spec, e))
-    val replaced = entries.filter(e => e.partValue != null &&
-      underLayout(spec, e) && diskVals.contains(e.partValue))
-    val written = writeData(df, v + 1, Some(partitionBy))
-    // rows of mixed-layout files that do NOT belong to a replaced
-    // partition survive the rewrite. isin over a null-bearing list is
-    // three-valued (non-matches go NULL and get filtered), so null
-    // membership is handled by predicate shape, never by isin(null).
-    val keepRow = {
-      val c = pvCol
-      val nonNullKept =
-        if (vals.isEmpty) c.isNotNull
-        else c.isNotNull && !c.isin(vals.toSeq: _*)
-      if (hasNull) nonNullKept else nonNullKept || c.isNull
-    }
-    val residue =
-      if (foreign.isEmpty) Seq.empty
-      else writeData(
-        scan(foreign, dvEntries(v), v).filter(keepRow),
-        v + 1, Some(partitionBy))
-    val gone = replaced ++ foreign
-    commit(Commit("OVERWRITE", v, read = gone, removed = gone,
-      files = written ++ residue, mergeKeys = Some(Seq.empty),
-      keptDvs = remainingDvs(v, gone.map(_.path).toSet, v + 1))): Unit
-    this
-  }
 
   /** `OPTIMIZE` with its clauses (Delta ships every file-rewrite
     * maintenance verb as this one command): `partitions` is the
@@ -3610,6 +3563,35 @@ object SnapshotTable {
       // -1 = unassigned (pre-row-id manifests). Assigned once at the
       // file's writing commit and carried verbatim forever after.
       ridBase: Long = -1L)
+
+  /** What an [[SnapshotTable.overwrite]] supersedes. */
+  sealed trait Replace
+
+  object Replace {
+    /** Every file, pending delta and DV mark (`INSERT OVERWRITE TABLE`,
+      * SaveMode.Overwrite, `TRUNCATE`). */
+    case object All extends Replace
+
+    /** The partitions of the overwrite's layout that hold a row of the
+      * data — a hidden transform's TRANSFORMED values, so one month's
+      * rows replace that month (dynamic partition overwrite). No rows
+      * replace nothing (Spark's dynamic-mode contract); without a
+      * layout it is `All`. */
+    case object Present extends Replace
+
+    /** The partitions whose on-disk values are `vals` (None: the null
+      * partition), emptied when the data has no row for them
+      * (`REPLACE WHERE pc IN (…)`, Spark's OverwriteByExpression). */
+    final case class Values(vals: Set[Option[String]]) extends Replace
+
+    /** The `files` an SQL row-level scan planned at `version` from its
+      * pushed `filters`. The commit reads them at `version`, so a rival
+      * commit since is a lost race; as Spark pushes only conjuncts of
+      * the condition, a rival file the filters rule out holds no row the
+      * rewrite changes, and the commit rebases over it. */
+    final case class Planned(files: Seq[FileEntry], version: Int,
+        filters: Seq[org.apache.spark.sql.sources.Filter]) extends Replace
+  }
 
   /** One version's files split for a [[SnapshotTable.merge]]: the base
     * files and pending deltas its rewrite reads, those it carries by

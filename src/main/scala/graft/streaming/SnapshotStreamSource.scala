@@ -290,7 +290,7 @@ object SnapshotSourceOffset {
   *
   * The sink is the exactly-once append path as a first-class streaming
   * format (no foreachBatch boilerplate): every micro-batch commits via
-  * [[SnapshotTable.appendIdempotent]] tagged (txnAppId, batchId), so a
+  * [[SnapshotTable.append]] tagged `txn` = (txnAppId, batchId), so a
   * checkpoint-recovery re-delivery is one txn-marker lookup and a skip —
   * Delta's DeltaSink contract. The FIRST batch creates the table (with
   * the marker recorded atomically in the creating commit); a lost
@@ -448,19 +448,13 @@ class SnapshotStreamProvider extends StreamSourceProvider
     val table = tableOf(sqlContext, parameters)
     val partitionBy = parameters.get("partitionBy")
     val df = data.toDF()
-    mode match {
-      case SaveMode.Append =>
-        if (table.exists) table.append(df, partitionBy)
-        else table.create(df, partitionBy)
-      case SaveMode.Overwrite =>
-        if (table.exists) table.overwriteAll(df, partitionBy)
-        else table.create(df, partitionBy)
-      case SaveMode.ErrorIfExists =>
-        require(!table.exists,
-          s"table already exists at ${parameters("path")} (SaveMode.ErrorIfExists)")
-        table.create(df, partitionBy)
-      case SaveMode.Ignore =>
-        if (!table.exists) table.create(df, partitionBy)
+    if (!table.exists) table.create(df, partitionBy)
+    else mode match {
+      case SaveMode.Append => table.append(df, partitionBy)
+      case SaveMode.Overwrite => table.overwrite(df, partitionBy)
+      case SaveMode.ErrorIfExists => throw new IllegalArgumentException(
+        s"table already exists at ${parameters("path")} (SaveMode.ErrorIfExists)")
+      case SaveMode.Ignore => ()
     }
     new SnapshotRelation(sqlContext, table, table.currentVersion)
   }
@@ -545,8 +539,7 @@ class SnapshotSink(
             | _: java.nio.file.FileAlreadyExistsException => ()
       }
     }
-    table.appendIdempotent(batch, appId, batchId, partitionBy)
-    ()
+    table.append(batch, partitionBy, txn = Some((appId, batchId))): Unit
   }
 
   override def toString: String = s"SnapshotSink[$path]"

@@ -759,7 +759,7 @@ object Streams {
   // the exactly-once append path as a first-class streaming format, no
   // foreachBatch boilerplate. Batch 0 CREATES the table (txn marker
   // recorded atomically in the creating commit); later batches commit
-  // via appendIdempotent keyed (txnAppId, batchId). The entry drains the
+  // as appends keyed txn = (txnAppId, batchId). The entry drains the
   // same 2-file source TWICE with the second run's fresh checkpoint
   // re-delivering every batch — all replays must be detected and
   // skipped, so the table holds each source row exactly once.

@@ -357,7 +357,7 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
     ("optimize", "OPTIMIZE", t => { assert(t.optimize() >= 2); () },
       t => t.read().count() == 41),
     ("compact", "COMPACT", _.compact(1), t => t.read().count() == 41),
-    ("overwriteAll", "OVERWRITE", _.overwriteAll(src("B", 100.0)),
+    ("overwriteAll", "OVERWRITE", _.overwrite(src("B", 100.0)),
       t => vs(t, col("p") === "B").sorted == Seq(101.0, 103.0, 105.0, 107.0, 109.0)),
     ("addColumns", "ADD_COLUMNS", _.addColumns(Seq(StructField("c", IntegerType))),
       t => t.read().filter(col("k") === 100).select("c").head.isNullAt(0)))
@@ -469,6 +469,62 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
     assert(rival.read().filter(col("v").isNull).count() == 1)
   }
 
+  // ---- the SQL row-level rewrite: it commits from the version its scan
+  // planned, with the pushed filters as its predicate
+
+  /** A catalog table `k, p, s` with k = 1..10 in partitions p = k % 2,
+    * reached through the `racefs` filesystem; its name and a handle on
+    * its plain path (another process's view of it). */
+  private def sqlTable(cat: String): (String, SnapshotTable) = {
+    val root = Scratch.dir(s"occ_$cat")
+    spark.sparkContext.hadoopConfiguration.set("fs.racefs.impl", classOf[RaceFs].getName)
+    spark.sparkContext.hadoopConfiguration.set("fs.racefs.impl.disable.cache", "true")
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftSqlCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", "racefs:" + root)
+    spark.sql(s"CREATE NAMESPACE $cat.ns")
+    spark.sql(s"CREATE TABLE $cat.ns.t (k BIGINT, p INT, s STRING) PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.ns.t SELECT id, CAST(id % 2 AS INT), 'x' FROM range(1, 11)")
+    (s"$cat.ns.t", new SnapshotTable(spark, root + "/ns/t"))
+  }
+
+  private def ks(t: SnapshotTable, cond: org.apache.spark.sql.Column) =
+    t.read().filter(cond).select("k").collect().map(_.getLong(0)).toSeq.sorted
+
+  test("a SQL UPDATE conflicts with a rival that committed after its scan planned") {
+    val (name, rival) = sqlTable("occstale")
+    val extra = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra :+ AfterScanPlanning
+    AfterScanPlanning.arm(() => rival.delete(col("k") === 1): Unit)
+    try intercept[ConcurrentModificationException] {
+      spark.sql(s"UPDATE $name SET s = 'upd' WHERE p = 1")
+    } finally {
+      spark.experimental.extraOptimizations = extra
+      AfterScanPlanning.arm(() => ())
+    }
+    assert(ops(rival) == Seq("CREATE", "APPEND", "DELETE"), "the rival's commit only")
+    assert(ks(rival, lit(true)) == (2L to 10L), "no duplicate and no deleted row")
+    assert(ks(rival, col("s") === "upd").isEmpty)
+  }
+
+  Seq(("another partition", 2, true), ("the updated partition", 1, false))
+    .foreach { case (where, p, lands) =>
+      test(s"a SQL UPDATE racing a rival append to $where " +
+          (if (lands) "rebases" else "conflicts")) {
+        import spark.implicits._
+        val (name, rival) = sqlTable(s"occappend$p")
+        RaceFs.arm(() => rival.append(Seq((11L, p, "r")).toDF("k", "p", "s"),
+          Some("p")): Unit)
+        try {
+          def update() = spark.sql(s"UPDATE $name SET s = 'upd' WHERE p = 1")
+          if (lands) update() else intercept[ConcurrentModificationException](update())
+        } finally RaceFs.arm(() => ())
+        assert(ks(rival, col("s") === "r") == Seq(11L), "the rival's row lands")
+        assert(ks(rival, col("s") === "upd") == (if (lands) Seq(1L, 3L, 5L, 7L, 9L) else Nil))
+        assert(ops(rival) == Seq("CREATE", "APPEND", "APPEND") ++
+          (if (lands) Seq("OVERWRITE") else Nil))
+      }
+    }
+
   // ---- identity values: `k` takes values reserved off this process's
   // counter for the table, seeded from the stored maximum (39)
 
@@ -519,7 +575,7 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
   Seq[(String, (SnapshotTable, Long) => Unit)](
     ("append", (t, k) => t.append(row(k, "C"), Some("p")): Unit),
     ("appendIdempotent", (t, k) =>
-      t.appendIdempotent(row(k, "C"), "sink", k, Some("p")): Unit)
+      t.append(row(k, "C"), Some("p"), txn = Some(("sink", k))): Unit)
   ).foreach { case (name, write) =>
     test(s"$name gives up after the attempt bound when a rival wins every attempt") {
       failAfter(Span(120, Seconds)) {
@@ -559,4 +615,22 @@ object RaceFs {
   private var rival: () => Unit = () => ()
   def arm(r: () => Unit): Unit = synchronized { rival = r }
   def take(): () => Unit = synchronized { val r = rival; rival = () => (); r }
+}
+
+/** An optimizer rule that runs the armed rival once, on the first plan
+  * holding a row-level `ReplaceData`: extra optimizations run after scan
+  * push-down, so the rival commits between the rewrite's scan planning
+  * and its execution. */
+object AfterScanPlanning
+    extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+  private var rival: () => Unit = () => ()
+  def arm(r: () => Unit): Unit = synchronized { rival = r }
+
+  def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    if (plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.ReplaceData]))
+      synchronized { val r = rival; rival = () => (); r }()
+    plan
+  }
 }

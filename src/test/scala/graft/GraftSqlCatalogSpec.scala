@@ -453,7 +453,7 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
     db.transact(Seq("facts", "summary")) { d =>
       val t = d.table("facts").append(spark.range(10, 25).toDF("k")
         .withColumn("grp", lit("a")))
-      d.table("summary").overwriteAll(t.read().groupBy("grp").count()): Unit
+      d.table("summary").overwrite(t.read().groupBy("grp").count()): Unit
     }                                                               // db v1
     // published head: both members consistent at db v1
     assert(sql("SELECT count(*) FROM gtest.txndb.facts").head.getLong(0) == 25)

@@ -89,12 +89,12 @@ class IncrementalLogSpec extends AnyFunSuite {
   test("txn markers and timestamps survive delta reconstruction") {
     val root = Scratch.dir("inclog_txn")
     val t = new SnapshotTable(spark, root).create(slice(0, 100))
-    assert(t.appendIdempotent(slice(100, 150), "app", 1))
+    t.append(slice(100, 150), txn = Some(("app", 1L)))
     t.append(slice(150, 200))
     val cold = reopenCold(root)
     assert(cold.txnVersion("app") === Some(1L),
       "carried txn markers must reconstruct through delta records")
-    assert(!cold.appendIdempotent(slice(100, 150), "app", 1),
+    assert(cold.append(slice(100, 150), txn = Some(("app", 1L))).currentVersion == 2,
       "a replayed batch must still be detected after reconstruction")
     (0 to 2).foreach(v =>
       assert(cold.commitTimestamp(v) === t.commitTimestamp(v)))

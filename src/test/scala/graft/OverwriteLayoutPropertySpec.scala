@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.util.Random
 
-/** Property sweep of [[SnapshotTable.overwritePartitionValues]] — the
+/** Property sweep of [[SnapshotTable.overwrite]]'s `Values` scope — the
   * REPLACE WHERE primitive — across every layout family (identity /
   * hidden time transform / hidden bucket transform), null-partition
   * membership, and empty sources, against a row-level model. The
@@ -82,8 +82,9 @@ class OverwriteLayoutPropertySpec extends AnyFunSuite {
       val diskReplaced = vals ++ (if (hasNull) Set(HiveNullPart) else Set.empty)
       val carriedBefore = t.files
         .filterNot(e => diskReplaced.contains(e.partValue)).map(_.path).toSet
-      t.overwritePartitionValues(srcRows.toDF("k", "d", "p", "v"), spec,
-        vals, hasNull)
+      t.overwrite(srcRows.toDF("k", "d", "p", "v"), Some(spec),
+        SnapshotTable.Replace.Values(vals.map(Option(_)) ++
+          (if (hasNull) Set(None) else Set.empty)))
       // (1) row-level model: untouched partitions keep base rows,
       // replaced partitions hold exactly the source's rows
       val expected = (baseRows.filterNot(r => replaced(basePv(r._1))) ++

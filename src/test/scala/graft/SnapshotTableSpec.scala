@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.SnapshotTable
+import graft.sources.SnapshotTable.Replace
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -178,18 +179,22 @@ class SnapshotTableSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, tmp("txn"))
       .create(Seq((1L, "a")).toDF("k", "s"))
     assert(t.txnVersion("app") === None)
-    assert(t.appendIdempotent(Seq((2L, "b")).toDF("k", "s"), "app", 1))
-    assert(!t.appendIdempotent(Seq((2L, "b")).toDF("k", "s"), "app", 1),
-      "same (appId, version) must be a detected no-op")
+    // whether an append of `k` tagged (app, id) committed
+    def applied(k: Long, app: String, id: Long) = {
+      val v = t.currentVersion
+      t.append(Seq((k, "b")).toDF("k", "s"), txn = Some((app, id))).currentVersion > v
+    }
+    assert(applied(2L, "app", 1))
+    assert(!applied(2L, "app", 1), "same (appId, version) must be a detected no-op")
     assert(t.read().count() === 2L, "the replay must not duplicate rows")
     assert(t.txnVersion("app") === Some(1L))
     // an unrelated commit between batches must not lose the marker
     t.merge(Seq((1L, "a2")).toDF("k", "s"), Seq("k"))
     assert(t.txnVersion("app") === Some(1L))
-    assert(!t.appendIdempotent(Seq((2L, "b")).toDF("k", "s"), "app", 1))
+    assert(!applied(2L, "app", 1))
     // a NEWER version applies; other appIds are independent
-    assert(t.appendIdempotent(Seq((3L, "c")).toDF("k", "s"), "app", 2))
-    assert(t.appendIdempotent(Seq((4L, "d")).toDF("k", "s"), "other", 1))
+    assert(applied(3L, "app", 2))
+    assert(applied(4L, "other", 1))
     assert(t.read().count() === 4L)
     // merge-level txn: replayed keyed merge is skipped (version pinned)
     val vBefore = t.currentVersion
@@ -206,8 +211,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, tmp("ovw"))
       .create(df, partitionBy = Some("p"))
     val bFiles = t.files.filter(_.partValue == "B").map(_.path).toSet
-    t.overwritePartitions(
-      Seq((100L, "A", 100.0), (101L, "A", 101.0)).toDF("k", "p", "v"), "p")
+    t.overwrite(
+      Seq((100L, "A", 100.0), (101L, "A", 101.0)).toDF("k", "p", "v"), Some("p"), Replace.Present)
     // A replaced wholesale; B carried by reference (same physical files)
     val got = t.read().orderBy("k").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(got.count(_._2 == "A") === 2)
@@ -216,7 +221,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // mixed layout: a foreign-layout append may hold BOTH kinds of rows —
     // overwrite must rewrite it with the overwritten partition filtered out
     t.append(Seq((200L, "A", 200.0), (201L, "B", 201.0)).toDF("k", "p", "v"))
-    t.overwritePartitions(Seq((300L, "A", 300.0)).toDF("k", "p", "v"), "p")
+    t.overwrite(Seq((300L, "A", 300.0)).toDF("k", "p", "v"), Some("p"), Replace.Present)
     val ks = t.read().collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(ks.filter(_._2 == "A") === Set((300L, "A")),
       "foreign-file A rows must not survive the overwrite")
@@ -240,9 +245,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(otherMonths.nonEmpty)
     // one February row replaces exactly the 2024-02 partition — never a
     // full-table truncate (the silent-data-loss regression this pins)
-    t.overwritePartitions(
+    t.overwrite(
       Seq((20L, java.sql.Timestamp.valueOf("2024-02-15 00:00:00"), 20.0))
-        .toDF("k", "ts", "v"), "months(ts)")
+        .toDF("k", "ts", "v"), Some("months(ts)"), Replace.Present)
     assert(t.read().orderBy("k").collect().map(_.getLong(0)).toSeq
       == Seq(1L, 4L, 20L))
     // untouched months carried by reference: same physical files
@@ -255,9 +260,9 @@ class SnapshotTableSpec extends AnyFunSuite {
       (30L, java.sql.Timestamp.valueOf("2024-02-02 00:00:00"), 30.0),
       (31L, java.sql.Timestamp.valueOf("2024-03-12 00:00:00"), 31.0))
       .toDF("k", "ts", "v"))
-    t.overwritePartitions(
+    t.overwrite(
       Seq((40L, java.sql.Timestamp.valueOf("2024-02-28 00:00:00"), 40.0))
-        .toDF("k", "ts", "v"), "months(ts)")
+        .toDF("k", "ts", "v"), Some("months(ts)"), Replace.Present)
     val ks = t.read().collect().map(_.getLong(0)).toSet
     assert(ks == Set(1L, 4L, 31L, 40L),
       s"foreign-file Feb rows must not survive; others must: $ks")
@@ -287,24 +292,22 @@ class SnapshotTableSpec extends AnyFunSuite {
     val cFiles = t.files.filter(_.partValue == "C").map(_.path).toSet
     // REPLACE WHERE p IN ('A','B') with A-only data: B is EMPTIED (the
     // filter's set, not the data's), C carries by reference
-    t.overwritePartitionValues(
-      Seq((100L, "A", 100.0)).toDF("k", "p", "v"), "p",
-      vals = Set("A", "B"), hasNull = false)
+    t.overwrite(Seq((100L, "A", 100.0)).toDF("k", "p", "v"), Some("p"),
+      Replace.Values(Set(Some("A"), Some("B"))))
     val got = t.read().collect().map(r => (r.getLong(0), r.getString(1)))
     assert(got.filter(_._2 == "A").map(_._1).toSet == Set(100L))
     assert(!got.exists(_._2 == "B"), s"B must be emptied: ${got.toSeq}")
     assert(got.count(_._2 == "C") == 10)
     assert(t.files.filter(_.partValue == "C").map(_.path).toSet == cFiles)
     // an empty source empties every filtered partition instead of aborting
-    t.overwritePartitionValues(
-      Seq.empty[(Long, String, Double)].toDF("k", "p", "v"), "p",
-      vals = Set("C"), hasNull = false)
+    t.overwrite(Seq.empty[(Long, String, Double)].toDF("k", "p", "v"), Some("p"),
+      Replace.Values(Set(Some("C"))))
     assert(t.read().collect().map(_.getLong(0)).toSet == Set(100L))
     // DYNAMIC overwrite of an empty source is a no-op (no partitions
     // present → nothing replaces), never an error or a truncate
     val vBefore = t.currentVersion
-    t.overwritePartitions(
-      Seq.empty[(Long, String, Double)].toDF("k", "p", "v"), "p")
+    t.overwrite(
+      Seq.empty[(Long, String, Double)].toDF("k", "p", "v"), Some("p"), Replace.Present)
     assert(t.currentVersion == vBefore)
     assert(t.read().collect().map(_.getLong(0)).toSet == Set(100L))
   }
@@ -320,16 +323,16 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.read().filter(col("p").isNull).count() === 10L)
     // source contains NULL rows → the null partition is REPLACED, not
     // duplicated; named partitions in the source replace as usual
-    t.overwritePartitions(
+    t.overwrite(
       Seq((100L, null.asInstanceOf[String], 100.0), (101L, "A", 101.0))
-        .toDF("k", "p", "v"), "p")
+        .toDF("k", "p", "v"), Some("p"), Replace.Present)
     val got = t.read().collect().map(r => (r.getLong(0), Option(r.getString(1))))
     assert(got.count(_._2.isEmpty) === 1, s"null partition must be replaced: ${got.toSeq}")
     assert(got.filter(_._2.isEmpty).map(_._1).toSet === Set(100L))
     assert(got.count(_._2.contains("A")) === 1)
     assert(got.count(_._2.contains("B")) === 10, "B untouched")
     // source WITHOUT nulls → the null partition survives untouched
-    t.overwritePartitions(Seq((200L, "B", 200.0)).toDF("k", "p", "v"), "p")
+    t.overwrite(Seq((200L, "B", 200.0)).toDF("k", "p", "v"), Some("p"), Replace.Present)
     val after = t.read().collect().map(r => (r.getLong(0), Option(r.getString(1))))
     assert(after.filter(_._2.isEmpty).map(_._1).toSet === Set(100L))
     assert(after.count(_._2.contains("B")) === 1)
@@ -337,12 +340,58 @@ class SnapshotTableSpec extends AnyFunSuite {
     // a null-replacing overwrite rewrites it keeping only the named rows
     t.append(Seq((300L, null.asInstanceOf[String], 300.0), (301L, "B", 301.0))
       .toDF("k", "p", "v"))
-    t.overwritePartitions(
-      Seq((400L, null.asInstanceOf[String], 400.0)).toDF("k", "p", "v"), "p")
+    t.overwrite(
+      Seq((400L, null.asInstanceOf[String], 400.0)).toDF("k", "p", "v"), Some("p"), Replace.Present)
     val fin = t.read().collect().map(r => (r.getLong(0), Option(r.getString(1))))
     assert(fin.filter(_._2.isEmpty).map(_._1).toSet === Set(400L),
       "foreign-file null rows must not survive a null-replacing overwrite")
     assert(fin.filter(_._2.contains("B")).map(_._1).toSet === Set(200L, 301L))
+  }
+
+  test("overwrite scopes keep their rules on DV marks, pending deltas and absent partitions") {
+    import spark.implicits._
+    def rows(p: String, ks: Seq[Int]) = ks.map(k => (k.toLong, p, k * 1.0)).toDF("k", "p", "v")
+    def keys(t: SnapshotTable) = t.read().select("k").collect().map(_.getLong(0)).toSeq.sorted
+    // partitions A (k 0-9), B (10-19) and C (20-29), DV marks on k = 5
+    // and 15; with `deltas`, a pending merge-on-read delta re-prices k = 25
+    def table(name: String, deltas: Boolean) = {
+      val t = new SnapshotTable(spark, tmp(name)).create(rows("A", 0 until 10)
+        .union(rows("B", 10 until 20)).union(rows("C", 20 until 30)), Some("p"))
+      t.delete(col("k") === 5 || col("k") === 15, positional = true)
+      if (deltas) t.merge(rows("C", Seq(25)).withColumn("v", lit(-1.0)), Seq("k"),
+        Some("p"), deferred = true)
+      t
+    }
+    def planned(t: SnapshotTable) = Replace.Planned(t.planFiles(col("p") === "A"),
+      t.currentVersion, Seq(org.apache.spark.sql.sources.EqualTo("p", "A")))
+    val a = rows("A", Seq(100, 101))
+    val (b, c) = ((10 until 20).filterNot(_ == 15).map(_.toLong), (20 until 30).map(_.toLong))
+    // "all" supersedes the pending delta and every mark
+    val all = table("scope_all", deltas = true)
+    all.overwrite(a, Some("p"))
+    assert(keys(all) == Seq(100L, 101L) && all.deltaFiles.isEmpty && all.dvFiles.isEmpty)
+    val scopes = Seq[(String, SnapshotTable => Replace, Seq[Long])](
+      ("present", _ => Replace.Present, Seq(100L, 101L) ++ b ++ c),
+      // C is named and the data has no row for it: emptied
+      ("values", _ => Replace.Values(Set(Some("A"), Some("C"))), Seq(100L, 101L) ++ b),
+      ("planned", planned, Seq(100L, 101L) ++ b ++ c))
+    scopes.foreach { case (name, scope, left) =>
+      val mor = table(s"scope_${name}_mor", deltas = true)
+      intercept[IllegalArgumentException](mor.overwrite(a, Some("p"), scope(mor)))
+      assert(mor.commitOperation(mor.currentVersion) == "MERGE_MOR", s"$name committed")
+      val t = table(s"scope_$name", deltas = false)
+      t.overwrite(a, Some("p"), scope(t))
+      assert(keys(t) == left.sorted, name)
+      assert(t.dvFiles.map(_.rows).sum == 1, s"$name: B's mark rides along, A's dies")
+    }
+    // "present" with no rows is a no-op, and without a layout it
+    // replaces everything, deltas and marks included
+    val t = table("scope_present_empty", deltas = true)
+    val v = t.currentVersion
+    t.overwrite(a.limit(0), Some("p"), Replace.Present)
+    assert(t.currentVersion == v)
+    t.overwrite(a, None, Replace.Present)
+    assert(keys(t) == Seq(100L, 101L) && t.deltaFiles.isEmpty && t.dvFiles.isEmpty)
   }
 
   test("symlink manifest exports exactly the committed snapshot") {
