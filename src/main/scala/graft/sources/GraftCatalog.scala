@@ -2,6 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ArrayNode
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 
@@ -47,9 +48,9 @@ object GraftCatalog {
         arr.add(n)
       }
     }
-    val p = java.nio.file.Paths.get(manifestPath)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, root.toString)
+    val p = new Path(manifestPath)
+    LogStore.replace(p.getFileSystem(spark.sessionState.newHadoopConf()),
+      Seq(p -> root.toString))
   }
 
   /** Re-create the database and re-register every manifest table in a
@@ -57,8 +58,9 @@ object GraftCatalog {
     * would against a metastore that survived the restart. Idempotent:
     * existing same-named tables are replaced. Returns the table count. */
   def restore(spark: SparkSession, manifestPath: String): Int = {
-    val node = mapper.readTree(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(manifestPath)))
+    val p = new Path(manifestPath)
+    val node = mapper.readTree(LogStore.read(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p))
     val db = node.get("db").asText()
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     val tables = node.get("tables")

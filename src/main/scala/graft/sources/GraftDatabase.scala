@@ -25,10 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Concurrency: publish is optimistic with a per-table monotonicity
   * invariant — a snapshot may only move a table's pin FORWARD. A lost
-  * db-version file-create race re-reads the winner and retries; if the
-  * base snapshot (raced or not) already pins a NEWER version of one of
-  * this txn's tables, a concurrent overlapping transaction won and
-  * publish fails loudly rather than silently rolling its data back.
+  * db-version put ([[LogStore.putIfAbsent]]) re-reads the winner and
+  * retries; if the base snapshot (raced or not) already pins a NEWER
+  * version of one of this txn's tables, a concurrent overlapping
+  * transaction won and publish fails loudly rather than silently
+  * rolling its data back.
   * Disjoint winners' pins are carried forward through the re-read.
   *
   * Scale: a snapshot file is O(member tables), never O(data); reads add
@@ -62,7 +63,7 @@ final class GraftDatabase(spark: SparkSession, val root: String) {
   def tableVersions(dbVersion: Int = -1): Map[String, Int] = {
     val v = if (dbVersion < 0) currentVersion else dbVersion
     require(v >= 0, s"database $root has no published snapshot")
-    val node = mapper.readTree(readString(snapPath(v)))
+    val node = mapper.readTree(LogStore.read(fs, snapPath(v)))
     val t = node.get("tables")
     val it = t.fieldNames()
     val b = Map.newBuilder[String, Int]
@@ -83,8 +84,8 @@ final class GraftDatabase(spark: SparkSession, val root: String) {
   }
 
   /** Publish the named tables' current versions (other members keep
-    * their existing pins). Write-once create is the atomicity point:
-    * the snapshot file either exists completely or not at all. */
+    * their existing pins). The exclusive put of the snapshot file is
+    * the atomicity point: it exists completely or not at all. */
   def publish(names: Seq[String]): Int =
     publishPins(names.map(n => n -> table(n).currentVersion))
 
@@ -137,22 +138,14 @@ final class GraftDatabase(spark: SparkSession, val root: String) {
         (base ++ pins).toSeq.sortBy(_._1).foreach { case (k, v) => t.put(k, v) }
         n.toString
       }
-      fs.mkdirs(dbLog)
-      try {
-        val out = fs.create(snapPath(next), /* overwrite = */ false)
-        try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        return next
-      } catch {
-        case _: java.io.IOException =>
-          // lost the db-version file-create race — retry against the new
-          // base; the pin-monotonicity check above decides on the next
-          // pass whether the winner was disjoint (carry its pins
-          // forward) or overlapping (fail loudly)
-          attempts += 1
-          if (attempts > 20) throw new IllegalStateException(
-            s"db publish at $root: still racing after $attempts attempts")
-      }
+      if (LogStore.putIfAbsent(fs, snapPath(next), json)) return next
+      // lost the db-version race — retry against the new base; the
+      // pin-monotonicity check above decides on the next pass whether
+      // the winner was disjoint (carry its pins forward) or overlapping
+      // (fail loudly)
+      attempts += 1
+      if (attempts > 20) throw new IllegalStateException(
+        s"db publish at $root: still racing after $attempts attempts")
     }
     -1 // unreachable
   }
@@ -203,17 +196,6 @@ final class GraftDatabase(spark: SparkSession, val root: String) {
     }.toMap
     (0 until oldest).foreach(v => fs.delete(snapPath(v), false))
     counts
-  }
-
-  private def readString(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
   }
 }
 

@@ -106,7 +106,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       val loaded =
         if (!fs.exists(propsPath)) Seq.empty[String]
         else {
-          val node = new ObjectMapper().readTree(readFileString(fs, propsPath))
+          val node = new ObjectMapper().readTree(LogStore.read(fs, propsPath))
           val arr = node.get("bloomFilterCols")
           if (arr == null) Seq.empty[String]
           else (0 until arr.size).map(arr.get(_).asText())
@@ -156,16 +156,12 @@ class SnapshotTable(spark: SparkSession, root: String) {
 
   private def sidecarNode(): com.fasterxml.jackson.databind.node.ObjectNode =
     if (fs.exists(propsPath))
-      new ObjectMapper().readTree(readFileString(fs, propsPath))
+      new ObjectMapper().readTree(LogStore.read(fs, propsPath))
         .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     else new ObjectMapper().createObjectNode()
 
-  private def writeSidecar(json: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    fs.mkdirs(logDir)
-    val out = fs.create(propsPath, /* overwrite = */ true)
-    try out.write(json.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeSidecar(json: com.fasterxml.jackson.databind.JsonNode): Unit =
+    LogStore.replace(fs, Seq(propsPath -> json.toString))
 
   /** Merge one durable string property into the side-car (the same
     * file [[withBloomFilters]] uses; existing keys are preserved).
@@ -192,7 +188,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * surface). */
   def propertiesMap: Map[String, String] = {
     if (!fs.exists(propsPath)) return Map.empty
-    val n = new ObjectMapper().readTree(readFileString(fs, propsPath))
+    val n = new ObjectMapper().readTree(LogStore.read(fs, propsPath))
     val it = n.fieldNames()
     val b = Map.newBuilder[String, String]
     while (it.hasNext) {
@@ -205,7 +201,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
   /** A durable string property, if set. */
   def property(key: String): Option[String] = {
     if (!fs.exists(propsPath)) return None
-    val n = new ObjectMapper().readTree(readFileString(fs, propsPath)).get(key)
+    val n = new ObjectMapper().readTree(LogStore.read(fs, propsPath)).get(key)
     if (n == null || !n.isTextual) None else Some(n.asText())
   }
 
@@ -232,13 +228,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
   def versionExists(v: Int): Boolean = fs.exists(manifestPath(v))
 
   /** Parse (or fetch from the process-wide cache) one committed
-    * manifest. Manifests are write-once, so caching is sound. The
-    * cache-miss read takes [[SnapshotTable.commitLock]]: the local
-    * filesystem exposes a created-but-not-yet-written manifest to
-    * listers, so an unlocked read racing a committer could parse a
-    * half-written file (all committers in this engine live in the one
-    * driver JVM — the same single-commit-point assumption Delta's
-    * LogStore makes per cluster).
+    * manifest. Manifests are write-once, so caching is sound, and
+    * [[LogStore.putIfAbsent]] publishes each one whole, so no reader
+    * sees a half-written version. The cache-miss read still takes
+    * [[SnapshotTable.commitLock]], so the cache is filled only under
+    * that lock, in the order below.
     *
     * Lock ORDER matters: always commitLock first, cache second. A
     * `computeIfAbsent` whose mapping function takes commitLock would
@@ -256,7 +250,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         // DELTA records reconstruct against the predecessor — recursion
         // bottoms out at the nearest FULL checkpoint (≤ CheckpointInterval
         // steps; commitLock is reentrant) and every step lands in the cache
-        val m = parseRecord(readFileString(fs, new Path(key))) match {
+        val m = parseRecord(LogStore.read(fs, new Path(key))) match {
           case FullRecord(full) => full
           case d: DeltaRecord => applyDelta(manifestOf(version - 1), d)
         }
@@ -2761,12 +2755,16 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * set [[vacuum]] deletes and [[vacuumDryRun]] previews. Pure
     * metadata + one listing, zero data files opened. */
   private def reclaimableBelow(cutoff: Int): Seq[String] = {
-    val keep: Set[String] = (cutoff to currentVersion).flatMap { v =>
-      val m = manifestOf(v)
-      (m.files ++ m.deltas ++ m.changes ++ m.dvs).map(_.path)
-    }.toSet
+    val keep = referencedBy(cutoff to currentVersion)
     listDataFiles(fs, dataRoot).map(_._1).filterNot(keep)
   }
+
+  /** Every data, delta, change and DV file versions `vs` reference. */
+  private def referencedBy(vs: Seq[Int]): Set[String] =
+    vs.flatMap { v =>
+      val m = manifestOf(v)
+      m.files ++ m.deltas ++ m.changes ++ m.dvs
+    }.map(_.path).toSet
 
   /** What [[vacuum]] WOULD delete, without deleting anything (Delta's
     * `VACUUM … DRY RUN`): the data files only versions below the
@@ -2781,7 +2779,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
   /** Iceberg `remove_orphan_files` analog: delete data files under this
     * root that NO version references — the staged output of losing OCC
     * attempts (uniquely-named attempt dirs whose writer lost the
-    * write-once manifest race) and crash leftovers. Only files modified
+    * write-once manifest race) and crash leftovers, and the log temps
+    * ([[LogStore.TempMark]]) a killed committer left. Only files modified
     * at or before `olderThan` (epoch millis; default now − 3 days, the
     * same guard Iceberg defaults) are touched: a younger unreferenced
     * file may belong to a commit still in flight between its data write
@@ -2794,8 +2793,11 @@ class SnapshotTable(spark: SparkSession, root: String) {
       else System.currentTimeMillis() - 3L * 24 * 3600 * 1000
     // keep-set over EVERY version: anything referenced anywhere in the
     // retained log is not an orphan (mtime checked only on candidates)
-    val orphans = reclaimableBelow(0).filter(p =>
-      fs.getFileStatus(new Path(p)).getModificationTime <= horizon).sorted
+    val temps = fs.listStatus(logDir).filter(st =>
+      st.getPath.getName.contains(LogStore.TempMark) &&
+        st.getModificationTime <= horizon).map(_.getPath.toString)
+    val orphans = (reclaimableBelow(0).filter(p =>
+      fs.getFileStatus(new Path(p)).getModificationTime <= horizon) ++ temps).sorted
     orphans.foreach(p => fs.delete(new Path(p), false))
     orphans
   }
@@ -2805,44 +2807,14 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * encoding changes — so overwriting the write-once file is sound. */
   private def materializeCheckpoint(v: Int): Unit = commitLock.synchronized {
     val p = manifestPath(v)
-    parseRecord(readFileString(fs, p)) match {
+    parseRecord(LogStore.read(fs, p)) match {
       case _: DeltaRecord =>
         val full = manifestOf(v) // reconstructs (and caches) the state
-        replaceLogFileAtomic(p, manifestJson(full))
+        // never torn: the checkpoint every retained DELTA record chains to
+        LogStore.replace(fs, Seq(p -> manifestJson(full)))
       case _: FullRecord => ()
     }
   }
-
-  /** Replace log file `p` with `json` without ever exposing a torn
-    * record: write a complete temp sibling first, then rename it over
-    * the target. `fs.create(overwrite=true)` truncates BEFORE writing —
-    * a crash mid-write would corrupt the checkpoint every retained
-    * DELTA record chains to. Rename is atomic where the store supports
-    * it; on stores whose rename refuses an existing destination the
-    * delete+rename fallback still never exposes a partial file (worst
-    * case the target is briefly absent with the complete temp alongside
-    * for recovery). */
-  private def replaceLogFileAtomic(p: Path, json: String): Unit = {
-    val tmp = writeLogTemp(p, json)
-    publishLogTemp(tmp, p)
-  }
-
-  private def writeLogTemp(target: Path, json: String): Path = {
-    val tmp = new Path(target.getParent,
-      s".${target.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, /* overwrite = */ false)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    tmp
-  }
-
-  private def publishLogTemp(tmp: Path, target: Path): Unit =
-    if (!fs.rename(tmp, target)) {
-      fs.delete(target, false)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(
-          s"atomic log rewrite failed: $tmp -> $target")
-    }
 
   /** Roll the log back to version `v`, discarding every later commit:
     * log records above `v` are deleted newest-first, then data files
@@ -2858,14 +2830,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
     require(vs.contains(v), s"rollbackTo($v): version not in log (${vs.min}..${vs.max})")
     val dropped = vs.filter(_ > v)
     if (dropped.isEmpty) return 0
-    val keep: Set[String] = vs.filter(_ <= v).flatMap { k =>
-      val m = manifestOf(k)
-      (m.files ++ m.deltas ++ m.changes ++ m.dvs).map(_.path)
-    }.toSet
-    val reclaim = dropped.flatMap { k =>
-      val m = manifestOf(k)
-      (m.files ++ m.deltas ++ m.changes ++ m.dvs).map(_.path)
-    }.toSet -- keep
+    val reclaim = referencedBy(dropped) -- referencedBy(vs.filter(_ <= v))
     // logs first, newest-first: the table shrinks to a consistent prefix
     // at every step; data files orphaned by a crash stay unreferenced
     dropped.sorted.reverse.foreach { k =>
@@ -2923,7 +2888,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
       es.map(e => e.copy(path = swap(e.path)))
     val rewritten: Seq[(Path, String)] = versions.map { v =>
       val p = manifestPath(v)
-      val json = parseRecord(readFileString(fs, p)) match {
+      val json = parseRecord(LogStore.read(fs, p)) match {
         case FullRecord(m) => manifestJson(m.copy(
           files = swapEntries(m.files), deltas = swapEntries(m.deltas),
           changes = swapEntries(m.changes), dvs = swapEntries(m.dvs)))
@@ -2935,12 +2900,9 @@ class SnapshotTable(spark: SparkSession, root: String) {
       }
       (p, json)
     }
-    // Two-phase publish: every rewritten record lands complete in a temp
-    // file before any target is touched, then temps rename over their
-    // targets in version order — a crash leaves each log file either old
-    // or new, never torn.
-    val staged = rewritten.map { case (p, json) => (writeLogTemp(p, json), p) }
-    staged.foreach { case (tmp, p) => publishLogTemp(tmp, p) }
+    // every record lands in a temp before any target is touched: a crash
+    // leaves each log file either old or new, never torn
+    LogStore.replace(fs, rewritten)
     invalidateCachesUnder(oldAbs)
     invalidateCachesUnder(newAbs)
   }
@@ -2983,13 +2945,8 @@ class SnapshotTable(spark: SparkSession, root: String) {
     require(deltaEntries(v).isEmpty && dvEntries(v).isEmpty,
       s"symlink manifest of $root requires compacted state " +
         "(pending MoR deltas / DV marks are scan-time state, not files)")
-    val dir = new Path(root, "_symlink_format_manifest")
-    fs.mkdirs(dir)
-    val p = new Path(dir, "manifest")
-    val out = fs.create(p, /* overwrite = */ true)
-    try out.write(fileEntries(v).map(_.path).sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val p = new Path(root, "_symlink_format_manifest/manifest")
+    LogStore.replace(fs, Seq(p -> fileEntries(v).map(_.path).sorted.mkString("\n")))
     p.toString
   }
 
@@ -3239,8 +3196,6 @@ class SnapshotTable(spark: SparkSession, root: String) {
     * AS-OF-timestamp order == version order. */
   private def writeManifest(m: Manifest): Boolean = commitLock.synchronized {
     val p = manifestPath(m.version)
-    if (fs.exists(p)) return false
-    fs.mkdirs(logDir)
     val prev = if (m.version == 0) null else manifestOf(m.version - 1)
     // txn markers accumulate: every commit carries the predecessor's map
     // forward (newer writer versions win), so a marker set once is
@@ -3305,11 +3260,7 @@ class SnapshotTable(spark: SparkSession, root: String) {
         manifestJson(stamped)
       else deltaJson(stamped, prev, newTxns = m.txns)
         .getOrElse(manifestJson(stamped))
-    val out = try fs.create(p, /* overwrite = */ false) catch {
-      case _: java.io.IOException if fs.exists(p) => return false // lost to another process
-    }
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    if (!LogStore.putIfAbsent(fs, p, json)) return false // lost to another writer
     if (stamped.renames.nonEmpty || stamped.dropped.nonEmpty ||
         stamped.fieldMeta.nonEmpty || stamped.widened.nonEmpty)
       SnapshotTable.mappedRoots.add(root)
@@ -4207,17 +4158,6 @@ object SnapshotTable {
       prev.widened,
       math.max(d.ridHwm, prev.rowIdHwm),
       prev.identHwm ++ d.identHwm)
-  }
-
-  private def readFileString(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString(java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
   }
 
   private def partValueOf(path: String): String = partValueOf(path, PartCol)

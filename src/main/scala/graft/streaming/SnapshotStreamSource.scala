@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.SnapshotTable
+import graft.sources.{LogStore, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, GraftStreamShim, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
@@ -553,8 +553,8 @@ object SnapshotStreamProvider {
     * silently drop every commit made in between. Delta pins the
     * resolved version in its source metadata; same discipline here —
     * the pin persists under the engine-provided per-source
-    * `metadataPath` inside the checkpoint, written create-no-overwrite
-    * so a racing writer resolves to one winner. */
+    * `metadataPath` inside the checkpoint, published put-if-absent so a
+    * racing writer resolves to one winner. */
   private[streaming] def pinLatest(
       sqlContext: SQLContext, metadataPath: String,
       table: SnapshotTable): Long = {
@@ -562,25 +562,9 @@ object SnapshotStreamProvider {
     val fs = dir.getFileSystem(
       sqlContext.sparkSession.sessionState.newHadoopConf())
     val pin = new org.apache.hadoop.fs.Path(dir, "graft-starting-version")
-    def readPin(): Long = {
-      val in = fs.open(pin)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-    if (fs.exists(pin)) readPin()
-    else {
-      val resolved = table.currentVersion + 1L
-      try {
-        val out = fs.create(pin, false)
-        try out.write(resolved.toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        resolved
-      } catch {
-        // lost the create race (or the file appeared between the exists
-        // check and create) — the winner's pin is the truth
-        case _: java.io.IOException => readPin()
-      }
-    }
+    if (!fs.exists(pin))
+      LogStore.putIfAbsent(fs, pin, (table.currentVersion + 1L).toString)
+    // the pin that won (this one, an earlier run's or a racing writer's)
+    LogStore.read(fs, pin).trim.toLong
   }
 }

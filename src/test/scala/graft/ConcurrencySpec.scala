@@ -596,9 +596,10 @@ class ConcurrencySpec extends AnyFunSuite with TimeLimits {
   }
 }
 
-/** The local filesystem under the `racefs` scheme, whose next manifest
-  * create first runs the armed rival: another process creating the
-  * same version between a commit's existence check and its create. */
+/** The local filesystem under the `racefs` scheme, whose next create of
+  * a version's temp sibling first runs the armed rival: another process
+  * publishing the same version between a commit's read of the latest
+  * version and its publish. */
 class RaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racefs:///")
 
@@ -606,7 +607,7 @@ class RaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: org.apache.hadoop.util.Progressable)
       : org.apache.hadoop.fs.FSDataOutputStream = {
-    if (f.getName.matches("\\d+\\.json")) RaceFs.take()()
+    if (f.getName.matches("\\.\\d+\\.json\\.tmp-.*")) RaceFs.take()()
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 }

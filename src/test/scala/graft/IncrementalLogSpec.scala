@@ -1,6 +1,8 @@
 package graft
 
 import graft.sources.SnapshotTable
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,5 +115,42 @@ class IncrementalLogSpec extends AnyFunSuite {
       java.nio.file.Paths.get(root, "_graft_log", "00000.json")))
     val cold = reopenCold(root)
     assert(cold.read().orderBy("id").collect().toSeq === expect)
+  }
+
+  test("a log with checksum siblings reads, vacuums and rebases through the log store") {
+    val root = Scratch.dir("inclog_crc")
+    val t = new SnapshotTable(spark, root).create(slice(0, 100)).withProperty("a", "1")
+    (1 to 12).foreach(i => t.append(slice(100 * i, 100 * i + 10)))
+    // commit every log file again through the checksummed create the log
+    // used before it had a store: each gets a `.crc` sibling
+    val local = FileSystem.getLocal(new Configuration())
+    def logFiles(dir: String) = local.listStatus(new Path(dir, "_graft_log")).map(_.getPath)
+      .filter(_.getName.matches("\\d+\\.json|_properties\\.json"))
+    logFiles(root).foreach { p =>
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.toUri.getPath))
+      val out = local.create(p, true)
+      try out.write(bytes) finally out.close()
+    }
+    assert(new java.io.File(root, "_graft_log/.00008.json.crc").exists)
+    def counts(s: SnapshotTable, vs: Range) = {
+      s.invalidateCaches()
+      vs.map(v => s.read(v).count())
+    }
+    assert(counts(t, 0 to 12) === (0 to 12).map(100L + 10 * _))
+    t.vacuum(retainVersions = 5) // replaces v8, a DELTA record, with a checkpoint
+    assert(!isDelta(root, 8))
+    assert(counts(t, 8 to 12) === (8 to 12).map(100L + 10 * _))
+    val moved = Scratch.dir("inclog_crc_moved") + "/t"
+    java.nio.file.Files.move(java.nio.file.Paths.get(root), java.nio.file.Paths.get(moved))
+    val m = new SnapshotTable(spark, moved)
+    m.rebaseLog(root)
+    m.withProperty("b", "2")
+    assert(counts(m, 8 to 12) === (8 to 12).map(100L + 10 * _))
+    assert(m.propertiesMap === Map("a" -> "1", "b" -> "2"))
+    // a checksummed reader of a replaced file finds no stale sibling
+    logFiles(moved).foreach { p =>
+      val in = local.open(p)
+      try in.readAllBytes() finally in.close()
+    }
   }
 }
